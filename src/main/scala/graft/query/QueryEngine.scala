@@ -128,19 +128,29 @@ object QueryEngine {
     * to `(keys, t, column, value)` and ONE pivot shuffle on `(keys, t)`
     * aligns them — k metrics cost k parallel aggregations + one merge, not
     * k-1 pairwise joins. */
-  private[query] def multiAggregate(samples: DataFrame, p: SelectParams): DataFrame =
+  private[query] def multiAggregate(samples: DataFrame, p0: SelectParams): DataFrame = {
+    val p = inheritMetric(p0)
     if (canFuseMultiAggregate(p)) multiAggregateFused(samples, p)
     else multiAggregateVia(p, sub => select(samples, sub))
+  }
+
+  /** Requested columns with an empty metric take `p.name`, as
+    * [[RequestedColumn]] documents — both multi-metric paths see the same
+    * metric list. */
+  private def inheritMetric(p: SelectParams): SelectParams =
+    p.copy(requestedColumns = p.requestedColumns.map(c =>
+      if (c.metric.isEmpty) c.copy(metric = p.name) else c))
 
   /** The raw-samples multi-metric path can fuse (r16) when every
     * per-metric sub-query would take the plain tumbling-bucket
     * [[clientAggregate]] shape: same grid, same filters, only the name
     * predicate differs. Rollup-serving callers ([[graft.storage.TsdbTable]])
     * keep [[multiAggregateVia]] — their per-metric planner choice is the
-    * point. */
+    * point. A column with no metric at all (and no `p.name` to inherit)
+    * keeps the via path, whose sub-query then filters no name. */
   private def canFuseMultiAggregate(p: SelectParams): Boolean =
     !p.isCrossSeries && p.windows.isEmpty && p.aggregationWindow <= 0 &&
-      p.requestedColumns.forall(c =>
+      p.requestedColumns.forall(c => c.metric.nonEmpty &&
         Aggregates.All.contains(SelectParams.stripAll(c.function.toLowerCase)))
 
   /** [[multiAggregate]] in ONE scan + ONE shuffle (guide §2.3/§2.4):
@@ -168,10 +178,8 @@ object QueryEngine {
       s"duplicate output columns in select list: ${outNames.mkString(", ")}")
     val step = p.effectiveStep
     val metrics = cols.map(_.metric).distinct
-    var df = samples.filter(col("name").isin(metrics: _*))
-    if (p.filter.nonEmpty) df = df.filter(expr(p.filter))
-    df = df.filter(col("time").between(p.from, p.to))
-      .withColumn("labels_str", Labels.canonical(col("labels")))
+    val df = prepare(samples.filter(col("name").isin(metrics: _*)), p.copy(name = ""),
+      p.from, p.to)
     // the non-cross group keys MINUS the constant-per-metric name column
     // (the melted path's pivot never keyed on name either)
     val keyCols: Seq[(String, Column)] =
@@ -220,7 +228,8 @@ object QueryEngine {
     * are covered (safe to mix plans here, unlike the reference's
     * forceRawQuery, because both paths emit the same `from + k*step` grid
     * timestamps and exact partial algebra). */
-  def multiAggregateVia(p: SelectParams, runSub: SelectParams => DataFrame): DataFrame = {
+  def multiAggregateVia(p0: SelectParams, runSub: SelectParams => DataFrame): DataFrame = {
+    val p = inheritMetric(p0)
     val cols = p.requestedColumns
     if (cols.exists(_.function.isEmpty))
       throw new IllegalArgumentException(

@@ -673,20 +673,16 @@ private[graft] object GraftDeletes {
   * every given entry — enforced row-level (exact map lookup, never the
   * escape-ambiguous labels_str), so correctness NEVER depends on the
   * index. Performance comes from the series registry
-  * ([[graft.storage.TsdbTable.seriesRegistry]]): at planning the labels
+  * ([[graft.storage.TsdbTable.resolveSeries]]): at planning the labels
   * resolve to a series_id set, which (a) drops MOR stripes whose series
   * range misses the set, (b) drops everything when no series matches,
   * (c) skips row groups via a parquet series_id IN predicate (files are
   * sorted by series_id, so groups are near-contiguous series runs), and
   * (d) cheapens the row filter to a hash-set membership test. Beyond
-  * [[MaxSeries]] matches (or on a registry-less legacy table) the scan
-  * falls back to the exact row-level map filter alone. */
+  * [[graft.storage.TsdbTable.MaxPruneSeries]] matches (or on a
+  * registry-less legacy table) the scan falls back to the exact
+  * row-level map filter alone. */
 private[sources] object GraftLabels {
-  /** Series-set resolution cap: past this, pruning buys little (the
-    * filter is unselective) and the IN predicate/stripe intersection
-    * would dominate planning. */
-  val MaxSeries = 10000
-
   def fromOptions(options: CaseInsensitiveStringMap): Seq[(String, String)] =
     options.asCaseSensitiveMap().asScala.toSeq.collect {
       case (k, v) if k.length > 6 && k.substring(0, 6).equalsIgnoreCase("label.") =>
@@ -739,25 +735,16 @@ private[sources] final class GraftScan(
   /** Label-equality scan filter (r15): see [[GraftLabels]]. */
   private val labelEq: Seq[(String, String)] = GraftLabels.fromOptions(options)
 
-  /** The label filter resolved to a series_id set through the series
-    * registry at planning — None when no registry (legacy sidecar), no
-    * label filter, or more than [[GraftLabels.MaxSeries]] matches (then
-    * the exact row-level map filter carries alone). */
+  /** The label filter resolved to a series_id set at planning by the
+    * table's series resolver ([[TsdbTable.resolveSeries]]) — None when
+    * no registry (legacy sidecar), no label filter, or more than
+    * [[TsdbTable.MaxPruneSeries]] matches (then the exact row-level map
+    * filter carries alone). */
   private lazy val labelSeries: Option[java.util.HashSet[Long]] =
-    if (labelEq.isEmpty) None
-    else new TsdbTable(spark, tablePath, config).seriesRegistry().flatMap { reg =>
-      import org.apache.spark.sql.functions.{col => fcol, element_at, lit => flit}
-      val cond = labelEq.map { case (k, v) =>
-        element_at(fcol("labels"), flit(k)) === flit(v)
-      }.reduce(_ && _)
-      val rows = reg.filter(cond).select("series_id")
-        .limit(GraftLabels.MaxSeries + 1).collect()
-      if (rows.length > GraftLabels.MaxSeries) None
-      else {
-        val set = new java.util.HashSet[Long](math.max(4, rows.length * 2))
-        rows.foreach(r => set.add(r.getLong(0)))
-        Some(set)
-      }
+    new TsdbTable(spark, tablePath, config).resolveSeries(labelEq).map { ids =>
+      val set = new java.util.HashSet[Long](math.max(4, ids.length * 2))
+      ids.foreach(set.add(_))
+      set
     }
 
   /** Drop splits the resolved series set proves empty: MOR stripes whose

@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.core.Labels
 import graft.query.{Aggregates, Interpolation, QueryEngine, SelectParams}
@@ -96,8 +97,9 @@ object TsdbTable {
     * streaming ingest commits one seq per micro-batch). */
   val VacuumSetThreshold: Int = 256
 
-  /** Cap on a registry-resolved series IN-list (see labelPruned):
-    * beyond it the filter is unselective and pruning stops paying. */
+  /** Cap on a registry-resolved series set ([[TsdbTable.resolveSeries]]):
+    * beyond it the filter is unselective and pruning stops paying — the
+    * IN-list / stripe intersection would cost more than it saves. */
   val MaxPruneSeries: Int = 10000
 
   /** Top-level AND conjuncts of the exact `labels['k'] = 'v'` shape in a
@@ -143,6 +145,77 @@ object TsdbTable {
     StructField("labels_str", StringType),
     StructField("series_id", LongType),
     StructField("part_start", LongType)))
+
+  /** What the raw directory holds: [[RawSchema]] plus the batch seq every
+    * mutation stamps and the tombstone flag MOR deletes set. Raw reads
+    * DECLARE it instead of inferring it (inference is one Spark job per
+    * read, paid while the DataFrame is built): a file written before a
+    * column existed reads that column as NULL — a pre-`__seq` row orders
+    * after every stamped version under LWW, a pre-tombstone row is live. */
+  val RawFileSchema: StructType = StructType(
+    RawSchema.filterNot(_.name == "part_start") ++ Seq(
+      StructField("__seq", LongType),
+      StructField("__del", BooleanType),
+      StructField("part_start", LongType)))
+
+  /** One raw partition directory read directly (`part_start` lives in the
+    * directory name, not in the files). */
+  private val RawDirSchema: StructType =
+    StructType(RawFileSchema.filterNot(_.name == "part_start"))
+
+  private val NamesSchema: StructType = StructType(Seq(StructField("name", StringType)))
+
+  /** The `series_enc` sidecar: the type pin (series_id → variant) plus the
+    * registry columns; a pre-registry file reads them as NULL, which the
+    * completeness gate in [[resolveSeries]] turns into "no pruning". */
+  private val SeriesEncSchema: StructType = StructType(Seq(
+    StructField("series_id", LongType),
+    StructField("variant", BooleanType),
+    StructField("name", StringType),
+    StructField("labels_str", StringType),
+    StructField("labels", MapType(StringType, StringType))))
+
+  /** The series registry's postings index for ONE sidecar version: label
+    * key → value → sorted series ids, each key loaded on first use. The
+    * version is the sidecar's listing stamp (file name, length, mtime of
+    * every data file); any sidecar write changes it. `incomplete` records
+    * that the version holds pre-registry rows — nothing can prune on it.
+    * Guarded by its own monitor. */
+  private final class SeriesPostings(val stamp: Seq[(String, Long, Long)]) {
+    var incomplete = false
+    val byKey = scala.collection.mutable.HashMap.empty[String, Map[String, Array[Long]]]
+  }
+
+  /** Driver-side postings per table (keyed by the sidecar path), least
+    * recently used evicted past [[PostingsTables]]. */
+  private val PostingsTables = 64
+  private val postings = new java.util.LinkedHashMap[String, SeriesPostings](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, SeriesPostings]): Boolean =
+      size() > PostingsTables
+  }
+
+  /** The index for `stamp` of the sidecar at `key`: the cached one while
+    * the stamp holds, a fresh empty one once it moved. */
+  private def postingsAt(key: String, stamp: Seq[(String, Long, Long)]): SeriesPostings =
+    postings.synchronized {
+      val cur = postings.get(key)
+      if (cur != null && cur.stamp == stamp) cur
+      else { val fresh = new SeriesPostings(stamp); postings.put(key, fresh); fresh }
+    }
+
+  /** Intersection of ascending id arrays. */
+  private def intersectSorted(lists: Seq[Array[Long]]): Array[Long] =
+    lists.sortBy(_.length).reduce { (a, b) =>
+      val out = Array.newBuilder[Long]
+      var i = 0
+      var j = 0
+      while (i < a.length && j < b.length) {
+        if (a(i) < b(j)) i += 1
+        else if (a(i) > b(j)) j += 1
+        else { out += a(i); i += 1; j += 1 }
+      }
+      out.result()
+    }
 }
 
 class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = TsdbConfig()) {
@@ -178,13 +251,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * orphan-aware half of [[nextSeq]]'s seeding. */
   private def maxStampedSeq(): Long =
     if (!hasPartitions(rawPath)) 0L
-    else {
-      val df = spark.read.option("mergeSchema", config.overrideOld.toString)
-        .parquet(rawPath)
-      if (!df.columns.contains("__seq")) 0L
-      else Option(df.agg(max("__seq")).collect()(0).get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    }
+    else Option(rawListing().agg(max("__seq")).collect()(0).get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** ENFORCED single-writer contract: every mutation (append / delete /
     * retention / compact) holds the `<path>/_writer` lock file for its
@@ -562,23 +630,19 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(rawPath), spark.sparkContext.hadoopConfiguration)
     if (hasPartitions(rawPath)) {
-      val df = spark.read.option("mergeSchema", config.overrideOld.toString)
-        .parquet(rawPath)
-      if (df.columns.contains("__seq")) {
-        // the orphan predicate runs on the EXECUTORS (the committed set
-        // is manifest-bounded, <= VacuumSetThreshold+1 literals), so the
-        // driver materializes only the orphan file names — usually none —
-        // instead of one row per live file (a never-compacted
-        // multi-million-file table would otherwise make vacuum the one
-        // maintenance step with driver-proportional memory)
-        val committed = cm.seqs.toSeq
-        val orphanFiles = df
-          .filter(col("__seq").isNotNull && col("__seq") > lit(cm.floor) &&
-            (if (committed.isEmpty) lit(true) else !col("__seq").isin(committed: _*)))
-          .select(input_file_name().as("f")).distinct().collect()
-        orphanFiles.foreach(r =>
-          fs.delete(new org.apache.hadoop.fs.Path(r.getString(0)), false))
-      }
+      // the orphan predicate runs on the EXECUTORS (the committed set
+      // is manifest-bounded, <= VacuumSetThreshold+1 literals), so the
+      // driver materializes only the orphan file names — usually none —
+      // instead of one row per live file (a never-compacted
+      // multi-million-file table would otherwise make vacuum the one
+      // maintenance step with driver-proportional memory)
+      val committed = cm.seqs.toSeq
+      val orphanFiles = rawListing()
+        .filter(col("__seq").isNotNull && col("__seq") > lit(cm.floor) &&
+          (if (committed.isEmpty) lit(true) else !col("__seq").isin(committed: _*)))
+        .select(input_file_name().as("f")).distinct().collect()
+      orphanFiles.foreach(r =>
+        fs.delete(new org.apache.hadoop.fs.Path(r.getString(0)), false))
     }
     // orphans were never reader-visible at ANY seq, so vacuum moves no
     // history fence — committed generations (and their snapshots) survive.
@@ -608,27 +672,26 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     publishCommits(Commits(f, cur.seqs.filter(_ > f), cur.horizon, cur.txns), at)
   }
 
-  /** The visibility predicate for `cm` over a frame that CARRIES
-    * `__seq`. */
-  private def visibleSeqCond(c: Commits): org.apache.spark.sql.Column = {
-    val base = col("__seq").isNull || col("__seq") <= c.floor
-    if (c.seqs.isEmpty) base
-    else base || col("__seq").isin(c.seqs.toSeq: _*)
-  }
-
-  /** Apply committed-only visibility to a raw read; a frame without
-    * `__seq` (all-legacy partition) passes through untouched. */
+  /** Apply committed-only visibility to a raw read (NULL `__seq` = a
+    * legacy row written before stamping, always visible); a
+    * manifest-less table reads fully visible. */
   private def applyVisibility(df: DataFrame, cm: Option[Commits]): DataFrame =
     cm match {
-      case Some(c) if df.columns.contains("__seq") => df.filter(visibleSeqCond(c))
-      case _ => df
+      case Some(c) =>
+        val base = col("__seq").isNull || col("__seq") <= c.floor
+        df.filter(if (c.seqs.isEmpty) base else base || col("__seq").isin(c.seqs.toSeq: _*))
+      case None => df
     }
 
+  /** Every raw file under the declared [[TsdbTable.RawFileSchema]] — no
+    * inference job; the listing happens here, eagerly. */
+  private def rawListing(): DataFrame =
+    spark.read.schema(TsdbTable.RawFileSchema).parquet(rawPath)
+
   /** Raw-table file read, admitting COMMITTED batches only (see the
-    * reader-atomicity note above). overrideOld tables merge footers so
-    * files written before `__seq` existed don't hide the column (a
-    * sampled old footer would silently disable merge-on-read); their
-    * rows read as NULL `__seq`, which orders after any stamped version
+    * reader-atomicity note above). The schema is declared
+    * ([[TsdbTable.RawFileSchema]]), so files written before `__seq`
+    * existed read it as NULL, which orders after any stamped version
     * under `desc` (nulls last) — old rows lose to any rewrite, as they
     * must. The manifest is read BEFORE the file listing
     * (spark.read.parquet lists eagerly): listing first would let a
@@ -661,8 +724,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     // AFTER it always admits the new generation — both generations
     // visible collapse to the new rows under LWW. Every interleaving is
     // now correct-view-or-retryable-error, never silently empty/partial.
-    val listed =
-      spark.read.option("mergeSchema", config.overrideOld.toString).parquet(rawPath)
+    val listed = rawListing()
     val cm = readCommits(strict = strict || asOf.nonEmpty)
     asOf.foreach { s =>
       val h = cm.map(_.horizon).getOrElse(0L)
@@ -677,9 +739,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       // committed-AND-at-most-asOf: later batches drop out, crashed
       // mutations' orphans stay out (exact-set admission), legacy NULL
       // rows predate every seq and stay in — the state as of `asOf`
-      case Some(s) if df.columns.contains("__seq") =>
-        df.filter(col("__seq").isNull || col("__seq") <= s)
-      case _ => df
+      case Some(s) => df.filter(col("__seq").isNull || col("__seq") <= s)
+      case None => df
     }
   }
 
@@ -728,9 +789,14 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         graft.core.SchemaJson.write(path, config, hconf)
     } catch { case scala.util.control.NonFatal(_) => () }
     val seq = nextSeq()
-    val enriched = samples
-      .withColumn("valueStr",
-        if (samples.columns.contains("valueStr")) col("valueStr") else lit(null).cast("string"))
+    // the sample columns at their declared types: raw files hold exactly
+    // TsdbTable.RawFileSchema, which every reader declares rather than
+    // infers
+    val sampleCols = Seq("name", "labels", "time", "value", "valueStr").map { c =>
+      (if (c == "valueStr" && !samples.columns.contains(c)) lit(null) else col(c))
+        .cast(TsdbTable.RawSchema(c).dataType).as(c)
+    }
+    val enriched = samples.select(sampleCols: _*)
       .withColumn("labels_str", Labels.canonical(col("labels")))
       .withColumn("series_id", Labels.seriesId(col("name"), col("labels")))
       .withColumn("part_start", partStart(col("time")))
@@ -878,7 +944,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       // inaccessible: silently unpinning every series would be the exact
       // failure this sidecar exists to prevent — fail the append loudly
       else if (!fs.listStatus(dirPath).exists(_.getPath.getName.endsWith(".parquet"))) None
-      else Some(spark.read.parquet(seriesEncPath)
+      else Some(spark.read.schema(TsdbTable.SeriesEncSchema).parquet(seriesEncPath)
         .select(col("series_id"), col("variant").as("old_variant")))
     val joined = (existing match {
       case Some(e) => batchEnc.join(e, Seq("series_id"), "left")
@@ -940,33 +1006,74 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     }
   }
 
-  /** The series registry (r15): series_id → (name, labels_str) for every
-    * series the table has ever ingested — the query-planning index that
-    * resolves label predicates to a series_id set (reference P1/P2
-    * filter-to-sharding-key scan, `pkg/partmgr/partmgr.go:459-468`,
-    * `pkg/pquerier/select.go:598`). Piggybacks on the `series_enc`
-    * sidecar, so it costs nothing beyond the type-safety pass the append
-    * path already runs. None when the registry cannot prune SAFELY: a
-    * sidecar written (wholly or partly) before the registry columns
-    * existed is incomplete, and pruning on an incomplete index would
-    * silently drop the unindexed series' rows — callers must fall back
-    * to unpruned exact filtering. Deleted series linger (superset
-    * semantics — safe for pruning, like the reference's cached items). */
-  private[graft] def seriesRegistry(): Option[DataFrame] = {
+  /** Resolve a conjunction of label equalities to the ids of the series
+    * carrying ALL of them, ascending — the one series-set resolver behind
+    * [[select]]'s raw-scan pruning and the DSv2 label-scan options
+    * (reference P1/P2 filter-to-sharding-key scan,
+    * `pkg/partmgr/partmgr.go:459-468`, `pkg/pquerier/select.go:598`).
+    *
+    * The series registry is the `series_enc` sidecar (series_id → name,
+    * labels_str, labels for every series ever ingested), so it costs the
+    * append path nothing beyond its type-safety pass. Resolution runs on a
+    * driver-side postings index (label key → value → sorted ids, the
+    * Prometheus postings shape), one per table, valid for one sidecar
+    * version: every resolution recovers an interrupted sidecar swap, takes
+    * the sidecar's listing stamp, and drops the index when the stamp
+    * moved. A key's postings load on first use with ONE job over a
+    * listing taken after the stamp, so they cover at least the stamped
+    * version (a superset is safe: pruning only ever keeps extra series);
+    * a conjunction is then an in-memory intersection — no job, no
+    * schema inference. Driver memory is O(series carrying each queried
+    * key).
+    *
+    * None = do not prune: no label conjunct, no sidecar, more than
+    * [[TsdbTable.MaxPruneSeries]] matches, or a sidecar holding rows
+    * written before the registry columns existed (an incomplete index
+    * would silently drop the unindexed series' rows; the gate rides the
+    * same job). Deleted series linger — superset semantics, safe for
+    * pruning, like the reference's cached items. */
+  private[graft] def resolveSeries(labelEq: Seq[(String, String)]): Option[Array[Long]] = {
+    if (labelEq.isEmpty) return None
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(seriesEncPath), spark.sparkContext.hadoopConfiguration)
     recoverSeriesEnc(fs)
     val dirPath = new org.apache.hadoop.fs.Path(seriesEncPath)
-    if (!fs.exists(dirPath) ||
-        !fs.listStatus(dirPath).exists(_.getPath.getName.endsWith(".parquet")))
-      return None
-    val df = spark.read.option("mergeSchema", "true").parquet(seriesEncPath)
-    if (!Seq("labels_str", "name", "labels").forall(df.columns.contains))
-      return None
-    // completeness gate: any pre-registry row poisons the whole index
-    if (!df.filter(col("labels_str").isNull || col("name").isNull).isEmpty) None
-    else Some(df.select("series_id", "name", "labels_str", "labels"))
+    val stamp =
+      if (!fs.exists(dirPath)) Nil
+      else fs.listStatus(dirPath).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
+    if (stamp.isEmpty) return None
+    val index = TsdbTable.postingsAt(fs.makeQualified(dirPath).toString, stamp)
+    val lists = labelEq.map { case (k, v) =>
+      seriesPostings(index, k).map(_.getOrElse(v, Array.emptyLongArray))
+    }
+    if (lists.exists(_.isEmpty)) None
+    else Some(TsdbTable.intersectSorted(lists.map(_.get)))
+      .filter(_.length <= TsdbTable.MaxPruneSeries)
   }
+
+  /** Key `k`'s postings in `index`, loaded on first use; None when the
+    * sidecar version is incomplete (pre-registry rows). */
+  private def seriesPostings(index: TsdbTable.SeriesPostings,
+                             k: String): Option[Map[String, Array[Long]]] =
+    index.synchronized {
+      if (index.incomplete) None
+      else index.byKey.get(k).orElse {
+        val bad = col("labels_str").isNull || col("name").isNull
+        val rows = spark.read.schema(TsdbTable.SeriesEncSchema).parquet(seriesEncPath)
+          .select(bad.as("bad"), element_at(col("labels"), lit(k)).as("v"), col("series_id"))
+          .filter(col("bad") || col("v").isNotNull)
+          .collect()
+        if (rows.exists(_.getBoolean(0))) { index.incomplete = true; None }
+        else {
+          val byValue = rows.groupMap(_.getString(1))(_.getLong(2))
+            .map { case (v, ids) => v -> ids.sorted.distinct }
+          index.byKey(k) = byValue
+          Some(byValue)
+        }
+      }
+    }
 
   /** Record new series encodings (one small appended file per batch that
     * actually had new series) and bound the sidecar's file count: past 64
@@ -990,10 +1097,11 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val tmp = new org.apache.hadoop.fs.Path(seriesEncPath + ".tmp")
     val old = new org.apache.hadoop.fs.Path(seriesEncPath + ".old")
     if (fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) > 64) {
-      // mergeSchema: a mixed legacy/registry sidecar (2-col + 4-col
-      // files) must compact to the UNION schema, not a sampled one —
-      // silently dropping name/labels_str would wipe registry rows
-      val all = spark.read.option("mergeSchema", "true").parquet(seriesEncPath)
+      // declared schema: a mixed legacy/registry sidecar (2-col + 5-col
+      // files) compacts to the FULL schema, legacy rows null-filled —
+      // a sampled one would silently drop name/labels_str and wipe
+      // registry rows
+      val all = spark.read.schema(TsdbTable.SeriesEncSchema).parquet(seriesEncPath)
       all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(seriesEncPath + ".tmp")
       fs.delete(old, true) // stale leftover from a long-ago crash, if any
       fs.rename(dir, old)
@@ -1041,7 +1149,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       if (!fs0.exists(new org.apache.hadoop.fs.Path(namesPath))) Set.empty
       // a crashed prior write can leave an unreadable dir — rebuild from
       // the batch (the overwrite below self-heals it)
-      else try spark.read.parquet(namesPath).collect().map(_.getString(0)).toSet
+      else try spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath)
+        .collect().map(_.getString(0)).toSet
       catch { case _: Exception => Set.empty }
     if (!batchNames.subsetOf(existing)) {
       (existing ++ batchNames).toSeq.sorted.toDF("name")
@@ -1071,7 +1180,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     // same-bucket partials order `last` by the last-sample time companion
     val ord = if (partials.contains("last_t")) col("__p_last_t") else col("bucket_start")
     val merged = (if (existingDirs.isEmpty) fresh else {
-      val existing = spark.read.parquet(rollupPath)
+      val existing = rollupFrame(rollupPath, Nil)
         .filter(col("part_start").isin(existingDirs: _*))
         .drop("part_start")
       fresh.unionByName(existing)
@@ -1101,6 +1210,26 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
 
   private def preAggPath(subset: Seq[String]): String =
     s"$path/rollup_agg/${subset.mkString("_")}"
+
+  /** Rollup schemas by key spec (Nil = the per-series rollup), derived by
+    * ANALYSIS of [[Rollup.build]] over an empty raw frame — it
+    * stays the one definition of the partial columns and their types. */
+  private val rollupSchemas =
+    new java.util.concurrent.ConcurrentHashMap[Seq[String], StructType]()
+
+  private def rollupSchema(keys: Seq[String]): StructType =
+    rollupSchemas.computeIfAbsent(keys, _ => {
+      val empty = spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), TsdbTable.RawSchema)
+      Rollup.build(empty, config.rollupIntervalMs, config.aggregates,
+          keys = if (keys.isEmpty) Nil else Rollup.preAggKeys(keys))
+        .schema.add("part_start", LongType)
+    })
+
+  /** The rollup (`keys` = Nil) or a pre-aggregate table (`keys` = its
+    * label subset) under its declared schema — no inference job. */
+  private def rollupFrame(dir: String, keys: Seq[String]): DataFrame =
+    spark.read.schema(rollupSchema(keys)).parquet(dir)
 
   /** Recompute rollup partials for the given partitions from raw — the
     * batch analog of the reference's ingest-time `_v_*` array updates
@@ -1136,10 +1265,13 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         preAggPath(subset))
     }
 
-  private def writeRollup(df: DataFrame, out: String): Unit = withDynamicOverwrite {
+  /** Dynamic partition overwrite, set on THIS write: the session-wide
+    * conf would leak into the concurrent post-commit writes of
+    * [[append]]. */
+  private def writeRollup(df: DataFrame, out: String): Unit =
     df.withColumn("part_start", partStart(col("bucket_start")))
-      .write.mode(SaveMode.Overwrite).partitionBy("part_start").parquet(out)
-  }
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_start").parquet(out)
 
   /** Names dimension (reference names directory S9, `store.go:189-202`).
     * Rebuilt from the MERGED view: under MOR a tombstone-deleted metric
@@ -1150,15 +1282,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     names.coalesce(1).write.mode(SaveMode.Overwrite).parquet(namesPath)
   }
 
-  private def withDynamicOverwrite[A](f: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** True iff the dir holds at least one data partition (a bare _SUCCESS
-    * marker would make spark.read fail with UNABLE_TO_INFER_SCHEMA). */
+    * marker does not count). */
   private def hasPartitions(p: String): Boolean = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
@@ -1173,22 +1298,18 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * still applies upstream, and compaction = the delete path's partition
     * rewrite. */
   private def mergeOnRead(df: DataFrame): DataFrame =
-    if (!config.overrideOld || !df.columns.contains("__seq")) df.drop("__seq", "__del")
+    if (!config.overrideOld) df.drop("__seq", "__del")
     else {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("series_id", "time").orderBy(col("__seq").desc)
-      val ranked = df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
       // a DELETE tombstone (r7) is just the newest version of its row
       // with `__del` set: it wins LWW like any rewrite, then drops here —
       // and a LATER append of the same (series, time) out-seqs the
       // tombstone, so re-adding deleted keys works by the same rule.
       // Files written before tombstones existed read NULL __del.
-      val live =
-        if (df.columns.contains("__del"))
-          ranked.filter(!coalesce(col("__del"), lit(false)))
-        else ranked
-      live.drop("__rn", "__seq", "__del")
+      df.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1 && !coalesce(col("__del"), lit(false)))
+        .drop("__rn", "__seq", "__del")
     }
 
   /** Raw table pruned to the queried partitions (partition pruning is a
@@ -1285,14 +1406,13 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     }
   }
 
-  def readRollup(): DataFrame = spark.read.parquet(rollupPath)
+  def readRollup(): DataFrame = rollupFrame(rollupPath, Nil)
 
   def names(): DataFrame =
     if (!hasPartitions(rawPath) && !new java.io.File(new java.net.URI(s"file:$namesPath").getPath).exists())
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType))))
-    else spark.read.parquet(namesPath).orderBy("name")
+        TsdbTable.NamesSchema)
+    else spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath).orderBy("name")
 
   def countMetrics(): Long =
     if (!hasPartitions(rawPath)) 0L
@@ -1390,14 +1510,15 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       // of rollup history (widen one rollup cell below `from` for the
       // median-time re-bucketing margin, plus the sliding window reach)
       val pLo = rollupSelectLo(p)
-      def pruned(path: String) =
-        spark.read.parquet(path).filter(col("part_start").between(pLo, p.to))
+      def pruned(path: String, keys: Seq[String]) =
+        rollupFrame(path, keys).filter(col("part_start").between(pLo, p.to))
       preAgg match {
         case Some(subset) =>
-          QueryEngine.serverAggregate(pruned(preAggPath(subset)), p,
+          QueryEngine.serverAggregate(pruned(preAggPath(subset), subset), p,
             p.baseFunctions, config.rollupIntervalMs, keyNames = "name" +: subset)
         case None =>
-          QueryEngine.serverAggregate(pruned(rollupPath), p, p.baseFunctions, config.rollupIntervalMs)
+          QueryEngine.serverAggregate(pruned(rollupPath, Nil), p, p.baseFunctions,
+            config.rollupIntervalMs)
       }
     } else {
       // the engine reaches BELOW `from` in three cases — widen the raw
@@ -1414,7 +1535,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
 
   /** Raw-scan series pruning (r15): label-equality conjuncts in the
     * query filter resolve through the series registry
-    * ([[seriesRegistry]]) into a `series_id IN` predicate that Spark
+    * ([[resolveSeries]]) into a `series_id IN` predicate that Spark
     * pushes to the parquet scan — row-group stats then skip non-matching
     * series runs (files are sorted by series_id), the reference's
     * filter-to-sharding-key scan (P1, `pkg/pquerier/select.go:598`,
@@ -1428,21 +1549,12 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * the match set exceeds [[TsdbTable.MaxPruneSeries]] (unselective —
     * the IN-list would cost more than it saves). A provably-empty match
     * short-circuits to an empty scan. */
-  private def labelPruned(raw: DataFrame, filter: String): DataFrame = {
-    val conj = TsdbTable.labelEqConjuncts(filter)
-    if (conj.isEmpty) return raw
-    seriesRegistry() match {
+  private def labelPruned(raw: DataFrame, filter: String): DataFrame =
+    resolveSeries(TsdbTable.labelEqConjuncts(filter)) match {
       case None => raw
-      case Some(reg) =>
-        val cond = conj.map { case (k, v) =>
-          element_at(col("labels"), lit(k)) === lit(v) }.reduce(_ && _)
-        val ids = reg.filter(cond).select("series_id")
-          .limit(TsdbTable.MaxPruneSeries + 1).collect()
-        if (ids.length > TsdbTable.MaxPruneSeries) raw
-        else if (ids.isEmpty) raw.filter(lit(false))
-        else raw.filter(col("series_id").isin(ids.map(_.getLong(0)).toSeq: _*))
+      case Some(ids) if ids.isEmpty => raw.filter(lit(false))
+      case Some(ids) => raw.filter(col("series_id").isin(ids.toSeq: _*))
     }
-  }
 
   /** disableClientAggr coerces coarser steps down to rollup granularity
     * so the rollup can serve (reference select.go:185-187) — but ONLY
@@ -1531,8 +1643,9 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * the ACTION runs, which can be long after the touched-partition
     * classification. A later partition swap over a frozen file surfaces
     * as the documented retryable FileNotFound — never silently wrong
-    * data. None = no data files (serve precise-from-raw). */
-  private def frozenParquet(base: String): Option[DataFrame] = {
+    * data. None = no data files (serve precise-from-raw). `keys` names
+    * the rollup's declared schema ([[rollupFrame]]). */
+  private def frozenRollup(base: String, keys: Seq[String]): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
@@ -1552,14 +1665,16 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
             .forall(seg => !seg.startsWith("_") && !seg.startsWith("."))
       }.toSeq
     if (files.isEmpty) None
-    else Some(spark.read.option("basePath", base).parquet(files: _*))
+    else Some(spark.read.schema(rollupSchema(keys))
+      .option("basePath", base).parquet(files: _*))
   }
 
   /** The rollup-served snapshot plan: live rollup partials for
     * partitions with no committed batch newer than `asOfSeq`, partials
     * rebuilt from the snapshot raw view for the (few) partitions that
-    * DO carry newer batches. None on a legacy un-stamped table (no
-    * `__seq` → no way to prove untouched-ness → precise-from-raw).
+    * DO carry newer batches. None on a manifest-less legacy table (no
+    * stamped history → no way to prove untouched-ness →
+    * precise-from-raw).
     *
     * Scale shape: the touched-partition probe prunes to the queried
     * partition range and pushes `__seq > asOfSeq` to the parquet scan —
@@ -1572,7 +1687,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     *
     * Concurrency: the raw halves freeze the manifest into the plan as
     * literals, and the live-rollup half freezes its FILE LIST
-    * ([[frozenParquet]]) BEFORE the touched-partition probe reads the
+    * ([[frozenRollup]]) BEFORE the touched-partition probe reads the
     * manifest — so a commit racing this planner either refreshed the
     * rollup before the listing (then the probe's newer manifest
     * classifies its partition touched, which rebuilds from the
@@ -1589,20 +1704,24 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     require(asOfSeq > 0,
       s"asOfSeq=$asOfSeq is not a snapshot handle: take one with currentSeq()")
     // ORDER IS LOAD-BEARING: rollup file list first, manifest reads after
-    val liveOpt = frozenParquet(preAgg.map(preAggPath).getOrElse(rollupPath))
+    val liveOpt = frozenRollup(preAgg.map(preAggPath).getOrElse(rollupPath),
+      preAgg.getOrElse(Nil))
     if (liveOpt.isEmpty) return None
     // history fence up front (STRICT — the raw path's check in rawFiles
     // must also govern the rollup path: below the fence the live rollup
     // has physically lost the dropped/rewritten generations)
-    readCommits(strict = true).map(_.horizon).filter(_ > asOfSeq).foreach { h =>
+    val commits = readCommits(strict = true)
+    commits.map(_.horizon).filter(_ > asOfSeq).foreach { h =>
       throw new IllegalArgumentException(
         s"snapshot seq=$asOfSeq predates the history-rewrite horizon=$h of $path: " +
           "compaction / retention / a partition-drop or non-MOR delete has " +
           "physically removed the file generations this snapshot needs. " +
           "Time travel reaches back only to the most recent rewrite.")
     }
+    // a manifest-less legacy table has no stamped history, so no
+    // partition can be proven untouched
+    if (commits.isEmpty) return None
     val cur = rawFiles(strict = true)
-    if (!cur.columns.contains("__seq")) return None
     val pLo = rollupSelectLo(p)
     val touched = cur
       .filter(col("part_start").between(pLo, p.to) && col("__seq") > asOfSeq)
@@ -1673,12 +1792,10 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           s"of $path: pre-images below the fence are physically gone — " +
           "re-seed the consumer from a full snapshot instead.")
     }
-    val all = rawFiles(strict = true)
-    if (!all.columns.contains("__seq"))
-      return withType(all, lit("insert")).filter(lit(false)) // legacy: no change tracking
-    val win = all.filter(col("__seq") > sinceSeq && col("__seq") <= untilSeq)
+    // legacy NULL-seq rows carry no change tracking and never match
+    val win = rawFiles(strict = true).filter(col("__seq") > sinceSeq && col("__seq") <= untilSeq)
     if (!config.overrideOld)
-      return withType(win.drop("__seq"), lit("insert"))
+      return withType(win.drop("__seq", "__del"), lit("insert"))
     // MOR: collapse the window to each key's NEWEST version (the net
     // post-image), then classify against the live keys at `sinceSeq`
     val w = Window.partitionBy("series_id", "time").orderBy(col("__seq").desc)
@@ -1695,9 +1812,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val preKeys = preLive
       .select(col("series_id"), col("time")).distinct()
       .withColumn("__existed", lit(true))
-    val del =
-      if (post.columns.contains("__del")) coalesce(col("__del"), lit(false))
-      else lit(false)
+    val del = coalesce(col("__del"), lit(false))
     val existed = coalesce(col("__existed"), lit(false))
     val typed = post.join(preKeys, Seq("series_id", "time"), "left")
       .withColumn("_change_type",
@@ -1779,12 +1894,12 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * footer-merge every file in the table once per partition). Unlike
     * [[rawFiles]], the manifest/listing order is immaterial here: this
     * runs on the WRITER side under the single-writer lease, so no
-    * concurrent swap can interleave. An all-legacy partition
-    * (no `__seq` column) passes through [[applyVisibility]] untouched. */
-  private def visibleDir(dir: org.apache.hadoop.fs.Path): DataFrame = {
-    val cm = readCommits()
-    applyVisibility(
-      spark.read.option("mergeSchema", "true").parquet(dir.toString), cm)
+    * concurrent swap can interleave. Legacy rows (no `__seq` in their
+    * file) read NULL and stay visible ([[applyVisibility]]). */
+  private def visibleDir(dir: org.apache.hadoop.fs.Path,
+                         strict: Boolean = false): DataFrame = {
+    val cm = readCommits(strict)
+    applyVisibility(spark.read.schema(TsdbTable.RawDirSchema).parquet(dir.toString), cm)
   }
 
   /** Land `df`'s rows INSIDE `dir` alongside its existing files: write
@@ -2095,9 +2210,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           // rewritten file — whose mixed seqs vacuum() would then match
           // on the orphan seq and delete WHOLE, committed survivors
           // included
-          val keep = applyVisibility(
-              spark.read.option("mergeSchema", "false").parquet(dir.toString),
-              readCommits(strict = true))
+          // (non-MOR files carry no tombstone column)
+          val keep = visibleDir(dir, strict = true).drop("__del")
             .filter(!delPred)
             .cache()
           val rows = keep.count() // materialize before overwriting the source

@@ -1463,7 +1463,7 @@ class GraftSourceSpec extends SparkSuite {
         org.apache.spark.sql.types.StructField("variant",
           org.apache.spark.sql.types.BooleanType))))
     encDf.write.mode("overwrite").parquet(s"$dir/legacy/series_enc")
-    assert(new TsdbTable(spark, s"$dir/legacy").seriesRegistry().isEmpty,
+    assert(new TsdbTable(spark, s"$dir/legacy").resolveSeries(Seq("host" -> "a")).isEmpty,
       "a pre-registry sidecar must not serve as a pruning index")
     val lres = spark.read.format("graft").option("label.host", "a")
       .load(s"$dir/legacy")

@@ -179,6 +179,23 @@ class QueryEngineSpec extends SparkSuite {
     assert(m == Map("a" -> ((10.0, 1.0)), "b" -> ((20.0, 2.0))))
   }
 
+  test("multi-metric aggregate: an empty column metric inherits `name` on the fused and the per-metric path alike") {
+    import graft.query.RequestedColumn
+    val df = samples(
+      ("cpu", "a", Base + 1, 10.0), ("cpu", "a", Base + 5, 20.0),
+      ("mem", "a", Base + 2, 3.0), ("disk", "a", Base + 3, 100.0))
+    val p = SelectParams(name = "cpu", from = Base, to = Base + 9, step = 10,
+      requestedColumns = Seq(
+        RequestedColumn(metric = "", function = "sum"),
+        RequestedColumn(metric = "mem", function = "max")))
+    val fused = QueryEngine.select(df, p) // fusable shape: one scan + one shuffle
+    val via = QueryEngine.multiAggregateVia(p, sub => QueryEngine.select(df, sub))
+    assert(fused.columns.toSeq == Seq("labels_str", "t", "sum(cpu)", "max(mem)"))
+    assert(via.columns.toSeq == fused.columns.toSeq)
+    assert(rowsOf(fused) == Seq(Row("host=a", Base, 30.0, 3.0)))
+    assert(rowsOf(via) == rowsOf(fused))
+  }
+
   test("multi-metric cross-series (_all) collapses to one row per bucket") {
     import graft.query.RequestedColumn
     val df = samples(

@@ -9,9 +9,38 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
 
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Runs `body` and returns the number of Spark jobs it started: jobs
+    * submitted by the calling thread, or by threads it spawned (they
+    * inherit its local properties). The listener bus is drained before
+    * counting, so no job start is still in flight. */
+  def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(SparkSuite.JobTag) == tag)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val prev = sc.getLocalProperty(SparkSuite.JobTag)
+    sc.setLocalProperty(SparkSuite.JobTag, tag)
+    try {
+      body
+      org.apache.spark.TestListenerBus.drain(sc)
+      jobs.get
+    } finally {
+      sc.setLocalProperty(SparkSuite.JobTag, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSuite {
+  private val JobTag = "graft.test.jobsDuring"
+
   lazy val session: SparkSession = {
     // freezeTolerant: this VM stalls whole minutes at a time (hypervisor
     // snapshots); default timeouts declare the local executor dead on wake
