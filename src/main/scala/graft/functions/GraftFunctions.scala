@@ -38,8 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       CharNgrams.info, CharNgrams.builder))
     ext.injectFunction((FunctionIdentifier(CharNgramCounts.Name),
       CharNgramCounts.info, CharNgramCounts.builder))
-    ext.injectFunction((FunctionIdentifier(PosSortedSums.Name),
-      PosSortedSums.info, PosSortedSums.builder))
     ext.injectFunction((FunctionIdentifier(BigramLmFold.Name),
       BigramLmFold.info, BigramLmFold.builder))
     ext.injectFunction((FunctionIdentifier(NgramLmScores.Name),
@@ -94,8 +92,6 @@ object GraftFunctions {
         CharNgrams.Name, CharNgrams.builder, "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         CharNgramCounts.Name, CharNgramCounts.builder, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        PosSortedSums.Name, PosSortedSums.builder, "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         BigramLmFold.Name, BigramLmFold.builder, "built-in")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(

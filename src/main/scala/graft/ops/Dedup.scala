@@ -370,8 +370,8 @@ object Dedup {
             least(col("cluster_id"),
               least(coalesce(col("__nb"), col("cluster_id")),
                 coalesce(col("__ll"), col("cluster_id")))).as("cluster_id"))
-          .observe(obs, sum(when(col("cluster_id") =!= col("__old"), 1L)
-            .otherwise(0L)).as("changed"))
+          .observe(obs, coalesce(sum(when(col("cluster_id") =!= col("__old"), 1L)
+            .otherwise(0L)), lit(0L)).as("changed"))
           .localCheckpoint(true)
         changed = obs.get("changed").asInstanceOf[Long]
         cp.unpersist()

@@ -289,7 +289,8 @@ private[sources] final class GraftColumnarReader(
     requested: Seq[String],
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],
-    asOf: Option[Long])
+    asOf: Option[Long],
+    labelSeries: Option[java.util.HashSet[Long]] = None)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   private val hPath = new org.apache.hadoop.fs.Path(split.file)
@@ -304,6 +305,12 @@ private[sources] final class GraftColumnarReader(
   private val filterCols: Seq[String] =
     pushed.flatMap(_.references).distinct.filterNot(_ == "part_start").toSeq
   private val prepared = GraftReaders.prepare(pushed)
+  /** The label filter's resolved series set (r15) as a stats-classifiable
+    * IN — it skips row groups whose series range holds no member; the
+    * rows of the others are tested against the hash set itself. */
+  private val labelIn: Option[Filter] = labelSeries.map(set =>
+    org.apache.spark.sql.sources.In("series_id", set.toArray.map(id => id: Any)))
+  private val labelCols: Seq[String] = labelSeries.map(_ => "series_id").toSeq
 
   /** decode set = requested physical columns; `__seq` and the filter
     * columns join per-group only when that group needs row-level
@@ -316,7 +323,7 @@ private[sources] final class GraftColumnarReader(
   // ONLY. (r14 — the cursor-era reader never projected the reader
   // itself, so a narrow scan still paid raw reads for every column.)
   private val unionCols: Set[String] =
-    (physCols ++ (if (needSeq) Seq("__seq") else Nil) ++ filterCols).toSet
+    (physCols ++ (if (needSeq) Seq("__seq") else Nil) ++ filterCols ++ labelCols).toSet
   locally {
     val fields = (0 until fileSchema.getFieldCount)
       .map(fileSchema.getType).filter(t => unionCols(t.getName))
@@ -349,7 +356,7 @@ private[sources] final class GraftColumnarReader(
     while (blockIdx < blocks.size()) {
       val block = blocks.get(blockIdx)
       val vis = GraftFooterStats.seqVisibility(block, commits, asOf, needSeq)
-      val tris = pushed.map(GraftFooterStats.classify(_, block))
+      val tris = (pushed ++ labelIn).map(GraftFooterStats.classify(_, block))
       if (vis == GraftFooterStats.NoRows ||
           tris.contains(GraftFooterStats.NoRows)) {
         reader.skipNextRowGroup()
@@ -365,12 +372,12 @@ private[sources] final class GraftColumnarReader(
         groupResidue = prepared.zip(tris).collect {
           case (f, GraftFooterStats.SomeRows) => f
         }
-        groupFiltered = groupResidue.nonEmpty
+        groupFiltered = groupResidue.nonEmpty || labelSeries.isDefined
         val residueCols = groupResidue.flatMap(_.references).distinct
           .filterNot(_ == "part_start").toSeq
         decodeCols = (physCols ++
           (if (groupMixed) Seq("__seq") else Nil) ++
-          residueCols).distinct
+          residueCols ++ labelCols).distinct
         val wanted = decodeCols.toSet
         // FLAT leaves decode directly; the labels MAP contributes two
         // nested leaves (key_value.key / .value) handled by their own
@@ -464,6 +471,7 @@ private[sources] final class GraftColumnarReader(
           }
         }
       }
+      val sids = if (labelSeries.isDefined) byName.get("series_id") else null
       val sel = new Array[Int](n)
       var k = 0
       var i = 0
@@ -472,8 +480,9 @@ private[sources] final class GraftColumnarReader(
         val seq: Any =
           if (seqVals == null || seqNulls(i)) null else seqVals(i)
         val visOk = !groupMixed || GraftReaders.visible(seq, commits, asOf)
-        val keep = visOk && (!groupFiltered ||
-          groupResidue.forall(GraftReaders.eval(_, getter, split.partStart)))
+        val keep = visOk &&
+          (sids == null || !sids.isNullAt(i) && labelSeries.get.contains(sids.getLong(i))) &&
+          groupResidue.forall(GraftReaders.eval(_, getter, split.partStart))
         if (keep) { sel(k) = i; k += 1 }
         i += 1
       }

@@ -25,20 +25,25 @@ import graft.storage.{TsdbConfig, TsdbTable}
 
 /** DSv2 batch read for graft tsdb tables: `spark.read.format("graft")
   * .load(tableDir)` (and `CREATE TABLE ... USING graft OPTIONS (path ...)`)
-  * serves the same merged raw view as [[TsdbTable.readRaw]] — the
-  * Spark-native complement of the programmatic querier surface (reference
-  * read API `pkg/pquerier/querier.go:80-140`) and the batch twin of the
-  * `graft-cdc` streaming source.
+  * serves the merged raw view of a table — the Spark-native complement of
+  * the programmatic querier surface (reference read API
+  * `pkg/pquerier/querier.go:80-140`) and the batch twin of the `graft-cdc`
+  * streaming source. It is also the ONE merged read of the engine:
+  * [[TsdbTable.readRaw]], `select`, the rollup and names rebuilds,
+  * compaction and the MOR delete all read through [[GraftRawRead.frame]],
+  * a relation over this same table whose config, snapshot handle and
+  * label conjuncts the engine hands over as values instead of options
+  * the source would re-read from `.schema`.
   *
-  * Semantics mirror the production read path exactly:
+  * Semantics:
   *  - committed-batch visibility: the commit manifest is read ONCE at
-  *    scan planning (lenient, like [[TsdbTable.rawFiles]] current-view
-  *    reads) and frozen into the reader factory, so one scan holds one
-  *    consistent snapshot; uncommitted/crashed-mutation orphans drop at
-  *    the row level before any merge;
+  *    scan planning, right after the file listing (lenient for the
+  *    current view; strict with the history fence under `asOf`), and
+  *    frozen into the reader factory, so one scan holds one consistent
+  *    snapshot; uncommitted/crashed-mutation orphans drop at the row
+  *    level before any merge;
   *  - non-MOR tables (overrideOld=false) are served file-parallel with
-  *    byte-range splits (the standard parquet split protocol) — reads
-  *    are window-free, as in [[TsdbTable.mergeOnRead]];
+  *    byte-range splits (the standard parquet split protocol) — no merge;
   *  - MOR tables are served MERGED: every data file is written sorted by
   *    (series_id, time), so last-write-wins collapses to a streaming
   *    k-way merge over the files of one time partition — no shuffle, no
@@ -48,13 +53,13 @@ import graft.storage.{TsdbConfig, TsdbTable}
   *    into the parquet row-group stats filter, which the sorted layout
   *    turns into near-exact row-group pruning. Tombstone winners drop;
   *    superseded versions lose by `__seq` (NULL — legacy rows — loses to
-  *    any stamped version, as in production `desc` nulls-last).
+  *    any stamped version).
   *
   * Pushdown (all EXACTLY enforced row-level in the readers, so accepted
   * filters are fully consumed, not re-applied):
   *  - `time`/`part_start`/`series_id` comparisons and `name`/`labels_str`
   *    equality/IN prune at three levels: partition directories (time
-  *    bounds clamp `part_start` exactly like [[TsdbTable.readRaw]]),
+  *    bounds clamp `part_start` to the partition holding the lower bound),
   *    parquet row-group stats, then rows;
   *  - filters on LWW-key-stable columns only are accepted — a `value`
   *    predicate applied below the merge could resurrect a superseded
@@ -178,9 +183,33 @@ final class GraftTableProvider extends TableProvider with DataSourceRegister
   }
 }
 
+/** What the engine hands its own merged reads as values: the
+  * [[TsdbTable]] instance's config (authoritative — the scan never
+  * re-reads `.schema`), the snapshot handle (None = current view; any
+  * seq, 0 included, admits `__seq <= asOf` plus legacy rows — the CDC
+  * at-since view of `changes(0)` reads exactly the legacy rows), and
+  * the label-equality conjuncts the caller already resolved through
+  * the series registry. */
+private[graft] final case class GraftRawRead(
+    config: TsdbConfig, asOf: Option[Long] = None,
+    labelEq: Seq[(String, String)] = Nil) {
+
+  /** The merged raw view of the table at `path`: one
+    * `DataSourceV2Relation` over [[GraftBatchTable]] (RawSchema, no
+    * job to build). Callers narrow it with ordinary filters — Spark
+    * pushes `part_start`/`time`/`name` conjuncts into [[GraftScan]]. */
+  def frame(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofPlan(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftBatchTable(path, CaseInsensitiveStringMap.empty(),
+          TsdbTable.RawSchema, Some(this)),
+        None, None, CaseInsensitiveStringMap.empty()))
+}
+
 private[sources] final class GraftBatchTable(
     tablePath: String, options: CaseInsensitiveStringMap,
-    tableSchema: StructType = TsdbTable.RawSchema)
+    tableSchema: StructType = TsdbTable.RawSchema,
+    pinned: Option[GraftRawRead] = None)
   extends Table with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -262,7 +291,7 @@ private[sources] final class GraftBatchTable(
     val merged = new util.HashMap[String, String](options)
     merged.putAll(o)
     new GraftScanBuilder(tablePath, new CaseInsensitiveStringMap(merged),
-      tableSchema)
+      tableSchema, pinned)
   }
 
   override def newWriteBuilder(
@@ -311,7 +340,8 @@ private[sources] final class GraftBatchTable(
 
 private[sources] final class GraftScanBuilder(
     tablePath: String, options: CaseInsensitiveStringMap,
-    tableSchema: StructType = TsdbTable.RawSchema)
+    tableSchema: StructType = TsdbTable.RawSchema,
+    pinned: Option[GraftRawRead] = None)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with SupportsPushDownAggregates with SupportsPushDownLimit {
 
@@ -327,11 +357,34 @@ private[sources] final class GraftScanBuilder(
   private var aggGroupByPart: Boolean = false
   private var limit: Option[Int] = None
 
+  /** The table's DECLARED config (the engine's own, or `.schema`), kept
+    * separate from the defaulted fallback: a pre-declaration legacy
+    * table (created before self-describing tables, no append since) must
+    * not be served with silently-assumed interval/MOR settings where that
+    * could DROP data (see [[GraftScan.prunedPartitions]], r12 review). */
+  private val declared: Option[TsdbConfig] = pinned.map(_.config).orElse(
+    SchemaJson.readCached(tablePath, SparkSession.active.sparkContext.hadoopConfiguration))
+
+  /** Snapshot handle (r12): `option("asOf", seq)` serves the table
+    * exactly as it stood at that committed seq — Delta `versionAsOf`
+    * shaped, same fence/handle rules as [[TsdbTable.readRawAsOf]]. */
+  private val asOf: Option[Long] = pinned match {
+    case Some(r) => r.asOf
+    case None => Option(options.get("asof")).map { s =>
+      val seq = s.toLong
+      require(seq > 0,
+        s"asOf=$seq is not a snapshot handle: take one with currentSeq() " +
+          "(seqs are wall-clock ms — always positive)")
+      seq
+    }
+  }
+
   /** Label-equality scan options (r15): `.option("label.<key>", "<value>")`
     * — the scan serves only rows whose labels map has that exact entry.
     * See [[GraftLabels]]. Gates aggregate pushdown off (footer partials
     * can't see label filters). */
-  private val labelEq = GraftLabels.fromOptions(options)
+  private val labelEq: Seq[(String, String)] =
+    pinned.map(_.labelEq).getOrElse(GraftLabels.fromOptions(options))
 
   /** Aggregate pushdown (r13): global COUNT(*) / COUNT(col) / MIN /
     * MAX collapse to a parquet FOOTER walk — each file contributes one
@@ -364,10 +417,7 @@ private[sources] final class GraftScanBuilder(
       case Seq(Some("part_start")) => true
       case _ => return false
     }
-    val mor = SchemaJson.readCached(tablePath,
-        SparkSession.active.sparkContext.hadoopConfiguration)
-      .exists(_.overrideOld)
-    if (mor || labelEq.nonEmpty) return false
+    if (declared.exists(_.overrideOld) || labelEq.nonEmpty) return false
     // value/valueStr extrema push since r14 — NOT from footer stats
     // (double stats are NaN-hostile and binary stats truncate; the
     // stats stager refuses both shapes), but through the columnar-
@@ -444,7 +494,7 @@ private[sources] final class GraftScanBuilder(
 
   override def build(): Scan =
     new GraftScan(tablePath, options, pushed, required, aggPushed, limit,
-      aggGroupByPart)
+      aggGroupByPart, declared, asOf, labelEq)
 }
 
 /** Writer-side plumbing shared by the batch write and the streaming
@@ -713,27 +763,14 @@ private[sources] final class GraftScan(
     tablePath: String, options: CaseInsensitiveStringMap,
     pushed: Array[Filter], required: StructType,
     agg: Option[Seq[GraftAggSpec]] = None, limit: Option[Int] = None,
-    aggGroupByPart: Boolean = false)
+    aggGroupByPart: Boolean, declared: Option[TsdbConfig], asOf: Option[Long],
+    labelEq: Seq[(String, String)])
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering with SupportsReportPartitioning
   with SupportsReportOrdering {
 
   private val spark = SparkSession.active
-  /** The table's DECLARED config (`.schema`), kept separate from the
-    * defaulted fallback: a pre-declaration legacy table (created before
-    * self-describing tables, no append since) must not be served with
-    * silently-assumed interval/MOR settings where that could DROP data
-    * (see [[prunedPartitions]], r12 review). */
-  private val declared: Option[TsdbConfig] =
-    SchemaJson.readCached(tablePath, spark.sparkContext.hadoopConfiguration)
   private val config: TsdbConfig = declared.getOrElse(TsdbConfig())
-  /** Snapshot handle (r12): `option("asOf", seq)` serves the table
-    * exactly as it stood at that committed seq — Delta `versionAsOf`
-    * shaped, same fence/handle rules as [[TsdbTable.readRawAsOf]]. */
-  private val asOf: Option[Long] = Option(options.get("asof")).map(_.toLong)
-
-  /** Label-equality scan filter (r15): see [[GraftLabels]]. */
-  private val labelEq: Seq[(String, String)] = GraftLabels.fromOptions(options)
 
   /** The label filter resolved to a series_id set at planning by the
     * table's series resolver ([[TsdbTable.resolveSeries]]) — None when
@@ -789,10 +826,15 @@ private[sources] final class GraftScan(
     agg.map(aggSchema).getOrElse(required)
   override def toBatch: Batch = this
   override def description(): String =
-    s"GraftScan path=$tablePath, mor=${config.overrideOld}, " +
+    s"GraftScan path=$tablePath/raw, mor=${config.overrideOld}, " +
       asOf.map(s => s"asOf=$s, ").getOrElse("") +
       (if (labelEq.isEmpty) ""
-       else s"LabelFilters: [${labelEq.map { case (k, v) => s"$k=$v" }.mkString(", ")}], ") +
+       else s"LabelFilters: [${labelEq.map { case (k, v) => s"$k=$v" }.mkString(", ")}], " +
+         labelSeries.map(set => s"LabelSeries: ${set.size()}, ").getOrElse("")) +
+      // the pushed conjuncts on the partition column alone: they prune
+      // whole partition directories at planning and never touch a row
+      s"PartitionFilters: [${pushed.filter(_.references.forall(_ == "part_start"))
+        .mkString(", ")}], " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       agg.map(a => s"PushedAggregates: [${a.map(s =>
         if (s.op == "count_star") "COUNT(*)"
@@ -1164,20 +1206,15 @@ private[sources] final class GraftScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // columnar scope (see GraftColumnar): non-MOR byte-range splits, no
-    // limit, projection without the labels map. Pushed filters ride the
-    // columnar path (r13 cont.) as long as every referenced column is
-    // itself vector-decodable — true for the whole accepted filter
-    // surface (key-stable flat columns), checked defensively anyway.
-    val columnarOk = !config.overrideOld && agg.isEmpty && limit.isEmpty &&
-      labelEq.isEmpty && // label filters evaluate row-level (r15)
-      GraftColumnar.supports(required.fieldNames.toSeq) &&
-      pushed.flatMap(_.references).forall(GraftColumnar.columnarName)
-    // MOR stripes go columnar too (r15): page-bulk decode + primitive-
-    // key merge + gather ([[GraftMorColumnarReader]]). A label filter
-    // rides along only in its resolved-series-set form (a cheap long
-    // membership test); the map-equality fallback stays row-shaped.
-    val columnarMorOk = config.overrideOld && agg.isEmpty && limit.isEmpty &&
+    // columnar scope (see GraftColumnar): non-MOR byte-range splits and
+    // MOR stripes alike (r15: page-bulk decode + primitive-key merge +
+    // gather, [[GraftMorColumnarReader]]), no limit. Pushed filters ride
+    // the columnar path (r13 cont.) as long as every referenced column
+    // is itself vector-decodable — true for the whole accepted filter
+    // surface (key-stable flat columns), checked defensively anyway. A
+    // label filter rides along in its resolved-series-set form (a cheap
+    // long membership test); the map-equality fallback stays row-shaped.
+    val columnarOk = agg.isEmpty && limit.isEmpty &&
       (labelEq.isEmpty || labelSeries.isDefined) &&
       GraftColumnar.supports(required.fieldNames.toSeq) &&
       pushed.flatMap(_.references).forall(GraftColumnar.columnarName)
@@ -1199,8 +1236,7 @@ private[sources] final class GraftScan(
       // r14: unconditional addExact threw where a non-ANSI session's
       // unpushed plan would have wrapped
       ansiSum = spark.conf.get("spark.sql.ansi.enabled", "true").toBoolean,
-      labelEq = labelEq, labelSeries = labelSeries,
-      columnarMorOk = columnarMorOk)
+      labelEq = labelEq, labelSeries = labelSeries)
   }
 }
 
@@ -1217,8 +1253,7 @@ private[sources] final class GraftReaderFactory(
     aggGroupByPart: Boolean = false,
     ansiSum: Boolean = true,
     labelEq: Seq[(String, String)] = Nil,
-    labelSeries: Option[java.util.HashSet[Long]] = None,
-    columnarMorOk: Boolean = false)
+    labelSeries: Option[java.util.HashSet[Long]] = None)
   extends PartitionReaderFactory {
 
   // read-only shared Configuration (broadcast-cached per executor JVM)
@@ -1237,15 +1272,15 @@ private[sources] final class GraftReaderFactory(
   }
 
   override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case _: GraftFileSplit => columnarOk
-    case _: GraftMorStripe => columnarMorOk
+    case _: GraftFileSplit | _: GraftMorStripe => columnarOk
     case _ => false
   }
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = p match {
     case s: GraftFileSplit =>
-      new GraftColumnarReader(hconf, s, requested, pushed, commits, asOf)
+      new GraftColumnarReader(hconf, s, requested, pushed, commits, asOf,
+        labelSeries)
     case m: GraftMorStripe =>
       new GraftMorColumnarReader(hconf, m, requested, pushed, commits, asOf,
         labelSeries)

@@ -508,13 +508,12 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   private[graft] def txnVersion(id: String): Long =
     readCommits(strict = true).flatMap(_.txns.get(id)).getOrElse(-1L)
 
-  /** The snapshot-read variant for external readers: STRICT manifest
-    * (a transient read error must fail the snapshot, not corrupt it)
-    * plus the [[readRawAsOf]] horizon fence and handle validation. */
+  /** The snapshot-read variant: STRICT manifest (a transient read error
+    * must fail the snapshot, not corrupt it) plus the [[readRawAsOf]]
+    * horizon fence. Handles are validated where they enter — the DSv2
+    * `asOf` option and [[readRawAsOf]]; [[changes]] reads its at-since
+    * view at any `sinceSeq`, 0 included. */
   private[graft] def commitsSnapshotAsOf(asOfSeq: Long): Option[(Long, Set[Long])] = {
-    require(asOfSeq > 0,
-      s"asOf=$asOfSeq is not a snapshot handle: take one with currentSeq() " +
-        "(seqs are wall-clock ms — always positive)")
     val c = readCommits(strict = true)
     c.map(_.horizon).filter(_ > asOfSeq).foreach { h =>
       throw new IllegalArgumentException(
@@ -688,60 +687,32 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   private def rawListing(): DataFrame =
     spark.read.schema(TsdbTable.RawFileSchema).parquet(rawPath)
 
-  /** Raw-table file read, admitting COMMITTED batches only (see the
-    * reader-atomicity note above). The schema is declared
-    * ([[TsdbTable.RawFileSchema]]), so files written before `__seq`
-    * existed read it as NULL, which orders after any stamped version
-    * under `desc` (nulls last) — old rows lose to any rewrite, as they
-    * must. The manifest is read BEFORE the file listing
-    * (spark.read.parquet lists eagerly): listing first would let a
-    * mid-commit listing capture a torn file prefix that a manifest read
-    * moments later then admits — the exact race this mechanism closes.
-    * Read-manifest-then-list means any batch the manifest admits was
-    * fully on disk before its commit was published; the manifest is
-    * frozen into the plan as literals, so one query holds one
-    * consistent snapshot even as later actions re-resolve the file
-    * listing. */
-  private def rawFiles(asOf: Option[Long] = None,
-                       strict: Boolean = false): DataFrame = {
-    // snapshot and CDC reads take the STRICT manifest read: the lenient
-    // all-visible fallback is right for current-view availability, but
-    // under asOf it would let the bare `__seq <= asOf` filter admit
-    // crashed mutations' orphans below the snapshot seq (and a CDC
-    // window would report them as phantom changes) — a transient
-    // manifest-read error must fail the snapshot, not corrupt it
-    // (FileNotFound still means a genuinely manifest-less legacy table)
-    // FILE LISTING FIRST, manifest second (r11, race-caught by the
-    // compaction-vs-select spec returning an EMPTY view): relation
-    // creation pins the file list, so ordering decides what a read that
-    // straddles a compaction swap can observe. Manifest-first is torn —
-    // an OLD manifest paired with a post-swap listing filters the new
-    // generation out (its seq is not yet admitted) and serves empty.
-    // Listing-first closes it: an old listing pairs with any manifest
-    // correctly (old seqs stay under the monotone floor; deleted files
-    // at scan time are the documented retryable error), and a mid-swap
-    // listing implies the commit already happened, so the manifest read
-    // AFTER it always admits the new generation — both generations
-    // visible collapse to the new rows under LWW. Every interleaving is
-    // now correct-view-or-retryable-error, never silently empty/partial.
+  /** The stamped, UNMERGED committed rows — every version with its
+    * `__seq`/`__del` — for the reads that classify versions themselves
+    * ([[changes]]' window, the touched-partition probe of
+    * [[serverAggregateAtSnapshot]]); merged reads go through [[merged]].
+    * The schema is declared ([[TsdbTable.RawFileSchema]]): files written
+    * before `__seq` existed read it as NULL. STRICT manifest read: both
+    * callers serve snapshot or CDC semantics, where the lenient
+    * all-visible fallback would admit crashed mutations' orphans (FileNotFound
+    * still means a genuinely manifest-less legacy table).
+    *
+    * FILE LISTING FIRST, manifest second (r11, race-caught by the
+    * compaction-vs-select spec returning an EMPTY view): relation
+    * creation pins the file list, so ordering decides what a read that
+    * straddles a compaction swap can observe. Manifest-first is torn —
+    * an OLD manifest paired with a post-swap listing filters the new
+    * generation out (its seq is not yet admitted) and serves empty.
+    * Listing-first closes it: an old listing pairs with any manifest
+    * correctly (old seqs stay under the monotone floor; deleted files
+    * at scan time are the documented retryable error), and a mid-swap
+    * listing implies the commit already happened, so the manifest read
+    * AFTER it always admits the new generation. The manifest is frozen
+    * into the plan as literals, so one query holds one consistent
+    * snapshot. [[graft.sources.GraftScan]] plans in the same order. */
+  private def rawFiles(): DataFrame = {
     val listed = rawListing()
-    val cm = readCommits(strict = strict || asOf.nonEmpty)
-    asOf.foreach { s =>
-      val h = cm.map(_.horizon).getOrElse(0L)
-      if (s < h) throw new IllegalArgumentException(
-        s"snapshot seq=$s predates the history-rewrite horizon=$h of $path: " +
-          "compaction / retention / a partition-drop or non-MOR delete has " +
-          "physically removed the file generations this snapshot needs. " +
-          "Time travel reaches back only to the most recent rewrite.")
-    }
-    val df = applyVisibility(listed, cm)
-    asOf match {
-      // committed-AND-at-most-asOf: later batches drop out, crashed
-      // mutations' orphans stay out (exact-set admission), legacy NULL
-      // rows predate every seq and stay in — the state as of `asOf`
-      case Some(s) => df.filter(col("__seq").isNull || col("__seq") <= s)
-      case None => df
-    }
+    applyVisibility(listed, readCommits(strict = true))
   }
 
   private def partStart(time: org.apache.spark.sql.Column) =
@@ -1242,8 +1213,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     if (partitions.isEmpty) return
     // MOR dedup before rebuilding — superseded versions must not be
     // double-counted into the partials
-    val raw = mergeOnRead(rawFiles()
-      .filter(col("part_start").isin(partitions: _*)))
+    val raw = merged().filter(col("part_start").isin(partitions: _*))
     val src = if (config.preAggregates.nonEmpty) raw.persist() else raw
     try {
       writeRollup(Rollup.build(src, config.rollupIntervalMs, config.aggregates), rollupPath)
@@ -1253,8 +1223,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
 
   private def refreshPreAgg(partitions: Seq[Long]): Unit = {
     if (config.preAggregates.isEmpty || partitions.isEmpty) return
-    preAggsFrom(mergeOnRead(rawFiles()
-      .filter(col("part_start").isin(partitions: _*))))
+    preAggsFrom(merged().filter(col("part_start").isin(partitions: _*)))
   }
 
   private def preAggsFrom(raw: DataFrame): Unit =
@@ -1278,7 +1247,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * still has physical rows until compaction, and a raw-file scan would
     * resurrect it into the names list. */
   def refreshNames(): Unit = {
-    val names = mergeOnRead(rawFiles()).select("name").distinct()
+    val names = merged().select("name").distinct()
     names.coalesce(1).write.mode(SaveMode.Overwrite).parquet(namesPath)
   }
 
@@ -1291,29 +1260,23 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     fs.exists(hp) && fs.listStatus(hp).exists(_.getPath.getName.startsWith("part_start="))
   }
 
-  /** Last-write-wins merge-on-read: keep only the newest `__seq` version
-    * of each (series, time). Engaged only under `config.overrideOld` —
-    * the window shuffle is the price of rewrite support on plain parquet
-    * (Delta/Hudi pay the same at their merge step); partition pruning
-    * still applies upstream, and compaction = the delete path's partition
-    * rewrite. */
-  private def mergeOnRead(df: DataFrame): DataFrame =
-    if (!config.overrideOld) df.drop("__seq", "__del")
-    else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("series_id", "time").orderBy(col("__seq").desc)
-      // a DELETE tombstone (r7) is just the newest version of its row
-      // with `__del` set: it wins LWW like any rewrite, then drops here —
-      // and a LATER append of the same (series, time) out-seqs the
-      // tombstone, so re-adding deleted keys works by the same rule.
-      // Files written before tombstones existed read NULL __del.
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && !coalesce(col("__del"), lit(false)))
-        .drop("__rn", "__seq", "__del")
-    }
+  /** The merged raw view: committed rows only, the newest `__seq`
+    * version of each (series, time) under `config.overrideOld` with
+    * tombstone winners dropped — the classic MOR pattern (Hudi/Delta read
+    * path; plain parquet has no MERGE). It is one DSv2 relation over
+    * [[graft.sources.GraftScan]], handed this instance's config: MOR
+    * tables merge in a shuffle-free k-way merge over the sorted files of
+    * each partition, append-only tables read file-parallel with no
+    * merge. Callers narrow it with plain filters — `part_start`, `time`
+    * and `name` conjuncts push into the scan, where they prune partition
+    * directories, row groups and rows. `labelEq` must already resolve
+    * through [[resolveSeries]]: the scan then prunes by the series set. */
+  private def merged(asOf: Option[Long] = None,
+                     labelEq: Seq[(String, String)] = Nil): DataFrame =
+    graft.sources.GraftRawRead(config, asOf, labelEq).frame(spark, path)
 
   /** Raw table pruned to the queried partitions (partition pruning is a
-    * plain Catalyst partition filter — check `.explain` PartitionFilters). */
+    * pushed `part_start` filter — check `.explain` PartitionFilters). */
   def readRaw(fromMs: Long, toMs: Long): DataFrame =
     readRawImpl(fromMs, toMs, None)
 
@@ -1329,22 +1292,23 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * destroy older generations and snapshot reads below the fence throw
     * rather than serve a torn view. Delta `VERSION AS OF` / Iceberg
     * snapshot-id reads are the production analogs. */
-  def readRawAsOf(fromMs: Long, toMs: Long, asOfSeq: Long): DataFrame = {
-    require(asOfSeq > 0,
-      s"asOfSeq=$asOfSeq is not a snapshot handle: take one with " +
-        "currentSeq() on a table with a commit manifest (seqs are " +
-        "wall-clock ms — always positive); a manifest-less legacy table " +
-        "has no version history to travel to")
+  def readRawAsOf(fromMs: Long, toMs: Long, asOfSeq: Long): DataFrame =
     readRawImpl(fromMs, toMs, Some(asOfSeq))
-  }
 
-  private def readRawImpl(fromMs: Long, toMs: Long, asOf: Option[Long]): DataFrame = {
-    if (!hasPartitions(rawPath))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TsdbTable.RawSchema)
+  private def readRawImpl(fromMs: Long, toMs: Long, asOf: Option[Long],
+                          labelEq: Seq[(String, String)] = Nil): DataFrame = {
+    asOf.foreach { s =>
+      require(s > 0,
+        s"asOfSeq=$s is not a snapshot handle: take one with " +
+          "currentSeq() on a table with a commit manifest (seqs are " +
+          "wall-clock ms — always positive); a manifest-less legacy table " +
+          "has no version history to travel to")
+      // a fenced handle fails HERE, when the read is built; the scan
+      // reads the manifest again after its file listing
+      commitsSnapshotAsOf(s)
+    }
     val pLo = (fromMs / config.partitionIntervalMs) * config.partitionIntervalMs
-    mergeOnRead(rawFiles(asOf)
-      .filter(col("part_start").between(pLo, toMs)))
+    merged(asOf, labelEq).filter(col("part_start").between(pLo, toMs))
   }
 
   /** The newest committed batch seq — the snapshot handle for
@@ -1414,9 +1378,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         TsdbTable.NamesSchema)
     else spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath).orderBy("name")
 
-  def countMetrics(): Long =
-    if (!hasPartitions(rawPath)) 0L
-    else mergeOnRead(rawFiles()).count()
+  def countMetrics(): Long = merged().count()
 
   private def partitionStarts(): Seq[Long] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1437,7 +1399,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   private def recentPartitions(n: Int): Option[DataFrame] = {
     val parts = partitionStarts().takeRight(n)
     if (parts.isEmpty) None
-    else Some(mergeOnRead(rawFiles().filter(col("part_start").isin(parts: _*))))
+    else Some(merged().filter(col("part_start").isin(parts: _*)))
   }
 
   /** Distinct label sets, scanning only the LAST TWO time partitions —
@@ -1529,32 +1491,29 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       //    which can sit up to step-1 BELOW from, minus wins.max*step
       //  - downsample/cross-series: prev/linear interpolation donors within
       //    the tolerance
-      QueryEngine.select(labelPruned(readRaw(rawSelectLo(p), p.to), p.filter), p)
+      QueryEngine.select(
+        readRawImpl(rawSelectLo(p), p.to, None, resolvedLabels(p.filter)), p)
     }
   }
 
-  /** Raw-scan series pruning (r15): label-equality conjuncts in the
-    * query filter resolve through the series registry
-    * ([[resolveSeries]]) into a `series_id IN` predicate that Spark
-    * pushes to the parquet scan — row-group stats then skip non-matching
-    * series runs (files are sorted by series_id), the reference's
-    * filter-to-sharding-key scan (P1, `pkg/pquerier/select.go:598`,
-    * `partmgr.go:459-468`) on the programmatic/SQL query path. Pruning
-    * is strictly a SUPERSET reduction: only top-level AND conjuncts of
-    * the exact `labels['k'] = 'v'` shape participate (a row matching the
-    * full filter necessarily matches each such conjunct, so its series
-    * is in the resolved set); the original filter still applies
-    * row-level afterwards. Falls back untouched when the registry is
-    * unavailable (legacy sidecar), the filter has no such conjuncts, or
-    * the match set exceeds [[TsdbTable.MaxPruneSeries]] (unselective —
-    * the IN-list would cost more than it saves). A provably-empty match
-    * short-circuits to an empty scan. */
-  private def labelPruned(raw: DataFrame, filter: String): DataFrame =
-    resolveSeries(TsdbTable.labelEqConjuncts(filter)) match {
-      case None => raw
-      case Some(ids) if ids.isEmpty => raw.filter(lit(false))
-      case Some(ids) => raw.filter(col("series_id").isin(ids.toSeq: _*))
-    }
+  /** Raw-scan series pruning (r15): the top-level `labels['k'] = 'v'`
+    * conjuncts of a query filter, handed to the scan only when they
+    * resolve through the series registry ([[resolveSeries]]) — the
+    * reference's filter-to-sharding-key scan (P1,
+    * `pkg/pquerier/select.go:598`, `partmgr.go:459-468`). The scan then
+    * drops series stripes and row groups outside the set (files are
+    * sorted by series_id) and tests rows by set membership; a
+    * provably-empty set reads nothing. Pruning is a SUPERSET reduction
+    * (a row matching the full filter matches each such conjunct), and
+    * the original filter still applies row-level afterwards. Nil when
+    * the registry is unavailable (legacy sidecar), the filter has no
+    * such conjuncts, or the match set exceeds
+    * [[TsdbTable.MaxPruneSeries]]: the scan's map-equality fallback
+    * would then force its row reader, for no pruning. */
+  private def resolvedLabels(filter: String): Seq[(String, String)] = {
+    val eq = TsdbTable.labelEqConjuncts(filter)
+    if (resolveSeries(eq).isDefined) eq else Nil
+  }
 
   /** disableClientAggr coerces coarser steps down to rollup granularity
     * so the rollup can serve (reference select.go:185-187) — but ONLY
@@ -1630,8 +1589,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       // registry pruning is snapshot-safe: the registry is a SUPERSET
       // across time (series are only ever added), so the resolved set
       // covers every series live at any earlier seq
-      QueryEngine.select(
-        labelPruned(readRawAsOf(rawSelectLo(p0), p0.to, asOfSeq), p0.filter), p0))
+      QueryEngine.select(readRawImpl(rawSelectLo(p0), p0.to, Some(asOfSeq),
+        resolvedLabels(p0.filter)), p0))
   }
 
   /** Enumerate the data files under `base` RIGHT NOW and build a reader
@@ -1707,9 +1666,9 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val liveOpt = frozenRollup(preAgg.map(preAggPath).getOrElse(rollupPath),
       preAgg.getOrElse(Nil))
     if (liveOpt.isEmpty) return None
-    // history fence up front (STRICT — the raw path's check in rawFiles
-    // must also govern the rollup path: below the fence the live rollup
-    // has physically lost the dropped/rewritten generations)
+    // history fence up front (STRICT — the raw path's fence must also
+    // govern the rollup path: below the fence the live rollup has
+    // physically lost the dropped/rewritten generations)
     val commits = readCommits(strict = true)
     commits.map(_.horizon).filter(_ > asOfSeq).foreach { h =>
       throw new IllegalArgumentException(
@@ -1721,7 +1680,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     // a manifest-less legacy table has no stamped history, so no
     // partition can be proven untouched
     if (commits.isEmpty) return None
-    val cur = rawFiles(strict = true)
+    val cur = rawFiles()
     val pLo = rollupSelectLo(p)
     val touched = cur
       .filter(col("part_start").between(pLo, p.to) && col("__seq") > asOfSeq)
@@ -1730,8 +1689,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val view =
       if (touched.isEmpty) live
       else {
-        val snapRaw = mergeOnRead(rawFiles(Some(asOfSeq))
-          .filter(col("part_start").isin(touched: _*)))
+        val snapRaw = merged(Some(asOfSeq))
+          .filter(col("part_start").isin(touched: _*))
         val rebuilt = Rollup.build(snapRaw, config.rollupIntervalMs,
             config.aggregates,
             keys = preAgg.map(Rollup.preAggKeys).getOrElse(Nil))
@@ -1770,8 +1729,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * existed-at-since probe PARTITION-PRUNES the snapshot read to the
     * partitions the window touched (the touched list is collected —
     * bounded by the partition-directory count, like partitionStarts —
-    * and planted as an isin partition filter BELOW the LWW window, so
-    * the probe never shuffles untouched history). Requires
+    * and pushed into the merged scan as a partition filter, so the probe
+    * never reads untouched history). Requires
     * `sinceSeq >= horizon` — below the history fence the pre-images are
     * physically gone ([[readRawAsOf]]). */
   def changes(sinceSeq: Long, untilSeq: Long = Long.MaxValue,
@@ -1793,7 +1752,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           "re-seed the consumer from a full snapshot instead.")
     }
     // legacy NULL-seq rows carry no change tracking and never match
-    val win = rawFiles(strict = true).filter(col("__seq") > sinceSeq && col("__seq") <= untilSeq)
+    val win = rawFiles().filter(col("__seq") > sinceSeq && col("__seq") <= untilSeq)
     if (!config.overrideOld)
       return withType(win.drop("__seq", "__del"), lit("insert"))
     // MOR: collapse the window to each key's NEWEST version (the net
@@ -1801,14 +1760,14 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val w = Window.partitionBy("series_id", "time").orderBy(col("__seq").desc)
     val post = win.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__seq")
-    // touched partitions as PLAN LITERALS: a semi-join alone cannot push
-    // below the LWW window, so the whole table would shuffle per CDC
+    // touched partitions as PLAN LITERALS: a semi-join alone cannot
+    // prune the at-since scan, so the whole table would be read per CDC
     // poll (review-caught) — the list is bounded by the partition count
     val touchedParts = win.select("part_start").distinct()
       .collect().map(_.getLong(0))
-    val preLive = mergeOnRead(rawFiles(Some(sinceSeq)).filter(
+    val preLive = merged(Some(sinceSeq)).filter(
       if (touchedParts.isEmpty) lit(false)
-      else col("part_start").isin(touchedParts: _*)))
+      else col("part_start").isin(touchedParts: _*))
     val preKeys = preLive
       .select(col("series_id"), col("time")).distinct()
       .withColumn("__existed", lit(true))
@@ -1889,18 +1848,18 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * just before their deletion and opens them after — a read ERROR on
     * local fs (retry succeeds), never wrong data; object stores with
     * delayed deletes don't even see that. */
-  /** Committed-only read of ONE partition dir (a whole-table rawFiles()
-    * inside a per-partition maintenance loop would re-list and
-    * footer-merge every file in the table once per partition). Unlike
-    * [[rawFiles]], the manifest/listing order is immaterial here: this
-    * runs on the WRITER side under the single-writer lease, so no
-    * concurrent swap can interleave. Legacy rows (no `__seq` in their
-    * file) read NULL and stay visible ([[applyVisibility]]). */
-  private def visibleDir(dir: org.apache.hadoop.fs.Path,
-                         strict: Boolean = false): DataFrame = {
-    val cm = readCommits(strict)
-    applyVisibility(spark.read.schema(TsdbTable.RawDirSchema).parquet(dir.toString), cm)
-  }
+  /** Committed-only, UNMERGED read of ONE partition dir — the non-MOR
+    * delete's rewrite input (a whole-table read inside a per-partition
+    * maintenance loop would re-list every file in the table once per
+    * partition). STRICT: rewriting a crashed mutation's orphans under a
+    * fresh file would commit them. Unlike [[rawFiles]], the
+    * manifest/listing order is immaterial here: this runs on the WRITER
+    * side under the single-writer lease, so no concurrent swap can
+    * interleave. Legacy rows (no `__seq` in their file) read NULL and
+    * stay visible ([[applyVisibility]]). */
+  private def visibleDir(dir: org.apache.hadoop.fs.Path): DataFrame =
+    applyVisibility(spark.read.schema(TsdbTable.RawDirSchema).parquet(dir.toString),
+      readCommits(strict = true))
 
   /** Land `df`'s rows INSIDE `dir` alongside its existing files: write
     * to a dot-stage (invisible to Spark listings), then per-file rename
@@ -1933,13 +1892,13 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       maxSeq = math.max(maxSeq, seq)
       // committed rows only — an aborted mutation's invisible garbage
       // must not be resurrected under a fresh committed seq
-      val keep = mergeOnRead(visibleDir(dir))
+      val keep = merged().filter(col("part_start") === start).drop("part_start")
         // re-stamp so the compacted generation supersedes every old file
         // under LWW, and future rewrites still order after it
         .withColumn("__seq", lit(seq))
         .cache()
       keep.count() // materialize before touching the source files
-      stageIntoDir(keep.drop("part_start")
+      stageIntoDir(keep
           .repartition(pmod(col("series_id"), lit(config.shardingBuckets.toLong)))
           .sortWithinPartitions("series_id", "time"),
         dir, ".compact_stage")
@@ -2093,8 +2052,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
             newEnc.foreach(recordSeriesTypes)
             val liveParts =
               if (nTombs == 0) touched
-              else mergeOnRead(rawFiles()
-                  .filter(col("part_start").isin(touched: _*)))
+              else merged().filter(col("part_start").isin(touched: _*))
                 .select("part_start").distinct()
                 .collect().map(_.getLong(0)).toSeq
             (touched.toSet -- liveParts.toSet).foreach(dropRollupPartitionAt)
@@ -2164,7 +2122,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           // READER-ATOMIC delete (r7), the MOR path: emit TOMBSTONES for
           // the live matched rows instead of rewriting the partition — a
           // tombstone is the newest LWW version of its (series, time)
-          // and mergeOnRead drops it, so the WHOLE delete (across every
+          // and the merged read drops it, so the WHOLE delete (across every
           // touched partition) becomes visible exactly when the shared
           // seq commits after this loop; no dir swap, no
           // missing-partition window. Physical space reclaims at the
@@ -2175,7 +2133,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           // live view is cached: it serves the live count, the matched
           // count and (through recompute at write time — the cache only
           // spares the extra jobs) the tombstone rows.
-          val live = mergeOnRead(visibleDir(dir)).cache()
+          val live = merged().filter(col("part_start") === start)
+            .drop("part_start").cache()
           try {
             val liveCount = live.count()
             val tomb = live.filter(delPred)
@@ -2211,7 +2170,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           // on the orphan seq and delete WHOLE, committed survivors
           // included
           // (non-MOR files carry no tombstone column)
-          val keep = visibleDir(dir, strict = true).drop("__del")
+          val keep = visibleDir(dir).drop("__del")
             .filter(!delPred)
             .cache()
           val rows = keep.count() // materialize before overwriting the source

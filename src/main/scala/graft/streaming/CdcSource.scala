@@ -149,8 +149,8 @@ final class CdcSource(sqlContext: SQLContext, metadataPath: String,
     recordOffered(until)
     // column order is plan-dependent (unions); pin to the declared
     // schema, then re-flag as a streaming frame (the engine asserts
-    // isStreaming on V1 getBatch results — see GraftStreamingBridge)
-    org.apache.spark.sql.GraftStreamingBridge.asStreamingBatch(
+    // isStreaming on V1 getBatch results — see GraftSqlBridge)
+    org.apache.spark.sql.GraftSqlBridge.asStreamingBatch(
       table.changes(since, until, preImages)
         .select(CdcSource.ChangeSchema.fieldNames.map(
           org.apache.spark.sql.functions.col): _*))

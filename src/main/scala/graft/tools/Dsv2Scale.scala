@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Scale + honesty receipt for the DSv2 batch source (SCALE.md r12):
   * stages one tsdb table from `factor`-replicated events, then times
-  * four reads of the same data (min of 2 runs, full materialization via
-  * an aggregate over every row that survives):
+  * reads of the same data (min of 2 runs, full materialization via an
+  * aggregate over every row that survives):
   *
   *  - `native` — `spark.read.parquet(raw/)`: Spark's vectorized reader,
   *    no visibility/merge semantics. The throughput CEILING the custom
@@ -16,13 +16,10 @@ import org.apache.spark.sql.functions._
   *  - `dsv2_filtered` — one metric + a half-range time filter pushed
   *    into the source: partition pruning + row-group stats + exact rows.
   *    The pushdown receipt is the RATIO to dsv2_full.
-  *  - `readraw` — the programmatic `TsdbTable.readRaw` (Spark vectorized
-  *    scan + the same visibility filter): the API twin the source must
-  *    match semantically (hash-checked by tsdb_dsv2_read every round).
   *
-  * On a MOR table the same four run with `mergeOnRead`'s row_number
-  * window as the programmatic twin — there the DSv2 side's shuffle-free
-  * k-way merge is the structural win.
+  * `TsdbTable.readRaw` is the same scan (the engine reads its merged raw
+  * view through this source), so it has no lane of its own. On a MOR
+  * table the DSv2 lanes run the shuffle-free k-way merge.
   *
   * Usage: runMain graft.tools.Dsv2Scale <sfDir> [factor] [mor]
   */
@@ -80,7 +77,6 @@ object Dsv2Scale {
       val dsv2Full = best(force(spark.read.format("graft").load(s"$dir/table")))
       val dsv2Filt = best(force(spark.read.format("graft").load(s"$dir/table")
         .filter(col("name") === "click" && col("time").between(F, T))))
-      val readraw = best(force(t.readRaw(0L, Long.MaxValue)))
       // r13 aggregate pushdown receipt: COUNT(*) through the DSv2
       // source is a footer walk (no page IO) on an append-only table —
       // compare against Spark's parquet count over the same files
@@ -124,7 +120,7 @@ object Dsv2Scale {
 
       println(s"""{"tool":"Dsv2Scale","rows":$rows,"factor":$factor,"mor":$mor,""" +
         s""""native_sec":${f"$native%.3f"},"dsv2_full_sec":${f"$dsv2Full%.3f"},""" +
-        s""""dsv2_filtered_sec":${f"$dsv2Filt%.3f"},"readraw_sec":${f"$readraw%.3f"},""" +
+        s""""dsv2_filtered_sec":${f"$dsv2Filt%.3f"},""" +
         s""""filter_ratio":${f"${dsv2Filt / dsv2Full}%.3f"},""" +
         s""""dsv2_count_sec":${f"$dsv2Count%.3f"},"native_count_sec":${f"$nativeCount%.3f"},""" +
         s""""dsv2_sum_pushed_sec":${f"$dsv2SumPushed%.3f"},"native_sum_sec":${f"$nativeSum%.3f"},""" +

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.storage.{TsdbConfig, TsdbTable}
 
-/** `spark.read.format("graft")` — the DSv2 batch source (r12): the read
-  * view must be row-identical to the programmatic [[TsdbTable.readRaw]]
-  * on append-only, legacy, and MOR (rewrites + tombstones) tables; the
+/** `spark.read.format("graft")` — the DSv2 batch source (r12) and the
+  * engine's one merged read: the read view must be row-identical to the
+  * [[LwwOracle]] reference on append-only, legacy, and MOR (rewrites +
+  * tombstones) tables; the
   * plan must show the pushed filters and prune both partitions and
   * columns. */
 class GraftSourceSpec extends SparkSuite {
@@ -51,7 +52,7 @@ class GraftSourceSpec extends SparkSuite {
     t.append(samples(("cpu", "c", Base + 2 * Day + 5, 5.0)))
 
     val ds = spark.read.format("graft").load(s"$dir/tbl")
-    assert(sortedRows(ds) == sortedRows(t.readRaw(0L, Long.MaxValue)))
+    assert(sortedRows(ds) == sortedRows(LwwOracle.readRaw(t)))
 
     // SQL surface: CREATE TABLE ... USING graft
     spark.sql(s"CREATE TABLE graft_dsv2_t USING graft OPTIONS (path '$dir/tbl')")
@@ -59,7 +60,7 @@ class GraftSourceSpec extends SparkSuite {
       val viaSql = spark.sql(
         "SELECT name, labels_str, time, value, valueStr, series_id, part_start " +
           "FROM graft_dsv2_t")
-      assert(sortedRows(viaSql) == sortedRows(t.readRaw(0L, Long.MaxValue)))
+      assert(sortedRows(viaSql) == sortedRows(LwwOracle.readRaw(t)))
     } finally spark.sql("DROP TABLE graft_dsv2_t")
   }
 
@@ -111,7 +112,7 @@ class GraftSourceSpec extends SparkSuite {
     // tombstone-delete one key (MOR delete path)
     t.delete(Base, Base, metrics = Seq("cpu"), filter = "labels['host'] = 'b'")
 
-    val expect = sortedRows(t.readRaw(0L, Long.MaxValue))
+    val expect = sortedRows(LwwOracle.readRaw(t))
     val ds = spark.read.format("graft").load(s"$dir/tbl")
     assert(sortedRows(ds) == expect)
     // values prove the merge: cpu/a@Base must be 10.0, cpu/b@Base gone
@@ -198,7 +199,7 @@ class GraftSourceSpec extends SparkSuite {
     t.delete(Base + Day, Base + Day, metrics = Seq("mem"))
     def asOfDf = spark.read.format("graft").option("asOf", snap.toString)
       .load(s"$dir/tbl")
-    assert(sortedRows(asOfDf) == sortedRows(t.readRawAsOf(0L, Long.MaxValue, snap)))
+    assert(sortedRows(asOfDf) == sortedRows(LwwOracle.readRaw(t, Some(snap))))
     assert(asOfDf.filter(col("name") === "cpu").select("value")
       .head().getDouble(0) == 1.0, "pre-rewrite value at the snapshot")
     assert(asOfDf.filter(col("name") === "mem").count() == 1,
@@ -747,7 +748,7 @@ class GraftSourceSpec extends SparkSuite {
       .withColumn("__seq", lit(System.currentTimeMillis() + 999999L))
       .write.mode("append").parquet(partDir.toString)
 
-    val raw = t.readRaw(0L, Long.MaxValue).cache()
+    val raw = LwwOracle.readRaw(t).cache()
     val rawCount = raw.count()
     def ds = spark.read.format("graft").load(s"$dir/tbl")
     val filters: Seq[Option[org.apache.spark.sql.Column]] = Seq(
@@ -1326,15 +1327,15 @@ class GraftSourceSpec extends SparkSuite {
     val ds = spark.read.format("graft").load(s"$dir/tbl")
     assert(scanOf(ds).supportsColumnar,
       "MOR scans must serve ColumnarBatches since r15")
-    assert(sortedRows(ds) == sortedRows(t.readRaw(0L, Long.MaxValue)))
+    assert(sortedRows(ds) == sortedRows(LwwOracle.readRaw(t)))
     val mapAgg = ds.agg(count(lit(1)), sum(size(col("labels")))).head()
-    val rawAgg = t.readRaw(0L, Long.MaxValue)
+    val rawAgg = LwwOracle.readRaw(t)
       .agg(count(lit(1)), sum(size(col("labels")))).head()
     assert(mapAgg == rawAgg, "map projection through the gather must match")
 
     // pushed filters stay exact below the batch merge
     val f = ds.filter(col("name") === "cpu" && col("time") >= Base + 60000L)
-    val g = t.readRaw(0L, Long.MaxValue)
+    val g = LwwOracle.readRaw(t)
       .filter(col("name") === "cpu" && col("time") >= Base + 60000L)
     assert(sortedRows(f) == sortedRows(g))
 
@@ -1344,7 +1345,7 @@ class GraftSourceSpec extends SparkSuite {
     val snap = spark.read.format("graft").option("asOf", seq1.toString)
       .load(s"$dir/tbl")
     assert(scanOf(snap).supportsColumnar)
-    assert(sortedRows(snap) == sortedRows(t.readRawAsOf(0L, Long.MaxValue, seq1)))
+    assert(sortedRows(snap) == sortedRows(LwwOracle.readRaw(t, Some(seq1))))
 
     // limit keeps the row-shaped path (prefix semantics live there)
     val lim = spark.read.format("graft").load(s"$dir/tbl").limit(5)
@@ -1384,7 +1385,7 @@ class GraftSourceSpec extends SparkSuite {
 
       val ds = spark.read.format("graft").load(s"$dir/tbl")
       assert(scanOf(ds).supportsColumnar, s"round $round must go columnar")
-      assert(sortedRows(ds) == sortedRows(t.readRaw(0L, Long.MaxValue)),
+      assert(sortedRows(ds) == sortedRows(LwwOracle.readRaw(t)),
         s"fuzz round $round diverged")
       // one random pushed-filter shape per round
       val flt = rnd.nextInt(3) match {
@@ -1393,7 +1394,7 @@ class GraftSourceSpec extends SparkSuite {
         case _ => col("series_id") > 0L
       }
       assert(sortedRows(ds.filter(flt)) ==
-        sortedRows(t.readRaw(0L, Long.MaxValue).filter(flt)),
+        sortedRows(LwwOracle.readRaw(t).filter(flt)),
         s"fuzz round $round filtered diverged")
     }
   }
@@ -1523,5 +1524,50 @@ class GraftSourceSpec extends SparkSuite {
       assert(spark.read.format("graft").load(s"$dir/tbl")
         .select("labels_str").collect().map(_.getString(0)).toSeq == Seq("host=c:\\tmp2"))
     } finally spark.sql("DROP TABLE graft_del_bs_t")
+  }
+
+  test("one merged read: a raw MOR select plans the GraftScan merge and no window") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val dir = Files.createTempDirectory("graft_one_read").toString
+    val t = new TsdbTable(spark, s"$dir/tbl", TsdbConfig(overrideOld = true))
+    t.append(samples(("cpu", "a", Base, 1.0), ("cpu", "a", Base + 1000, 2.0),
+      ("cpu", "b", Base, 3.0), ("mem", "a", Base, 4.0)))
+    t.append(samples(("cpu", "a", Base, 10.0)))
+    val got = t.select(graft.query.SelectParams(name = "cpu", from = Base,
+      to = Base + Day))
+    val scan = scanOf(got)
+    assert(scan.scan.getClass.getSimpleName == "GraftScan", scan.toString)
+    def windows(p: SparkPlan): Seq[WindowExec] =
+      p.collect { case w: WindowExec => w } ++
+        p.collect { case a: AdaptiveSparkPlanExec => a }.flatMap(a => windows(a.executedPlan))
+    assert(windows(got.queryExecution.executedPlan).isEmpty,
+      got.queryExecution.executedPlan.toString)
+    // the merge really ran: the rewrite wins
+    assert(got.select("labels_str", "t", "v").collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getDouble(2))).toSet ==
+      Set(("host=a", Base, 10.0), ("host=a", Base + 1000, 2.0), ("host=b", Base, 3.0)))
+  }
+
+  test("non-MOR label scan whose series set resolves plans columnar; rows equal the row reader's") {
+    import org.apache.spark.sql.execution.ColumnarToRowExec
+    val dir = Files.createTempDirectory("graft_label_col").toString
+    val t = new TsdbTable(spark, s"$dir/tbl")
+    t.append(samples((0 until 64).map(i =>
+      ("cpu", s"h${i % 16}", Base + i * 1000L, i.toDouble)): _*))
+    assert(t.resolveSeries(Seq("host" -> "h3")).exists(_.length == 1))
+    def labeled = spark.read.format("graft").option("label.host", "h3")
+      .load(s"$dir/tbl")
+    val plan = labeled.queryExecution.executedPlan
+    assert(scanOf(labeled).supportsColumnar &&
+      plan.collect { case c: ColumnarToRowExec => c }
+        .exists(_.collectFirst { case b: BatchScanExec => b }.isDefined),
+      plan.toString)
+    // a pushed limit keeps the row reader: the same rows either way
+    val rowPath = labeled.limit(1000)
+    assert(!scanOf(rowPath).supportsColumnar)
+    assert(sortedRows(labeled) == sortedRows(rowPath))
+    assert(labeled.count() == 4)
   }
 }

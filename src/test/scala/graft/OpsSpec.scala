@@ -1973,37 +1973,6 @@ class TextAnalysisSpec extends SparkSuite {
       TextAnalysis.lmScore(train, target, "doc_id", "text", addK = 0.0))
   }
 
-  test("PosSortedSums kernel == interpreted sort_array+aggregate fold, bit-exact") {
-    // shuffled positions, negative/denormal-ish values, a multi-field row
-    // set, and a NULL value that must poison its field's sum — the shapes
-    // where the r15 kernel could diverge from the HOF fold it replaces
-    graft.functions.GraftFunctions.register(spark)
-    val rows = Seq(
-      (1L, Seq((3, 0.1, -2.0), (1, 1e-300, 3.5), (2, -0.30000000000000004, 0.0))),
-      (2L, Seq((10, 2.0, 1.0))),
-      (3L, Seq.empty[(Int, Double, Double)]))
-      .toDF("id", "xs")
-      .select(col("id"), expr(
-        "transform(xs, e -> struct(e._1 as pos, e._2 as a, e._3 as b))").as("arr"))
-    val kern = rows.select(col("id"),
-        call_function(graft.functions.PosSortedSums.Name, col("arr")).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toSeq).toMap
-    val hof = rows.select(col("id"),
-        aggregate(sort_array(col("arr")),
-          struct(lit(0.0).as("a"), lit(0.0).as("b")),
-          (acc, x) => struct((acc.getField("a") + x.getField("a")).as("a"),
-            (acc.getField("b") + x.getField("b")).as("b"))).as("s"))
-      .collect().map(r => r.getLong(0) ->
-        Seq(r.getStruct(1).get(0), r.getStruct(1).get(1))).toMap
-    assert(kern == hof, s"kernel $kern != HOF $hof")
-    // NULL poisoning mirrors `+`: one null b → b-sum null, a-sum intact
-    val withNull = spark.sql(
-      s"""SELECT ${graft.functions.PosSortedSums.Name}(array(
-         |  struct(2, 1.0d, cast(null as double)), struct(1, 2.0d, 4.0d))) AS s""".stripMargin)
-      .collect().head.getSeq[Any](0).toSeq
-    assert(withNull == Seq(3.0, null), s"got $withNull")
-  }
-
   test("perplexityBuckets: exact tertile thresholds, interpolated; NULL → na") {
     val scored = Seq(
       (1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0), (5L, 50.0), (6L, 60.0))

@@ -1179,11 +1179,11 @@ class TsdbTableSpec extends SparkSuite {
     assert(TsdbTable.labelEqConjuncts("labels['host'] = 'h3'") ==
       Seq(("host", "h3")))
     val got = t.select(p)
-    // the registry-resolved series set is pushed into the parquet scan
-    // (a single matched series optimizes isin to an equality)
+    // the registry-resolved series set reaches the scan: the conjunct
+    // and the size of the set it resolved to show in the scan node
     val plan = got.queryExecution.executedPlan.toString
-    assert("series_id#\\d+L? (=|IN) ".r.findFirstIn(plan).isDefined,
-      s"expected a pushed series_id predicate in:\n${plan.take(1500)}")
+    assert(plan.contains("LabelFilters: [host=h3], LabelSeries: 1,"),
+      s"expected the resolved label set in the scan:\n${plan.take(1500)}")
     assert(TsdbTable.labelEqConjuncts(
       "labels['a'] = 'x' AND time > 5 AND 'y' = labels['b']").toSet ==
       Set(("a", "x"), ("b", "y")))
