@@ -45,42 +45,59 @@ object Dedup {
 
   // ------------------------------------------------- brute-force Jaccard
 
-  /** All pairs (id_a < id_b) with shingle-Jaccard >= threshold — exact
-    * (a pair above any threshold > 0 shares >= 1 shingle, so the exploded
-    * shingle self-join loses nothing vs a full O(n²) cross join). Cost is
-    * Σ_shingle freq² rather than n² — the exact-but-unblocked baseline;
-    * [[minHashLshPairs]] is the banded scale path. */
+  /** All pairs (id_a < id_b) with shingle-Jaccard >= threshold, ordered by
+    * (id_a, id_b) — exact (a pair above any threshold > 0 shares >= 1
+    * shingle, so the exploded shingle self-join loses nothing vs a full
+    * O(n²) cross join). Cost is Σ_shingle freq² rather than n² — the
+    * exact-but-unblocked baseline; [[minHashLshPairs]] is the banded
+    * scale path. */
   def jaccardPairsBrute(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, threshold: Double): DataFrame = {
-    require(threshold > 0, "threshold must be > 0 (zero-overlap pairs are not enumerated)")
-    // the shingle column uses graft_word_ngrams: register on the frame's
-    // OWN session (the active one may differ in multi-session apps)
-    GraftFunctions.register(docs.sparkSession)
+    requireThreshold(threshold)
     // no size>0 filter: it would re-evaluate the whole shingle expression a
     // second time per row (HOFs don't codegen), and empty arrays simply
     // explode to zero rows / never become candidates. Scope-cached for the
     // same multi-consumer reason as the LSH path (see Caching.scoped)
-    val sh = docs.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
+    val sh = shingleTable(docs, idCol, textCol, k)
     val ex = sh.select(col("id"), explode(col("sh")).as("s"))
     val cand = ex.select(col("id").as("id_a"), col("s"))
       .join(ex.select(col("id").as("id_b"), col("s")), "s")
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    Caching.scoped(sh)(verifyJaccard(cand, sh, threshold))
+    Caching.scoped(sh)(verifyJaccard(cand, sh, threshold).orderBy("id_a", "id_b"))
+  }
+
+  /** Every pair operator enumerates only pairs that share a shingle, so a
+    * threshold must be a Jaccard value that excludes zero overlap. */
+  private def requireThreshold(threshold: Double): Unit =
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must be in (0, 1]: $threshold (zero-overlap pairs are not enumerated)")
+
+  /** The `(id, sh)` shingle table every pair operator and the persisted
+    * index start from. Registers graft's functions on the frame's OWN
+    * session first: the shingles analyze eagerly here, and the active
+    * session may differ in multi-session apps. */
+  private def shingleTable(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
+    GraftFunctions.register(docs.sparkSession)
+    docs.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
   }
 
   // ---------------------------------------------------------- MinHash+LSH
 
   /** MinHash+LSH near-dup pairs — the scale path:
     * shingle → 'numHashes' xxhash64 minima per doc → band the signature
-    * ('bands' bands of numHashes/bands rows) → bucket-join on
-    * (band, band-hash) → verify candidates with the TRUE Jaccard.
+    * ('bands' bands of numHashes/bands rows) → group each (band, bucket)
+    * → verify candidates with the TRUE Jaccard. Output
+    * `(id_a, id_b, jaccard)`, id_a < id_b, ordered by (id_a, id_b): the
+    * small verified result is sorted here, at the operator's edge.
     *
     * Verification makes output exact-subset of the brute-force result;
-    * banding makes the join linear in collisions instead of O(n²). With
-    * r = numHashes/bands rows per band, P[candidate] = 1-(1-j^r)^bands —
-    * 64 hashes / 32 bands catches j >= 0.5 with P > 0.9999. */
-  /** @param maxBucketSize optional cap on LSH bucket membership: a bucket
+    * banding makes the candidate set linear in collisions instead of
+    * O(n²). With r = numHashes/bands rows per band,
+    * P[candidate] = 1-(1-j^r)^bands — 64 hashes / 32 bands catches
+    * j >= 0.5 with P > 0.9999.
+    *
+    * @param maxBucketSize optional cap on LSH bucket membership: a bucket
     *        with more docs than this is skipped entirely (candidate count
     *        in a bucket is quadratic, and degenerate corpora — boilerplate,
     *        empty docs — produce mega-buckets that dominate runtime at
@@ -90,51 +107,59 @@ object Dedup {
                       k: Int, threshold: Double,
                       numHashes: Int = 64, bands: Int = 32,
                       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val (pairs, release) = minHashLshPairsDeferred(docs, idCol, textCol,
-      k, threshold, numHashes, bands, maxBucketSize)
-    try { pairs.count(); pairs } finally release()
+    val (sh, pairs) = lshPairsPlan(docs, idCol, textCol, k, threshold,
+      numHashes, bands, maxBucketSize)
+    Caching.scoped(sh)(pairs.orderBy("id_a", "id_b"))
   }
 
   /** [[minHashLshPairs]] for single-action consumers (clustering's eager
     * checkpoint, a lone write): skips the eager pair materialization —
     * see [[Caching.scopedDeferred]] for the release/unpersist contract.
     * Saves one full pass over the LSH pipeline when the caller's next
-    * step materializes the pairs anyway. */
+    * step materializes the pairs anyway. The pair set comes back
+    * UNORDERED: its consumers never read the order, and sorting it would
+    * cost a sampling job plus a range exchange — sort it yourself if you
+    * need (id_a, id_b) order. */
   def minHashLshPairsDeferred(docs: DataFrame, idCol: String, textCol: String,
                               k: Int, threshold: Double,
                               numHashes: Int = 64, bands: Int = 32,
                               maxBucketSize: Int = Int.MaxValue): (DataFrame, () => Unit) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    // the shingle table feeds FIVE consumers (signature, both bucket-join
-    // sides, both verification explodes) and AQE reuses none of their
-    // exchanges (each aliases differently) — without caching, the
-    // tokenize-and-fold HOF chain re-runs over the corpus per consumer
-    // (plan audit: 6 parquet scans). Caching.scoped persists it (NOT
-    // localCheckpoint: that truncates lineage, and a lost executor —
-    // routine at 1000 executors — would kill the job instead of
-    // recomputing) for exactly as long as it takes to materialize the
-    // small pair output, then releases it
-    val sh = docs.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
+    val (sh, pairs) = lshPairsPlan(docs, idCol, textCol, k, threshold,
+      numHashes, bands, maxBucketSize)
+    Caching.scopedDeferred(sh)(pairs)
+  }
 
-    val allBuckets = bandBucketRows(minHashSignatures(sh, numHashes), numHashes, bands)
-    // scope-cached for the same reason as `sh`: the bucket self-join's two
-    // sides would each re-run the explode + 64-way min aggregate; the
-    // bucket table is 3 longs × (docs × bands) — small
-    val buckets =
-      if (maxBucketSize == Int.MaxValue) allBuckets
-      else {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
-        allBuckets.withColumn("__bs", count(lit(1)).over(w))
-          .filter(col("__bs") <= maxBucketSize).drop("__bs")
-      }
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+  /** The self-join LSH pipeline behind [[minHashLshPairs]] and
+    * [[minHashLshPairsDeferred]], UNSCOPED and unordered: returns
+    * `(shingles, pairsPlan)`; callers scope-cache `shingles` around their
+    * final frame.
+    *
+    * Candidates come from ONE grouped bucket table: `groupBy(band,
+    * bucket)` collects each bucket's member ids, the `maxBucketSize` guard
+    * is a size filter on that list (every doc has one row per band, so the
+    * list size IS the bucket size), and the `id_a < id_b` pairs expand
+    * in-row by exploding the list twice, then `distinct` (a pair that
+    * collides in several bands is one candidate). The shingle table feeds
+    * the signature build and both sides of [[verifyJaccard]], and AQE
+    * reuses none of those exchanges — uncached, the tokenize-and-fold HOF
+    * chain would re-run over the corpus per consumer. [[Caching]] persists
+    * it (NOT localCheckpoint: that truncates lineage, and a lost executor
+    * — routine at 1000 executors — would kill the job instead of
+    * recomputing) for exactly as long as the small pair output takes to
+    * materialize. */
+  private def lshPairsPlan(docs: DataFrame, idCol: String, textCol: String,
+                           k: Int, threshold: Double, numHashes: Int, bands: Int,
+                           maxBucketSize: Int): (DataFrame, DataFrame) = {
+    requireThreshold(threshold)
+    val sh = shingleTable(docs, idCol, textCol, k)
+    val cand = lshBuckets(sh, numHashes, bands)
+      .groupBy("band", "bucket").agg(collect_list(col("id")).as("ids"))
+      .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucketSize)
+      .select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(col("ids")).as("id_b"))
+      .filter(col("id_a") < col("id_b"))
       .distinct()
-
-    Caching.scopedDeferred(sh, buckets)(verifyJaccard(cand, sh, threshold))
+    (sh, verifyJaccard(cand, sh, threshold))
   }
 
   /** Per-id MinHash signatures over a `(id, sh)` shingle table (one
@@ -171,15 +196,19 @@ object Dedup {
         (0 until numHashes).map(j => col("__sig").getItem(j).as(s"h$j")): _*)
   }
 
-  /** Signature rows → `(id, band, bucket)` rows: hash each band's run of
-    * `numHashes/bands` signature values into one bucket key and explode. */
-  private def bandBucketRows(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  /** A `(id, sh)` shingle table → `(id, band, bucket)` rows: each doc's
+    * MinHash signature, each band's run of `numHashes/bands` values
+    * hashed into one bucket key, one row per band. Shingle-less docs
+    * yield no rows. */
+  private[graft] def lshBuckets(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         xxhash64((0 until rows).map(r => col(s"h${b * rows + r}")): _*).as("bucket"))
     }
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bb"))
+    minHashSignatures(sh, numHashes)
+      .select(col("id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
@@ -211,28 +240,36 @@ object Dedup {
                            k: Int, threshold: Double,
                            numHashes: Int = 64, bands: Int = 32,
                            maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    // register on the FRAMES' session: shingles analyze eagerly in the
-    // selects below, and wordNgramsFast registers only on the active
-    // session — a multi-session app would otherwise hit an unresolved
-    // graft_word_ngrams here (same per-frame rule as jaccardPairsBrute)
-    GraftFunctions.register(docs.sparkSession)
-    GraftFunctions.register(bench.sparkSession)
-    val shd = docs.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
-    val shb = bench.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
-    // both shingle tables feed a signature build + two verification
-    // consumers (explode, sizes) — scope-cached like the self-join path
-    val bd0 = bandBucketRows(minHashSignatures(shd, numHashes), numHashes, bands)
-    val bb = bandBucketRows(minHashSignatures(shb, numHashes), numHashes, bands)
-    crossVerifiedPairs(bd0, shd, bb, shb, threshold, maxBucketSize,
-      scopeCache = Seq(shd, shb))
+    val (caches, pairs) = crossPairsPlan(docs, bench, idCol, textCol, k,
+      threshold, numHashes, bands, maxBucketSize)
+    Caching.scoped(caches: _*)(pairs.orderBy("doc_id", "bench_id"))
   }
 
-  /** The cross-dataset candidate + verification pipeline shared by
+  /** [[crossMinHashLshPairs]] UNSCOPED and unordered: `(scope caches,
+    * pairsPlan)`. Both shingle tables feed a signature build and a
+    * verification side, and the batch bucket table `bb` feeds TWO
+    * consumers (the broadcast key set and the candidate join) — uncached,
+    * the batch signature build would run twice (measured ~0.9 s at
+    * sf0.1); all three are (batch or corpus) × small and are released
+    * with the rest of the scope. */
+  private def crossPairsPlan(docs: DataFrame, bench: DataFrame,
+                             idCol: String, textCol: String,
+                             k: Int, threshold: Double, numHashes: Int, bands: Int,
+                             maxBucketSize: Int): (Seq[DataFrame], DataFrame) = {
+    requireThreshold(threshold)
+    val shd = shingleTable(docs, idCol, textCol, k)
+    val shb = shingleTable(bench, idCol, textCol, k)
+    val bb = lshBuckets(shb, numHashes, bands)
+    (Seq(shd, shb, bb), crossVerifiedPairs(lshBuckets(shd, numHashes, bands), shd,
+      bb, shb, threshold, maxBucketSize))
+  }
+
+  /** The cross-dataset candidate + verification plan shared by
     * [[crossMinHashLshPairs]] (both sides computed) and
     * [[incrementalDedupKeepIndexed]] (history from the persisted store) —
     * ONE definition so the mega-bucket rule and candidate semantics can
-    * never drift between the recompute and indexed paths.
+    * never drift between the recompute and indexed paths. Unscoped and
+    * unordered: callers scope-cache `shb` and `bb`.
     *
     * History buckets are first restricted to the buckets the batch
     * actually TOUCHES, via a broadcast semi-join on the batch's
@@ -246,8 +283,7 @@ object Dedup {
     * contract of the indexed path). */
   private def crossVerifiedPairs(histBk: DataFrame, histSh: DataFrame,
                                  bb: DataFrame, shb: DataFrame,
-                                 threshold: Double, maxBucketSize: Int,
-                                 scopeCache: Seq[DataFrame]): DataFrame = {
+                                 threshold: Double, maxBucketSize: Int): DataFrame = {
     val touched = histBk.join(
       broadcast(bb.select(col("band"), col("bucket")).distinct()),
       Seq("band", "bucket"))
@@ -262,23 +298,26 @@ object Dedup {
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
       .select(col("x.id").as("doc_id"), col("y.id").as("bench_id"))
       .distinct()
-    // bb joins the scope caches: it feeds TWO consumers (the broadcast
-    // key set and the candidate join) — uncached, the batch signature
-    // aggregate would run twice (measured ~0.9 s at sf0.1); the table is
-    // (batch × bands) rows and is released with the rest of the scope
-    Caching.scoped(scopeCache :+ bb: _*)(
-      verifyJaccardBetween(cand, histSh, shb, "doc_id", "bench_id", threshold))
+    verifyJaccardBetween(cand, histSh, shb, "doc_id", "bench_id", threshold)
   }
 
-  /** Verify candidate pairs against the TRUE shingle Jaccard via
-    * explode + hash-join intersection counting: |A∩B| = matching-shingle
-    * rows per pair, |A∪B| = |A|+|B|-|A∩B|.
+  /** Verify candidate pairs against the TRUE shingle Jaccard, in-row:
+    * each candidate joins each side's shingle array once, then
+    * |A∩B| = size(array_intersect(sa, sb)) (shingle arrays are already
+    * distinct), |A∪B| = |A|+|B|-|A∩B|, and the ratio is rounded to 6
+    * places. `both > 0` stays in the filter: a zero-overlap candidate is
+    * never emitted, so the output is an exact subset of brute force.
+    * Unordered — the public eager operators sort at their own edge.
     *
-    * This shape matters: filtering on `jaccard(sh_a, sh_b)` directly makes
-    * Catalyst collapse the shingle-building ArrayTransform into the join
-    * filter, re-evaluating it INTERPRETED per candidate pair (profiled:
-    * >100x slower). Exploded hash joins + one aggregate stay inside
-    * whole-stage codegen and scale linearly in candidate volume. */
+    * The shape relies on the shingle tables being materialized: every
+    * caller scope-caches them (the indexed path reads history arrays from
+    * disk), so the intersection reads stored arrays and never re-runs the
+    * interpreted tokenize-and-fold HOF chain per candidate pair.
+    * [[Caching.planOnly]] explain plans are the one exception: they build
+    * the plan uncached and never execute it. Catalyst pushes both filters
+    * into the second join's condition, so a candidate that clears them
+    * computes the intersection three times there and once more in the
+    * projection — each a hash pass over two stored arrays. */
   private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
     verifyJaccardBetween(cand, sh, sh, "id_a", "id_b", threshold)
 
@@ -288,27 +327,18 @@ object Dedup {
     * when both sides are the same table. */
   private def verifyJaccardBetween(cand: DataFrame, shA: DataFrame, shB: DataFrame,
                                    aCol: String, bCol: String,
-                                   threshold: Double): DataFrame = {
-    // r16 note (measured, REJECTED): pre-filtering the shingle tables to
-    // candidate ids (semi-join before the explodes) A/B'd at +30-70% on
-    // every LSH entry — the un-cached candidate plan re-executed once per
-    // consumer (3x the band self-join), and caching it measured worse
-    // still (cache-build contention on the bench's small tables). The
-    // explode-then-join shape below keeps ONE candidate evaluation and
-    // stays inside whole-stage codegen.
-    val inter = cand
-      .join(shA.select(col("id").as(aCol), explode(col("sh")).as("s")), aCol)
-      .join(shB.select(col("id").as(bCol), explode(col("sh")).as("s")), Seq(bCol, "s"))
-      .groupBy(aCol, bCol).agg(count(lit(1)).as("both"))
-    inter
-      .join(shA.select(col("id").as(aCol), size(col("sh")).as("na")), aCol)
-      .join(shB.select(col("id").as(bCol), size(col("sh")).as("nb")), bCol)
+                                   threshold: Double): DataFrame =
+    cand
+      .join(shA.select(col("id").as(aCol), col("sh").as("__sa")), aCol)
+      .join(shB.select(col("id").as(bCol), col("sh").as("__sb")), bCol)
+      .select(col(aCol), col(bCol),
+        size(array_intersect(col("__sa"), col("__sb"))).as("both"),
+        size(col("__sa")).as("na"), size(col("__sb")).as("nb"))
+      .filter(col("both") > 0)
       .withColumn("jaccard",
         col("both").cast("double") / (col("na") + col("nb") - col("both")))
       .filter(col("jaccard") >= threshold)
       .select(col(aCol), col(bCol), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(aCol, bCol)
-  }
 
   // ------------------------------------------------- near-dup clustering
 
@@ -428,21 +458,23 @@ object Dedup {
 
   /** Incremental dedup — the daily-crawl shape: keep only the new-batch
     * docs that are NOT near-dups of the existing corpus. Pair generation
-    * is [[crossMinHashLshPairs]] with the EXISTING corpus on the big
+    * is [[crossMinHashLshPairs]]' plan with the EXISTING corpus on the big
     * (mega-bucket-guarded) side and the batch on the broadcast side, so
     * growing history never reshuffles more than its own signatures; the
-    * batch keep-list is one anti-join on the verified matches. Within-
-    * batch duplicates are a separate concern — compose with
-    * [[dropNearDuplicates]] over the batch's own pair graph for that. */
+    * batch keep-list is one anti-join on the verified matches (which need
+    * no order). Within-batch duplicates are a separate concern — compose
+    * with [[dropNearDuplicates]] over the batch's own pair graph for
+    * that. */
   def incrementalDedupKeep(batch: DataFrame, existing: DataFrame,
                            idCol: String, textCol: String,
                            k: Int, threshold: Double,
                            numHashes: Int = 64, bands: Int = 32,
                            maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val pairs = crossMinHashLshPairs(existing, batch, idCol, textCol,
+    val (caches, pairs) = crossPairsPlan(existing, batch, idCol, textCol,
       k, threshold, numHashes, bands, maxBucketSize)
+    val matched = Caching.scoped(caches: _*)(pairs)
     // no distinct: left_anti is insensitive to duplicate right-side keys
-    batch.join(pairs.select(col("bench_id").as(idCol)), Seq(idCol), "left_anti")
+    batch.join(matched.select(col("bench_id").as(idCol)), Seq(idCol), "left_anti")
   }
 
   // ------------------------------------------------ persisted dedup index
@@ -450,13 +482,13 @@ object Dedup {
   /** Build and persist the MinHash dedup index of a corpus under `path`:
     * the shingle table (`shingles/`: id, sh) and the banded bucket table
     * (`buckets/`: id, band, bucket) as parquet, plus a `_meta` sidecar
-    * recording the signature parameters and the caller's corpus `version`
-    * — the [[graft.ops.Similarity.saveIvfIndex]] lifecycle applied to
-    * dedup. The point at scale: a daily-crawl loop that calls
-    * [[incrementalDedupKeep]] re-shingles and re-signs the ENTIRE history
-    * every batch (O(history) compute per day); with the index persisted,
-    * each batch pays its own signature build plus disk-backed joins —
-    * O(batch) compute against O(history) I/O.
+    * recording the signature parameters, the id column's type and the
+    * caller's corpus `version` — the [[graft.ops.Similarity.saveIvfIndex]]
+    * lifecycle applied to dedup. The point at scale: a daily-crawl loop
+    * that calls [[incrementalDedupKeep]] re-shingles and re-signs the
+    * ENTIRE history every batch (O(history) compute per day); with the
+    * index persisted, each batch pays its own signature build plus
+    * disk-backed joins — O(batch) compute against O(history) I/O.
     *
     * `_meta` invalidates first (crash mid-build → retrain, never a stale
     * meta over new tables). The shingle table is scope-persisted across
@@ -464,53 +496,70 @@ object Dedup {
   def saveDedupIndex(docs: DataFrame, idCol: String, textCol: String,
                      path: String, version: String, k: Int,
                      numHashes: Int = 64, bands: Int = 32): Unit = {
-    import org.apache.spark.sql.SaveMode
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sp = docs.sparkSession
-    GraftFunctions.register(sp) // shingles analyze before the signature build registers
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), sp.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path, "_meta"), false)
-    val sh = docs.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
-    sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sh.write.mode(SaveMode.Overwrite).parquet(s"$path/shingles")
-      bandBucketRows(minHashSignatures(sh, numHashes), numHashes, bands)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets")
-    } finally sh.unpersist()
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_meta"), true)
-    try out.write(
-      s"version=$version\nk=$k\nnumHashes=$numHashes\nbands=$bands\n"
-        .getBytes("UTF-8"))
-    finally out.close()
+    writeIndexTables(docs, idCol, textCol, path, k, numHashes, bands,
+      org.apache.spark.sql.SaveMode.Overwrite)
+    writeIndexMeta(docs.sparkSession, path, Map("version" -> version, "k" -> k.toString,
+      "numHashes" -> numHashes.toString, "bands" -> bands.toString,
+      "idType" -> docs.schema(idCol).dataType.sql))
   }
 
   /** The `_meta` of a persisted dedup index: (version, k, numHashes,
     * bands); None if absent (→ caller rebuilds). */
   def readDedupIndexMeta(spark: SparkSession,
-                         path: String): Option[(String, Int, Int, Int)] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(path, "_meta")
-    if (!fs.exists(meta)) return None
-    val in = fs.open(meta)
-    val kv =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .flatMap { l => l.split("=", 2) match {
-          case Array(a, b) => Some(a -> b); case _ => None } }.toMap
-      finally in.close()
+                         path: String): Option[(String, Int, Int, Int)] =
+    readIndexMeta(spark, path).flatMap(indexParams)
+
+  private def indexParams(kv: Map[String, String]): Option[(String, Int, Int, Int)] =
     for {
       v <- kv.get("version"); k <- kv.get("k")
       nh <- kv.get("numHashes"); b <- kv.get("bands")
     } yield (v, k.toInt, nh.toInt, b.toInt)
+
+  private def indexFs(spark: SparkSession, path: String) =
+    org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+
+  /** Every `key=value` line of the index `_meta`; None if absent. */
+  private def readIndexMeta(spark: SparkSession, path: String): Option[Map[String, String]] = {
+    val fs = indexFs(spark, path)
+    val meta = new org.apache.hadoop.fs.Path(path, "_meta")
+    if (!fs.exists(meta)) return None
+    val in = fs.open(meta)
+    try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .flatMap { l => l.split("=", 2) match {
+        case Array(a, b) => Some(a -> b); case _ => None } }.toMap)
+    finally in.close()
+  }
+
+  private def writeIndexMeta(spark: SparkSession, path: String,
+                             kv: Map[String, String]): Unit = {
+    val out = indexFs(spark, path).create(new org.apache.hadoop.fs.Path(path, "_meta"), true)
+    try out.write(kv.map { case (a, b) => s"$a=$b\n" }.mkString.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Delete `_meta`, then write (or append) the shingle and bucket tables
+    * of `docs`; the shingle table is persisted across its two writes. */
+  private def writeIndexTables(docs: DataFrame, idCol: String, textCol: String,
+                               path: String, k: Int, numHashes: Int, bands: Int,
+                               mode: org.apache.spark.sql.SaveMode): Unit = {
+    indexFs(docs.sparkSession, path).delete(new org.apache.hadoop.fs.Path(path, "_meta"), false)
+    val sh = shingleTable(docs, idCol, textCol, k)
+    sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      sh.write.mode(mode).parquet(s"$path/shingles")
+      lshBuckets(sh, numHashes, bands).write.mode(mode).parquet(s"$path/buckets")
+    } finally sh.unpersist()
   }
 
   /** Append a (kept) batch to a persisted dedup index — the tail of the
     * daily loop: dedup the batch against the index, then index the
     * survivors so tomorrow's batch sees them. Parameters come from the
     * index's own `_meta` (a drifted k/hash setup would silently miss
-    * duplicates — fail-loud instead); the caller supplies the NEW corpus
-    * `version` the grown index describes.
+    * duplicates — fail-loud instead, and so does a batch whose id type
+    * differs from the one the index recorded); the caller supplies the
+    * NEW corpus `version` the grown index describes.
     *
     * Crash discipline (the [[saveDedupIndex]] contract): `_meta` is
     * deleted BEFORE the appends and rewritten only after both tables
@@ -521,38 +570,56 @@ object Dedup {
     * serve partial or duplicated batch rows. */
   def appendDedupIndex(docs: DataFrame, idCol: String, textCol: String,
                        path: String, version: String): Unit = {
-    import org.apache.spark.sql.SaveMode
     val sp = docs.sparkSession
-    val (_, k, numHashes, bands) = readDedupIndexMeta(sp, path).getOrElse(
+    val meta = readIndexMeta(sp, path).getOrElse(Map.empty)
+    val (_, k, numHashes, bands) = indexParams(meta).getOrElse(
       throw new IllegalStateException(
         s"appendDedupIndex: no index _meta at $path — build with saveDedupIndex first"))
-    GraftFunctions.register(sp) // shingles analyze before the signature build registers
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), sp.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path, "_meta"), false)
-    val sh = docs.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
-    sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sh.write.mode(SaveMode.Append).parquet(s"$path/shingles")
-      bandBucketRows(minHashSignatures(sh, numHashes), numHashes, bands)
-        .write.mode(SaveMode.Append).parquet(s"$path/buckets")
-    } finally sh.unpersist()
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_meta"), true)
-    try out.write(
-      s"version=$version\nk=$k\nnumHashes=$numHashes\nbands=$bands\n"
-        .getBytes("UTF-8"))
-    finally out.close()
+    meta.get("idType").foreach(requireIdType(path, _, docs.schema(idCol).dataType))
+    writeIndexTables(docs, idCol, textCol, path, k, numHashes, bands,
+      org.apache.spark.sql.SaveMode.Append)
+    writeIndexMeta(sp, path, meta.updated("version", version))
+  }
+
+  private def requireIdType(path: String, stored: String,
+                            idType: org.apache.spark.sql.types.DataType): Unit =
+    require(stored == idType.sql,
+      s"dedup index at $path stores ids as $stored, but the batch's id column " +
+        s"is ${idType.sql}: cast the batch ids or rebuild the index (ids are never cast on read)")
+
+  /** The persisted index's `(shingles, buckets)` tables under DECLARED
+    * schemas (`id` typed as the caller's `idType`, `sh array<string>`,
+    * `band int`, `bucket bigint`) — no schema-inference job per read, and
+    * a streaming dedup reads them every micro-batch. `idType` must equal
+    * the id type recorded in `_meta` when the index was built; an index
+    * whose `_meta` predates that record has its stored schema inferred
+    * once here instead. A mismatch fails loudly: the reader never casts
+    * ids. */
+  private[graft] def readDedupIndexTables(spark: SparkSession, path: String,
+                                          idType: org.apache.spark.sql.types.DataType)
+      : (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
+    val stored = readIndexMeta(spark, path).flatMap(_.get("idType")).getOrElse(
+      spark.read.parquet(s"$path/shingles").schema("id").dataType.sql)
+    requireIdType(path, stored, idType)
+    (spark.read.schema(new StructType().add("id", idType).add("sh", ArrayType(StringType)))
+      .parquet(s"$path/shingles"),
+     spark.read.schema(new StructType().add("id", idType).add("band", IntegerType)
+        .add("bucket", LongType))
+      .parquet(s"$path/buckets"))
   }
 
   /** [[incrementalDedupKeep]] against a PERSISTED index: history shingles
-    * and buckets stream from disk, so the per-batch compute is the
-    * batch's own signature build — not a re-shingle of the whole history.
-    * The stored bucket table is SCANNED (column-pruned) and restricted to
-    * batch-touched buckets by the shared [[crossVerifiedPairs]] broadcast
-    * semi-join before any shuffle or guard window — history is never
-    * shuffled; the shingle store is read twice by verification
-    * (disk-backed scans, no recompute). `maxBucketSize` guards the
-    * history side with semantics identical to [[crossMinHashLshPairs]].
+    * and buckets stream from disk under declared schemas
+    * ([[readDedupIndexTables]]), so the per-batch compute is the batch's
+    * own signature build — not a re-shingle of the whole history, and no
+    * schema-inference job. The stored bucket table is SCANNED
+    * (column-pruned) and restricted to batch-touched buckets by the shared
+    * [[crossVerifiedPairs]] broadcast semi-join before any shuffle or
+    * guard window — history is never shuffled; the shingle store is read
+    * by verification (a disk-backed scan, no recompute). `maxBucketSize`
+    * guards the history side with semantics identical to
+    * [[crossMinHashLshPairs]].
     * Output: the batch keep-list — LAZY, and its plan reads the index:
     * materialize it (write it to its destination) BEFORE growing the
     * index with [[appendDedupIndex]]. A write action re-resolves parquet
@@ -563,18 +630,17 @@ object Dedup {
                                   textCol: String, path: String,
                                   threshold: Double,
                                   maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    requireThreshold(threshold)
     val sp = batch.sparkSession
-    GraftFunctions.register(sp) // shingles below analyze on the batch's session
     val (_, k, numHashes, bands) = readDedupIndexMeta(sp, path).getOrElse(
       throw new IllegalStateException(
         s"incrementalDedupKeepIndexed: no index _meta at $path"))
-    val histSh = sp.read.parquet(s"$path/shingles")
-    val histBk = sp.read.parquet(s"$path/buckets")
-    val shb = batch.select(col(idCol).as("id"), shingles(col(textCol), k).as("sh"))
-    val bb = bandBucketRows(minHashSignatures(shb, numHashes), numHashes, bands)
-    val pairs = crossVerifiedPairs(histBk, histSh, bb, shb, threshold,
-      maxBucketSize, scopeCache = Seq(shb))
-    batch.join(pairs.select(col("bench_id").as(idCol)), Seq(idCol), "left_anti")
+    val (histSh, histBk) = readDedupIndexTables(sp, path, batch.schema(idCol).dataType)
+    val shb = shingleTable(batch, idCol, textCol, k)
+    val bb = lshBuckets(shb, numHashes, bands)
+    val matched = Caching.scoped(shb, bb)(
+      crossVerifiedPairs(histBk, histSh, bb, shb, threshold, maxBucketSize))
+    batch.join(matched.select(col("bench_id").as(idCol)), Seq(idCol), "left_anti")
   }
 
   /** The daily-crawl dedup loop as a STREAM: each micro-batch dedups
@@ -628,9 +694,7 @@ object Dedup {
             // over existing tables is a half-applied append — rebuilding
             // from this batch alone would silently discard the whole
             // accumulated history index
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              new java.net.URI(indexPath), sp.sparkContext.hadoopConfiguration)
-            if (fs.exists(new org.apache.hadoop.fs.Path(indexPath, "shingles")))
+            if (indexFs(sp, indexPath).exists(new org.apache.hadoop.fs.Path(indexPath, "shingles")))
               throw new IllegalStateException(
                 s"streamingDedup: index at $indexPath has tables but no _meta " +
                   "— a crashed append left it inconsistent; rebuild with " +

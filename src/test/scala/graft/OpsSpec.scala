@@ -222,6 +222,70 @@ class DedupSpec extends SparkSuite {
     assert(got == Seq((1L, 2L)))
   }
 
+  /** 24 docs over a shared vocabulary: six families of four, each family
+    * a base sentence and three one-word edits of it. */
+  private def familyCorpus = {
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi")
+    val rows = for { f <- 0 until 6; m <- 0 until 4 } yield {
+      val base = (0 until 12).map(i => words((f * 5 + i * (f + 3)) % words.size))
+      val edited = if (m == 0) base else base.updated(2 + m * 3, s"edit$f$m")
+      (f * 10L + m, edited.mkString(" "))
+    }
+    docs(rows: _*)
+  }
+
+  test("deferred LSH pairs + one count: unordered, fewer jobs, no range-sort sampling job") {
+    // jobs for the call plus one count() on this corpus, local[4] with 4
+    // shuffle partitions: 17 with the bucket self-join, the exploded-
+    // shingle verification and the final orderBy (its range exchange
+    // samples in a job of its own); 10 with the grouped-bucket candidates,
+    // in-row verification and no sort
+    val d = familyCorpus
+    spark.sharedState.cacheManager.clearCache()
+    var pairs: org.apache.spark.sql.DataFrame = null
+    var release: () => Unit = () => ()
+    val jobs = jobsDuring {
+      val (p, r) = Dedup.minHashLshPairsDeferred(d, "doc_id", "text", 3, 0.5)
+      pairs = p; release = r
+      p.count()
+    }
+    try {
+      val sorts = pairs.queryExecution.analyzed.collect {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s }
+      assert(sorts.isEmpty, s"the deferred pair set is sorted: $sorts")
+      assert(jobs < 17, s"$jobs jobs, no fewer than the sorted self-join shape's 17")
+      val eager = Dedup.minHashLshPairs(d, "doc_id", "text", 3, 0.5)
+      val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(got.nonEmpty && got.sorted.toSeq ==
+        eager.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
+      eager.unpersist(blocking = true)
+    } finally { release(); pairs.unpersist(blocking = true) }
+  }
+
+  test("a threshold outside (0, 1] fails every pair operator with the message") {
+    val d = familyCorpus
+    val noIndex = s"${System.getProperty("java.io.tmpdir")}/graft_no_dedup_index"
+    for (t <- Seq(0.0, -0.5, 1.5, Double.NaN)) {
+      val calls = Seq[(String, () => Any)](
+        "jaccardPairsBrute" -> (() => Dedup.jaccardPairsBrute(d, "doc_id", "text", 3, t)),
+        "minHashLshPairs" -> (() => Dedup.minHashLshPairs(d, "doc_id", "text", 3, t)),
+        "minHashLshPairsDeferred" ->
+          (() => Dedup.minHashLshPairsDeferred(d, "doc_id", "text", 3, t)),
+        "crossMinHashLshPairs" ->
+          (() => Dedup.crossMinHashLshPairs(d, d, "doc_id", "text", 3, t)),
+        "incrementalDedupKeep" ->
+          (() => Dedup.incrementalDedupKeep(d, d, "doc_id", "text", 3, t)),
+        "incrementalDedupKeepIndexed" ->
+          (() => Dedup.incrementalDedupKeepIndexed(d, "doc_id", "text", noIndex, t)))
+      calls.foreach { case (name, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"threshold must be in (0, 1]: $t"),
+          s"$name(threshold = $t): ${e.getMessage}")
+      }
+    }
+  }
+
   test("simhash: identical docs at distance 0, near docs close, banding finds them") {
     val d = docs(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -364,6 +428,47 @@ class DedupSpec extends SparkSuite {
     intercept[IllegalStateException](
       Dedup.incrementalDedupKeepIndexed(batch, "doc_id", "text",
         dir + "_nope", threshold = 0.5))
+  }
+
+  test("persisted dedup index reads under declared schemas: no job, ids never cast") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_idx_schema").toString
+    val existing = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog today",
+      2L -> "completely different historical content here entirely").toDF("doc_id", "text")
+    val batch = Seq(
+      10L -> "the quick brown fox jumps over the lazy dog today",
+      11L -> "novel fresh unseen writing with new words only").toDF("doc_id", "text")
+    Dedup.saveDedupIndex(existing, "doc_id", "text", dir, version = "v1", k = 3)
+    // opening the index tables lists files only: no schema-inference job
+    var tables: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = null
+    assert(jobsDuring { tables = Dedup.readDedupIndexTables(spark, dir, LongType) } == 0)
+    assert(tables._1.schema.map(f => f.name -> f.dataType.sql) ==
+      Seq("id" -> "BIGINT", "sh" -> "ARRAY<STRING>"))
+    assert(tables._2.schema.map(f => f.name -> f.dataType.sql) ==
+      Seq("id" -> "BIGINT", "band" -> "INT", "bucket" -> "BIGINT"))
+    assert(tables._1.count() == 2 && tables._2.count() == 2 * 32)
+    // an int-typed batch against a bigint index fails loudly, on keep and append
+    val intBatch = batch.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    val keepErr = intercept[IllegalArgumentException](
+      Dedup.incrementalDedupKeepIndexed(intBatch, "doc_id", "text", dir, threshold = 0.5))
+    assert(keepErr.getMessage.contains("stores ids as BIGINT, but the batch's id column is INT"))
+    val appendErr = intercept[IllegalArgumentException](
+      Dedup.appendDedupIndex(intBatch, "doc_id", "text", dir, version = "v2"))
+    assert(appendErr.getMessage.contains("stores ids as BIGINT"))
+    assert(Dedup.readDedupIndexMeta(spark, dir).contains(("v1", 3, 64, 32)),
+      "a refused append must leave the index as it was")
+    // a _meta written before the id type was recorded: the stored schema decides
+    val meta = new org.apache.hadoop.fs.Path(dir, "_meta")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(meta)
+    val legacy = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filterNot(_.startsWith("idType=")).mkString("", "\n", "\n") finally in.close()
+    val out = fs.create(meta, true)
+    try out.write(legacy.getBytes("UTF-8")) finally out.close()
+    assert(Dedup.incrementalDedupKeepIndexed(batch, "doc_id", "text", dir, threshold = 0.5)
+      .collect().map(_.getLong(0)).toSeq == Seq(11L))
+    intercept[IllegalArgumentException](Dedup.readDedupIndexTables(spark, dir, IntegerType))
   }
 
   test("incrementalDedupKeep: empty batch and empty history edge cases") {

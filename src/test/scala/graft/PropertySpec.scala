@@ -216,6 +216,48 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("PROPERTY: LSH pairs == the self-join + explode-join reference, guard unbound and binding") {
+    // random docs over a small vocabulary (many shared trigrams), a
+    // one-word-edit near-dup of some of them, and a planted family of 5
+    // identical docs: every band buckets the family together, so a guard
+    // of 3 skips all of its buckets and the family's pairs must vanish
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+      "eta", "theta", "iota", "kappa", "lambda", "mu")
+    val family = "one two three four five six seven eight nine ten"
+    (0 until 4).foreach { i =>
+      val g = for {
+        n <- Gen.choose(4, 24)
+        base <- Gen.listOfN(n, for {
+          len <- Gen.choose(3, 10)
+          ws <- Gen.listOfN(len, Gen.oneOf(words))
+        } yield ws)
+        edits <- Gen.listOfN(n, Gen.option(Gen.zip(Gen.choose(0, 9), Gen.oneOf(words))))
+      } yield base.zip(edits).zipWithIndex.flatMap { case ((ws, e), j) =>
+        (j.toLong -> ws.mkString(" ")) +: e.toList.map { case (at, w) =>
+          (500L + j) -> ws.updated(at % ws.size, w).mkString(" ")
+        }
+      }
+      val rows = g.pureApply(Gen.Parameters.default, Seed(9100L + i)) ++
+        (900L until 905L).map(_ -> family)
+      val d = rows.toDF("doc_id", "text")
+      for (maxBucket <- Seq(Int.MaxValue, 3)) {
+        val out = graft.ops.Dedup.minHashLshPairs(d, "doc_id", "text", k = 3,
+          threshold = 0.5, maxBucketSize = maxBucket)
+        val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        out.unpersist(blocking = true)
+        val ref = LshOracle.pairs(d, "doc_id", "text", k = 3, threshold = 0.5,
+            maxBucketSize = maxBucket)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        assert(got.toSet == ref.toSet && got.size == ref.size,
+          s"case $i maxBucket=$maxBucket\ngot=$got\nref=$ref")
+        assert(got == got.sortBy(p => (p._1, p._2)), s"case $i: eager pairs not in (a, b) order")
+        val familyPairs = got.count(p => p._1 >= 900L)
+        assert(familyPairs == (if (maxBucket == 3) 0 else 10),
+          s"case $i maxBucket=$maxBucket: $familyPairs planted-family pairs")
+      }
+    }
+  }
+
   test("PROPERTY: indexed incremental dedup == recompute on random corpora") {
     // the touched-bucket broadcast restriction in crossVerifiedPairs must
     // be invisible in the output for ANY batch/history, including under a
