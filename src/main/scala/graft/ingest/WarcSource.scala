@@ -67,6 +67,13 @@ object WarcSource {
     * `.warc.gz` with concatenated per-record members). One row per
     * record; `corrupt = true` rows are the quarantine stream.
     *
+    * The glob's matches expand ONE level: a matched file reads as
+    * itself, a matched directory as the files directly inside it
+    * (subdirectories are not descended into). When that leaves no file
+    * — a glob matching nothing, or a directory holding only
+    * subdirectories — the read fails with "no WARC files match" rather
+    * than return an empty frame: bad input fails loudly.
+    *
     * FILE-granular partitioning (r15, guide §2.5 input skew / §6 split
     * size): this used to go through `sc.binaryFiles`, whose
     * CombineFileInputFormat packs small files into

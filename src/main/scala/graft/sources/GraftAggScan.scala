@@ -178,8 +178,8 @@ private[sources] final case class GraftAggSplit(files: Seq[(String, Long)])
   * interesting property: a clean row group contributes from FOOTER
   * STATS alone (no page IO — `count(*)` over a table is a footer
   * walk), and only groups the stats cannot decide (mixed visibility,
-  * inconclusive filter bounds, missing stats) are row-read, through
-  * the same exact row filter as the normal scan. */
+  * inconclusive filter bounds, missing stats) are decoded, through the
+  * normal scan's own columnar reader and its exact row filter. */
 private[sources] final class GraftAggReader(
     conf: Configuration,
     split: GraftAggSplit,
@@ -349,7 +349,8 @@ private[sources] final class GraftAggReader(
     * counts) decodes JUST the needed flat columns through
     * [[GraftPageCursor]] and folds them straight into the partials —
     * no ColumnarBatch, no row pipeline. Returns false when a needed
-    * column's shape has no bulk path (caller row-reads instead). */
+    * column's shape has no bulk path (the group then falls back to the
+    * columnar reader). */
   private def tryColumnar(pages: org.apache.parquet.column.page.PageReadStore,
                           schema: org.apache.parquet.schema.MessageType,
                           needed: Seq[(GraftAggSpec, Int)],
@@ -491,24 +492,25 @@ private[sources] final class GraftAggReader(
 
   private def computeFile(f: String, partStart: Long): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(f)
-    val fallback = scala.collection.mutable.Set.empty[Long] // block start offsets
+    // byte ranges of the groups the stats cannot decide, adjacent
+    // groups merged into one range
+    val fallback = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def fallBack(b: BlockMetaData): Unit = {
+      val (start, end) = (b.getStartingPos, b.getStartingPos + b.getCompressedSize)
+      if (fallback.nonEmpty && fallback.last._2 == start)
+        fallback(fallback.length - 1) = (fallback.last._1, end)
+      else fallback += ((start, end))
+    }
+    val aggCols = specs.map(_.col).filter(c => c.nonEmpty && c != "part_start").distinct
     val reader = new ParquetFileReader(
       HadoopInputFile.fromPath(hPath, conf),
       HadoopReadOptions.builder(conf, hPath).build())
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       // page IO for the columnar-accumulate path covers exactly the agg
-      // columns (stats-served groups and row-fallback groups never
-      // touch this reader's pages)
-      locally {
-        val aggCols = specs.map(_.col)
-          .filter(c => c.nonEmpty && c != "part_start").toSet
-        val fields = (0 until schema.getFieldCount)
-          .map(schema.getType).filter(t => aggCols(t.getName))
-        if (fields.nonEmpty)
-          reader.setRequestedSchema(
-            new org.apache.parquet.schema.MessageType(schema.getName, fields: _*))
-      }
+      // columns (stats-served and fallback groups never touch this
+      // reader's pages)
+      GraftDecode.project(reader, schema, aggCols.toSet)
       val blocks = reader.getRowGroups
       var bi = 0
       while (bi < blocks.size()) {
@@ -534,35 +536,30 @@ private[sources] final class GraftAggReader(
             val pages = reader.readNextRowGroup()
             if (pages == null || !tryColumnar(pages, schema, needed.toSeq,
                 staged, partStart))
-              fallback += b.getStartingPos
+              fallBack(b)
           }
         } else {
           reader.skipNextRowGroup()
-          fallback += b.getStartingPos
+          fallBack(b)
         }
         bi += 1
       }
     } finally reader.close()
 
-    if (fallback.nonEmpty) {
-      // row-read only the undecidable groups, with the scan's exact
-      // row-level semantics (visibility + filters)
-      val filterCols = pushed.flatMap(_.references).toSet.filter(_ != "part_start")
-      val aggCols = specs.map(_.col).filter(c => c.nonEmpty && c != "part_start").toSet
-      val cols = (aggCols ++ filterCols ++
-        (if (needSeq) Set("__seq") else Set.empty[String])).toSeq.sorted
-      val idx = cols.zipWithIndex.toMap
-      val seqIdx = idx.getOrElse("__seq", -1)
-      val r = new GraftParquetReader(conf, f, cols, _ => None,
-        blockKeep = b => fallback.contains(b.getStartingPos))
+    // the undecided groups decode through the scan's own columnar reader
+    // over a split covering exactly their bytes (the row-group midpoint
+    // rule selects them alone), with its exact visibility and filters;
+    // the surviving rows fold into the partials one by one
+    fallback.foreach { case (start, end) =>
+      val r = new GraftColumnarReader(conf, GraftFileSplit(f, start, end - start, partStart),
+        aggCols, pushed, commits, asOf)
       try {
-        while (r.hasNext) {
-          val rowArr = r.next()
-          def get(c: String): Any = idx.get(c).map(rowArr(_)).orNull
-          val vis = seqIdx < 0 ||
-            GraftReaders.visible(rowArr(seqIdx), commits, asOf)
-          if (vis && prepared.forall(GraftReaders.eval(_, get, partStart)))
-            accumulateRow(get, partStart)
+        while (r.next()) {
+          val batch = r.get()
+          var row = 0
+          val get: String => Any =
+            c => GraftReaders.valueAt(batch.column(aggCols.indexOf(c)), row)
+          while (row < batch.numRows()) { accumulateRow(get, partStart); row += 1 }
         }
       } finally r.close()
     }

@@ -1,9 +1,11 @@
 package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
@@ -12,31 +14,35 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar (vectorized) read path for NON-MOR scans of the DSv2 batch
-  * source — the case the r12 Dsv2Scale receipt showed paying ~1.7× over
-  * Spark's vectorized parquet reader for row-at-a-time assembly.
-  * Columns decode straight into flat value arrays through the public
-  * parquet-column cursor API (`ColumnReadStoreImpl` — page
-  * decompression, dictionary decode and definition levels handled by the
-  * library), wrapped as Spark [[ColumnVector]]s: no per-row object, no
-  * boxing, no `InternalRow` until Spark's own ColumnarToRow (which
-  * whole-stage-codegens over the batch).
+/** The columnar (vectorized) read path — the ONE decoder of the DSv2
+  * batch source: every non-MOR byte-range split and every MOR stripe
+  * ([[GraftMorColumnarReader]]) reads here, and the aggregate pushdown
+  * decodes its stats-undecided row groups through the same reader.
+  * Columns decode straight into flat value arrays through whole-page
+  * bulk decode ([[GraftPageCursor]] — dictionary, definition levels and
+  * page shapes handled there), wrapped as Spark [[ColumnVector]]s: no
+  * per-row object, no boxing, no `InternalRow` until Spark's own
+  * ColumnarToRow (which whole-stage-codegens over the batch).
   *
-  * Scope is deliberate (the row reader keeps every other case):
-  *  - non-MOR tables only — the k-way LWW merge is row-shaped;
-  *  - every RawSchema column vectorizes, including the `labels` MAP
-  *    (late r13): its two leaf cursors reassemble per-row entry runs
-  *    from repetition/definition levels into flat key/value vectors +
-  *    row offsets — the standard columnar map layout — so a plain
-  *    `SELECT *` is columnar too.
+  * Every RawSchema column vectorizes, including the `labels` MAP: its
+  * two leaf cursors reassemble per-row entry runs from
+  * repetition/definition levels into flat key/value vectors + row
+  * offsets — the standard columnar map layout. `_key_*` metadata
+  * columns read their physical column ([[GraftMeta.physical]]); an
+  * EMPTY projection (a `count()` whose aggregate was not pushed) emits
+  * batches with no columns and a row count, and a group that needs no
+  * column at all reads no pages.
   *
-  * PUSHED FILTERS ride the columnar path too (r13 cont.): every
-  * accepted filter references a flat key-stable column, so row groups
-  * first classify against footer stats ([[GraftFooterStats.classify]] —
-  * no-match groups skip without IO, all-match groups serve whole), and
-  * only the undecidable groups evaluate rows — against the DECODED
-  * VECTORS, folded into the same selection indirection the visibility
-  * path uses. "Accepted = fully consumed" holds exactly.
+  * PUSHED FILTERS: every accepted filter references a flat key-stable
+  * column, so row groups first classify against footer stats
+  * ([[GraftFooterStats.classify]] — no-match groups skip without IO,
+  * all-match groups serve whole), and only the undecidable groups
+  * evaluate rows — against the DECODED VECTORS, folded into the same
+  * selection indirection the visibility path uses. "Accepted = fully
+  * consumed" holds exactly. A label filter rides the same pass: its
+  * resolved series set skips row groups by stats and tests rows by hash
+  * lookup; an unresolved one (legacy sidecar, too many matches) decodes
+  * `labels` and tests each row's map ([[GraftReaders.labelsMatch]]).
   *
   * Committed-batch visibility stays EXACT: `__seq` is constant per file
   * (stamped per append batch, RLE'd), so each row group classifies from
@@ -44,23 +50,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * (a mid-chunk seq change — never produced by the writer, but the
   * reader must not trust that) decode `__seq` too and compact through
   * the selection, never serving an uncommitted row.
+  *
+  * A pushed LIMIT counts emitted rows per split: a window whose rows
+  * all pass decodes no more than the rows still owed, and a residue
+  * window stops its selection once the limit is met.
   */
 private[sources] object GraftColumnar {
   /** Rows per emitted [[ColumnarBatch]]: big enough to amortize the
     * per-batch crossing, small enough that a task's in-flight decoded
     * vectors stay a few MB even with wide string columns. */
   val BatchRows = 32768
-
-  /** Is one column vector-decodable? (`part_start` is virtual —
-    * constant per split; `labels` is the map column.) ONE predicate
-    * for both the projection gate and the pushed-filter-reference
-    * gate, so the two can never diverge. */
-  def columnarName(c: String): Boolean =
-    TsdbColumnarTypes.contains(c) || c == "part_start"
-
-  /** Can `requested` be served columnar? */
-  def supports(requested: Seq[String]): Boolean =
-    requested.nonEmpty && requested.forall(columnarName)
 
   private[sources] val TsdbColumnarTypes: Map[String, DataType] = Map(
     "name" -> StringType, "time" -> LongType, "value" -> DoubleType,
@@ -276,13 +275,87 @@ private[sources] object GraftDecode {
       new GraftStringVec(keys.toArray, keys.length),
       new GraftStringVec(vals.toArray, vals.length), n)
   }
+
+  /** Narrow the reader's page IO to `cols` (the union of everything any
+    * row group of the read can decode): `readNextRowGroup` then reads
+    * chunks of these columns only. Columns the file lacks are ignored. */
+  def project(reader: ParquetFileReader, fileSchema: MessageType,
+              cols: Set[String]): Unit = {
+    val fields = (0 until fileSchema.getFieldCount)
+      .map(fileSchema.getType).filter(t => cols(t.getName))
+    if (fields.nonEmpty)
+      reader.setRequestedSchema(new MessageType(fileSchema.getName, fields: _*))
+  }
+
+  /** Open the reader's NEXT row group for decoding `cols`. When the file
+    * carries none of them (a count-only read, or a legacy file missing
+    * every requested column) the group is skipped without page IO and
+    * every column reads as NULL. */
+  def openGroup(reader: ParquetFileReader, fileSchema: MessageType,
+                cols: Seq[String], file: String): Group =
+    if (cols.exists(fileSchema.containsField)) {
+      val pages = reader.readNextRowGroup()
+      if (pages == null)
+        throw new IllegalStateException(s"$file: row group vanished mid-read")
+      new Group(fileSchema, pages, cols, file)
+    } else {
+      reader.skipNextRowGroup()
+      new Group(fileSchema, null, cols, file)
+    }
+
+  /** The page cursors of one row group for `cols`: flat leaves decode
+    * through [[flat]], the labels map through its key/value leaf pair
+    * ([[map]]), and a column the file lacks reads as all NULL (legacy
+    * files predating `__seq`/`__del`/`valueStr`). Descriptors come from
+    * the FILE schema; `pages` holds the [[project]]ed union. */
+  final class Group(fileSchema: MessageType, pages: PageReadStore,
+                    cols: Seq[String], file: String) {
+    private val descs =
+      if (pages == null) Nil else fileSchema.getColumns.asScala.toSeq
+    private val flats: Map[String, (GraftPageCursor, PrimitiveType.PrimitiveTypeName)] =
+      descs.filter(d => d.getPath.length == 1 && cols.contains(d.getPath()(0)))
+        .map(d => d.getPath()(0) ->
+          ((new GraftPageCursor(d, pages.getPageReader(d)),
+            d.getPrimitiveType.getPrimitiveTypeName))).toMap
+    // labels-map cursor pair: key/value leaves advance in LOCKSTEP (the
+    // MAP group guarantees identical slot structure; only the value's
+    // definition ceiling differs by its optionality)
+    private val mapLeaves: Map[String, (GraftPageCursor, Int)] =
+      if (!cols.contains("labels")) Map.empty
+      else descs.filter(d => d.getPath.length == 3 && d.getPath()(0) == "labels")
+        .map(d => d.getPath()(2) ->
+          ((new GraftPageCursor(d, pages.getPageReader(d)), d.getMaxDefinitionLevel)))
+        .toMap
+
+    def has(c: String): Boolean = flats.contains(c)
+
+    /** Decode the next `n` rows of every column of `cols`. */
+    def decode(n: Int): java.util.HashMap[String, Flat] = {
+      val out = new java.util.HashMap[String, Flat]()
+      cols.foreach { c =>
+        out.put(c, flats.get(c) match {
+          case Some((cur, kind)) => flat(cur, kind, n, c, file)
+          case None if c == "labels" && mapLeaves.contains("key") =>
+            val (kc, kd) = mapLeaves("key")
+            val (vc, vd) = mapLeaves("value")
+            Flat(map(kc, vc, kd, vd, n), null, null, null)
+          case None =>
+            Flat(new GraftNullVec(GraftColumnar.TsdbColumnarTypes.getOrElse(c, LongType)),
+              null, null, null)
+        })
+      }
+      out
+    }
+  }
 }
 
 // ----------------------------------------------------------------- reader
 
 /** One byte-range split of one non-MOR file, emitted as
-  * [[ColumnarBatch]]es. Same split/visibility semantics as
-  * [[GraftFileReader]]; see [[GraftColumnar]] for scope. */
+  * [[ColumnarBatch]]es: the row groups whose midpoint falls in the range
+  * (the standard parquet split protocol), committed rows only, pushed
+  * and label filters exact, at most `limit` rows. See [[GraftColumnar]]
+  * for the shape. */
 private[sources] final class GraftColumnarReader(
     conf: Configuration,
     split: GraftFileSplit,
@@ -290,7 +363,9 @@ private[sources] final class GraftColumnarReader(
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],
     asOf: Option[Long],
-    labelSeries: Option[java.util.HashSet[Long]] = None)
+    labelEq: Seq[(String, String)] = Nil,
+    labelSeries: Option[java.util.HashSet[Long]] = None,
+    limit: Option[Int] = None)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   private val hPath = new org.apache.hadoop.fs.Path(split.file)
@@ -305,66 +380,49 @@ private[sources] final class GraftColumnarReader(
   private val filterCols: Seq[String] =
     pushed.flatMap(_.references).distinct.filterNot(_ == "part_start").toSeq
   private val prepared = GraftReaders.prepare(pushed)
-  /** The label filter's resolved series set (r15) as a stats-classifiable
-    * IN — it skips row groups whose series range holds no member; the
-    * rows of the others are tested against the hash set itself. */
-  private val labelIn: Option[Filter] = labelSeries.map(set =>
-    org.apache.spark.sql.sources.In("series_id", set.toArray.map(id => id: Any)))
-  private val labelCols: Seq[String] = labelSeries.map(_ => "series_id").toSeq
+  private val label = new GraftReaders.LabelTest(labelEq, labelSeries)
 
-  /** decode set = requested physical columns; `__seq` and the filter
-    * columns join per-group only when that group needs row-level
-    * evaluation (mixed visibility / inconclusive filter stats). */
-  private val physCols: Seq[String] = requested.filterNot(_ == "part_start")
+  /** decode set = requested physical columns (metadata aliases share
+    * their column); `__seq` and the filter columns join per-group only
+    * when that group needs row-level evaluation (mixed visibility /
+    * inconclusive filter stats). */
+  private val phys = requested.map(GraftMeta.physical)
+  private val physCols: Seq[String] = phys.filterNot(_ == "part_start").distinct
 
   // ONE requested-schema projection for the whole split — the UNION of
-  // everything any group can need (projection + __seq + filter
-  // columns): readNextRowGroup then does chunk IO for these columns
-  // ONLY. (r14 — the cursor-era reader never projected the reader
-  // itself, so a narrow scan still paid raw reads for every column.)
-  private val unionCols: Set[String] =
-    (physCols ++ (if (needSeq) Seq("__seq") else Nil) ++ filterCols ++ labelCols).toSet
-  locally {
-    val fields = (0 until fileSchema.getFieldCount)
-      .map(fileSchema.getType).filter(t => unionCols(t.getName))
-    if (fields.nonEmpty)
-      reader.setRequestedSchema(new MessageType(fileSchema.getName, fields: _*))
-  }
+  // everything any group can need: readNextRowGroup then does chunk IO
+  // for these columns ONLY
+  GraftDecode.project(reader, fileSchema,
+    (physCols ++ (if (needSeq) Seq("__seq") else Nil) ++ filterCols ++ label.cols).toSet)
 
   // ---- per-group state ---------------------------------------------------
   private val blocks = reader.getRowGroups
   private var blockIdx = 0
   private var groupRemaining = 0L
-  private var readers: Array[GraftPageCursor] = _
-  private var kinds: Array[PrimitiveType.PrimitiveTypeName] = _
-  /** slot in `decodeCols` per reader; -1 entries never happen (parallel
-    * arrays are built together). */
-  private var decodeCols: Seq[String] = _
+  private var group: GraftDecode.Group = _
   private var groupMixed = false
   private var groupFiltered = false
   /** prepared filters the group's stats could NOT decide — the only
     * ones the residue loop must evaluate (AllRows-classified filters
     * hold for every row of the group by construction). */
   private var groupResidue: Array[Filter] = Array.empty
+  /** rows this split may still emit (the pushed limit's counter) */
+  private var left: Long = limit.fold(Long.MaxValue)(_.toLong)
 
   private var current: ColumnarBatch = _
 
-  /** Advance to the next row group that contributes rows; prepares the
-    * per-column page cursors ([[GraftPageCursor]] — whole-page bulk
-    * decode, r14). False when the split is exhausted. */
+  /** Advance to the next row group that contributes rows and open its
+    * page cursors. False when the split is exhausted. */
   private def advanceGroup(): Boolean = {
     while (blockIdx < blocks.size()) {
       val block = blocks.get(blockIdx)
+      blockIdx += 1
       val vis = GraftFooterStats.seqVisibility(block, commits, asOf, needSeq)
-      val tris = (pushed ++ labelIn).map(GraftFooterStats.classify(_, block))
+      val tris = (pushed ++ label.seriesIn).map(GraftFooterStats.classify(_, block))
       if (vis == GraftFooterStats.NoRows ||
           tris.contains(GraftFooterStats.NoRows)) {
         reader.skipNextRowGroup()
-        blockIdx += 1
       } else {
-        val pages = reader.readNextRowGroup()
-        blockIdx += 1
-        if (pages == null) return false
         groupMixed = vis == GraftFooterStats.SomeRows
         // only the filters the stats could not prove for the WHOLE
         // group need row evaluation (review-caught r13: re-evaluating
@@ -372,116 +430,54 @@ private[sources] final class GraftColumnarReader(
         groupResidue = prepared.zip(tris).collect {
           case (f, GraftFooterStats.SomeRows) => f
         }
-        groupFiltered = groupResidue.nonEmpty || labelSeries.isDefined
+        groupFiltered = groupResidue.nonEmpty || label.active
         val residueCols = groupResidue.flatMap(_.references).distinct
           .filterNot(_ == "part_start").toSeq
-        decodeCols = (physCols ++
-          (if (groupMixed) Seq("__seq") else Nil) ++
-          residueCols ++ labelCols).distinct
-        val wanted = decodeCols.toSet
-        // FLAT leaves decode directly; the labels MAP contributes two
-        // nested leaves (key_value.key / .value) handled by their own
-        // lockstep cursor pair below. Descriptors come from the FILE
-        // schema; the page store holds the setRequestedSchema union.
-        val descs = fileSchema.getColumns
-        val flat = (0 until descs.size()).map(descs.get)
-          .filter(d => d.getPath.length == 1 && wanted(d.getPath()(0)))
-        readers = new Array(flat.size)
-        kinds = new Array(flat.size)
-        val colOfDesc = new Array[String](flat.size)
-        flat.zipWithIndex.foreach { case (d, i) =>
-          readers(i) = new GraftPageCursor(d, pages.getPageReader(d))
-          kinds(i) = d.getPrimitiveType.getPrimitiveTypeName
-          colOfDesc(i) = d.getPath()(0)
-        }
-        // map decode column name -> reader index (or -1 = absent in file)
-        readerIdx = decodeCols.map(c => colOfDesc.indexOf(c)).toArray
-        mapKeyC = null; mapValC = null
-        if (wanted("labels"))
-          (0 until descs.size()).map(descs.get)
-            .filter(d => d.getPath.length == 3 && d.getPath()(0) == "labels")
-            .foreach { d =>
-              if (d.getPath()(2) == "key") {
-                mapKeyC = new GraftPageCursor(d, pages.getPageReader(d))
-                mapKeyDef = d.getMaxDefinitionLevel
-              } else {
-                mapValC = new GraftPageCursor(d, pages.getPageReader(d))
-                mapValDef = d.getMaxDefinitionLevel
-              }
-            }
-        groupRemaining = pages.getRowCount
+        group = GraftDecode.openGroup(reader, fileSchema,
+          (physCols ++ (if (groupMixed) Seq("__seq") else Nil) ++
+            residueCols ++ label.cols).distinct, split.file)
+        groupRemaining = block.getRowCount
         if (groupRemaining > 0) return true
       }
     }
     false
   }
-  private var readerIdx: Array[Int] = _
-  // labels-map cursor pair: key/value leaves advance in LOCKSTEP (the
-  // MAP group guarantees identical slot structure; only the value's
-  // definition ceiling differs by its optionality)
-  private var mapKeyC: GraftPageCursor = _
-  private var mapValC: GraftPageCursor = _
-  private var mapKeyDef = 0
-  private var mapValDef = 0
 
   private def decodeBatch(): ColumnarBatch = {
-    val n = math.min(groupRemaining, GraftColumnar.BatchRows.toLong).toInt
+    val residue = groupMixed || groupFiltered
+    // a window whose rows all pass decodes no more than the limit still
+    // owes; a residue window may keep few of its rows, so it decodes a
+    // full window and its selection stops at the limit instead
+    val n = math.min(groupRemaining,
+      if (residue) GraftColumnar.BatchRows.toLong
+      else math.min(GraftColumnar.BatchRows.toLong, left)).toInt
     groupRemaining -= n
-    // decode each requested column for these n rows
-    val byName = new java.util.HashMap[String, ColumnVector]()
-    var seqVals: Array[Long] = null
-    var seqNulls: Array[Boolean] = null
-    decodeCols.zipWithIndex.foreach { case (c, ci) =>
-      val ri = readerIdx(ci)
-      if (c == "labels" && mapKeyC != null) {
-        byName.put(c, GraftDecode.map(mapKeyC, mapValC, mapKeyDef, mapValDef, n))
-      } else if (ri < 0) {
-        byName.put(c, new GraftNullVec(
-          GraftColumnar.TsdbColumnarTypes.getOrElse(c, LongType)))
-      } else {
-        val f = GraftDecode.flat(readers(ri), kinds(ri), n, c, split.file)
-        if (c == "__seq") { seqVals = f.longs; seqNulls = f.nulls }
-        byName.put(c, f.vec)
-      }
-    }
-    val base: Array[ColumnVector] = requested.map {
+    val byName = group.decode(n)
+    val base: Array[ColumnVector] = phys.map {
       case "part_start" => new GraftConstLongVec(split.partStart)
-      case c => byName.get(c)
+      case c => byName.get(c).vec
     }.toArray
-    if (!groupMixed && !groupFiltered) {
+    if (!residue) {
       val b = new ColumnarBatch(base)
       b.setNumRows(n)
       b
     } else {
       // row-level residue: visibility (mixed __seq — legacy NULL rows
-      // always pass) and/or filters the group's stats couldn't decide,
-      // evaluated against the decoded vectors and folded into ONE
-      // selection indirection
+      // always pass), the label test and filters the group's stats
+      // couldn't decide, evaluated against the decoded vectors and
+      // folded into ONE selection indirection
       var curRow = 0
-      val getter: String => Any = { c =>
-        if (c == "part_start") split.partStart
-        else {
-          val v = byName.get(c)
-          if (v == null || v.isNullAt(curRow)) null
-          else v.dataType match {
-            case LongType => java.lang.Long.valueOf(v.getLong(curRow))
-            case DoubleType => java.lang.Double.valueOf(v.getDouble(curRow))
-            case BooleanType => java.lang.Boolean.valueOf(v.getBoolean(curRow))
-            case _ => v.getUTF8String(curRow)
-          }
-        }
-      }
-      val sids = if (labelSeries.isDefined) byName.get("series_id") else null
+      val getter: String => Any = c => GraftReaders.valueAt(byName.get(c).vec, curRow)
+      val seq = byName.get("__seq")
+      val rowLabel = label.forBatch(byName)
       val sel = new Array[Int](n)
       var k = 0
       var i = 0
-      while (i < n) {
+      while (i < n && k < left) {
         curRow = i
-        val seq: Any =
-          if (seqVals == null || seqNulls(i)) null else seqVals(i)
-        val visOk = !groupMixed || GraftReaders.visible(seq, commits, asOf)
-        val keep = visOk &&
-          (sids == null || !sids.isNullAt(i) && labelSeries.get.contains(sids.getLong(i))) &&
+        val visOk = !groupMixed ||
+          GraftReaders.visible(GraftReaders.valueAt(seq.vec, i), commits, asOf)
+        val keep = visOk && rowLabel(i) &&
           groupResidue.forall(GraftReaders.eval(_, getter, split.partStart))
         if (keep) { sel(k) = i; k += 1 }
         i += 1
@@ -496,12 +492,12 @@ private[sources] final class GraftColumnarReader(
   }
 
   override def next(): Boolean = {
-    while (true) {
+    while (left > 0) {
       if (groupRemaining > 0) {
         current = decodeBatch()
         // a fully-compacted mixed batch (0 survivors) is legal but
         // pointless — loop on to the next chunk/group
-        if (current.numRows() > 0) return true
+        if (current.numRows() > 0) { left -= current.numRows(); return true }
       } else if (!advanceGroup()) return false
     }
     false

@@ -1,7 +1,6 @@
 package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
@@ -13,11 +12,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** COLUMNAR merged (last-write-wins) read of one MOR stripe (r15) — the
-  * batch-shaped replacement for [[GraftMorReader]]'s row-at-a-time
-  * k-way merge, which left MOR wide/map projections ~2.5× off native
-  * parquet (SCALE.md r14: the row path pays cursor-API decode plus one
-  * boxed `Array[Any]` per version per row).
+/** COLUMNAR merged (last-write-wins) read of one MOR stripe: a
+  * streaming k-way merge over the files of one time partition, all of
+  * which are written sorted by (series_id, time) — append
+  * (`TsdbTable.append` sortWithinPartitions), compaction and tombstone
+  * deletes alike. Memory is O(files × window); no shuffle.
   *
   * Shape: each file decodes WHOLE PAGES into flat vectors
   * ([[GraftPageCursor]] + [[GraftDecode]] — the same bulk decode the
@@ -29,14 +28,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * GATHERS winners through [[GraftGatherVec]] — zero value copies; a
   * string cell is the same page-backed UTF8String the decode produced.
   *
-  * LWW semantics are IDENTICAL to the row merge (the spec pins
-  * hash-equality): min (series_id, time) across file heads, every
-  * version of the key consumed, winner = max `__seq` with NULL (legacy)
-  * losing to any stamped version and equal seqs resolved to the LATER
-  * file in the stable sorted file order; tombstone winners drop. The
-  * per-file sort contract (series_id, time) is enforced across window
-  * and row-group boundaries exactly like the row reader — a violating
-  * file fails loudly.
+  * LWW semantics (the specs pin them against the window-merge oracle):
+  * min (series_id, time) across file heads, every version of the key
+  * consumed, winner = max `__seq` with NULL (legacy) losing to any
+  * stamped version and equal seqs resolved to the LATER file in the
+  * stable sorted file order; tombstone winners drop. The per-file sort
+  * contract (series_id, time) is enforced across window and row-group
+  * boundaries — a violating file fails loudly rather than merging
+  * wrong. Filters and the label test apply BELOW the merge: they read
+  * key-stable columns only, so superseded versions and tombstones
+  * classify exactly like the winners they shadow. A pushed limit caps
+  * the merged rows the stripe emits.
   *
   * Window lifetime: decoded windows are immutable, freshly-allocated
   * slabs; a merge key can straddle a window (or row-group) boundary, so
@@ -51,38 +53,40 @@ private[sources] final class GraftMorColumnarReader(
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],
     asOf: Option[Long],
-    labelSeries: Option[java.util.HashSet[Long]])
+    labelEq: Seq[(String, String)] = Nil,
+    labelSeries: Option[java.util.HashSet[Long]] = None,
+    limit: Option[Int] = None)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   private val needSeq = commits.nonEmpty || asOf.nonEmpty
   private val prepared = GraftReaders.prepare(pushed)
+  private val label = new GraftReaders.LabelTest(labelEq, labelSeries)
   private val phys = requested.map(GraftMeta.physical)
   private val physCols: Seq[String] = phys.filterNot(_ == "part_start").distinct
   // the merge itself always needs the LWW key + version + tombstone
-  private val decodeAlways = Seq("series_id", "time", "__seq", "__del")
+  private val decodeAlways = Seq("series_id", "time", "__seq", "__del") ++ label.cols
   private val filterCols: Seq[String] =
     pushed.flatMap(_.references).distinct.filterNot(_ == "part_start").toSeq
   private val unionCols: Set[String] = (physCols ++ decodeAlways ++ filterCols).toSet
 
-  /** Stripe series bounds as classifiable filters — lets footer stats
-    * skip row groups entirely outside the stripe (files are sorted by
-    * series_id, so most groups are). A resolved label series SET
-    * (`labelSeries`) filters rows and prunes stripes at planning but is
-    * not yet folded into group classification here — the row MOR path's
-    * FilterApi.in row-group skip is the shape to port if profiles ever
-    * show label-selective MOR scans decoding dead groups. */
-  private val rangeFilters: Array[Filter] = {
+  /** Stripe series bounds and the label filter's resolved series set as
+    * classifiable filters — footer stats skip row groups entirely
+    * outside the stripe or holding no member of the set (files are
+    * sorted by series_id, so most groups are). Placed AFTER the pushed
+    * filters: the residue takes the first `pushed.length` verdicts. */
+  private val keyFilters: Array[Filter] = {
     val b = ArrayBuffer.empty[Filter]
     if (stripe.seriesLo != Long.MinValue)
       b += GreaterThanOrEqual("series_id", stripe.seriesLo)
     if (stripe.seriesHi != Long.MaxValue)
       b += LessThanOrEqual("series_id", stripe.seriesHi)
+    b ++= label.seriesIn
     b.toArray
   }
 
   /** One decoded, residue-compacted slab of one file. */
   private final class Window(
-      val vecs: java.util.HashMap[String, ColumnVector],
+      val vecs: java.util.HashMap[String, GraftDecode.Flat],
       val sids: Array[Long], val times: Array[Long],
       val seqs: Array[Long], val seqNulls: Array[Boolean],
       val dels: Array[Boolean], val delNulls: Array[Boolean],
@@ -94,25 +98,13 @@ private[sources] final class GraftMorColumnarReader(
       HadoopInputFile.fromPath(hPath, conf),
       HadoopReadOptions.builder(conf, hPath).useColumnIndexFilter(false).build())
     private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-    locally {
-      val fields = (0 until fileSchema.getFieldCount)
-        .map(fileSchema.getType).filter(t => unionCols(t.getName))
-      if (fields.nonEmpty)
-        reader.setRequestedSchema(new MessageType(fileSchema.getName, fields: _*))
-    }
+    GraftDecode.project(reader, fileSchema, unionCols)
     private val blocks = reader.getRowGroups
     private var blockIdx = 0
     private var groupRemaining = 0L
-    private var readers: Array[GraftPageCursor] = _
-    private var kinds: Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] = _
-    private var readerIdx: Array[Int] = _
-    private var decodeCols: Seq[String] = _
+    private var group: GraftDecode.Group = _
     private var groupMixed = false
     private var groupResidue: Array[Filter] = Array.empty
-    private var mapKeyC: GraftPageCursor = _
-    private var mapValC: GraftPageCursor = _
-    private var mapKeyDef = 0
-    private var mapValDef = 0
     // sort contract spans windows AND row groups
     private var lastS = Long.MinValue
     private var lastT = Long.MinValue
@@ -146,58 +138,29 @@ private[sources] final class GraftMorColumnarReader(
     private def advanceGroup(): Boolean = {
       while (blockIdx < blocks.size()) {
         val block = blocks.get(blockIdx)
+        blockIdx += 1
         val vis = GraftFooterStats.seqVisibility(block, commits, asOf, needSeq)
-        val tris = (pushed ++ rangeFilters).map(GraftFooterStats.classify(_, block))
+        val tris = (pushed ++ keyFilters).map(GraftFooterStats.classify(_, block))
         if (vis == GraftFooterStats.NoRows ||
             tris.contains(GraftFooterStats.NoRows)) {
           reader.skipNextRowGroup()
-          blockIdx += 1
         } else {
-          val pages = reader.readNextRowGroup()
-          blockIdx += 1
-          if (pages == null) return false
           groupMixed = vis == GraftFooterStats.SomeRows
           // only stats-undecided pushed filters need row evaluation;
-          // the stripe range residue folds into the same pass (it is
-          // evaluated scalar on the decoded sids, not via eval())
+          // the stripe range and label residues fold into the same pass
+          // (evaluated on the decoded sids / labels, not via eval())
           groupResidue = prepared.zip(
             tris.take(pushed.length)).collect {
             case (f, GraftFooterStats.SomeRows) => f
           }
           val residueCols = groupResidue.flatMap(_.references).distinct
             .filterNot(_ == "part_start").toSeq
-          decodeCols = (physCols ++ decodeAlways ++ residueCols).distinct
-          val wanted = decodeCols.toSet
-          val descs = fileSchema.getColumns
-          val flat = (0 until descs.size()).map(descs.get)
-            .filter(d => d.getPath.length == 1 && wanted(d.getPath()(0)))
-          readers = new Array(flat.size)
-          kinds = new Array(flat.size)
-          val colOfDesc = new Array[String](flat.size)
-          flat.zipWithIndex.foreach { case (d, i) =>
-            readers(i) = new GraftPageCursor(d, pages.getPageReader(d))
-            kinds(i) = d.getPrimitiveType.getPrimitiveTypeName
-            colOfDesc(i) = d.getPath()(0)
-          }
-          readerIdx = decodeCols.map(c => colOfDesc.indexOf(c)).toArray
-          mapKeyC = null; mapValC = null
-          if (wanted("labels"))
-            (0 until descs.size()).map(descs.get)
-              .filter(d => d.getPath.length == 3 && d.getPath()(0) == "labels")
-              .foreach { d =>
-                if (d.getPath()(2) == "key") {
-                  mapKeyC = new GraftPageCursor(d, pages.getPageReader(d))
-                  mapKeyDef = d.getMaxDefinitionLevel
-                } else {
-                  mapValC = new GraftPageCursor(d, pages.getPageReader(d))
-                  mapValDef = d.getMaxDefinitionLevel
-                }
-              }
-          if (readerIdx(decodeCols.indexOf("series_id")) < 0 ||
-              readerIdx(decodeCols.indexOf("time")) < 0)
+          group = GraftDecode.openGroup(reader, fileSchema,
+            (physCols ++ decodeAlways ++ residueCols).distinct, file)
+          if (!group.has("series_id") || !group.has("time"))
             throw new IllegalStateException(
               s"$file lacks series_id/time — not a graft raw file")
-          groupRemaining = pages.getRowCount
+          groupRemaining = block.getRowCount
           if (groupRemaining > 0) return true
         }
       }
@@ -213,52 +176,18 @@ private[sources] final class GraftMorColumnarReader(
         if (groupRemaining <= 0 && !advanceGroup()) { close(); return }
         val n = math.min(groupRemaining, GraftColumnar.BatchRows.toLong).toInt
         groupRemaining -= n
-        val byName = new java.util.HashMap[String, ColumnVector]()
-        var sids: Array[Long] = null
-        var times: Array[Long] = null
-        var seqs: Array[Long] = null
-        var seqNulls: Array[Boolean] = null
-        var dels: Array[Boolean] = null
-        var delNulls: Array[Boolean] = null
-        decodeCols.zipWithIndex.foreach { case (c, ci) =>
-          val ri = readerIdx(ci)
-          if (c == "labels" && mapKeyC != null) {
-            byName.put(c, GraftDecode.map(mapKeyC, mapValC, mapKeyDef, mapValDef, n))
-          } else if (ri < 0) {
-            byName.put(c, new GraftNullVec(
-              GraftColumnar.TsdbColumnarTypes.getOrElse(c, LongType)))
-          } else {
-            val f = GraftDecode.flat(readers(ri), kinds(ri), n, c, file)
-            c match {
-              case "series_id" => sids = f.longs
-              case "time" => times = f.longs
-              case "__seq" => seqs = f.longs; seqNulls = f.nulls
-              case "__del" => dels = f.bools; delNulls = f.nulls
-              case _ => ()
-            }
-            byName.put(c, f.vec)
-          }
-        }
+        val byName = group.decode(n)
+        val sids = byName.get("series_id").longs
+        val times = byName.get("time").longs
+        val seq = byName.get("__seq")
+        val del = byName.get("__del")
         // residue compaction below the merge: stripe range, visibility,
-        // stats-undecided pushed filters, label series set — all
-        // key-stable, so superseded versions and tombstones classify
-        // exactly like the winners they shadow
+        // stats-undecided pushed filters, label test — all key-stable,
+        // so superseded versions and tombstones classify exactly like
+        // the winners they shadow
         var curRow = 0
-        val getter: String => Any = { c =>
-          if (c == "part_start") stripe.partStart
-          else {
-            val v = byName.get(c)
-            if (v == null || v.isNullAt(curRow)) null
-            else v.dataType match {
-              case LongType => java.lang.Long.valueOf(v.getLong(curRow))
-              case org.apache.spark.sql.types.DoubleType =>
-                java.lang.Double.valueOf(v.getDouble(curRow))
-              case org.apache.spark.sql.types.BooleanType =>
-                java.lang.Boolean.valueOf(v.getBoolean(curRow))
-              case _ => v.getUTF8String(curRow)
-            }
-          }
-        }
+        val getter: String => Any = c => GraftReaders.valueAt(byName.get(c).vec, curRow)
+        val rowLabel = label.forBatch(byName)
         val sel = new Array[Int](n)
         var k = 0
         var i = 0
@@ -270,18 +199,18 @@ private[sources] final class GraftMorColumnarReader(
               s"$file is not sorted by (series_id, time) — MOR merge would be wrong")
           lastS = s; lastT = t
           val seqAny: Any =
-            if (seqs == null || seqNulls(i)) null else seqs(i)
+            if (seq.longs == null || seq.nulls(i)) null else seq.longs(i)
           curRow = i
           val keep = s >= stripe.seriesLo && s <= stripe.seriesHi &&
             (!groupMixed || GraftReaders.visible(seqAny, commits, asOf)) &&
-            labelSeries.forall(_.contains(s)) &&
+            rowLabel(i) &&
             groupResidue.forall(GraftReaders.eval(_, getter, stripe.partStart))
           if (keep) { sel(k) = i; k += 1 }
           i += 1
         }
         if (k > 0)
-          win = new Window(byName, sids, times, seqs, seqNulls, dels, delNulls,
-            sel, k)
+          win = new Window(byName, sids, times, seq.longs, seq.nulls,
+            del.bools, del.nulls, sel, k)
       }
     }
 
@@ -292,6 +221,8 @@ private[sources] final class GraftMorColumnarReader(
   private val cursors: Array[FileCursor] = stripe.files.map(new FileCursor(_)).toArray
 
   private var current: ColumnarBatch = _
+  /** merged rows this stripe may still emit (the pushed limit's counter) */
+  private var left: Long = limit.fold(Long.MaxValue)(_.toLong)
 
   // ---- run fast-path state (valid across output batches) -------------------
   // The common layout gives each file DISJOINT series (pmod-sharded
@@ -306,7 +237,8 @@ private[sources] final class GraftMorColumnarReader(
   private var t2 = 0L
 
   override def next(): Boolean = {
-    val maxOut = GraftColumnar.BatchRows
+    if (left <= 0) return false
+    val maxOut = math.min(GraftColumnar.BatchRows.toLong, left).toInt
     // per-batch window registry: winIdx/ord reference into it; dropped
     // after emit so retired windows become collectable
     val wins = ArrayBuffer.empty[Window]
@@ -370,6 +302,7 @@ private[sources] final class GraftMorColumnarReader(
         if (!any) {
           if (k == 0) return false
           current = emit(wins, winIdx, ord, k)
+          left -= k
           return true
         }
         if (!multi) soleCi = minCi
@@ -422,6 +355,7 @@ private[sources] final class GraftMorColumnarReader(
       }
     }
     current = emit(wins, winIdx, ord, k)
+    left -= k
     true
   }
 
@@ -431,7 +365,7 @@ private[sources] final class GraftMorColumnarReader(
     val cols: Array[ColumnVector] = phys.map {
       case "part_start" => new GraftConstLongVec(stripe.partStart): ColumnVector
       case c =>
-        val bases = winArr.map(_.vecs.get(c))
+        val bases = winArr.map(_.vecs.get(c).vec)
         new GraftGatherVec(bases, winIdx, ord,
           GraftColumnar.TsdbColumnarTypes.getOrElse(c, LongType)): ColumnVector
     }.toArray

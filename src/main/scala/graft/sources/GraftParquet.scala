@@ -1,23 +1,13 @@
 package graft.sources
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterPredicate
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type}
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Hadoop `Configuration` is not `java.io.Serializable` but IS a Hadoop
   * `Writable` — ship it to executors through its own wire format (the
   * same trick Spark's internal `SerializableConfiguration` uses; we keep
-  * our own to stay off `private[spark]` API). */
+  * our own to stay off `private[spark]` API). The DSv2 scan broadcasts
+  * it to its readers; WARC ingest and row-level writes ship it too. The
+  * raw-table files themselves decode in [[GraftColumnar]]. */
 final class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -29,213 +19,4 @@ final class SerializableHadoopConf(@transient var value: Configuration)
     value = new Configuration(false)
     value.readFields(in)
   }
-}
-
-/** Minimal parquet-mr record reader for the graft raw-table files — the
-  * executor half of the DSv2 batch source ([[GraftTableProvider]]).
-  *
-  * Built directly on the public parquet-column assembly API
-  * (`ColumnIOFactory` + `RecordMaterializer`) instead of Spark's internal
-  * `ParquetFileFormat` so the source stays on stable public surface. The
-  * raw-table schema is small and fixed (strings, longs, doubles, one
-  * string→string map, a boolean), so a purpose-built materializer is ~100
-  * lines and emits exactly the catalyst values (`UTF8String`,
-  * `ArrayBasedMapData`) the scan needs — no Row→InternalRow re-encoding.
-  *
-  * Scale levers, all driven by the caller:
-  *  - `predicate` reaches `filterRowGroups` via the read options, so
-  *    row-group min/max stats skip non-matching groups before any IO
-  *    (files are written sorted by (series_id, time) — reference
-  *    sharding-key scans, `pkg/partmgr/partmgr.go:313-321`);
-  *  - `range` restricts assembly to row groups whose midpoint falls in
-  *    the byte range — the standard parquet split protocol, giving
-  *    sub-file parallelism without coordination;
-  *  - `columns` is an exact projection: unrequested columns are never
-  *    decoded, and a column missing from the file footer (legacy files
-  *    predating `__seq`/`__del`) yields nulls instead of a read error
-  *    (the `mergeSchema` behavior of the production path).
-  *
-  * Rows come back as `Array[Any]` slots in `columns` order; the caller
-  * owns filter evaluation and InternalRow wrapping.
-  */
-final class GraftParquetReader(
-    conf: Configuration,
-    filePath: String,
-    columns: Seq[String],
-    predicateFor: Set[String] => Option[FilterPredicate],
-    range: Option[(Long, Long)] = None,
-    blockKeep: org.apache.parquet.hadoop.metadata.BlockMetaData => Boolean = _ => true)
-  extends Iterator[Array[Any]] with AutoCloseable {
-
-  private val hPath = new org.apache.hadoop.fs.Path(filePath)
-  /** ONE footer read per file: opened without a record filter (a
-    * predicate can only be validated against columns the footer proves
-    * present, and parquet applies ctor-time filters before the schema is
-    * visible), the row-group stats filter is applied explicitly below. */
-  private val reader: ParquetFileReader = {
-    val b = HadoopReadOptions.builder(conf, hPath)
-      // we assemble records ourselves (no FilteringRecordMaterializer),
-      // so page-level column-index filtering would desynchronize the
-      // per-column readers — keep pruning at row-group granularity
-      .useColumnIndexFilter(false)
-    range.foreach { case (s, e) => b.withRange(s, e) }
-    new ParquetFileReader(HadoopInputFile.fromPath(hPath, conf), b.build())
-  }
-
-  private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-  private val presentNames: Set[String] = {
-    var s = Set.empty[String]
-    (0 until fileSchema.getFieldCount).foreach(i => s += fileSchema.getType(i).getName)
-    s
-  }
-  /** Row groups surviving the stats filter (range pruning already
-    * happened in the constructor); identity-kept so the read loop can
-    * skip the dropped ones in file order. */
-  private val keptBlocks: java.util.IdentityHashMap[AnyRef, AnyRef] = {
-    val m = new java.util.IdentityHashMap[AnyRef, AnyRef]()
-    val blocks = reader.getRowGroups
-    predicateFor(presentNames) match {
-      case Some(p) =>
-        val kept = org.apache.parquet.filter2.compat.RowGroupFilter
-          .filterRowGroups(FilterCompat.get(p), blocks, fileSchema)
-        kept.forEach(b => if (blockKeep(b)) m.put(b, b))
-      case None => blocks.forEach(b => if (blockKeep(b)) m.put(b, b))
-    }
-    m
-  }
-  /** Columns of the projection that exist in this file, in FILE order. */
-  private val projFields: Seq[Type] = {
-    val wanted = columns.toSet
-    (0 until fileSchema.getFieldCount).map(fileSchema.getType)
-      .filter(t => wanted(t.getName))
-  }
-  /** projected-slot index → output-slot index. */
-  private val outIdx: Array[Int] = projFields.map(t => columns.indexOf(t.getName)).toArray
-
-  /** True when the file carries none of the requested columns (pure
-    * row-count scan, e.g. COUNT(*) on a legacy table) — emit empty rows
-    * from row-group metadata without touching a single page. */
-  private val countOnly = projFields.isEmpty
-
-  // ---- record assembly --------------------------------------------------
-  private final class LeafConv(slot: Int, isString: Boolean) extends PrimitiveConverter {
-    override def addBinary(b: Binary): Unit =
-      slots(slot) = if (isString) UTF8String.fromBytes(b.getBytes) else b.getBytes
-    override def addLong(v: Long): Unit = slots(slot) = v
-    override def addDouble(v: Double): Unit = slots(slot) = v
-    override def addInt(v: Int): Unit = slots(slot) = v
-    override def addBoolean(v: Boolean): Unit = slots(slot) = v
-    override def addFloat(v: Float): Unit = slots(slot) = v
-  }
-
-  /** Spark's parquet MAP layout: `group (MAP) { repeated group key_value
-    * { required binary key; optional binary value } }`. */
-  private final class MapConv(slot: Int) extends GroupConverter {
-    private val keys = new ArrayBuffer[UTF8String]
-    private val vals = new ArrayBuffer[UTF8String]
-    private val kvConv: GroupConverter = new GroupConverter {
-      private var k: UTF8String = _
-      private var v: UTF8String = _
-      private val kc = new PrimitiveConverter {
-        override def addBinary(b: Binary): Unit = k = UTF8String.fromBytes(b.getBytes)
-      }
-      private val vc = new PrimitiveConverter {
-        override def addBinary(b: Binary): Unit = v = UTF8String.fromBytes(b.getBytes)
-      }
-      override def getConverter(i: Int): Converter = if (i == 0) kc else vc
-      override def start(): Unit = { k = null; v = null }
-      override def end(): Unit = { keys += k; vals += v }
-    }
-    override def getConverter(i: Int): Converter = kvConv
-    override def start(): Unit = { keys.clear(); vals.clear() }
-    override def end(): Unit =
-      slots(slot) = ArrayBasedMapData(keys.toArray[Any], vals.toArray[Any])
-  }
-
-  private val slots = new Array[Any](columns.length)
-  private val root: GroupConverter = new GroupConverter {
-    private val convs: Array[Converter] = projFields.zipWithIndex.map { case (t, i) =>
-      t match {
-        case g: GroupType => new MapConv(outIdx(i)): Converter
-        case p: PrimitiveType =>
-          val str = p.getPrimitiveTypeName ==
-            PrimitiveType.PrimitiveTypeName.BINARY &&
-            (p.getLogicalTypeAnnotation match {
-              case _: org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation => true
-              case _ => false
-            })
-          new LeafConv(outIdx(i), str): Converter
-      }
-    }.toArray
-    override def getConverter(i: Int): Converter = convs(i)
-    override def start(): Unit = java.util.Arrays.fill(slots.asInstanceOf[Array[AnyRef]], null)
-    override def end(): Unit = ()
-  }
-  private val materializer = new RecordMaterializer[Array[Any]] {
-    override def getCurrentRecord: Array[Any] = slots.clone()
-    override def getRootConverter: GroupConverter = root
-  }
-
-  private val projSchema: MessageType =
-    if (countOnly) null
-    else new MessageType(fileSchema.getName, projFields: _*)
-  if (!countOnly) reader.setRequestedSchema(projSchema)
-  private val columnIO =
-    if (countOnly) null else new ColumnIOFactory().getColumnIO(projSchema)
-
-  // ---- iteration ---------------------------------------------------------
-  private val blocksInOrder = reader.getRowGroups
-  private var blockIdx = 0
-  private var recordReader: org.apache.parquet.io.RecordReader[Array[Any]] = _
-  private var remainingInGroup = 0L
-  private var countRemaining = // countOnly: total row count of surviving groups
-    if (countOnly) {
-      var n = 0L
-      blocksInOrder.forEach(b => if (keptBlocks.containsKey(b)) n += b.getRowCount)
-      n
-    } else 0L
-  private var exhausted = false
-  /** ALL projected slots null — what a record of a file missing every
-    * requested column reads as (sized to the projection, never empty:
-    * callers index into it by slot). */
-  private val allNullRow = new Array[Any](columns.length)
-
-  private def advanceGroup(): Boolean = {
-    // honor the stats filter: dropped groups are skipped without IO
-    while (blockIdx < blocksInOrder.size() &&
-           !keptBlocks.containsKey(blocksInOrder.get(blockIdx))) {
-      reader.skipNextRowGroup()
-      blockIdx += 1
-    }
-    if (blockIdx >= blocksInOrder.size()) { exhausted = true; return false }
-    val pages = reader.readNextRowGroup()
-    blockIdx += 1
-    if (pages == null) { exhausted = true; false }
-    else {
-      recordReader = columnIO.getRecordReader(pages, materializer)
-      remainingInGroup = pages.getRowCount
-      true
-    }
-  }
-
-  override def hasNext: Boolean =
-    if (countOnly) countRemaining > 0
-    else {
-      while (remainingInGroup == 0 && !exhausted) advanceGroup()
-      remainingInGroup > 0
-    }
-
-  override def next(): Array[Any] =
-    if (countOnly) { countRemaining -= 1; allNullRow.clone() }
-    else {
-      if (!hasNext) throw new NoSuchElementException(filePath)
-      remainingInGroup -= 1
-      recordReader.read()
-    }
-
-  /** Does the file's footer carry this column? (Legacy files predate
-    * `__seq`/`__del`; a parquet predicate must not reference them.) */
-  def hasColumn(name: String): Boolean = presentNames(name)
-
-  override def close(): Unit = reader.close()
 }

@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -49,11 +47,14 @@ import graft.storage.{TsdbConfig, TsdbTable}
   *    k-way merge over the files of one time partition — no shuffle, no
   *    per-key state beyond the current key. Parallelism inside a
   *    partition comes from series_id striping (`morStripes` option,
-  *    default = shardingBuckets): each stripe pushes its series range
-  *    into the parquet row-group stats filter, which the sorted layout
+  *    default = shardingBuckets): each stripe classifies row groups by
+  *    its series range against footer stats, which the sorted layout
   *    turns into near-exact row-group pruning. Tombstone winners drop;
   *    superseded versions lose by `__seq` (NULL — legacy rows — loses to
-  *    any stamped version).
+  *    any stamped version);
+  *  - both are read by one columnar decoder ([[GraftColumnar]]) and
+  *    served as ColumnarBatches; the aggregate pushdown's partial row is
+  *    the only row-shaped reader.
   *
   * Pushdown (all EXACTLY enforced row-level in the readers, so accepted
   * filters are fully consumed, not re-applied):
@@ -726,12 +727,12 @@ private[graft] object GraftDeletes {
   * ([[graft.storage.TsdbTable.resolveSeries]]): at planning the labels
   * resolve to a series_id set, which (a) drops MOR stripes whose series
   * range misses the set, (b) drops everything when no series matches,
-  * (c) skips row groups via a parquet series_id IN predicate (files are
-  * sorted by series_id, so groups are near-contiguous series runs), and
-  * (d) cheapens the row filter to a hash-set membership test. Beyond
-  * [[graft.storage.TsdbTable.MaxPruneSeries]] matches (or on a
-  * registry-less legacy table) the scan falls back to the exact
-  * row-level map filter alone. */
+  * (c) skips row groups whose footer series_id stats hold no member
+  * (files are sorted by series_id, so groups are near-contiguous series
+  * runs), and (d) cheapens the row filter to a hash-set membership
+  * test. Beyond [[graft.storage.TsdbTable.MaxPruneSeries]] matches (or
+  * on a registry-less legacy table) the columnar readers decode the
+  * `labels` map and test each row exactly ([[GraftReaders.LabelTest]]). */
 private[sources] object GraftLabels {
   def fromOptions(options: CaseInsensitiveStringMap): Seq[(String, String)] =
     options.asCaseSensitiveMap().asScala.toSeq.collect {
@@ -1179,16 +1180,15 @@ private[sources] final class GraftScan(
 
   /** Report the MOR merge's row order (r14): every stripe emits
     * (series_id ASC, time ASC) — the k-way merge's own output contract,
-    * enforced LOUDLY per input file (`GraftMorReader` throws on a
-    * sort-contract violation), so the report can never be a lie. With
-    * it, `sortWithinPartitions(series_id, time)`, sort-merge-join local
-    * sorts, and window locals over series keys elide their SortExec.
-    * Non-MOR file splits are also written sorted, but nothing ENFORCES
-    * it at read time (a hand-planted unsorted file would silently
-    * corrupt a merge join), so only the enforced path reports — the
-    * same honesty line the MOR reader draws. Spark itself drops the
-    * ordering when split-grouping merges multiple stripes into one
-    * task. */
+    * enforced LOUDLY per input file ([[GraftMorColumnarReader]] throws
+    * on a sort-contract violation), so the report can never be a lie.
+    * With it, `sortWithinPartitions(series_id, time)`, sort-merge-join
+    * local sorts, and window locals over series keys elide their
+    * SortExec. Non-MOR file splits are also written sorted, but nothing
+    * ENFORCES it at read time (a hand-planted unsorted file would
+    * silently corrupt a merge join), so only the enforced path reports.
+    * Spark itself drops the ordering when split-grouping merges
+    * multiple stripes into one task. */
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.SortDirection
@@ -1206,18 +1206,6 @@ private[sources] final class GraftScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // columnar scope (see GraftColumnar): non-MOR byte-range splits and
-    // MOR stripes alike (r15: page-bulk decode + primitive-key merge +
-    // gather, [[GraftMorColumnarReader]]), no limit. Pushed filters ride
-    // the columnar path (r13 cont.) as long as every referenced column
-    // is itself vector-decodable — true for the whole accepted filter
-    // surface (key-stable flat columns), checked defensively anyway. A
-    // label filter rides along in its resolved-series-set form (a cheap
-    // long membership test); the map-equality fallback stays row-shaped.
-    val columnarOk = agg.isEmpty && limit.isEmpty &&
-      (labelEq.isEmpty || labelSeries.isDefined) &&
-      GraftColumnar.supports(required.fieldNames.toSeq) &&
-      pushed.flatMap(_.references).forall(GraftColumnar.columnarName)
     // the Hadoop conf rides a BROADCAST, not the task closure (r14): a
     // factory serialized into the task binary java-deserializes PER
     // TASK — profiling showed the whole-Configuration readFields (plus
@@ -1229,8 +1217,8 @@ private[sources] final class GraftScan(
     new GraftReaderFactory(
       spark.sparkContext.broadcast(
         new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)),
-      required.fieldNames.toSeq, pushed, planned._3, config.overrideOld, asOf,
-      agg, limit, columnarOk, aggGroupByPart,
+      required.fieldNames.toSeq, pushed, planned._3, asOf,
+      agg, limit, aggGroupByPart,
       // pushed long SUMs must fail-or-wrap exactly as the session's Sum
       // would (ANSI throws on overflow; legacy wraps) — review-caught
       // r14: unconditional addExact threw where a non-ANSI session's
@@ -1240,16 +1228,17 @@ private[sources] final class GraftScan(
   }
 }
 
+/** Readers per split: file splits and MOR stripes are served columnar
+  * ([[GraftColumnarReader]], [[GraftMorColumnarReader]]); the one row
+  * reader left is the aggregate pushdown's partial row per bundle. */
 private[sources] final class GraftReaderFactory(
     conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
     requested: Seq[String],
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],
-    mor: Boolean,
     asOf: Option[Long],
     agg: Option[Seq[GraftAggSpec]] = None,
     limit: Option[Int] = None,
-    columnarOk: Boolean = false,
     aggGroupByPart: Boolean = false,
     ansiSum: Boolean = true,
     labelEq: Seq[(String, String)] = Nil,
@@ -1263,16 +1252,11 @@ private[sources] final class GraftReaderFactory(
     case a: GraftAggSplit =>
       new GraftAggReader(hconf, a, agg.get, pushed, commits, asOf,
         aggGroupByPart, ansiSum)
-    case s: GraftFileSplit =>
-      limited(new GraftFileReader(hconf, s, requested, pushed, commits, asOf,
-        labelEq, labelSeries))
-    case m: GraftMorStripe =>
-      limited(new GraftMorReader(hconf, m, requested, pushed, commits, asOf,
-        labelEq, labelSeries))
+    case other => throw new IllegalStateException(s"no row reader for $other")
   }
 
   override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case _: GraftFileSplit | _: GraftMorStripe => columnarOk
+    case _: GraftFileSplit | _: GraftMorStripe => true
     case _ => false
   }
 
@@ -1280,31 +1264,16 @@ private[sources] final class GraftReaderFactory(
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = p match {
     case s: GraftFileSplit =>
       new GraftColumnarReader(hconf, s, requested, pushed, commits, asOf,
-        labelSeries)
+        labelEq, labelSeries, limit)
     case m: GraftMorStripe =>
       new GraftMorColumnarReader(hconf, m, requested, pushed, commits, asOf,
-        labelSeries)
+        labelEq, labelSeries, limit)
     case other => throw new IllegalStateException(s"no columnar reader for $other")
   }
-
-  /** Partial pushed limit: stop a split's reader after `n` emitted rows
-    * (rows that already passed filters/merge — Spark's global limit
-    * runs above the partials). */
-  private def limited(r: PartitionReader[InternalRow]): PartitionReader[InternalRow] =
-    limit match {
-      case None => r
-      case Some(n) => new PartitionReader[InternalRow] {
-        private var emitted = 0
-        override def next(): Boolean =
-          emitted < n && r.next() && { emitted += 1; true }
-        override def get(): InternalRow = r.get()
-        override def close(): Unit = r.close()
-      }
-    }
 }
 
-/** Shared reader mechanics: internal column set, parquet predicates, exact
-  * row-level filter evaluation, visibility, InternalRow emission. */
+/** Shared reader mechanics: exact row-level filter evaluation over
+  * decoded vectors, the label test, visibility. */
 private[sources] object GraftReaders {
 
   /** Pre-bind string literals inside accepted filters to [[UTF8String]]
@@ -1328,8 +1297,9 @@ private[sources] object GraftReaders {
   }
 
   /** Row-level evaluation of an accepted PREPARED pushed filter over
-    * reader slots ([[prepare]] rebinds string literals; raw String
-    * literals still evaluate correctly, one allocation per row).
+    * one decoded row (`get` reads a column; [[prepare]] rebinds string
+    * literals; raw String literals still evaluate correctly, one
+    * allocation per row).
     * `part_start` is constant per input partition and pre-satisfied at
     * planning, so it always passes here. */
   def eval(f: Filter, get: String => Any, partStart: Long): Boolean = {
@@ -1398,63 +1368,6 @@ private[sources] object GraftReaders {
     case _ => false
   }
 
-  /** Parquet row-group predicate for the pushed filters restricted to
-    * columns in `present` (a predicate naming a column absent from the
-    * footer fails parquet validation). part_start is handled
-    * planning-level only; `seriesIn` is the label filter's resolved
-    * series set (r15). */
-  def parquetPredicate(pushed: Array[Filter], present: Set[String],
-                       extraSeries: Option[(Long, Long)],
-                       seriesIn: Option[java.util.HashSet[Long]] = None)
-      : Option[FilterPredicate] = {
-    def conv(f: Filter): Option[FilterPredicate] = f match {
-      case EqualTo(c, x: Long) if present(c) && c != "part_start" =>
-        Some(FilterApi.eq(FilterApi.longColumn(c), java.lang.Long.valueOf(x)))
-      case EqualTo(c, x: String) if present(c) =>
-        Some(FilterApi.eq(FilterApi.binaryColumn(c), Binary.fromString(x)))
-      // IN-lists (r15): row-group stats + dictionary filtering both
-      // understand FilterApi.in — the day-list / series-list shapes
-      case In(c, vs) if present(c) && c != "part_start" && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Long]) =>
-        val set = new java.util.HashSet[java.lang.Long](vs.length * 2)
-        vs.foreach(v => set.add(v.asInstanceOf[Long]))
-        Some(FilterApi.in(FilterApi.longColumn(c), set))
-      case In(c, vs) if present(c) && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[String]) =>
-        val set = new java.util.HashSet[Binary](vs.length * 2)
-        vs.foreach(v => set.add(Binary.fromString(v.asInstanceOf[String])))
-        Some(FilterApi.in(FilterApi.binaryColumn(c), set))
-      case GreaterThan(c, x: Long) if present(c) && c != "part_start" =>
-        Some(FilterApi.gt(FilterApi.longColumn(c), java.lang.Long.valueOf(x)))
-      case GreaterThanOrEqual(c, x: Long) if present(c) && c != "part_start" =>
-        Some(FilterApi.gtEq(FilterApi.longColumn(c), java.lang.Long.valueOf(x)))
-      case LessThan(c, x: Long) if present(c) && c != "part_start" =>
-        Some(FilterApi.lt(FilterApi.longColumn(c), java.lang.Long.valueOf(x)))
-      case LessThanOrEqual(c, x: Long) if present(c) && c != "part_start" =>
-        Some(FilterApi.ltEq(FilterApi.longColumn(c), java.lang.Long.valueOf(x)))
-      case And(l, r) => (conv(l), conv(r)) match {
-        case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-        case (a, b) => a.orElse(b)
-      }
-      case _ => None
-    }
-    val parts = pushed.flatMap(conv) ++ extraSeries.toSeq.flatMap { case (lo, hi) =>
-      if (!present("series_id")) Nil
-      else Seq(
-        FilterApi.gtEq(FilterApi.longColumn("series_id"), java.lang.Long.valueOf(lo)),
-        FilterApi.ltEq(FilterApi.longColumn("series_id"), java.lang.Long.valueOf(hi)))
-    } ++ seriesIn.toSeq.flatMap { set =>
-      if (!present("series_id") || set.isEmpty) Nil
-      else {
-        val js = new java.util.HashSet[java.lang.Long](set.size() * 2)
-        val it = set.iterator()
-        while (it.hasNext) js.add(it.next())
-        Seq(FilterApi.in(FilterApi.longColumn("series_id"), js))
-      }
-    }
-    parts.reduceOption(FilterApi.and)
-  }
-
   /** visibility: NULL `__seq` (legacy rows) and committed seqs pass —
     * `TsdbTable.visibleSeqCond` exactly; under a snapshot handle, also
     * `seq <= asOf` (legacy NULL rows predate every seq and stay in —
@@ -1473,225 +1386,50 @@ private[sources] object GraftReaders {
     committed && (asOf.isEmpty || l == null || l <= asOf.get)
   }
 
-  def toRow(cols: Array[Any]): InternalRow = new GenericInternalRow(cols)
-}
-
-/** Window-free read of one byte-range split of one non-MOR file. */
-private[sources] final class GraftFileReader(
-    conf: org.apache.hadoop.conf.Configuration,
-    split: GraftFileSplit,
-    requested: Seq[String],
-    pushed: Array[Filter],
-    commits: Option[(Long, Set[Long])],
-    asOf: Option[Long],
-    labelEq: Seq[(String, String)] = Nil,
-    labelSeries: Option[java.util.HashSet[Long]] = None)
-  extends PartitionReader[InternalRow] {
-
-  private val filterCols =
-    pushed.flatMap(_.references).toSet.filter(_ != "part_start")
-  private val prepared = GraftReaders.prepare(pushed)
-  private val preparedEq = GraftReaders.prepareLabelEq(labelEq)
-  private val needSeq = commits.nonEmpty || asOf.nonEmpty
-  // label filter (r15): with a resolved series set the row test is a
-  // hash lookup on series_id; without one it is the exact map filter
-  // (which needs the labels column read internally)
-  private val labelCols: Set[String] =
-    if (labelEq.isEmpty) Set.empty
-    else if (labelSeries.isDefined) Set("series_id") else Set("labels")
-  // requested metadata columns (_key_*) read their underlying physical
-  // column — an alias, never extra IO
-  private val phys = requested.map(GraftMeta.physical)
-  // internal slot layout: physical requested columns first (deduped —
-  // a column and its metadata alias share one slot), then extras the
-  // reader itself needs (filter columns, __seq) not already requested
-  private val extras =
-    (filterCols ++ labelCols ++
-      (if (needSeq) Set("__seq") else Set.empty) -- phys.toSet)
-      .toSeq.sorted
-  private val cols = phys.filterNot(_ == "part_start").distinct ++ extras
-  private val idx: Map[String, Int] = cols.zipWithIndex.toMap
-  private val seqIdx = idx.getOrElse("__seq", -1)
-  private val labSidIdx = if (labelSeries.isDefined) idx("series_id") else -1
-  private val labMapIdx =
-    if (labelEq.nonEmpty && labelSeries.isEmpty) idx("labels") else -1
-
-  // one footer read total: the predicate is built from the columns the
-  // open reader's own footer proves present
-  private val reader = new GraftParquetReader(conf, split.file, cols,
-    present => GraftReaders.parquetPredicate(pushed, present, None, labelSeries),
-    Some((split.start, split.start + split.length)))
-
-  private var current: Array[Any] = _
-
-  private def labelOk(row: Array[Any]): Boolean =
-    labelEq.isEmpty ||
-      (if (labSidIdx >= 0) row(labSidIdx) match {
-        case l: Long => labelSeries.get.contains(l)
-        case _ => false
-      }
-      else GraftReaders.labelsMatch(row(labMapIdx), preparedEq))
-
-  override def next(): Boolean = {
-    while (reader.hasNext) {
-      val row = reader.next()
-      def get(c: String): Any = idx.get(c).map(row(_)).orNull
-      val vis = seqIdx < 0 || GraftReaders.visible(row(seqIdx), commits, asOf)
-      if (vis && labelOk(row) &&
-          prepared.forall(GraftReaders.eval(_, get, split.partStart))) {
-        current = emit(row)
-        return true
-      }
+  /** A decoded vector's cell as the catalyst value [[eval]] and the
+    * aggregate fold compare: boxed long/double/boolean, UTF8String, or
+    * null. */
+  def valueAt(v: org.apache.spark.sql.vectorized.ColumnVector, i: Int): Any =
+    if (v.isNullAt(i)) null
+    else v.dataType match {
+      case org.apache.spark.sql.types.LongType => v.getLong(i)
+      case org.apache.spark.sql.types.DoubleType => v.getDouble(i)
+      case org.apache.spark.sql.types.BooleanType => v.getBoolean(i)
+      case _ => v.getUTF8String(i)
     }
-    false
+
+  /** One reader's label-equality filter ([[GraftLabels]]). With the
+    * resolved series set it reads `series_id`: a stats-classifiable
+    * `series_id IN` skips row groups, and rows test by hash lookup.
+    * Without one (legacy sidecar, more than
+    * [[graft.storage.TsdbTable.MaxPruneSeries]] matches) it reads
+    * `labels` and tests each row's map exactly. Series identity is
+    * LWW-key-stable, so the test is safe below the MOR merge. */
+  final class LabelTest(eq: Seq[(String, String)],
+                        series: Option[java.util.HashSet[Long]]) {
+    val active: Boolean = eq.nonEmpty
+    private val byMap = active && series.isEmpty
+    private val preparedEq = prepareLabelEq(eq)
+    /** The column the row test reads. */
+    val cols: Seq[String] =
+      if (!active) Nil else if (byMap) Seq("labels") else Seq("series_id")
+    /** Row-group classification filter: the resolved set as an IN. */
+    val seriesIn: Option[Filter] =
+      if (!active) None
+      else series.map(set => In("series_id", set.toArray.map(id => id: Any)))
+
+    /** The row test over one decoded window ([[cols]] included). */
+    def forBatch(byName: java.util.HashMap[String, GraftDecode.Flat]): Int => Boolean =
+      if (!active) _ => true
+      else if (byMap) {
+        val v = byName.get("labels").vec
+        i => !v.isNullAt(i) && labelsMatch(v.getMap(i), preparedEq)
+      } else {
+        val v = byName.get("series_id").vec
+        val set = series.get
+        i => !v.isNullAt(i) && set.contains(v.getLong(i))
+      }
   }
-
-  private def emit(row: Array[Any]): Array[Any] = {
-    val out = new Array[Any](requested.length)
-    var i = 0
-    while (i < out.length) {
-      val p = phys(i)
-      out(i) = if (p == "part_start") split.partStart else row(idx(p))
-      i += 1
-    }
-    out
-  }
-
-  override def get(): InternalRow = GraftReaders.toRow(current)
-  override def close(): Unit = reader.close()
-}
-
-/** Merged (last-write-wins) read of one series stripe of one MOR time
-  * partition: a streaming k-way merge over the partition's files, all of
-  * which are written sorted by (series_id, time) — append
-  * (`TsdbTable.append` sortWithinPartitions), compaction and tombstone
-  * deletes alike. Memory is O(files-in-partition); no shuffle. A file
-  * violating the sort contract fails loudly rather than merging wrong. */
-private[sources] final class GraftMorReader(
-    conf: org.apache.hadoop.conf.Configuration,
-    stripe: GraftMorStripe,
-    requested: Seq[String],
-    pushed: Array[Filter],
-    commits: Option[(Long, Set[Long])],
-    asOf: Option[Long],
-    labelEq: Seq[(String, String)] = Nil,
-    labelSeries: Option[java.util.HashSet[Long]] = None)
-  extends PartitionReader[InternalRow] {
-
-  private val filterCols =
-    pushed.flatMap(_.references).toSet.filter(_ != "part_start")
-  private val prepared = GraftReaders.prepare(pushed)
-  private val preparedEq = GraftReaders.prepareLabelEq(labelEq)
-  // label filter (r15): series identity is LWW-key-stable, so it is
-  // safe (and cheapest) to apply BELOW the merge, like name filters
-  private val labelCols: Set[String] =
-    if (labelEq.nonEmpty && labelSeries.isEmpty) Set("labels") else Set.empty
-  // metadata aliases (_key_*) share their physical column's slot
-  private val phys = requested.map(GraftMeta.physical)
-  private val extras =
-    (filterCols ++ labelCols ++
-      Set("series_id", "time", "__seq", "__del") -- phys.toSet)
-      .toSeq.sorted
-  private val cols = phys.filterNot(_ == "part_start").distinct ++ extras
-  private val idx: Map[String, Int] = cols.zipWithIndex.toMap
-  private val sIdx = idx("series_id")
-  private val tIdx = idx("time")
-  private val seqIdx = idx("__seq")
-  private val delIdx = idx("__del")
-  private val labMapIdx =
-    if (labelEq.nonEmpty && labelSeries.isEmpty) idx("labels") else -1
-
-  private def labelOk(row: Array[Any], s: Long): Boolean =
-    labelEq.isEmpty ||
-      (labelSeries match {
-        case Some(set) => set.contains(s)
-        case None => GraftReaders.labelsMatch(row(labMapIdx), preparedEq)
-      })
-
-  /** Per-file cursor holding the next VISIBLE, filter-passing row. */
-  private final class Cursor(file: String) {
-    private val r = new GraftParquetReader(conf, file, cols,
-      present => GraftReaders.parquetPredicate(pushed, present,
-        Some((stripe.seriesLo, stripe.seriesHi)), labelSeries))
-    var head: Array[Any] = _
-    private var lastS = Long.MinValue
-    private var lastT = Long.MinValue
-    advance()
-    def advance(): Unit = {
-      head = null
-      while (head == null && r.hasNext) {
-        val row = r.next()
-        val s = row(sIdx).asInstanceOf[Long]
-        val t = row(tIdx).asInstanceOf[Long]
-        if (s < lastS || (s == lastS && t < lastT))
-          throw new IllegalStateException(
-            s"$file is not sorted by (series_id, time) — MOR merge would be wrong")
-        lastS = s; lastT = t
-        def get(c: String): Any = idx.get(c).map(row(_)).orNull
-        if (s >= stripe.seriesLo && s <= stripe.seriesHi &&
-            GraftReaders.visible(row(seqIdx), commits, asOf) &&
-            labelOk(row, s) &&
-            prepared.forall(GraftReaders.eval(_, get, stripe.partStart)))
-          head = row
-      }
-    }
-    def close(): Unit = r.close()
-  }
-
-  private val cursors: Array[Cursor] = stripe.files.map(new Cursor(_)).toArray
-  private var current: Array[Any] = _
-
-  override def next(): Boolean = {
-    while (true) {
-      // min (series_id, time) among cursor heads
-      var ms = Long.MaxValue; var mt = Long.MaxValue; var any = false
-      cursors.foreach { c =>
-        if (c.head != null) {
-          val s = c.head(sIdx).asInstanceOf[Long]
-          val t = c.head(tIdx).asInstanceOf[Long]
-          if (!any || s < ms || (s == ms && t < mt)) { ms = s; mt = t }
-          any = true
-        }
-      }
-      if (!any) return false
-      // collect every version of the key; LWW winner = max __seq
-      // (NULL = legacy = MinValue, losing to any stamped version)
-      var winner: Array[Any] = null
-      var winSeq = Long.MinValue
-      var first = true
-      cursors.foreach { c =>
-        while (c.head != null &&
-               c.head(sIdx).asInstanceOf[Long] == ms &&
-               c.head(tIdx).asInstanceOf[Long] == mt) {
-          val sq = c.head(seqIdx) match {
-            case null => Long.MinValue
-            case l: Long => l
-          }
-          if (first || sq >= winSeq) { winner = c.head; winSeq = sq; first = false }
-          c.advance()
-        }
-      }
-      val del = winner(delIdx) match {
-        case b: Boolean => b
-        case _ => false
-      }
-      if (!del) {
-        val out = new Array[Any](requested.length)
-        var i = 0
-        while (i < out.length) {
-          val p = phys(i)
-          out(i) = if (p == "part_start") stripe.partStart else winner(idx(p))
-          i += 1
-        }
-        current = out
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = GraftReaders.toRow(current)
-  override def close(): Unit = cursors.foreach(_.close())
 }
 
 /** The streaming ingest sink behind `writeStream.format("graft")` — see

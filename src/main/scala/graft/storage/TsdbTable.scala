@@ -1269,8 +1269,10 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * each partition, append-only tables read file-parallel with no
     * merge. Callers narrow it with plain filters — `part_start`, `time`
     * and `name` conjuncts push into the scan, where they prune partition
-    * directories, row groups and rows. `labelEq` must already resolve
-    * through [[resolveSeries]]: the scan then prunes by the series set. */
+    * directories, row groups and rows. `labelEq` are label-equality
+    * conjuncts: the scan resolves them through [[resolveSeries]] and
+    * prunes by the series set, or tests each row's labels map when they
+    * do not resolve. */
   private def merged(asOf: Option[Long] = None,
                      labelEq: Seq[(String, String)] = Nil): DataFrame =
     graft.sources.GraftRawRead(config, asOf, labelEq).frame(spark, path)
@@ -1491,28 +1493,14 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       //    which can sit up to step-1 BELOW from, minus wins.max*step
       //  - downsample/cross-series: prev/linear interpolation donors within
       //    the tolerance
+      // The filter's top-level `labels['k'] = 'v'` conjuncts ride into the
+      // scan, which resolves them through the series registry and prunes
+      // by the set — the reference's filter-to-sharding-key scan (P1,
+      // `pkg/pquerier/select.go:598`, `partmgr.go:459-468`). A superset
+      // reduction: the full filter still applies row-level afterwards.
       QueryEngine.select(
-        readRawImpl(rawSelectLo(p), p.to, None, resolvedLabels(p.filter)), p)
+        readRawImpl(rawSelectLo(p), p.to, None, TsdbTable.labelEqConjuncts(p.filter)), p)
     }
-  }
-
-  /** Raw-scan series pruning (r15): the top-level `labels['k'] = 'v'`
-    * conjuncts of a query filter, handed to the scan only when they
-    * resolve through the series registry ([[resolveSeries]]) — the
-    * reference's filter-to-sharding-key scan (P1,
-    * `pkg/pquerier/select.go:598`, `partmgr.go:459-468`). The scan then
-    * drops series stripes and row groups outside the set (files are
-    * sorted by series_id) and tests rows by set membership; a
-    * provably-empty set reads nothing. Pruning is a SUPERSET reduction
-    * (a row matching the full filter matches each such conjunct), and
-    * the original filter still applies row-level afterwards. Nil when
-    * the registry is unavailable (legacy sidecar), the filter has no
-    * such conjuncts, or the match set exceeds
-    * [[TsdbTable.MaxPruneSeries]]: the scan's map-equality fallback
-    * would then force its row reader, for no pruning. */
-  private def resolvedLabels(filter: String): Seq[(String, String)] = {
-    val eq = TsdbTable.labelEqConjuncts(filter)
-    if (resolveSeries(eq).isDefined) eq else Nil
   }
 
   /** disableClientAggr coerces coarser steps down to rollup granularity
@@ -1590,7 +1578,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       // across time (series are only ever added), so the resolved set
       // covers every series live at any earlier seq
       QueryEngine.select(readRawImpl(rawSelectLo(p0), p0.to, Some(asOfSeq),
-        resolvedLabels(p0.filter)), p0))
+        TsdbTable.labelEqConjuncts(p0.filter)), p0))
   }
 
   /** Enumerate the data files under `base` RIGHT NOW and build a reader

@@ -43,6 +43,19 @@ class GraftSourceSpec extends SparkSuite {
       .getOrElse(fail("no BatchScanExec in plan — not served by the DSv2 source"))
   }
 
+  /** Rewrite a table's series sidecar in the pre-registry shape
+    * (`series_id`, `variant` only): label filters then cannot resolve to
+    * a series set. */
+  private def stripRegistry(tableDir: String): Unit = {
+    import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+    val enc = spark.read.parquet(s"$tableDir/series_enc")
+      .select("series_id", "variant").collect()
+    spark.createDataFrame(java.util.Arrays.asList(enc: _*),
+        StructType(Seq(StructField("series_id", LongType),
+          StructField("variant", BooleanType))))
+      .write.mode("overwrite").parquet(s"$tableDir/series_enc")
+  }
+
   test("append-only table: DSv2 read == readRaw, and USING graft SQL works") {
     val dir = Files.createTempDirectory("graft_dsv2").toString
     val t = new TsdbTable(spark, s"$dir/tbl")
@@ -751,23 +764,32 @@ class GraftSourceSpec extends SparkSuite {
     val raw = LwwOracle.readRaw(t).cache()
     val rawCount = raw.count()
     def ds = spark.read.format("graft").load(s"$dir/tbl")
+    // a time bound inside a day partition: its row groups hold times on
+    // both sides, so the stats cannot decide them and the pushed
+    // aggregate decodes them through the columnar reader (fallback groups)
+    val cutGroup = col("time") >= Base + 5 * Day + Day / 2
+    // aggregate equivalence: count(*), count(valueStr), min/max(time),
+    // sum(time) (r14 — exact long partials through stats+page paths)
+    def aggs(df: DataFrame) = df.agg(count(lit(1)), count(col("valueStr")),
+      min("time"), max("time"), sum("time"),
+      min("value"), max("value"), min("valueStr"))
+    assert(scanOf(aggs(ds.filter(cutGroup))).scan.description().contains(
+      "PushedAggregates: [COUNT(*), COUNT(valueStr), MIN(time), MAX(time), SUM(time), " +
+        "MIN(value), MAX(value), MIN(valueStr)]"))
+    assert(scanOf(ds.filter(cutGroup).agg(sum("value"))).scan.description()
+      .contains("PushedAggregates: [SUM(value)]"))
     val filters: Seq[Option[org.apache.spark.sql.Column]] = Seq(
       None,
       Some(col("name") === "m1"),
       Some(col("time") >= Base + 5 * Day),
       Some(col("name").isin("m0", "m2") && col("time") < Base + 8 * Day),
       Some(col("valueStr").isNotNull),
-      Some(col("series_id") > 0L))
+      Some(col("series_id") > 0L),
+      Some(cutGroup))
     for (f <- filters) {
       def app(df: DataFrame) = f.map(df.filter).getOrElse(df)
-      // aggregate equivalence: count(*), count(valueStr), min/max(time),
-      // sum(time) (r14 — exact long partials through stats+page paths)
-      val got = app(ds).agg(count(lit(1)), count(col("valueStr")),
-        min("time"), max("time"), sum("time"),
-        min("value"), max("value")).collect()(0)
-      val want = app(raw).agg(count(lit(1)), count(col("valueStr")),
-        min("time"), max("time"), sum("time"),
-        min("value"), max("value")).collect()(0)
+      val got = aggs(app(ds)).collect()(0)
+      val want = aggs(app(raw)).collect()(0)
       // min/max(value) meet REAL NaNs here (m3 is the variant metric):
       // the pushed double ordering must match Spark's exactly
       assert(got.toString == want.toString,
@@ -1347,7 +1369,7 @@ class GraftSourceSpec extends SparkSuite {
     assert(scanOf(snap).supportsColumnar)
     assert(sortedRows(snap) == sortedRows(LwwOracle.readRaw(t, Some(seq1))))
 
-    // limit keeps the row-shaped path (prefix semantics live there)
+    // a pushed limit caps the merged rows each stripe emits
     val lim = spark.read.format("graft").load(s"$dir/tbl").limit(5)
     assert(lim.count() == 5)
   }
@@ -1451,24 +1473,24 @@ class GraftSourceSpec extends SparkSuite {
     assert(got.count() == 1 && got.select("value").head().getDouble(0) == 1.0,
       "escape-hostile label values must match exactly")
 
-    // legacy sidecar (pre-registry): pruning unavailable, results still exact
-    val lt = new TsdbTable(spark, s"$dir/legacy")
-    lt.append(samples(("cpu", "a", Base, 1.0), ("cpu", "b", Base + 1, 2.0)))
-    // strip the registry columns in place (simulates a pre-r15 sidecar)
-    val enc = spark.read.parquet(s"$dir/legacy/series_enc")
-      .select("series_id", "variant").collect()
-    val encDf = spark.createDataFrame(java.util.Arrays.asList(enc: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("series_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("variant",
-          org.apache.spark.sql.types.BooleanType))))
-    encDf.write.mode("overwrite").parquet(s"$dir/legacy/series_enc")
-    assert(new TsdbTable(spark, s"$dir/legacy").resolveSeries(Seq("host" -> "a")).isEmpty,
-      "a pre-registry sidecar must not serve as a pruning index")
-    val lres = spark.read.format("graft").option("label.host", "a")
-      .load(s"$dir/legacy")
-    assert(lres.count() == 1 && lres.select("value").head().getDouble(0) == 1.0)
+    // legacy sidecar (pre-registry): pruning unavailable, results still
+    // exact — on a non-MOR table and, below the merge, on a MOR table
+    // whose rewrite of host=a must win
+    for ((legacyDir, cfg) <- Seq(s"$dir/legacy" -> TsdbConfig(),
+        s"$dir/legacy_mor" -> TsdbConfig(overrideOld = true))) {
+      val lt = new TsdbTable(spark, legacyDir, cfg)
+      lt.append(samples(("cpu", "a", Base, 1.0), ("cpu", "b", Base + 1, 2.0)))
+      if (cfg.overrideOld) lt.append(samples(("cpu", "a", Base, 1.0)))
+      stripRegistry(legacyDir)
+      assert(new TsdbTable(spark, legacyDir, cfg).resolveSeries(Seq("host" -> "a")).isEmpty,
+        "a pre-registry sidecar must not serve as a pruning index")
+      val lres = spark.read.format("graft").option("label.host", "a")
+        .load(legacyDir)
+      assert(scanOf(lres).supportsColumnar, s"$legacyDir: unresolved labels read columnar")
+      assert(sortedRows(lres) == sortedRows(LwwOracle.readRaw(lt)
+        .filter(element_at(col("labels"), "host") === "a")))
+      assert(lres.count() == 1 && lres.select("value").head().getDouble(0) == 1.0)
+    }
   }
 
   test("long IN-list pushdown (r15): part_start IN prunes dirs, rows stay exact") {
@@ -1564,10 +1586,97 @@ class GraftSourceSpec extends SparkSuite {
       plan.collect { case c: ColumnarToRowExec => c }
         .exists(_.collectFirst { case b: BatchScanExec => b }.isDefined),
       plan.toString)
-    // a pushed limit keeps the row reader: the same rows either way
-    val rowPath = labeled.limit(1000)
-    assert(!scanOf(rowPath).supportsColumnar)
-    assert(sortedRows(labeled) == sortedRows(rowPath))
+    // a pushed limit reads columnar too: the same rows either way
+    val limited = labeled.limit(1000)
+    assert(scanOf(limited).supportsColumnar)
+    assert(sortedRows(labeled) == sortedRows(limited))
     assert(labeled.count() == 4)
+  }
+
+  test("every shape the scan serves reads columnar: limits, unresolved labels, _key_* projections, counts, column-less files") {
+    import org.apache.spark.sql.functions.element_at
+    val dir = Files.createTempDirectory("graft_one_reader").toString
+    val rows = (0 until 120).map(i =>
+      (if (i % 2 == 0) "cpu" else "mem", s"h${i % 6}", Base + (i % 3) * Day + i * 1000L,
+        i.toDouble))
+    val plain = new TsdbTable(spark, s"$dir/plain")
+    val mor = new TsdbTable(spark, s"$dir/mor", TsdbConfig(overrideOld = true))
+    for (t <- Seq(plain, mor)) {
+      t.append(samples(rows: _*))
+      t.append(samples(rows.filter(_._2 == "h1")
+        .map { case (n, h, tt, v) => (n, h, tt, v + 1000) }: _*))
+    }
+    mor.delete(Base, Base + 20000L, metrics = Seq("mem"))
+    // a raw file written without __seq and __del, sorted like the writer
+    // sorts: new keys plus one key the stamped rows already hold (the
+    // legacy NULL __seq loses the MOR merge to the stamped version)
+    for (t <- Seq(plain, mor)) {
+      val stamped = spark.read.format("graft").load(t.path)
+        .filter(col("part_start") === Base && col("name") === "cpu")
+      val legacy = stamped.limit(1).withColumn("value", lit(-5.0))
+        .union(stamped.limit(3).withColumn("time", col("time") + 500L)
+          .withColumn("value", lit(-7.0)))
+      legacy.drop("part_start").coalesce(1).sortWithinPartitions("series_id", "time")
+        .write.mode("append").parquet(s"${t.path}/raw/part_start=$Base")
+    }
+
+    for (t <- Seq(plain, mor)) {
+      val kind = if (t.config.overrideOld) "MOR" else "non-MOR"
+      def ds = spark.read.format("graft").load(t.path)
+      val oracle = LwwOracle.readRaw(t).cache()
+      val total = oracle.count()
+      assert(scanOf(ds).supportsColumnar, s"$kind SELECT *")
+      assert(sortedRows(ds) == sortedRows(oracle), s"$kind rows")
+
+      // pushed limits, with and without a pushed filter: exactly
+      // min(n, total) rows, every one a row of the merged view
+      val cpu = col("name") === "cpu" && col("time") >= Base + Day
+      for (filter <- Seq(None, Some(cpu)); n <- Seq(1, 7, 100000)) {
+        val scoped = filter.fold(ds)(ds.filter)
+        val want = filter.fold(oracle)(oracle.filter)
+        val lim = scoped.limit(n)
+        assert(scanOf(lim).scan.description().contains(s"PushedLimit: $n"))
+        assert(scanOf(lim).supportsColumnar, s"$kind limit $n under $filter")
+        val got = sortedRows(lim)
+        val allowed = sortedRows(want).toSet
+        assert(got.length == math.min(n.toLong, want.count()),
+          s"$kind limit $n under $filter: ${got.length} rows")
+        assert(got.forall(allowed.contains), s"$kind limit $n under $filter")
+      }
+
+      // row-identity metadata columns read their physical column
+      val keys = ds.select(col("_key_time"), col("_key_name"), col("value"))
+      assert(scanOf(keys).supportsColumnar, s"$kind _key_* projection")
+      assert(keys.collect().map(_.toString).sorted.toSeq ==
+        oracle.select(col("time"), col("name"), col("value"))
+          .collect().map(_.toString).sorted.toSeq, s"$kind _key_* rows")
+
+      // count() whose aggregate is not pushed: MOR tables, label options
+      val n = ds.agg(count(lit(1)))
+      assert(scanOf(n).supportsColumnar == t.config.overrideOld,
+        s"$kind count(): MOR reads columnar, non-MOR pushes the aggregate")
+      assert(n.head().getLong(0) == total && ds.count() == total)
+      def h1 = spark.read.format("graft").option("label.host", "h1").load(t.path)
+      val h1Oracle = oracle.filter(element_at(col("labels"), "host") === "h1")
+      val h1n = h1.agg(count(lit(1)))
+      assert(scanOf(h1n).supportsColumnar, s"$kind count() with a label option")
+      assert(h1n.head().getLong(0) == h1Oracle.count() && h1.count() > 0)
+      assert(sortedRows(h1.limit(3)).forall(sortedRows(h1Oracle).toSet.contains))
+      oracle.unpersist()
+    }
+
+    // label options on a legacy sidecar (non-MOR): no series set, the
+    // map test reads `labels` — rows, count() and a limit stay exact
+    stripRegistry(plain.path)
+    assert(new TsdbTable(spark, plain.path).resolveSeries(Seq("host" -> "h1")).isEmpty)
+    val legacyH1 = spark.read.format("graft").option("label.host", "h1").load(plain.path)
+    val legacyWant = LwwOracle.readRaw(plain).filter(element_at(col("labels"), "host") === "h1")
+    assert(scanOf(legacyH1).supportsColumnar)
+    assert(!scanOf(legacyH1).scan.description().contains("LabelSeries"))
+    assert(sortedRows(legacyH1) == sortedRows(legacyWant))
+    val legacyCount = legacyH1.agg(count(lit(1)))
+    assert(scanOf(legacyCount).supportsColumnar)
+    assert(legacyCount.head().getLong(0) == legacyWant.count())
+    assert(sortedRows(legacyH1.limit(2)).length == 2)
   }
 }

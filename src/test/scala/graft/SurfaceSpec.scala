@@ -329,6 +329,20 @@ class WarcSourceSpec extends SparkSuite {
     graft.core.Fs.rmTree(new java.io.File(dir))
   }
 
+  test("read fails loudly when no WARC file matches: an empty glob, a directory of subdirectories") {
+    val dir = Files.createTempDirectory("warc_none").toString
+    val noMatch = intercept[IllegalArgumentException](
+      WarcSource.read(spark, s"$dir/*.warc.gz"))
+    assert(noMatch.getMessage.contains("no WARC files match"), noMatch.getMessage)
+    // a directory expands to its files only: a nested directory is not
+    // descended into, so a directory holding one subdirectory matches none
+    val outer = s"$dir/outer"
+    new java.io.File(s"$outer/inner").mkdirs()
+    writePlain(s"$outer/inner/a.warc")(warcinfo)
+    val onlyDirs = intercept[IllegalArgumentException](WarcSource.read(spark, outer))
+    assert(onlyDirs.getMessage.contains("no WARC files match"), onlyDirs.getMessage)
+  }
+
   test("quarantine: a torn record flags ONE corrupt row and stops the file; other files unaffected") {
     val dir = Files.createTempDirectory("warc_bad").toString
     // file A: one good record, then a record whose block is TRUNCATED
