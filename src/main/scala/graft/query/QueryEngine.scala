@@ -21,15 +21,47 @@ import graft.core.Labels
   * `pkg/pquerier/frames.go:646-661`); [[toSeriesSet]] melts to the long
   * Prometheus SeriesSet shape (`pkg/pquerier/series.go:33-50`).
   *
-  * Scale notes (100 TB): every path is a single shuffle on the grouping
-  * keys (series or labels), with map-side partial aggregation; the grid /
-  * resample paths shuffle once by series for the window functions then once
-  * more for the cross-series merge — the same two-phase plan the reference
-  * runs per-process, but distributed.
+  * Result stage: every path returns its rows through [[ordered]] — the
+  * result moves to ONE partition and is sorted there, the reference's
+  * single series-key-ordered collector (`pkg/querier/multipart.go:29-68`).
+  * Everything upstream keeps its parallelism: scan splits, MOR stripes,
+  * partial and final aggregation on the grouping keys, and
+  * [[resample]]'s series-keyed repartition.
+  *
+  * Scale trade: a result too large for one task to sort quickly now sorts
+  * serially, with an external sort that spills. The global range sort
+  * this replaces sampled its input for range bounds first, which
+  * evaluated the whole plan below it twice on raw reads (scan and MOR
+  * merge included) at every result size.
   */
 object QueryEngine {
 
   // ---------------------------------------------------------------- helpers
+
+  /** The result stage of every query path: `result` in ONE partition,
+    * sorted on `keys`. A sort over a one-partition child plans no range
+    * exchange, so no job samples the input for range bounds by running
+    * the plan below a second time; only the result passes through one
+    * task, as it does in every client read (`collect`, `toLocalIterator`).
+    *
+    * Inside [[subResult]] it returns `result` as built: a sub-result the
+    * engine consumes itself feeds a further exchange, and funnelling it
+    * through one task first would serialize work that exchange spreads
+    * again. Call it once per returned frame — a plain `orderBy` over its
+    * output already plans no exchange. */
+  private[graft] def ordered(result: DataFrame, keys: Column*): DataFrame =
+    if (buildingSubResult.get) result
+    else result.repartition(1).orderBy(keys: _*)
+
+  private val buildingSubResult = ThreadLocal.withInitial[Boolean](() => false)
+
+  /** Builds, on the calling thread, a frame the engine consumes itself:
+    * [[ordered]] inside `build` adds no result stage. */
+  private def subResult(build: => DataFrame): DataFrame = {
+    val outer = buildingSubResult.get
+    buildingSubResult.set(true)
+    try build finally buildingSubResult.set(outer)
+  }
 
   /** NaN/±Inf are "undefined" and are skipped by all aggregates
     * (reference `pkg/utils/misc.go:31-37`, `aggregate/functions.go:85-98`);
@@ -203,23 +235,12 @@ object QueryEngine {
     val outCols = cols.map { c =>
       val partial: String => Column = f => col(s"__p_${mi(c.metric)}_$f")
       val fin = SelectParams.stripAll(c.function.toLowerCase) match {
-        case "rate" =>
-          val w = Window.partitionBy(keyNames.map(col): _*).orderBy("t")
-          val prevLast = lag(partial("last"), 1).over(w)
-          val prevT = lag(col("t"), 1).over(w)
-          val stepSec = step / 1000L
-          val value =
-            if (stepSec == 0) lit(null).cast("double")
-            else (partial("last") - prevLast) / lit(stepSec.toDouble)
-          when(prevT === col("t") - step && prevLast.isNotNull && partial("last").isNotNull,
-            value)
+        case "rate" => rate(partial("last"), keyNames, step)
         case f => Aggregates.finalExpr(f, partial)
       }
       fin.as(outName(c))
     }
-    grouped
-      .select((keyNames.map(col) :+ col("t")) ++ outCols: _*)
-      .orderBy(keyNames.map(col) :+ col("t"): _*)
+    finish(grouped, keyNames, outCols)
   }
 
   /** [[multiAggregate]] with the per-metric sub-query pluggable:
@@ -253,15 +274,16 @@ object QueryEngine {
         requestedColumns = mcols.map(_.copy(alias = "")))
       val entries = mcols.flatMap(c => Seq(lit(outName(c)),
         col(SelectParams.stripAll(c.function.toLowerCase))))
-      runSub(sub)
+      // the pivot below re-shuffles every sub-result on (keys, t)
+      subResult(runSub(sub))
         .select(keyNames.map(col) :+ col("t") :+
           explode(map(entries: _*)).as(Seq("__c", "__v")): _*)
     }.reduce(_.unionByName(_))
-    melted
+    ordered(melted
       .groupBy(keyNames.map(col) :+ col("t"): _*)
       .pivot("__c", outNames) // fixed value list: no pivot-values scan
-      .agg(first(col("__v")))
-      .orderBy(keyNames.map(col) :+ col("t"): _*)
+      .agg(first(col("__v"))),
+      keyNames.map(col) :+ col("t"): _*)
   }
 
   /** Per-metric (interpolator, tolerance) specs for the resample paths.
@@ -283,9 +305,9 @@ object QueryEngine {
     * `(name, labels_str, t, v[, vstr])` time-ordered per series. */
   def raw(samples: DataFrame, p: SelectParams): DataFrame = {
     val df = prepare(samples, p, p.from, p.to)
-    df.select(col("name"), col("labels_str"), col("time").as("t"),
-        col("value").as("v"), col("valueStr").as("vstr"))
-      .orderBy("name", "labels_str", "t")
+    ordered(df.select(col("name"), col("labels_str"), col("time").as("t"),
+        col("value").as("v"), col("valueStr").as("vstr")),
+      col("name"), col("labels_str"), col("t"))
   }
 
   // ----------------------------------------------------- client aggregation
@@ -335,23 +357,35 @@ object QueryEngine {
       step: Long): DataFrame = {
     val partial: String => Column = n => col("__p_" + n)
     val outCols = fns.map {
-      case "rate" =>
-        val w = Window.partitionBy(keyNames.map(col): _*).orderBy("t")
-        val prevLast = lag(partial("last"), 1).over(w)
-        val prevT = lag(col("t"), 1).over(w)
-        val stepSec = step / 1000L // Go integer division, iterator.go:334
-        // sub-second steps make stepSec 0 (the reference then emits ±Inf);
-        // we treat the cell as undefined instead of tripping ANSI div-by-0
-        val value =
-          if (stepSec == 0) lit(null).cast("double")
-          else (partial("last") - prevLast) / lit(stepSec.toDouble)
-        when(prevT === col("t") - step && prevLast.isNotNull && partial("last").isNotNull,
-          value).as("rate")
+      case "rate" => rate(partial("last"), keyNames, step).as("rate")
       case f => Aggregates.finalExpr(f, partial).as(f)
     }
-    grouped
-      .select((keyNames.map(col) :+ col("t")) ++ outCols: _*)
-      .orderBy(keyNames.map(col) :+ col("t"): _*)
+    finish(grouped, keyNames, outCols)
+  }
+
+  /** `rate` of a grid bucket from its `last` partial and the previous
+    * bucket's, over a window per series (or group) ordered on `t`. */
+  private def rate(last: Column, keyNames: Seq[String], step: Long): Column = {
+    val w = Window.partitionBy(keyNames.map(col): _*).orderBy("t")
+    val prevLast = lag(last, 1).over(w)
+    val prevT = lag(col("t"), 1).over(w)
+    val stepSec = step / 1000L // Go integer division, iterator.go:334
+    // sub-second steps make stepSec 0 (the reference then emits ±Inf);
+    // we treat the cell as undefined instead of tripping ANSI div-by-0
+    val value =
+      if (stepSec == 0) lit(null).cast("double")
+      else (last - prevLast) / lit(stepSec.toDouble)
+    when(prevT === col("t") - step && prevLast.isNotNull && last.isNotNull, value)
+  }
+
+  /** The finalized columns of grouped partials, in `(keys, t)` order. The
+    * result stage sits BELOW the projection, so a `rate` window runs in
+    * its one partition: one partition already satisfies the window's key
+    * clustering, and rows sorted on `(keys, t)` its ordering, so the
+    * window plans no exchange or sort of its own and keeps the order. */
+  private def finish(grouped: DataFrame, keyNames: Seq[String], outCols: Seq[Column]): DataFrame = {
+    val keys = keyNames.map(col) :+ col("t")
+    ordered(grouped, keys: _*).select(keys ++ outCols: _*)
   }
 
   // ------------------------------------------------- sliding window (W2)
@@ -405,9 +439,10 @@ object QueryEngine {
     val bucket = (lit(maxAligned) - col("__win") * step).as("t")
     // rate across overlapping windows is meaningless (cells are not a time
     // series); the reference only defines it on the tumbling grid.
+    // Ordered on (keys, win) by the aggregate's result stage: its
+    // (keys, win, t) order is the same, as `t` is a function of `win`.
     aggregateBuckets(exploded, keys :+ ("win" -> col("__win")), bucket, fns, step)
       .select((keys.map(_._1).map(col) :+ col("win") :+ col("t")) ++ fns.map(col): _*)
-      .orderBy(keys.map(_._1).map(col) :+ col("win"): _*)
   }
 
   // --------------------------------------------------- downsample (W5/J3)
@@ -442,7 +477,7 @@ object QueryEngine {
             Seq("name", "labels_str"), p.from, p.to, p.step, interp, tol)
         }.reduce(_.unionByName(_))
       }
-    out.orderBy("name", "labels_str", "t")
+    ordered(out, col("name"), col("labels_str"), col("t"))
   }
 
   /** Grid resample of each series — shared by downsample (W5) and
@@ -618,7 +653,10 @@ object QueryEngine {
     * `aggregateLabel = false` is the Prometheus-compatibility emission
     * (reference `SelectProm` sets `showAggregateLabel` off,
     * `pquerier/querier.go:128-137`): the aggregate column is omitted, which
-    * requires a single aggregate or the rows would be ambiguous. */
+    * requires a single aggregate or the rows would be ambiguous.
+    *
+    * `wide` is a [[select]] result, already in one partition: the melt
+    * keeps it there, so the sort below plans no exchange. */
   def toSeriesSet(wide: DataFrame, keyNames: Seq[String], fns: Seq[String],
                   aggregateLabel: Boolean = true): DataFrame = {
     if (!aggregateLabel)
@@ -656,9 +694,8 @@ object QueryEngine {
     val df = prepare(samples.filter(col("name").isin(all: _*)), p, p.from, p.to)
     val aggs = metrics.map(m => max(when(col("name") === m, col("value"))).as(m)) ++
       variantMetrics.map(m => max(when(col("name") === m, col("valueStr"))).as(m))
-    df.groupBy(col("labels_str"), col("time").as("t"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy("labels_str", "t")
+    ordered(df.groupBy(col("labels_str"), col("time").as("t"))
+      .agg(aggs.head, aggs.tail: _*), col("labels_str"), col("t"))
   }
 
   // --------------------------------------------------------- metadata (S4/S5)
@@ -666,20 +703,20 @@ object QueryEngine {
   /** Distinct metric names, sorted (reference `getMetricNames`,
     * `pquerier/querier.go:231-255`). */
   def names(samples: DataFrame): DataFrame =
-    samples.select(col("name")).distinct().orderBy("name")
+    ordered(samples.select(col("name")).distinct(), col("name"))
 
   /** Distinct values of one label key (reference `getLabelValues`,
     * `querier.go:257-317`). */
   def labelValues(samples: DataFrame, key: String): DataFrame =
-    samples.select(col("labels").getItem(key).as("value"))
-      .filter(col("value").isNotNull).distinct().orderBy("value")
+    ordered(samples.select(col("labels").getItem(key).as("value"))
+      .filter(col("value").isNotNull).distinct(), col("value"))
 
   /** Distinct label sets per metric (reference `GetLabelSets`,
     * `querier.go:320-381`). */
   def labelSets(samples: DataFrame, metric: String = ""): DataFrame = {
     var df = samples
     if (metric.nonEmpty) df = df.filter(col("name") === metric)
-    df.select(col("name"), Labels.canonical(col("labels")).as("labels_str"))
-      .distinct().orderBy("name", "labels_str")
+    ordered(df.select(col("name"), Labels.canonical(col("labels")).as("labels_str"))
+      .distinct(), col("name"), col("labels_str"))
   }
 }

@@ -1378,7 +1378,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     if (!hasPartitions(rawPath) && !new java.io.File(new java.net.URI(s"file:$namesPath").getPath).exists())
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         TsdbTable.NamesSchema)
-    else spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath).orderBy("name")
+    else QueryEngine.ordered(spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath),
+      col("name"))
 
   def countMetrics(): Long = merged().count()
 

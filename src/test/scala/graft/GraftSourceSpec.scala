@@ -397,14 +397,18 @@ class GraftSourceSpec extends SparkSuite {
     assert(row.getLong(2) == raw.agg(max("time")).head().getLong(0))
 
     // count(col) uses footer null counts; count over a filtered scan
-    // stays exact through the row fallback on undecidable groups
+    // stays exact through the row fallback on undecidable groups: the
+    // time bound cuts day 3's row group (times 3d..3d+18h), so its stats
+    // decide nothing and its rows decode. The reference count collects
+    // rows — a count() of readRaw would push into the same reader.
     assert(ds.agg(count(col("valueStr"))).head().getLong(0) == 0L)
-    val filtered = ds.filter(col("name") === "cpu" &&
-      col("time") >= Base + 3 * Day)
+    val cut = col("name") === "cpu" && col("time") >= Base + 3 * Day + Day / 2
+    val filtered = ds.filter(cut)
     val fdesc = scanOf(filtered.agg(count(lit(1)))).scan.description()
-    assert(fdesc.contains("PushedAggregates"), fdesc)
-    assert(filtered.agg(count(lit(1))).head().getLong(0) ==
-      raw.filter(col("name") === "cpu" && col("time") >= Base + 3 * Day).count())
+    assert(fdesc.contains("PushedAggregates") && fdesc.contains("COUNT(*)"), fdesc)
+    val want = raw.filter(cut).collect().length
+    assert(want == 14) // even i in 14..38, plus the day-11 sample
+    assert(filtered.agg(count(lit(1))).head().getLong(0) == want)
 
     // min/max over value (double) pushes since r14 — but through the
     // page-decode path, never the NaN-hostile footer stats

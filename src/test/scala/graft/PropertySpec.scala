@@ -72,6 +72,105 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("PROPERTY: every ordered query output is globally sorted on its keys, in one partition, over multi-partition input") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.query.RequestedColumn
+    import graft.storage.{TsdbConfig, TsdbTable}
+    val Hour = 3600000L
+    val Day = 24 * Hour
+    val to = Base + 3 * Day - 1
+    val genRows = for {
+      n <- Gen.choose(60, 160)
+      xs <- Gen.listOfN(n, for {
+        m <- Gen.oneOf("m0", "m1")
+        h <- Gen.choose(0, 3)
+        minute <- Gen.choose(0L, 3 * 24 * 60 - 1L)
+        v <- Gen.choose(-100.0, 100.0)
+      } yield (m, s"h$h", s"r${h % 2}", Base + minute * 60000L, v))
+    } yield xs
+    val keyOrd: Ordering[Seq[Any]] = new Ordering[Seq[Any]] {
+      def compare(a: Seq[Any], b: Seq[Any]): Int = a.zip(b).iterator.map {
+        case (x: String, y: String) => x.compareTo(y)
+        case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+        case (x: Int, y: Int) => Integer.compare(x, y)
+        case (x, y) => fail(s"unexpected sort key pair ($x, $y)")
+      }.find(_ != 0).getOrElse(0)
+    }
+    def check(what: String, df: DataFrame, keys: String*): Unit = {
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, s"$what: empty result")
+      val sorted = rows.sortBy((r: Row) => keys.map(k => r.getAs[Any](k)))(keyOrd)
+      assert(rows == sorted, s"$what: rows are not in (${keys.mkString(", ")}) order")
+      assert(df.rdd.getNumPartitions == 1, s"$what: result is not one partition")
+    }
+
+    (0 until 2).foreach { i =>
+      val xs = genRows.pureApply(Gen.Parameters.default, Seed(700L + i))
+      val s = xs.toDF("name", "host", "region", "time", "value")
+        .select(col("name"),
+          map(lit("host"), col("host"), lit("region"), col("region")).as("labels"),
+          col("time"), col("value"), lit(null).cast("string").as("valueStr"))
+        .repartition(5)
+      assert(s.rdd.getNumPartitions >= 4)
+      val series = Seq("name", "labels_str")
+      val agg = SelectParams(name = "m0", functions = "avg,max,rate", from = Base, to = to,
+        step = Hour)
+      check("raw", QueryEngine.raw(s, SelectParams(name = "m0", from = Base, to = to)),
+        series :+ "t": _*)
+      check("clientAggregate with rate", QueryEngine.clientAggregate(s, agg, agg.baseFunctions),
+        series :+ "t": _*)
+      check("slidingAggregate", QueryEngine.slidingAggregate(s,
+        agg.copy(functions = "count,sum", aggregationWindow = 3 * Hour), Seq("count", "sum")),
+        series :+ "t": _*)
+      check("overlappingWindows", QueryEngine.overlappingWindows(s,
+        agg.copy(functions = "count,max", windows = Seq(1, 3, 6)), Seq("count", "max")),
+        series :+ "win": _*)
+      check("downsample", QueryEngine.downsample(s,
+        SelectParams(name = "m0", from = Base, to = to, step = Hour)), series :+ "t": _*)
+      check("crossSeries", QueryEngine.crossSeries(s,
+        agg.copy(functions = "avg_all,max_all"), Seq("avg", "max")), "name", "t")
+      val multi = SelectParams(from = Base, to = to, step = Hour, requestedColumns = Seq(
+        RequestedColumn("m0", "avg"), RequestedColumn("m1", "max"), RequestedColumn("m0", "rate")))
+      check("multiAggregate fused", QueryEngine.select(s, multi), "labels_str", "t")
+      check("multiAggregate via", QueryEngine.select(s,
+        multi.copy(aggregationWindow = 2 * Hour)), "labels_str", "t")
+      check("frame", QueryEngine.frame(s, SelectParams(from = Base, to = to), Seq("m0", "m1")),
+        "labels_str", "t")
+      check("toSeriesSet", QueryEngine.toSeriesSet(QueryEngine.select(s, agg), series,
+        agg.baseFunctions), series ++ Seq("aggregate", "t"): _*)
+      check("names", QueryEngine.names(s), "name")
+      check("labelValues", QueryEngine.labelValues(s, "host"), "value")
+      check("labelSets", QueryEngine.labelSets(s), series: _*)
+    }
+
+    // table paths: three one-day partitions, appended in two batches
+    val xs = genRows.pureApply(Gen.Parameters.default, Seed(710L))
+    val dir = java.nio.file.Files.createTempDirectory("prop_ordered").toString
+    val t = new TsdbTable(spark, dir, TsdbConfig(preAggregates = Seq(Seq("region"))))
+    def rows(part: List[(String, String, String, Long, Double)]) =
+      part.toDF("name", "host", "region", "time", "value")
+        .select(col("name"),
+          map(lit("host"), col("host"), lit("region"), col("region")).as("labels"),
+          col("time"), col("value"))
+    val (first, second) = xs.splitAt(xs.length / 2)
+    t.append(rows(first), incrementalRollup = true)
+    val seq = t.currentSeq()
+    t.append(rows(second), incrementalRollup = true)
+    val rollupP = SelectParams(name = "m0", functions = "count,sum,avg,max", step = Day,
+      from = Base, to = to)
+    assert(t.canServerAggregate(rollupP))
+    check("rollup-served TsdbTable.select", t.select(rollupP), "name", "labels_str", "t")
+    check("pre-aggregate TsdbTable.select", t.select(rollupP.copy(groupBy = "region")),
+      "name", "region", "t")
+    check("TsdbTable.select multi-metric via", t.select(SelectParams(from = Base, to = to,
+      step = Day, requestedColumns = Seq(RequestedColumn("m0", "sum"),
+        RequestedColumn("m1", "max")))), "labels_str", "t")
+    check("selectAsOf rollup", t.selectAsOf(rollupP, seq), "name", "labels_str", "t")
+    check("selectAsOf raw", t.selectAsOf(SelectParams(name = "m0", from = Base, to = to), seq),
+      "name", "labels_str", "t")
+    check("TsdbTable.names", t.names(), "name")
+  }
+
   test("PROPERTY: session_window == independent gap-island encoding") {
     import org.apache.spark.sql.expressions.Window
     cases(6).foreach { case (xs, rollupUnits, _) =>

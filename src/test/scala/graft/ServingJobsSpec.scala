@@ -11,7 +11,9 @@ import graft.storage.{TsdbConfig, TsdbTable}
 /** The serving path launches no hidden Spark jobs: graft-owned
   * directories are read under declared schemas, and label filters resolve
   * through the per-version postings index of the series registry — so a
-  * query on a warm table runs jobs only when it executes. */
+  * query on a warm table runs jobs only when it executes. Executing a
+  * select then runs no range-bounds sampling job: its result is sorted
+  * in one partition. */
 class ServingJobsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -56,6 +58,10 @@ class ServingJobsSpec extends SparkSuite {
       step = Day, from = Base, to = Base + 2 * Day - 1)
     assert(main.canServerAggregate(rollupP))
     val rollupAgg = () => main.select(rollupP)
+    val rawAggP = SelectParams(name = "cpu", functions = "avg,max,rate", step = Hour,
+      from = Base, to = Base + Day, filter = "labels['region'] = 'r1'")
+    assert(!main.canServerAggregate(rawAggP))
+    val rawAgg = () => main.select(rawAggP)
     val morRead = () => mor.select(SelectParams(name = "cpu", from = Base, to = Base + Day))
     val labelScan = () => spark.read.format("graft").option("label.host", "h3")
       .load(main.path).filter(col("time").between(Base, Base + Day))
@@ -69,13 +75,28 @@ class ServingJobsSpec extends SparkSuite {
     // warm every query once
     assert(seriesRead().count() == 6)
     assert(rollupAgg().count() == 16)
+    assert(rawAgg().count() == 96) // 4 r1 hosts x 24 hourly buckets
     assert(morRead().filter(col("v") === -1.0).count() == 1)
     assert(labelScan().collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("cpu" -> 24L, "mem" -> 24L))
 
-    Seq("series_read" -> seriesRead, "rollup_agg" -> rollupAgg,
-        "mor_read" -> morRead, "label_scan" -> labelScan).foreach { case (cls, q) =>
+    val queries = Seq("series_read" -> seriesRead, "rollup_agg" -> rollupAgg,
+      "raw_agg" -> rawAgg, "mor_read" -> morRead, "label_scan" -> labelScan)
+    queries.foreach { case (cls, q) =>
       assert(planJobs(q()) == 0, s"$cls: build + plan launched Spark jobs")
+    }
+
+    // executing: a select sorts its result in one partition, so no job
+    // samples range bounds by running the plan below the sort again, and
+    // `rate`'s window shares that partition instead of its own exchange
+    assert(queries.map { case (cls, q) => cls -> jobsDuring(q().collect()) }.toMap ==
+      Map("series_read" -> 2, "rollup_agg" -> 3, "raw_agg" -> 3, "mor_read" -> 2,
+        "label_scan" -> 2))
+    queries.filter(_._1 != "label_scan").foreach { case (cls, q) =>
+      val df = q()
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString.toLowerCase
+      assert(!plan.contains("rangepartitioning"), s"$cls: range exchange in\n$plan")
     }
   }
 
