@@ -43,25 +43,10 @@ object QueryEngine {
     * exchange, so no job samples the input for range bounds by running
     * the plan below a second time; only the result passes through one
     * task, as it does in every client read (`collect`, `toLocalIterator`).
-    *
-    * Inside [[subResult]] it returns `result` as built: a sub-result the
-    * engine consumes itself feeds a further exchange, and funnelling it
-    * through one task first would serialize work that exchange spreads
-    * again. Call it once per returned frame — a plain `orderBy` over its
-    * output already plans no exchange. */
+    * Call it once per returned frame — a plain `orderBy` over its output
+    * already plans no exchange. */
   private[graft] def ordered(result: DataFrame, keys: Column*): DataFrame =
-    if (buildingSubResult.get) result
-    else result.repartition(1).orderBy(keys: _*)
-
-  private val buildingSubResult = ThreadLocal.withInitial[Boolean](() => false)
-
-  /** Builds, on the calling thread, a frame the engine consumes itself:
-    * [[ordered]] inside `build` adds no result stage. */
-  private def subResult(build: => DataFrame): DataFrame = {
-    val outer = buildingSubResult.get
-    buildingSubResult.set(true)
-    try build finally buildingSubResult.set(outer)
-  }
+    result.repartition(1).orderBy(keys: _*)
 
   /** NaN/±Inf are "undefined" and are skipped by all aggregates
     * (reference `pkg/utils/misc.go:31-37`, `aggregate/functions.go:85-98`);
@@ -274,8 +259,7 @@ object QueryEngine {
         requestedColumns = mcols.map(_.copy(alias = "")))
       val entries = mcols.flatMap(c => Seq(lit(outName(c)),
         col(SelectParams.stripAll(c.function.toLowerCase))))
-      // the pivot below re-shuffles every sub-result on (keys, t)
-      subResult(runSub(sub))
+      runSub(sub)
         .select(keyNames.map(col) :+ col("t") :+
           explode(map(entries: _*)).as(Seq("__c", "__v")): _*)
     }.reduce(_.unionByName(_))
