@@ -2,6 +2,8 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import graft.sources.SerializableHadoopConf
+
 /** Record-offset sidecar for `.warc.gz` segments — record-level splits
   * (r11, closing the carry-forward documented at [[WarcSource]]'s
   * "member-offset indexes" note).
@@ -126,7 +128,7 @@ object WarcGzIndex {
       else st.toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".warc.gz"))
         .map(s => (s.getPath.toString, s.getLen))
     if (files.isEmpty) return 0L
-    val conf = WarcSource.broadcastConf(spark.sparkContext)
+    val conf = SerializableHadoopConf.broadcast(spark.sparkContext)
     spark.sparkContext.parallelize(files, files.length).map { case (f, len) =>
       val path = new org.apache.hadoop.fs.Path(f)
       val lfs = path.getFileSystem(conf.value.value)
@@ -180,7 +182,7 @@ object WarcGzIndex {
       ranges += ((start, end, base))
       i = j
     }
-    val conf = WarcSource.broadcastConf(spark.sparkContext)
+    val conf = SerializableHadoopConf.broadcast(spark.sparkContext)
     val rows = spark.sparkContext
       .parallelize(ranges.toSeq, ranges.length)
       .flatMap { case (start, end, base) =>

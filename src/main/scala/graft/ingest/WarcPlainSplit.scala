@@ -2,6 +2,8 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import graft.sources.SerializableHadoopConf
+
 /** Record-level splits for PLAIN (uncompressed) `.warc` segments — the
   * sidecar-free complement of [[WarcGzIndex]] (r12): a plain segment can
   * split by byte ranges that RESYNC on record boundaries, because WARC
@@ -234,7 +236,7 @@ object WarcPlainSplit {
   def readSplit(spark: SparkSession, file: String, splits: Int,
                 maxPayloadBytes: Int = 8 << 20): DataFrame = {
     require(splits > 0, s"splits must be positive: $splits")
-    val conf = WarcSource.broadcastConf(spark.sparkContext)
+    val conf = SerializableHadoopConf.broadcast(spark.sparkContext)
     val path0 = new org.apache.hadoop.fs.Path(file)
     val fs = path0.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // fully-qualified name in rows, like every directory-listing read

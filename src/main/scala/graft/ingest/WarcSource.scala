@@ -3,6 +3,8 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.SerializableHadoopConf
+
 /** WARC corpus source — the web-crawl archive format (ISO 28500 /
   * the public WARC 1.1 spec; Common Crawl's interchange layout). A
   * 100 TB training-data pipeline STARTS here: crawls arrive as
@@ -120,7 +122,7 @@ object WarcSource {
     if (files.isEmpty) return spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], Schema)
     val sc = spark.sparkContext
-    val conf = broadcastConf(sc)
+    val conf = SerializableHadoopConf.broadcast(sc)
     val rows = sc.parallelize(files, files.length)
       .flatMap { f =>
         val p = new org.apache.hadoop.fs.Path(f)
@@ -129,19 +131,6 @@ object WarcSource {
       }
     spark.createDataFrame(rows, Schema)
   }
-
-  /** The ONE Writable-based Configuration shipper
-    * ([[graft.sources.SerializableHadoopConf]]) under its old ingest
-    * name — an alias, not a second copy. */
-  private[ingest] type SerializableHadoopConf = graft.sources.SerializableHadoopConf
-
-  /** The ONE way a WARC reader ships the Hadoop conf to tasks: as a
-    * BROADCAST, never closure-captured — a closure-borne Configuration
-    * java-deserializes per task (~20 ms each; the r14 DSv2 profiling
-    * finding). Unwrap with `.value.value`. */
-  private[ingest] def broadcastConf(sc: org.apache.spark.SparkContext)
-      : org.apache.spark.broadcast.Broadcast[SerializableHadoopConf] =
-    sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
 
   /** The `response`-record view most pipelines want: URI, HTTP status,
     * HTTP Content-Type, body. Corrupt and non-response records drop. */

@@ -22,31 +22,40 @@ import graft.core.Labels
   * Prometheus SeriesSet shape (`pkg/pquerier/series.go:33-50`).
   *
   * Result stage: every path returns its rows through [[ordered]] — the
-  * result moves to ONE partition and is sorted there, the reference's
-  * single series-key-ordered collector (`pkg/querier/multipart.go:29-68`).
-  * Everything upstream keeps its parallelism: scan splits, MOR stripes,
-  * partial and final aggregation on the grouping keys, and
-  * [[resample]]'s series-keyed repartition.
+  * result is coalesced into ONE partition and sorted there, the
+  * reference's single series-key-ordered collector
+  * (`pkg/querier/multipart.go:29-68`). The coalesce adds no exchange: a
+  * select runs one job per exchange below it, plus the result job.
   *
-  * Scale trade: a result too large for one task to sort quickly now sorts
-  * serially, with an external sort that spills. The global range sort
-  * this replaces sampled its input for range bounds first, which
-  * evaluated the whole plan below it twice on raw reads (scan and MOR
-  * merge included) at every result size.
+  * Scale trade: where an exchange lies below the result (aggregation,
+  * `distinct`), its map side keeps its parallelism, and the light work
+  * after that exchange (final aggregation, `rate`'s window) runs in the
+  * one result task. Where none lies below — a raw read — the scan and the
+  * MOR merge run in that task too. [[downsample]] is the one path whose
+  * heavy work follows its last exchange ([[resample]]'s windows); it
+  * shuffles its rows into the result partition instead. A result too
+  * large for one task to sort quickly sorts serially, with an external
+  * sort that spills. A global range sort would instead sample its input
+  * for range bounds first, evaluating the whole plan below it twice on
+  * raw reads (scan and MOR merge included) at every result size.
   */
 object QueryEngine {
 
   // ---------------------------------------------------------------- helpers
 
-  /** The result stage of every query path: `result` in ONE partition,
-    * sorted on `keys`. A sort over a one-partition child plans no range
-    * exchange, so no job samples the input for range bounds by running
-    * the plan below a second time; only the result passes through one
-    * task, as it does in every client read (`collect`, `toLocalIterator`).
-    * Call it once per returned frame — a plain `orderBy` over its output
-    * already plans no exchange. */
+  /** The result stage of every query path: `result` coalesced into ONE
+    * partition, sorted on `keys`. A one-partition child satisfies the sort
+    * (and `rate`'s window) with no exchange: no job samples range bounds by
+    * running the plan below a second time, and no shuffle, map-stage job
+    * or adaptive re-plan moves the rows into that partition. The cost is
+    * the coalesce's reach: everything after the last exchange below —
+    * on a raw read, the scan and MOR merge themselves — runs in that one
+    * task (the scale trade in the header); a caller whose heavy work
+    * follows that exchange passes `result.repartition(1)`, which the
+    * coalesce leaves as it is. Call it once per returned frame — a plain
+    * `orderBy` over its output already plans no exchange. */
   private[graft] def ordered(result: DataFrame, keys: Column*): DataFrame =
-    result.repartition(1).orderBy(keys: _*)
+    result.coalesce(1).orderBy(keys: _*)
 
   /** NaN/±Inf are "undefined" and are skipped by all aggregates
     * (reference `pkg/utils/misc.go:31-37`, `aggregate/functions.go:85-98`);
@@ -461,7 +470,10 @@ object QueryEngine {
             Seq("name", "labels_str"), p.from, p.to, p.step, interp, tol)
         }.reduce(_.unionByName(_))
       }
-    ordered(out, col("name"), col("labels_str"), col("t"))
+    // the resample windows are the heavy work and follow its series-keyed
+    // exchange: a coalesce onto them would run them all in the result
+    // task, so the rows move there through a one-partition shuffle
+    ordered(out.repartition(1), col("name"), col("labels_str"), col("t"))
   }
 
   /** Grid resample of each series — shared by downsample (W5) and

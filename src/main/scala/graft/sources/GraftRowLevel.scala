@@ -166,8 +166,7 @@ private[sources] final class GraftDeltaBatchWrite(
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DeltaWriterFactory =
     new GraftDeltaWriterFactory(
-      spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)),
+      SerializableHadoopConf.broadcast(spark.sparkContext),
       stageDir, info.schema(),
       info.rowIdSchema().orElse(new StructType()))
 

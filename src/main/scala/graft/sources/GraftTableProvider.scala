@@ -1211,12 +1211,13 @@ private[sources] final class GraftScan(
     // TASK — profiling showed the whole-Configuration readFields (plus
     // its ObjectInputStream/classloader churn) dominating short scan
     // tasks. A broadcast value deserializes once per executor JVM and
-    // is shared read-only by every task (the same pattern Spark's own
-    // parquet source uses; it even skips native's per-task
-    // `new Configuration(copy)` — the readers never mutate it).
+    // is shared read-only by every task (the readers never mutate it).
+    // Scans share one broadcast per SparkContext while the conf is
+    // unchanged (`SerializableHadoopConf.broadcast`): serializing the
+    // whole conf for each scan would be a fixed plan-phase cost of every
+    // query.
     new GraftReaderFactory(
-      spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)),
+      SerializableHadoopConf.broadcast(spark.sparkContext),
       required.fieldNames.toSeq, pushed, planned._3, asOf,
       agg, limit, aggGroupByPart,
       // pushed long SUMs must fail-or-wrap exactly as the session's Sum
@@ -1232,7 +1233,7 @@ private[sources] final class GraftScan(
   * ([[GraftColumnarReader]], [[GraftMorColumnarReader]]); the one row
   * reader left is the aggregate pushdown's partial row per bundle. */
 private[sources] final class GraftReaderFactory(
-    conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
+    private[sources] val conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
     requested: Seq[String],
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],

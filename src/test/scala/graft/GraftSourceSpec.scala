@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -391,16 +391,20 @@ class GraftSourceSpec extends SparkSuite {
     assert(desc.contains("PushedAggregates") && desc.contains("COUNT(*)") &&
       desc.contains("MIN(time)") && desc.contains("MAX(time)"), desc)
     val row = counted.collect()(0)
+    // every reference below is computed from COLLECTED rows: an aggregate
+    // over readRaw (a DSv2 relation over the same scan) can push into the
+    // same aggregate reader and would check it against itself
     val raw = t.readRaw(0L, Long.MaxValue)
-    assert(row.getLong(0) == raw.count())
-    assert(row.getLong(1) == raw.agg(min("time")).head().getLong(0))
-    assert(row.getLong(2) == raw.agg(max("time")).head().getLong(0))
+    val rawRows = raw.collect().toSeq
+    val times = rawRows.map(_.getAs[Long]("time"))
+    assert(row.getLong(0) == rawRows.length)
+    assert(row.getLong(1) == times.min)
+    assert(row.getLong(2) == times.max)
 
     // count(col) uses footer null counts; count over a filtered scan
     // stays exact through the row fallback on undecidable groups: the
     // time bound cuts day 3's row group (times 3d..3d+18h), so its stats
-    // decide nothing and its rows decode. The reference count collects
-    // rows — a count() of readRaw would push into the same reader.
+    // decide nothing and its rows decode.
     assert(ds.agg(count(col("valueStr"))).head().getLong(0) == 0L)
     val cut = col("name") === "cpu" && col("time") >= Base + 3 * Day + Day / 2
     val filtered = ds.filter(cut)
@@ -414,8 +418,9 @@ class GraftSourceSpec extends SparkSuite {
     // page-decode path, never the NaN-hostile footer stats
     val vdesc = scanOf(ds.agg(min("value"))).scan.description()
     assert(vdesc.contains("PushedAggregates") && vdesc.contains("MIN(value)"), vdesc)
+    val values = rawRows.map(_.getAs[Double]("value"))
     assert(ds.agg(min("value"), max("value")).head() ==
-      raw.agg(min("value"), max("value")).head())
+      Row(values.reduce(_ min _), values.reduce(_ max _)))
     // signed zeros: Spark's SQL double ordering treats -0.0 == 0.0 and
     // keeps the incumbent on ties — the pushed plan must agree (the
     // naive Double.compare orders -0.0 < 0.0 and returned the OTHER
@@ -427,7 +432,10 @@ class GraftSourceSpec extends SparkSuite {
       val zds = spark.read.format("graft").load(s"$zdir/tbl")
       val zq = zds.agg(min("value"), max("value"))
       assert(scanOf(zq).scan.description().contains("MIN(value)"))
-      val zraw = zt.readRaw(0L, Long.MaxValue).agg(min("value"), max("value")).head()
+      // the first of equal values wins: `<` and `>` order -0.0 == 0.0
+      val zvs = zt.readRaw(0L, Long.MaxValue).collect().map(_.getAs[Double]("value"))
+      val zraw = Row(zvs.reduce((a, b) => if (b < a) b else a),
+        zvs.reduce((a, b) => if (b > a) b else a))
       assert(zq.head().toString == zraw.toString,
         s"signed-zero extrema diverged: ${zq.head()} vs $zraw")
     }
@@ -437,7 +445,8 @@ class GraftSourceSpec extends SparkSuite {
     // "absent = all null" and answer 0; review-caught r13)
     val ldesc = scanOf(ds.agg(count(col("labels")))).scan.description()
     assert(!ldesc.contains("PushedAggregates"), ldesc)
-    assert(ds.agg(count(col("labels"))).head().getLong(0) == raw.count())
+    assert(ds.agg(count(col("labels"))).head().getLong(0) ==
+      rawRows.count(r => !r.isNullAt(r.fieldIndex("labels"))))
 
     // impossible strict bounds: the planning clamp can't represent
     // lo = MaxValue + 1, so the pushed path must classify NoRows
@@ -451,8 +460,7 @@ class GraftSourceSpec extends SparkSuite {
     val grouped = ds.groupBy("name").agg(count(lit(1)).as("n"))
     assert(!scanOf(grouped).scan.description().contains("PushedAggregates"))
     assert(grouped.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
-      raw.groupBy("name").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      rawRows.groupBy(_.getAs[String]("name")).map { case (k, rs) => k -> rs.size.toLong })
 
     // GROUP BY part_start pushes (r13): per-partition partials straight
     // from footers, one output row per touched partition
@@ -461,14 +469,14 @@ class GraftSourceSpec extends SparkSuite {
     val bdesc = scanOf(byPart).scan.description()
     assert(bdesc.contains("PushedGroupBy: [part_start]"), bdesc)
     assert(byPart.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap ==
-      raw.groupBy("part_start").agg(count(lit(1)), min("time")).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+      rawRows.groupBy(_.getAs[Long]("part_start")).map { case (k, rs) =>
+        k -> ((rs.size.toLong, rs.map(_.getAs[Long]("time")).min)) })
     // grouped + filter stays exact through the row fallback
     val byPartF = ds.filter(col("name") === "cpu").groupBy("part_start")
       .agg(count(lit(1)).as("n"))
     assert(byPartF.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      raw.filter(col("name") === "cpu").groupBy("part_start").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      rawRows.filter(_.getAs[String]("name") == "cpu")
+        .groupBy(_.getAs[Long]("part_start")).map { case (k, rs) => k -> rs.size.toLong })
 
     // a MOR table never pushes aggregates (post-merge properties)
     val mdir = Files.createTempDirectory("graft_dsv2_agg_mor").toString
@@ -496,7 +504,10 @@ class GraftSourceSpec extends SparkSuite {
       (if (i % 2 == 0) "cpu" else "mem", s"h${i % 4}",
         Base + i * (Day / 4), i.toDouble * 1.5)): _*))
     val ds = spark.read.format("graft").load(s"$dir/tbl")
-    val raw = t.readRaw(0L, Long.MaxValue)
+    // references from collected rows, never from an aggregate that can
+    // push into the reader under test
+    val rawRows = t.readRaw(0L, Long.MaxValue).collect().toSeq
+    def sumTime(rs: Seq[Row]): Long = rs.map(_.getAs[Long]("time")).sum
 
     // plan pin: SUM pushes; a partial AVG arrives as Spark's own
     // SUM+COUNT rewrite and divides above the partials
@@ -506,12 +517,12 @@ class GraftSourceSpec extends SparkSuite {
     assert(d.contains("PushedAggregates") && d.contains("SUM(time)") &&
       d.contains("SUM(value)"), d)
     val got = q.head()
-    val want = raw.agg(sum("time"), sum("value"), avg("time")).head()
-    assert(got.getLong(0) == want.getLong(0), "sum(long) must be exact")
-    assert(math.abs(got.getDouble(1) - want.getDouble(1)) <=
-      1e-12 * math.abs(want.getDouble(1)),
+    val wantSv = rawRows.map(_.getAs[Double]("value")).sum
+    assert(got.getLong(0) == sumTime(rawRows), "sum(long) must be exact")
+    assert(math.abs(got.getDouble(1) - wantSv) <= 1e-12 * math.abs(wantSv),
       "sum(double) within partial-order tolerance")
-    assert(got.getDouble(2) == want.getDouble(2),
+    // the time sum is far below 2^53, so its double is exact
+    assert(got.getDouble(2) == sumTime(rawRows).toDouble / rawRows.length,
       "avg over exact integer partials must be bit-equal")
 
     // grouped: one partial per partition
@@ -519,16 +530,18 @@ class GraftSourceSpec extends SparkSuite {
       count(lit(1)).as("n"))
     assert(scanOf(g).scan.description().contains("PushedGroupBy: [part_start]"))
     assert(g.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap ==
-      raw.groupBy("part_start").agg(sum("time"), count(lit(1))).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+      rawRows.groupBy(_.getAs[Long]("part_start")).map { case (k, rs) =>
+        k -> ((sumTime(rs), rs.size.toLong)) })
 
     // filtered: stats-decided groups fold from footers, the boundary
     // group row-reads — the sum must stay exact either way
     val pred = col("name") === "cpu" && col("time") >= Base + 3 * Day
     val f = ds.filter(pred).agg(sum("time").as("st"), count(lit(1)).as("n"))
     assert(scanOf(f).scan.description().contains("PushedAggregates"))
-    assert(f.head() == raw.filter(pred)
-      .agg(sum("time"), count(lit(1))).head())
+    val kept = rawRows.filter(r =>
+      r.getAs[String]("name") == "cpu" && r.getAs[Long]("time") >= Base + 3 * Day)
+    assert(kept.nonEmpty)
+    assert(f.head() == Row(sumTime(kept), kept.size.toLong))
 
     // sum over an EXPRESSION is not a bare column — must not push
     assert(!scanOf(ds.agg(sum(col("value") * 2))).scan.description()
@@ -539,9 +552,9 @@ class GraftSourceSpec extends SparkSuite {
     val mixed = ds.agg(count(lit(1)).as("n"), min("time").as("lo"),
       max("name").as("hi"), sum("value").as("sv"))
     val mrow = mixed.head()
-    assert(mrow.getLong(0) == raw.count())
-    assert(mrow.getLong(1) == raw.agg(min("time")).head().getLong(0))
-    assert(mrow.getString(2) == raw.agg(max("name")).head().getString(0))
+    assert(mrow.getLong(0) == rawRows.length)
+    assert(mrow.getLong(1) == rawRows.map(_.getAs[Long]("time")).min)
+    assert(mrow.getString(2) == rawRows.map(_.getAs[String]("name")).max)
 
     // ANSI: a pushed long SUM that overflows must THROW, never wrap.
     // append clamps times to the sane window (TimeUtil.MaxTimeMs), so
@@ -920,8 +933,14 @@ class GraftSourceSpec extends SparkSuite {
         // the r14 columnar-accumulate path over every encoding lane)
         val got = ds.agg(count(lit(1)), count(col("valueStr")),
           min("time"), max("time"), min("name"), max("name"), sum("time")).head()
-        val want = raw.agg(count(lit(1)), count(col("valueStr")),
-          min("time"), max("time"), min("name"), max("name"), sum("time")).head()
+        // the reference folds collected rows: an aggregate over `raw`
+        // could push into the reader under test
+        val rawRows = raw.collect().toSeq
+        val times = rawRows.map(_.getAs[Long]("time"))
+        val names = rawRows.map(_.getAs[String]("name"))
+        val want = Row(rawRows.length.toLong,
+          rawRows.count(r => !r.isNullAt(r.fieldIndex("valueStr"))).toLong,
+          times.min, times.max, names.min, names.max, times.sum)
         assert(got == want, s"[$label] aggregates diverged: $got vs $want")
         graft.core.Fs.rmTree(new java.io.File(dir))
       }

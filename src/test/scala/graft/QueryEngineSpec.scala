@@ -95,6 +95,17 @@ class QueryEngineSpec extends SparkSuite {
     assert(!out.contains(Base + 40))
   }
 
+  test("downsample keeps its resample windows parallel: a shuffle, not a coalesce, makes the result partition") {
+    val df = samples(("m", "a", Base, 1.0), ("m", "b", Base + 14, 3.0))
+    val out = QueryEngine.select(df, SelectParams(name = "m", from = Base, to = Base + 49, step = 10))
+    assert(out.collect().length == 3)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("Exchange SinglePartition") && !plan.contains("Coalesce 1"), plan)
+    // window operators run below the one-partition exchange
+    val cut = plan.indexOf("Exchange SinglePartition")
+    assert(plan.indexOf("Window [", cut) > cut, plan)
+  }
+
   test("downsample interpolators: prev/linear/none + tolerance (interpolate.go)") {
     import graft.query.RequestedColumn
     val df = samples(("m", "a", Base + 2, 10.0), ("m", "a", Base + 38, 20.0))

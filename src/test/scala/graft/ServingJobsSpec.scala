@@ -12,8 +12,8 @@ import graft.storage.{TsdbConfig, TsdbTable}
   * directories are read under declared schemas, and label filters resolve
   * through the per-version postings index of the series registry — so a
   * query on a warm table runs jobs only when it executes. Executing a
-  * select then runs no range-bounds sampling job: its result is sorted
-  * in one partition. */
+  * select then runs no range-bounds sampling job and no one-partition
+  * shuffle: its result is coalesced into one partition and sorted there. */
 class ServingJobsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -86,17 +86,20 @@ class ServingJobsSpec extends SparkSuite {
       assert(planJobs(q()) == 0, s"$cls: build + plan launched Spark jobs")
     }
 
-    // executing: a select sorts its result in one partition, so no job
-    // samples range bounds by running the plan below the sort again, and
-    // `rate`'s window shares that partition instead of its own exchange
+    // executing: a select coalesces its result into one partition and
+    // sorts it there, so no job samples range bounds by running the plan
+    // below the sort again, no shuffle moves the rows into that partition,
+    // and `rate`'s window shares it instead of its own exchange
     assert(queries.map { case (cls, q) => cls -> jobsDuring(q().collect()) }.toMap ==
-      Map("series_read" -> 2, "rollup_agg" -> 3, "raw_agg" -> 3, "mor_read" -> 2,
+      Map("series_read" -> 1, "rollup_agg" -> 2, "raw_agg" -> 2, "mor_read" -> 1,
         "label_scan" -> 2))
     queries.filter(_._1 != "label_scan").foreach { case (cls, q) =>
       val df = q()
       df.collect()
       val plan = df.queryExecution.executedPlan.toString.toLowerCase
       assert(!plan.contains("rangepartitioning"), s"$cls: range exchange in\n$plan")
+      assert(!plan.contains("exchange singlepartition"),
+        s"$cls: one-partition shuffle in\n$plan")
     }
   }
 
