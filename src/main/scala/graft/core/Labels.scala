@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Label-set handling (reference `pkg/utils/labels.go`).
@@ -26,7 +26,20 @@ object Labels {
     * reference's "hash of labels incl. __name__" identity semantics (not the
     * exact xxhash bytes — identity only needs to be stable + collision-safe). */
   def seriesId(name: Column, labels: Column): Column =
-    xxhash64(name, canonical(labels))
+    seriesIdOf(name, canonical(labels))
+
+  /** [[seriesId]] from a `labels_str` column already serialized by
+    * [[canonical]]: a frame that carries one hashes it instead of
+    * serializing the map a second time. */
+  def seriesIdOf(name: Column, labelsStr: Column): Column =
+    xxhash64(name, labelsStr)
+
+  /** `df` with its series key `labels_str`: the frame's own column when
+    * it has one (every TsdbTable raw read does — the string stored at
+    * write), else serialized from `labels` by [[canonical]]. */
+  def withLabelsStr(df: DataFrame): DataFrame =
+    if (df.columns.contains("labels_str")) df
+    else df.withColumn("labels_str", canonical(col("labels")))
 
   /** Parse `k1=v1,k2=v2` back into a map (reference `LabelsFromString`). */
   def parse(serialized: Column): Column =

@@ -65,6 +65,6 @@ object Samples {
 
   /** Samples with derived identity columns attached. */
   def withSeriesId(df: DataFrame): DataFrame =
-    df.withColumn("series_id", Labels.seriesId(col("name"), col("labels")))
-      .withColumn("labels_str", Labels.canonical(col("labels")))
+    df.withColumn("labels_str", Labels.canonical(col("labels")))
+      .withColumn("series_id", Labels.seriesIdOf(col("name"), col("labels_str")))
 }

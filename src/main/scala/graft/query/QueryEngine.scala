@@ -14,7 +14,19 @@ import graft.core.Labels
   *
   * Input: a *samples* DataFrame with columns
   * `name: string, labels: map<string,string>, time: long (unix ms),
-  *  value: double, valueStr: string` (SURVEY §1.6).
+  *  value: double, valueStr: string` (SURVEY §1.6), and optionally
+  * `labels_str: string`.
+  *
+  * Series identity: a frame's own `labels_str` is the series key. Every
+  * [[graft.storage.TsdbTable]] raw read carries the one stored at write
+  * time, the reference's stored `_lset` (`pkg/utils/labels.go:73-95`),
+  * so the engine never serializes labels again. Only a frame without
+  * the column ([[graft.core.Samples.fromEvents]], test fixtures) gets
+  * it from [[Labels.canonical]], a per-row higher-order expression that
+  * Spark runs interpreted. The `labels` map itself is read only where
+  * something needs it: a `groupBy` label, a filter that names it, or
+  * [[labelValues]]. A TsdbTable raw read hands its label equalities to
+  * the scan instead, so serving them decodes no map.
   *
   * Output: wide frames — grouping key columns + `t` (bucket unix ms) + one
   * double column per requested aggregate (the reference's FrameSet,
@@ -70,15 +82,17 @@ object QueryEngine {
   def bucketExpr(time: Column, from: Long, step: Long): Column =
     (lit(from) + floor((time - lit(from)) / lit(step)).cast("long") * lit(step))
 
-  /** Apply name/filter/time predicates; add `labels_str`. Predicates are
-    * plain Catalyst filters → pushed to the source scan (reference P1-P4,
-    * `select.go:572-606`). */
+  /** Apply name/filter/time predicates and key the rows by `labels_str`
+    * ([[Labels.withLabelsStr]]). Predicates are plain Catalyst filters → pushed
+    * to the source scan (reference P1-P4, `select.go:572-606`). Nothing
+    * here reads `labels` unless `p.filter` names it, so over a frame
+    * with a stored `labels_str` column pruning drops the map from the
+    * scan. */
   private def prepare(samples: DataFrame, p: SelectParams, loMs: Long, hiMs: Long): DataFrame = {
     var df = samples
     if (p.name.nonEmpty) df = df.filter(col("name") === p.name)
     if (p.filter.nonEmpty) df = df.filter(expr(p.filter))
-    df = df.filter(col("time").between(loMs, hiMs))
-    df.withColumn("labels_str", Labels.canonical(col("labels")))
+    Labels.withLabelsStr(df.filter(col("time").between(loMs, hiMs)))
   }
 
   /** Grouping key columns for the query (reference frame hash:
@@ -708,11 +722,11 @@ object QueryEngine {
       .filter(col("value").isNotNull).distinct(), col("value"))
 
   /** Distinct label sets per metric (reference `GetLabelSets`,
-    * `querier.go:320-381`). */
+    * `querier.go:320-381`), keyed like [[select]] ([[Labels.withLabelsStr]]). */
   def labelSets(samples: DataFrame, metric: String = ""): DataFrame = {
     var df = samples
     if (metric.nonEmpty) df = df.filter(col("name") === metric)
-    ordered(df.select(col("name"), Labels.canonical(col("labels")).as("labels_str"))
+    ordered(Labels.withLabelsStr(df).select(col("name"), col("labels_str"))
       .distinct(), col("name"), col("labels_str"))
   }
 }

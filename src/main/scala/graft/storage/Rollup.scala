@@ -41,9 +41,7 @@ object Rollup {
     val v = QueryEngine.cleanValue(col("value"))
     val bucket = (floor(col("time") / lit(rollupIntervalMs)).cast("long") * lit(rollupIntervalMs))
       .as("bucket_start")
-    val withLs =
-      if (samples.columns.contains("labels_str")) samples
-      else samples.withColumn("labels_str", graft.core.Labels.canonical(col("labels")))
+    val withLs = graft.core.Labels.withLabelsStr(samples)
     val keyCols =
       if (keys.nonEmpty) keys.map { case (n, c) => c.as(n) }
       else Seq(col("name"), col("labels_str"))

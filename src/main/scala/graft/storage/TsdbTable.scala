@@ -1,6 +1,6 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -102,15 +102,23 @@ object TsdbTable {
     * IN-list / stripe intersection would cost more than it saves. */
   val MaxPruneSeries: Int = 10000
 
-  /** Top-level AND conjuncts of the exact `labels['k'] = 'v'` shape in a
-    * filter string (the form [[graft.sql.TsdbSql.translateFilter]]
-    * emits), parsed from the UNRESOLVED expression tree — `labels` is an
-    * UnresolvedAttribute and the subscript an UnresolvedExtractValue at
-    * this stage. Conjuncts of any other shape are simply not collected
-    * (pruning stays a superset); a filter that fails to parse yields
-    * Nil (the caller's expr() will surface the real error). */
-  private[graft] def labelEqConjuncts(filter: String): Seq[(String, String)] = {
-    if (filter == null || filter.isEmpty) return Nil
+  /** A filter string split in one parse: its top-level AND conjuncts of
+    * the exact `labels['k'] = 'v'` shape (the form
+    * [[graft.sql.TsdbSql.translateFilter]] emits), and the residual —
+    * every other conjunct, ANDed in order, as the parsed expression
+    * (None when nothing is left). The scan enforces the label
+    * equalities exactly ([[graft.sources.GraftReaders.LabelTest]]), so a
+    * raw read applies only the residual to its rows. The filter parses
+    * as `expr(filter)` would, with the session's parser; at this stage
+    * `labels` is an UnresolvedAttribute and the subscript an
+    * UnresolvedExtractValue. A conjunct of any other shape stays in the
+    * residual; a filter that fails to parse yields no label equalities
+    * and itself as the residual, whose application surfaces the real
+    * error. */
+  private[graft] def labelEqConjuncts(
+      filter: String): (Seq[(String, String)], Option[Column]) = {
+    if (filter == null || filter.isEmpty) return (Nil, None)
+    import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedExtractValue}
     import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo => CEq, Expression, Literal}
     def labelKey(e: Expression): Option[String] = e match {
@@ -122,17 +130,25 @@ object TsdbTable {
       case Literal(v, StringType) if v != null => Some(v.toString)
       case _ => None
     }
-    def walk(e: Expression): Seq[(String, String)] = e match {
-      case CAnd(l, r) => walk(l) ++ walk(r)
+    def labelEq(e: Expression): Option[(String, String)] = e match {
       case CEq(l, r) =>
         (for {k <- labelKey(l); v <- strLit(r)} yield (k, v))
           .orElse(for {k <- labelKey(r); v <- strLit(l)} yield (k, v))
-          .toSeq
-      case _ => Nil
+      case _ => None
     }
-    try walk(
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(filter))
-    catch { case scala.util.control.NonFatal(_) => Nil }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val parsed =
+      try Some(GraftSqlBridge.parseExpression(SparkSession.active, filter))
+      catch { case scala.util.control.NonFatal(_) => None }
+    parsed match {
+      case None => (Nil, Some(expr(filter)))
+      case Some(e) =>
+        val (eqs, rest) = conjuncts(e).partitionMap(c => labelEq(c).toLeft(c))
+        (eqs, rest.reduceOption(CAnd(_, _)).map(GraftSqlBridge.column))
+    }
   }
 
   /** Enriched raw-table schema (sample model + derived identity columns). */
@@ -769,7 +785,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     }
     val enriched = samples.select(sampleCols: _*)
       .withColumn("labels_str", Labels.canonical(col("labels")))
-      .withColumn("series_id", Labels.seriesId(col("name"), col("labels")))
+      .withColumn("series_id", Labels.seriesIdOf(col("name"), col("labels_str")))
       .withColumn("part_start", partStart(col("time")))
       // batch sequence for last-write-wins merge-on-read (config.overrideOld)
       // AND reader-atomic visibility (committed-watermark filter in
@@ -797,9 +813,11 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       val (newSeriesEnc, touched, batchNames, releaseEnc) = enforceSeriesTypes(enriched)
       try {
       enriched
-        // shuffle on (time partition, series shard): parallel writes into
-        // each partition dir (the reference's sharding-key scans, P2)
-        // while keeping any one (series, time) run inside one task
+        // shuffle on (time partition, series shard): keeps any one
+        // (series, time) run inside one task, with writes into each
+        // partition dir spread over the shards (the reference's
+        // sharding-key scans, P2) — unless AQE coalesces a small shuffle,
+        // which runs the whole write in one task
         .repartition(col("part_start"),
           pmod(col("series_id"), lit(config.shardingBuckets.toLong)))
         // part_start FIRST: the dynamic-partition writer requires rows
@@ -1494,14 +1512,23 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       //    which can sit up to step-1 BELOW from, minus wins.max*step
       //  - downsample/cross-series: prev/linear interpolation donors within
       //    the tolerance
-      // The filter's top-level `labels['k'] = 'v'` conjuncts ride into the
-      // scan, which resolves them through the series registry and prunes
-      // by the set — the reference's filter-to-sharding-key scan (P1,
-      // `pkg/pquerier/select.go:598`, `partmgr.go:459-468`). A superset
-      // reduction: the full filter still applies row-level afterwards.
-      QueryEngine.select(
-        readRawImpl(rawSelectLo(p), p.to, None, TsdbTable.labelEqConjuncts(p.filter)), p)
+      rawSelect(p, None)
     }
+  }
+
+  /** The raw path of [[select]] and [[selectAsOf]]. The filter's
+    * top-level `labels['k'] = 'v'` conjuncts ride into the scan, which
+    * resolves them through the series registry, prunes by the set — the
+    * reference's filter-to-sharding-key scan (P1,
+    * `pkg/pquerier/select.go:598`, `partmgr.go:459-468`) — and emits
+    * exactly the rows that satisfy them; only the residual conjuncts
+    * filter rows after it. With no other reference to `labels`, the
+    * scan decodes no labels map: the engine keys series on the stored
+    * `labels_str` ([[QueryEngine]]). */
+  private def rawSelect(p: SelectParams, asOf: Option[Long]): DataFrame = {
+    val (labelEq, residual) = TsdbTable.labelEqConjuncts(p.filter)
+    val raw = readRawImpl(rawSelectLo(p), p.to, asOf, labelEq)
+    QueryEngine.select(residual.fold(raw)(raw.filter), p.copy(filter = ""))
   }
 
   /** disableClientAggr coerces coarser steps down to rollup granularity
@@ -1578,8 +1605,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       // registry pruning is snapshot-safe: the registry is a SUPERSET
       // across time (series are only ever added), so the resolved set
       // covers every series live at any earlier seq
-      QueryEngine.select(readRawImpl(rawSelectLo(p0), p0.to, Some(asOfSeq),
-        TsdbTable.labelEqConjuncts(p0.filter)), p0))
+      rawSelect(p0, Some(asOfSeq)))
   }
 
   /** Enumerate the data files under `base` RIGHT NOW and build a reader
@@ -1996,15 +2022,14 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         val seq = nextSeq()
         val inserts = ins0
           .withColumn("labels_str", Labels.canonical(col("labels")))
-          .withColumn("series_id", Labels.seriesId(col("name"), col("labels")))
+          .withColumn("series_id", Labels.seriesIdOf(col("name"), col("labels_str")))
           .withColumn("part_start", partStart(col("time")))
           .withColumn("__seq", lit(seq))
           .withColumn("__del", lit(false))
         // tombstones: labels_str IS the stored canonical serialization,
-        // so series identity derives from it directly (seriesId =
-        // xxhash64(name, canonical(labels))); the parsed labels map is
-        // best-effort schema-completeness (post-merge nobody reads a
-        // dropped winner's labels)
+        // so series identity derives from it directly, as for inserts;
+        // the parsed labels map is best-effort schema-completeness
+        // (post-merge nobody reads a dropped winner's labels)
         val tombs = delta.filter(col("op") === 1)
           .select(col("name"),
             when(col("labels_str") === "",
@@ -2014,7 +2039,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
             lit(null).cast("double").as("value"),
             lit(null).cast("string").as("valueStr"),
             col("labels_str"),
-            xxhash64(col("name"), col("labels_str")).as("series_id"))
+            Labels.seriesIdOf(col("name"), col("labels_str")).as("series_id"))
           .withColumn("part_start", partStart(col("time")))
           .withColumn("__seq", lit(seq))
           .withColumn("__del", lit(true))

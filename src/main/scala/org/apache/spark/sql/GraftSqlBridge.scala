@@ -1,8 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The two `private[sql]` Dataset constructors graft needs, spliced into
+/** The `private[sql]` Dataset and Column constructors graft needs, spliced into
   * Spark's package — the established pattern for out-of-tree sources
   * (Delta's DeltaSource and Qbeast's DatasetFactory call the same
   * methods from their own sql-package shims); everything else lives in
@@ -28,4 +29,12 @@ object GraftSqlBridge {
     * could carry only option strings. Analysis only — no job. */
   def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `sql` parsed by the session's parser, as `functions.expr(sql)`
+    * is: an unresolved Catalyst expression. */
+  def parseExpression(spark: SparkSession, sql: String): Expression =
+    spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parseExpression(sql)
+
+  /** A Column over an already-parsed expression (no second parse). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 }

@@ -889,6 +889,7 @@ class GraftSourceSpec extends SparkSuite {
             col("valueStr"))
         t.append(df)
         t.append(df.withColumn("time", col("time") + 7 * Day)) // second file set
+        val cut = Base + Day + 600 // inside m1's first day
         // prove the shape knobs actually produced the shape under test
         // (a silently-ignored writer option would make this lane vacuous)
         locally {
@@ -905,6 +906,14 @@ class GraftSourceSpec extends SparkSuite {
           val encs = footers.flatMap(_.getBlocks.asScala)
             .flatMap(_.getColumns.asScala).flatMap(_.getEncodings.asScala)
             .map(_.name).toSet
+          // the time cut below falls inside a row group's range
+          assert(footers.flatMap(_.getBlocks.asScala).exists { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == "time").exists { c =>
+              val st = c.getStatistics
+              st.genericGetMin.asInstanceOf[java.lang.Long] < cut &&
+                st.genericGetMax.asInstanceOf[java.lang.Long] >= cut
+            }
+          }, s"[$label] no row group straddles the time cut")
           label match {
             case "tiny-pages-multigroup" =>
               assert(footers.exists(_.getBlocks.size() >= 2),
@@ -931,17 +940,31 @@ class GraftSourceSpec extends SparkSuite {
           s"[$label] filtered row set diverged")
         // pushed aggregates across the same page shapes (sum(time) rides
         // the r14 columnar-accumulate path over every encoding lane)
-        val got = ds.agg(count(lit(1)), count(col("valueStr")),
-          min("time"), max("time"), min("name"), max("name"), sum("time")).head()
+        def aggs(d: DataFrame) = d.agg(count(lit(1)), count(col("valueStr")),
+          min("time"), max("time"), min("name"), max("name"), sum("time"))
         // the reference folds collected rows: an aggregate over `raw`
         // could push into the reader under test
+        def fold(rs: Seq[Row]) = {
+          val times = rs.map(_.getAs[Long]("time"))
+          val names = rs.map(_.getAs[String]("name"))
+          Row(rs.length.toLong, rs.count(r => !r.isNullAt(r.fieldIndex("valueStr"))).toLong,
+            times.min, times.max, names.min, names.max, times.sum)
+        }
         val rawRows = raw.collect().toSeq
-        val times = rawRows.map(_.getAs[Long]("time"))
-        val names = rawRows.map(_.getAs[String]("name"))
-        val want = Row(rawRows.length.toLong,
-          rawRows.count(r => !r.isNullAt(r.fieldIndex("valueStr"))).toLong,
-          times.min, times.max, names.min, names.max, times.sum)
+        val got = aggs(ds).head()
+        val want = fold(rawRows)
         assert(got == want, s"[$label] aggregates diverged: $got vs $want")
+        // the same aggregates under a time cut inside a row group: the
+        // stats cannot decide that group, so the aggregate reader folds
+        // its rows through this shape's decode lanes
+        val cutDf = aggs(ds.filter(col("time") < cut))
+        val gotCut = cutDf.head()
+        assert(cutDf.queryExecution.executedPlan.toString.contains("PushedAggregates"),
+          s"[$label] the filtered aggregate did not push into the scan")
+        val cutRows = rawRows.filter(_.getAs[Long]("time") < cut)
+        assert(cutRows.nonEmpty && cutRows.length < rawRows.length)
+        val wantCut = fold(cutRows)
+        assert(gotCut == wantCut, s"[$label] filtered aggregates diverged: $gotCut vs $wantCut")
         graft.core.Fs.rmTree(new java.io.File(dir))
       }
     } finally {

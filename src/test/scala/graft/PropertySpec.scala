@@ -870,6 +870,80 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("PROPERTY: every writer stores labels_str = canonicalStr(labels) on every live row") {
+    import graft.core.Labels
+    import graft.storage.{TsdbConfig, TsdbTable}
+    val Day = 86400000L
+    // empty maps and multi-key maps, keys drawn out of order
+    val genLabels: Gen[Map[String, String]] = for {
+      n <- Gen.choose(0, 3)
+      keys <- Gen.pick(n, Seq("zone", "a", "host", "b2"))
+      vals <- Gen.listOfN(n, Gen.oneOf("x", "y1", "z_9", "w"))
+    } yield keys.zip(vals).toMap
+    val genRows = for {
+      n <- Gen.choose(20, 40)
+      rows <- Gen.listOfN(n, for {
+        m <- Gen.choose(0, 2)
+        labels <- genLabels
+        off <- Gen.choose(0L, 2 * Day - 1)
+        v <- Gen.choose(-10.0, 10.0)
+      } yield (s"m$m", labels, Base + off, v))
+    } yield rows.groupBy(r => (r._1, r._2, r._3)).values.map(_.head).toList
+    def frame(rows: Seq[(String, Map[String, String], Long, Double)]) =
+      rows.toDF("name", "labels", "time", "value")
+    def check(t: TsdbTable, step: String): Unit = {
+      val live = LwwOracle.readRaw(t).select("labels", "labels_str").collect()
+      assert(live.nonEmpty, s"$step: no live rows")
+      live.foreach { r =>
+        val m = r.getMap[String, String](0).toMap
+        assert(r.getString(1) == Labels.canonicalStr(m), s"$step: $m stored as '${r.getString(1)}'")
+      }
+    }
+    (0 until 2).foreach { i =>
+      val rows = genRows.pureApply(Gen.Parameters.default, Seed(910L + i))
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_lstr_$i").toString
+      // append-only: append, then a predicated delete that rewrites files
+      val plain = new TsdbTable(spark, s"$dir/plain")
+      plain.append(frame(rows))
+      check(plain, s"case $i append")
+      plain.delete(Base, Base + 2 * Day, filter = "value > 5")
+      check(plain, s"case $i delete rewrite")
+      // the streaming sink
+      val sunk = new TsdbTable(spark, s"$dir/sink")
+      new graft.sources.GraftStreamSink(spark, sunk.path,
+        Map("checkpointlocation" -> s"$dir/ckpt")).addBatch(0L, frame(rows))
+      check(sunk, s"case $i sink")
+      // merge-on-read: append, rewrite, UPDATE, MERGE, compaction
+      val mor = new TsdbTable(spark, s"$dir/mor", TsdbConfig(overrideOld = true))
+      mor.append(frame(rows))
+      check(mor, s"case $i MOR append")
+      mor.append(frame(rows.take(rows.size / 2).map(r => r.copy(_4 = r._4 + 1))))
+      check(mor, s"case $i MOR rewrite")
+      val table = s"graft_lstr_$i"
+      spark.sql(s"CREATE TABLE $table USING graft OPTIONS (path '${mor.path}')")
+      try {
+        // moves rows to a new label set: a tombstone plus an insert
+        spark.sql(s"UPDATE $table SET labels = map_concat(labels, map('u', 'v')) WHERE value > 0")
+        check(mor, s"case $i UPDATE")
+        frame(rows.take(5).map(r => r.copy(_4 = 100.0)) ++
+            rows.take(5).map(r => r.copy(_2 = r._2 + ("k0" -> "n"), _4 = 200.0)))
+          .withColumn("ls", Labels.canonical(col("labels")))
+          .createOrReplaceTempView(s"${table}_src")
+        spark.sql(
+          s"""MERGE INTO $table tgt USING ${table}_src src
+             |ON tgt.name = src.name AND tgt.labels_str = src.ls AND tgt.time = src.time
+             |WHEN MATCHED THEN UPDATE SET value = src.value
+             |WHEN NOT MATCHED THEN INSERT (name, labels, time, value)
+             |  VALUES (src.name, src.labels, src.time, src.value)
+             |""".stripMargin)
+        check(mor, s"case $i MERGE")
+      } finally spark.sql(s"DROP TABLE $table")
+      mor.compact()
+      check(mor, s"case $i compaction")
+      graft.core.Fs.rmTree(new java.io.File(dir))
+    }
+  }
+
   private def approxEq(a: Map[(String, Long), Seq[Any]], b: Map[(String, Long), Seq[Any]]): Boolean =
     a.keySet == b.keySet && a.forall { case (k, va) =>
       va.zip(b(k)).forall {

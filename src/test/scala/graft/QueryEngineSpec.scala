@@ -40,6 +40,27 @@ class QueryEngineSpec extends SparkSuite {
     assert(out.count() == 3) // empty buckets are absent rows
   }
 
+  test("series key: a frame's own labels_str is the key, read without the labels map; a frame without one serializes the map") {
+    val df = samples(("cpu", "b", Base + 2, 2.0), ("cpu", "a", Base + 1, 1.0),
+      ("cpu", "a", Base + 11, 3.0))
+    // the stored key, on a frame that has no labels map at all
+    val stored = df.withColumn("labels_str", concat(lit("host="), col("labels")("host")))
+      .drop("labels")
+    val p = SelectParams(name = "cpu", from = Base, to = Base + 19)
+    val raw = Seq(Row("cpu", "host=a", Base + 1, 1.0, null),
+      Row("cpu", "host=a", Base + 11, 3.0, null), Row("cpu", "host=b", Base + 2, 2.0, null))
+    assert(rowsOf(QueryEngine.select(df, p)) == raw)
+    assert(rowsOf(QueryEngine.select(stored, p)) == raw)
+    val agg = p.copy(functions = "sum", step = 10)
+    val sums = Seq(Row("cpu", "host=a", Base, 1.0), Row("cpu", "host=a", Base + 10, 3.0),
+      Row("cpu", "host=b", Base, 2.0))
+    assert(rowsOf(QueryEngine.select(df, agg)) == sums)
+    assert(rowsOf(QueryEngine.select(stored, agg)) == sums)
+    val sets = Seq(Row("cpu", "host=a"), Row("cpu", "host=b"))
+    assert(rowsOf(QueryEngine.labelSets(df)) == sets)
+    assert(rowsOf(QueryEngine.labelSets(stored)) == sets)
+  }
+
   test("NaN samples are undefined: skipped by aggregates, gate count (misc.go:31-37)") {
     val df = samples(("cpu", "a", Base + 1, Double.NaN), ("cpu", "a", Base + 2, 4.0),
       ("cpu", "a", Base + 11, Double.NaN)) // bucket 1 all-NaN

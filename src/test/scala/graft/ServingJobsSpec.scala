@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.query.SelectParams
@@ -101,6 +101,89 @@ class ServingJobsSpec extends SparkSuite {
       assert(!plan.contains("exchange singlepartition"),
         s"$cls: one-partition shuffle in\n$plan")
     }
+  }
+
+  test("raw reads key series on the stored labels_str: no labels map for label equalities; other label uses still read it") {
+    val dir = Files.createTempDirectory("tsdb_lstr").toString
+    val main = new TsdbTable(spark, s"$dir/main",
+      TsdbConfig(preAggregates = Seq(Seq("region"))))
+    main.append(grid, incrementalRollup = true)
+    val mor = new TsdbTable(spark, s"$dir/mor", TsdbConfig(overrideOld = true))
+    mor.append(grid)
+    mor.append(samples(("cpu", "h1", "r1", Base + 1000L, -1.0)))
+
+    /** (rows, scan read schemas, lower-cased executed plan) of a query. */
+    def run(df: DataFrame): (Seq[Row], Seq[String], String) = {
+      val rows = df.collect().toSeq
+      val plan = df.queryExecution.executedPlan.toString
+      (rows, "ReadSchema: (\\S+)".r.findAllMatchIn(plan).map(_.group(1)).toSeq,
+        plan.toLowerCase)
+    }
+    // reference rows: the live raw view, collected
+    case class S(name: String, labels: Map[String, String], ls: String, t: Long, v: Double)
+    def live(t: TsdbTable) = LwwOracle.readRaw(t).collect().toSeq.map(r => S(
+      r.getAs[String]("name"), r.getMap[String, String](r.fieldIndex("labels")).toMap,
+      r.getAs[String]("labels_str"), r.getAs[Long]("time"), r.getAs[Double]("value")))
+    val mainRows = live(main)
+    val morRows = live(mor)
+    def rawRef(rows: Seq[S], name: String, from: Long, to: Long, keep: S => Boolean) =
+      rows.filter(s => s.name == name && s.t >= from && s.t <= to && keep(s))
+        .sortBy(s => (s.ls, s.t)).map(s => Row(s.name, s.ls, s.t, s.v, null))
+    /** avg and max per (key, hour bucket of `from`) — every grid series
+      * has one sample an hour, so `rate` is the change per second. */
+    def aggRef(rows: Seq[S], from: Long, to: Long, key: S => String) =
+      rows.filter(s => s.name == "cpu" && s.t >= from && s.t <= to)
+        .groupBy(s => (key(s), from + (s.t - from) / Hour * Hour)).toSeq
+        .map { case ((k, b), ss) => (k, b) -> (ss.map(_.v).sum / ss.size, ss.map(_.v).max) }
+        .toMap
+
+    // the label-equality shapes: the scan enforces the equalities, the
+    // series key is the stored string — no map read, no map_entries
+    val seriesRead = main.select(SelectParams(name = "cpu", from = Base, to = Base + 6 * Hour,
+      filter = s"${labelFilter("h3")} AND labels['region'] = 'r1'"))
+    val rawAgg = main.select(SelectParams(name = "cpu", functions = "avg,max,rate",
+      step = Hour, from = Base, to = Base + Day, filter = "labels['region'] = 'r1'"))
+    val morRead = mor.select(SelectParams(name = "cpu", from = Base, to = Base + Day))
+    val (srRows, srSchemas, srPlan) = run(seriesRead)
+    assert(srRows == rawRef(mainRows, "cpu", Base, Base + 6 * Hour,
+      s => s.labels.get("host").contains("h3") && s.labels.get("region").contains("r1")))
+    val (raRows, raSchemas, raPlan) = run(rawAgg)
+    val raWant = aggRef(mainRows.filter(_.labels.get("region").contains("r1")),
+      Base, Base + Day, _.ls)
+    assert(raRows.map(r => (r.getString(1), r.getLong(2)) -> (r.getDouble(3), r.getDouble(4)))
+      .toMap == raWant)
+    raRows.filter(r => !r.isNullAt(5)).foreach { r =>
+      val (prev, _) = raWant((r.getString(1), r.getLong(2) - Hour))
+      assert(math.abs(r.getDouble(5) - (raWant((r.getString(1), r.getLong(2)))._1 - prev) / 3600) < 1e-9)
+    }
+    val (mrRows, mrSchemas, mrPlan) = run(morRead)
+    assert(mrRows == rawRef(morRows, "cpu", Base, Base + Day, _ => true))
+    assert(mrRows.exists(_.getDouble(3) == -1.0))
+    Seq(("series_read", srSchemas, srPlan), ("raw_agg", raSchemas, raPlan),
+        ("mor_read", mrSchemas, mrPlan)).foreach { case (cls, schemas, plan) =>
+      assert(schemas.nonEmpty && schemas.forall(s => s.contains("labels_str:string") &&
+        !s.contains("labels:")), s"$cls read the labels map: $schemas")
+      assert(!plan.contains("map_entries"), s"$cls serialized labels per row:\n$plan")
+    }
+
+    // every other use of a label still reads the map, and answers alike
+    def readsLabels(schemas: Seq[String]) = schemas.exists(_.contains("labels:map<string,string>"))
+    val (gbRows, gbSchemas, _) = run(main.select(SelectParams(name = "cpu", functions = "avg",
+      step = Hour, from = Base, to = Base + Day, groupBy = "host")))
+    assert(readsLabels(gbSchemas), s"groupBy: $gbSchemas")
+    assert(gbRows.map(r => (r.getString(1), r.getLong(2)) -> r.getDouble(3)).toMap ==
+      aggRef(mainRows, Base, Base + Day, _.labels("host")).map { case (k, (avg, _)) => k -> avg })
+    val (neRows, neSchemas, _) = run(main.select(SelectParams(name = "cpu", from = Base,
+      to = Base + 6 * Hour, filter = "labels['host'] != 'h3'")))
+    assert(readsLabels(neSchemas), s"!=: $neSchemas")
+    assert(neRows == rawRef(mainRows, "cpu", Base, Base + 6 * Hour,
+      s => s.labels.get("host").exists(_ != "h3")))
+    val (orRows, orSchemas, _) = run(main.select(SelectParams(name = "cpu", from = Base,
+      to = Base + 6 * Hour, filter = s"${labelFilter("h1")} OR ${labelFilter("h2")}")))
+    assert(readsLabels(orSchemas), s"OR: $orSchemas")
+    assert(orRows == rawRef(mainRows, "cpu", Base, Base + 6 * Hour,
+      s => s.labels.get("host").exists(h => h == "h1" || h == "h2")))
+    assert(orRows.nonEmpty && neRows.nonEmpty)
   }
 
   test("appending a new series moves the registry stamp; the next label query returns its rows") {

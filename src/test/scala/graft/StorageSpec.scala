@@ -1175,22 +1175,29 @@ class TsdbTableSpec extends SparkSuite {
         i.toDouble)): _*))
     val p = SelectParams(filter = "labels['host'] = 'h3'",
       from = Base, to = Base + 7 * day)
-    // conjunct parsing is exact
+    // conjunct parsing is exact; nothing else is left to filter rows
     assert(TsdbTable.labelEqConjuncts("labels['host'] = 'h3'") ==
-      Seq(("host", "h3")))
+      (Seq(("host", "h3")), None))
     val got = t.select(p)
     // the registry-resolved series set reaches the scan: the conjunct
     // and the size of the set it resolved to show in the scan node
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("LabelFilters: [host=h3], LabelSeries: 1,"),
       s"expected the resolved label set in the scan:\n${plan.take(1500)}")
-    assert(TsdbTable.labelEqConjuncts(
-      "labels['a'] = 'x' AND time > 5 AND 'y' = labels['b']").toSet ==
-      Set(("a", "x"), ("b", "y")))
+    def residualSql(c: Option[org.apache.spark.sql.Column]) = c.map(_.toString)
+    val (eqs, rest) = TsdbTable.labelEqConjuncts(
+      "labels['a'] = 'x' AND time > 5 AND 'y' = labels['b'] AND value < 2")
+    assert(eqs.toSet == Set(("a", "x"), ("b", "y")))
+    assert(residualSql(rest) == Some("((time > 5) AND (value < 2))"))
     // an OR must NOT contribute conjuncts (pruning would drop rows)
-    assert(TsdbTable.labelEqConjuncts(
-      "labels['a'] = 'x' OR labels['b'] = 'y'").isEmpty)
-    assert(TsdbTable.labelEqConjuncts("name = 'cpu'").isEmpty)
+    val (orEqs, orRest) = TsdbTable.labelEqConjuncts("labels['a'] = 'x' OR labels['b'] = 'y'")
+    assert(orEqs.isEmpty && orRest.isDefined)
+    assert(TsdbTable.labelEqConjuncts("name = 'cpu'")._1.isEmpty)
+    // an unparsable filter keeps itself as the residual, which fails loudly
+    val (badEqs, badRest) = TsdbTable.labelEqConjuncts("labels['a'] = = 'x'")
+    assert(badEqs.isEmpty)
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      t.readRaw(Base, Base + day).filter(badRest.get))
     // pruned result == the unpruned row-level filter (6 rows: one h3
     // sample per day over 6 days)
     val expect = t.readRaw(Base, Base + 7 * day)
