@@ -52,7 +52,8 @@ import org.apache.spark.sql.SparkSession
   *    tsdb_storage_agg already times plus a pruned raw rebuild), and the
   *    r10 tsdb_cdc_replica / tsdb_cdc_views (each re-ingests and
   *    re-mutates a fresh table per run; the maintainer's fold costs are
-  *    measured by tools/CdcViewScale with receipts in SCALE.md).
+  *    measured by the since-retired tools/CdcViewScale; receipts in
+  *    SCALE.md).
   *    corpus_warc IS benched: its segments stage once per corpus
   *    fingerprint (stagedWarcDir), so the timed body is the streaming
   *    record parse + HTTP extraction — the ingest-scan shape itself.

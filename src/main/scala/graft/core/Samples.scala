@@ -62,9 +62,4 @@ object Samples {
       lit(null).cast("double").as("value"),
       col("props").as("valueStr"))
   }
-
-  /** Samples with derived identity columns attached. */
-  def withSeriesId(df: DataFrame): DataFrame =
-    df.withColumn("labels_str", Labels.canonical(col("labels")))
-      .withColumn("series_id", Labels.seriesIdOf(col("name"), col("labels_str")))
 }

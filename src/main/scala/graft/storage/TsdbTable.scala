@@ -734,10 +734,11 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   private def partStart(time: org.apache.spark.sql.Column) =
     (floor(time / lit(config.partitionIntervalMs)).cast("long") * lit(config.partitionIntervalMs))
 
-  /** Append a samples batch (`name, labels, time, value[, valueStr]`):
-    * derive identity columns, time-partition, sort within partitions
-    * (reference pending-list sort O2, `store.go:124-134`), and fold the
-    * batch into the rollup + names.
+  /** Append a samples batch (`name, labels, time, value[, valueStr]`)
+    * through [[land]]: identity columns, the time-partitioned sorted raw
+    * write (reference pending-list sort O2, `store.go:124-134`), one
+    * commit, and the rollup + names fold. An empty batch commits
+    * nothing: `currentSeq()` and `history()` stay as they were.
     *
     * @param incrementalRollup merge the BATCH's partials into the existing
     *        rollup (one pass over the batch + the touched rollup
@@ -757,43 +758,64 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     // written; a lease-breaking zombie is caught by the second check
     // inside [[commitSeq]], on the CAS basis itself.
     if (txn.exists { case (id, v) => v <= txnVersion(id) }) ()
-    else appendBody(samples, incrementalRollup, txn)
+    else {
+      // self-describing table (r12, review-caught): external readers — the
+      // DSv2 batch source, the graft-cdc streaming source — take the
+      // table's config from `.schema`, never from a caller, so a table
+      // whose creator skipped SchemaJson.write would be served with
+      // DEFAULTS (a MOR table unmerged — silently wrong). First append
+      // publishes this instance's config when no declaration exists yet.
+      // Best-effort: a config valid for an existing table but failing the
+      // CREATION rules (validateForCreate) must not break its appends.
+      try {
+        val hconf = spark.sparkContext.hadoopConfiguration
+        if (graft.core.SchemaJson.read(path, hconf).isEmpty)
+          graft.core.SchemaJson.write(path, config, hconf)
+      } catch { case scala.util.control.NonFatal(_) => () }
+      land(Some(samples), None, incrementalRollup, txn)
+    }
   }
 
-  private def appendBody(samples: DataFrame, incrementalRollup: Boolean,
-                         txn: Option[(String, Long)]): Unit = {
-    // self-describing table (r12, review-caught): external readers — the
-    // DSv2 batch source, the graft-cdc streaming source — take the
-    // table's config from `.schema`, never from a caller, so a table
-    // whose creator skipped SchemaJson.write would be served with
-    // DEFAULTS (a MOR table unmerged — silently wrong). First append
-    // publishes this instance's config when no declaration exists yet.
-    // Best-effort: a config valid for an existing table but failing the
-    // CREATION rules (validateForCreate) must not break its appends.
-    try {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      if (graft.core.SchemaJson.read(path, hconf).isEmpty)
-        graft.core.SchemaJson.write(path, config, hconf)
-    } catch { case scala.util.control.NonFatal(_) => () }
-    val seq = nextSeq()
-    // the sample columns at their declared types: raw files hold exactly
-    // TsdbTable.RawFileSchema, which every reader declares rather than
-    // infers
-    val sampleCols = Seq("name", "labels", "time", "value", "valueStr").map { c =>
-      (if (c == "valueStr" && !samples.columns.contains(c)) lit(null) else col(c))
-        .cast(TsdbTable.RawSchema(c).dataType).as(c)
-    }
-    val enriched = samples.select(sampleCols: _*)
-      .withColumn("labels_str", Labels.canonical(col("labels")))
+  /** The one landing body: every mutation that adds raw rows — [[append]],
+    * [[applyDelta]] and the MOR tombstone half of [[delete]] — writes
+    * them here. `inserts` carry the sample columns (`name, labels, time,
+    * value[, valueStr]`); `tombstones` carry `name, labels, time,
+    * labels_str` of the live versions they shadow. Invariants owned here:
+    *  - identity: new rows serialize `labels_str` from their labels, a
+    *    tombstone keeps its stored one; `series_id`, `part_start` and
+    *    `__seq` derive from them once, for both. Append files carry no
+    *    `__del` column; it is written only when tombstones ride along;
+    *  - type safety: [[enforceSeriesTypes]] gates the inserts only (a
+    *    tombstone's NULL value is not a numeric sample);
+    *  - one raw write, sharded on `(part_start, series_id)` and sorted by
+    *    `(part_start, series_id, time)`, so every file is one sorted
+    *    `(series_id, time)` run;
+    *  - one seq and one manifest commit (with `txn`, the idempotent
+    *    writer's tag) make the whole mutation reader-visible at once. An
+    *    input with no rows returns before taking a seq: no commit;
+    *  - post-commit, on concurrent threads: series types, rollup, names.
+    *    With tombstones, touched partitions left without live rows drop
+    *    their rollup dirs, the rest rebuild from the merged view, and the
+    *    names dimension rebuilds too.
+    * Returns whether this call committed. */
+  private def land(inserts: Option[DataFrame], tombstones: Option[DataFrame],
+                   incrementalRollup: Boolean = false,
+                   txn: Option[(String, Long)] = None): Boolean = {
+    // raw files hold exactly TsdbTable.RawFileSchema, which every reader
+    // declares rather than infers: the sample columns at their declared
+    // types, a tombstone with NULL values
+    def project(df: DataFrame, tomb: Boolean): DataFrame = df.select(
+      Seq("name", "labels", "time", "value", "valueStr").map { c =>
+        (if (tomb && c.startsWith("value") || c == "valueStr" && !df.columns.contains(c)) lit(null)
+         else col(c))
+          .cast(TsdbTable.RawSchema(c).dataType).as(c)
+      } ++ Seq((if (tomb) col("labels_str") else Labels.canonical(col("labels"))).as("labels_str")) ++
+        (if (tombstones.isDefined) Seq(lit(tomb).as("__del")) else Nil): _*)
+    val rows = (inserts.map(project(_, tomb = false)).toSeq ++
+        tombstones.map(project(_, tomb = true)))
+      .reduce(_.unionByName(_))
       .withColumn("series_id", Labels.seriesIdOf(col("name"), col("labels_str")))
       .withColumn("part_start", partStart(col("time")))
-      // batch sequence for last-write-wins merge-on-read (config.overrideOld)
-      // AND reader-atomic visibility (committed-watermark filter in
-      // rawFiles); constant per batch → RLE'd to nothing in parquet.
-      // In-batch ties on (series, time) are the caller's bug, as in the
-      // reference (one UpdateItem per sample — later batches win, not
-      // later rows)
-      .withColumn("__seq", lit(seq))
       // NULL time rejects loudly (r15): since the DSv2 write resolves
       // by name (no ACCEPT_ANY_SCHEMA), a frame missing `time` arrives
       // null-filled — and the range clamp below would silently drop
@@ -803,51 +825,64 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           lit("graft append: NULL time — the sample schema requires " +
             "non-null (name, labels, time)")).isNull &&
         col("time").between(graft.core.TimeUtil.MinTimeMs, graft.core.TimeUtil.MaxTimeMs))
-      // the batch is consumed three times (raw write, touched-partition
-      // scan, rollup build) — evaluate the upstream plan once
+      // consumed by the summaries, the raw write and the rollup merge —
+      // evaluate the upstream plan once
       .persist()
     try {
-      // ONE pass over the cached batch yields the type-enforcement verdict
-      // AND the touched-partition/name summaries (they used to be two full
-      // scans — per-micro-batch cost on the streaming path)
-      val (newSeriesEnc, touched, batchNames, releaseEnc) = enforceSeriesTypes(enriched)
+      // ONE pass over the cached inserts yields the type-enforcement
+      // verdict AND the touched-partition/name summaries
+      val (newSeriesEnc, touchedIns, batchNames, releaseEnc) =
+        if (inserts.isEmpty) (None, Nil, Set.empty[String], () => ())
+        else enforceSeriesTypes(
+          if (tombstones.isDefined) rows.filter(!col("__del")) else rows)
       try {
-      enriched
-        // shuffle on (time partition, series shard): keeps any one
-        // (series, time) run inside one task, with writes into each
-        // partition dir spread over the shards (the reference's
-        // sharding-key scans, P2) — unless AQE coalesces a small shuffle,
-        // which runs the whole write in one task
-        .repartition(col("part_start"),
-          pmod(col("series_id"), lit(config.shardingBuckets.toLong)))
-        // part_start FIRST: the dynamic-partition writer requires rows
-        // ordered by the partition column and inserts its own (unstable)
-        // sort when the child ordering doesn't already satisfy it —
-        // which silently destroyed the (series_id, time) run inside each
-        // file (caught by the DSv2 MOR merge reader's sortedness guard).
-        // With the partition column as sort prefix the writer's
-        // requirement is satisfied, no re-sort happens, and every file
-        // really is one sorted (series_id, time) run — the property the
-        // row-group-skipping docs claim and the shuffle-free MOR merge
-        // relies on.
-        .sortWithinPartitions("part_start", "series_id", "time")
-        .write.mode(SaveMode.Append).partitionBy("part_start").parquet(rawPath)
+        val touchedDel =
+          if (tombstones.isEmpty) Nil else partStartsOf(rows.filter(col("__del")))
+        val touched = (touchedIns ++ touchedDel).distinct
+        if (touched.isEmpty) return false
+        // batch sequence for last-write-wins merge-on-read (config.overrideOld)
+        // AND reader-atomic visibility (committed-watermark filter in
+        // rawFiles); constant per batch → RLE'd to nothing in parquet.
+        // In-batch ties on (series, time) are the caller's bug, as in the
+        // reference (one UpdateItem per sample — later batches win, not
+        // later rows)
+        val seq = nextSeq()
+        rows.withColumn("__seq", lit(seq))
+          // shuffle on (time partition, series shard): keeps any one
+          // (series, time) run inside one task, with writes into each
+          // partition dir spread over the shards (the reference's
+          // sharding-key scans, P2) — unless AQE coalesces a small shuffle,
+          // which runs the whole write in one task
+          .repartition(col("part_start"),
+            pmod(col("series_id"), lit(config.shardingBuckets.toLong)))
+          // part_start FIRST: the dynamic-partition writer requires rows
+          // ordered by the partition column and inserts its own (unstable)
+          // sort when the child ordering doesn't already satisfy it —
+          // which silently destroyed the (series_id, time) run inside each
+          // file (caught by the DSv2 MOR merge reader's sortedness guard).
+          // With the partition column as sort prefix the writer's
+          // requirement is satisfied, no re-sort happens, and every file
+          // really is one sorted (series_id, time) run — the property the
+          // row-group-skipping docs claim and the shuffle-free MOR merge
+          // relies on.
+          .sortWithinPartitions("part_start", "series_id", "time")
+          .write.mode(SaveMode.Append).partitionBy("part_start").parquet(rawPath)
 
-      // the batch becomes reader-visible HERE, atomically: before this
-      // point its files carry an uncommitted __seq and every reader's
-      // watermark filter excludes them (a crashed append leaves only
-      // invisible garbage, purged by the next compaction); after it the
-      // whole batch is in. Committed before the rollup refresh so the
-      // refresh's own raw read sees the rows it is rolling up. `false`
-      // = a concurrent retry of the same idempotent-writer tag beat us
-      // to the commit (TOCTOU window the commitSeq re-check closes):
-      // the batch IS in the table — just not via this attempt's files,
-      // which stay invisible orphans — so post-commit bookkeeping
-      // (types, rollups, names) already happened and must not re-run.
-      if (commitSeq(seq, txn = txn)) {
+        // the mutation becomes reader-visible HERE, atomically: before this
+        // point its files carry an uncommitted __seq and every reader's
+        // watermark filter excludes them (a crash leaves only invisible
+        // garbage, purged by the next compaction); after it the whole
+        // mutation is in. Committed before the rollup refresh so the
+        // refresh's own raw read sees the rows it is rolling up. `false`
+        // = a concurrent retry of the same idempotent-writer tag beat us
+        // to the commit (TOCTOU window the commitSeq re-check closes):
+        // the batch IS in the table — just not via this attempt's files,
+        // which stay invisible orphans — so post-commit bookkeeping
+        // (types, rollups, names) already happened and must not re-run.
+        if (!commitSeq(seq, txn = txn)) return false
         // Post-commit bookkeeping — all three AFTER the commit (readers
         // must never see rollup/registry state for uncommitted raw rows;
-        // a failed append must not pin types of series that never
+        // a failed mutation must not pin types of series that never
         // landed), but independent of EACH OTHER (disjoint outputs:
         // series_enc/, rollup/, names/), so they run concurrently
         // (guide §2.6 overlap independent jobs): each is a small
@@ -856,32 +891,49 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         // batch. Each was already individually crash-tolerated
         // (self-healing overwrite / repair paths), so one failing while
         // the others complete leaves the same states a crash between
-        // the old sequential steps could. First failure rethrows.
+        // sequential steps could. First failure rethrows.
         val tasks = Seq[(String, () => Unit)](
-          // record AFTER the raw write: a failed append must not pin
-          // types of series that never landed (re-detected as new)
           "series_enc" -> (() => newSeriesEnc.foreach(recordSeriesTypes)),
-          // incremental merge requires batch ∩ existing = ∅, which
-          // overrideOld rewrites violate by design — force the
-          // recompute (MOR read) path
           "rollup" -> (() =>
-            if (incrementalRollup && !config.overrideOld) mergeRollup(enriched, touched)
+            if (touchedDel.nonEmpty) {
+              // an emptied partition's rollup must not outlive its data —
+              // dynamic overwrite can't clear a partition it writes no
+              // rows for
+              val live = partStartsOf(merged().filter(col("part_start").isin(touched: _*))).toSet
+              touched.filterNot(live).foreach(dropRollupPartitionAt)
+              refreshRollup(touched.filter(live))
+            }
+            // incremental merge requires batch ∩ existing = ∅, which
+            // overrideOld rewrites violate by design — force the
+            // recompute (MOR read) path
+            else if (incrementalRollup && !config.overrideOld) mergeRollup(rows, touched)
             else refreshRollup(touched)),
-          // names is a tiny dimension: merge the BATCH's names
-          // driver-side instead of rescanning raw per micro-batch
-          "names" -> (() => mergeNames(batchNames)))
+          // names is a tiny dimension: merge the batch's names driver-side
+          // instead of rescanning raw — unless a tombstone may have killed
+          // a name's last rows, which only the merged view can tell
+          "names" -> (() =>
+            if (touchedDel.nonEmpty) refreshNames() else mergeNames(batchNames)))
         val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
         val threads = tasks.map { case (n, f) =>
           val t = new Thread(() =>
             try f() catch { case e: Throwable => errs.add(e) },
-            s"graft-append-$n")
+            s"graft-land-$n")
           t.start(); t
         }
         threads.foreach(_.join())
         if (!errs.isEmpty) throw errs.peek()
-      }
+        true
       } finally releaseEnc()
-    } finally enriched.unpersist()
+    } finally rows.unpersist()
+  }
+
+  /** The distinct `part_start` values of `df`, in one job with no
+    * shuffle: each task dedups its own rows and the driver merges the
+    * (partition-count-sized) sets. */
+  private def partStartsOf(df: DataFrame): Seq[Long] = {
+    import spark.implicits._
+    df.select(col("part_start")).as[Long]
+      .mapPartitions(_.toSet.iterator).collect().toSeq.distinct
   }
 
   /** Series type-safety rule (reference `appender.go:244-254`): a series is
@@ -1879,9 +1931,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   /** Land `df`'s rows INSIDE `dir` alongside its existing files: write
     * to a dot-stage (invisible to Spark listings), then per-file rename
     * into the partition. The rows stay reader-invisible until the caller
-    * commits their `__seq` — the append-alongside half of the
-    * reader-atomic commit protocol, shared by compaction and MOR
-    * deletes. */
+    * commits their `__seq` — the append-alongside half of
+    * compaction's reader-atomic swap. */
   private def stageIntoDir(df: DataFrame, dir: org.apache.hadoop.fs.Path,
                            stageName: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1952,9 +2003,13 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   /** Delete by time range (+ optional metrics / label filter) — reference
     * S11 (`DeleteParams{Metrics, Filter, From, To}`, `v3iotsdb.go:71-78`,
     * `DeletePartitionsData` :272-477): whole partitions inside the range
-    * are dropped metadata-only when no row predicate narrows the delete;
-    * boundary (or predicated) partitions are rewritten without the
-    * deleted rows; rollups of touched partitions rebuild.
+    * are dropped metadata-only when no row predicate narrows the delete
+    * (raising the time-travel horizon). Boundary (or predicated)
+    * partitions: a merge-on-read table lands one tombstone per live
+    * matched row of all of them through [[land]] — one seq, one commit,
+    * rollup and names rebuilt there — and keeps every older version
+    * readable; other tables rewrite each partition without the deleted
+    * rows. Rollups of touched partitions rebuild either way.
     * (Delta/Iceberg MERGE would do this transactionally in production —
     * plain parquet rewrite keeps the same semantics single-writer.)
     *
@@ -1985,18 +2040,17 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     * SupportsDelta surface): `stagedFiles` are parquet files of
     * `(op, name, labels, time, value, valueStr, labels_str)` records —
     * op 3 = insert/re-append (the sample columns are authoritative;
-    * derived identity columns recompute here exactly as in [[append]]),
+    * [[land]] derives the identity columns as for [[append]]),
     * op 1 = delete (name/labels_str/time identify the LWW key; the
     * tombstone rebuilds every key-stable column so pushed filters below
     * the MOR merge can never skip it and resurrect what it shadows).
     *
-    * The WHOLE delta lands under ONE seq in ONE atomic manifest commit
-    * (the r7 cross-partition atomicity discipline of the predicated MOR
-    * delete): readers see all of the mutation or none of it. Inserts
-    * pass the same series type-safety gate as appends; touched rollup
-    * partitions rebuild from the merged view; a partition whose last
-    * live rows died drops its rollup dirs like the delete path. MOR
-    * tables only — the caller gates, this rechecks. */
+    * Rejects NULL or out-of-range identity columns on inserts, then lands
+    * inserts and tombstones through [[land]]: one seq, one atomic
+    * manifest commit (readers see all of the mutation or none of it),
+    * the inserts' type-safety gate, and the rollup and names rebuild of
+    * the touched partitions. MOR tables only — the caller gates, this
+    * rechecks. */
   private[graft] def applyDelta(stagedFiles: Seq[String]): Unit =
     withWriterLock("rowLevelDelta") {
       require(config.overrideOld,
@@ -2007,10 +2061,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         // e.g. a MERGE insert action that left name/labels/time
         // unassigned — or out-of-range times): silently dropping an
         // UPDATE's re-append half would turn the update into a delete
-        val ins0 = delta.filter(col("op") === 3)
-          .select(col("name"), col("labels"), col("time"),
-            col("value"), col("valueStr"))
-        val bad = ins0.filter(col("name").isNull || col("labels").isNull ||
+        val inserts = delta.filter(col("op") === 3)
+        val bad = inserts.filter(col("name").isNull || col("labels").isNull ||
           col("time").isNull ||
           !col("time").between(graft.core.TimeUtil.MinTimeMs,
             graft.core.TimeUtil.MaxTimeMs)).count()
@@ -2019,64 +2071,17 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
             s"row-level operation produced $bad row(s) with NULL or " +
               "out-of-range identity columns (name/labels/time are " +
               "required for every inserted or updated row)")
-        val seq = nextSeq()
-        val inserts = ins0
-          .withColumn("labels_str", Labels.canonical(col("labels")))
-          .withColumn("series_id", Labels.seriesIdOf(col("name"), col("labels_str")))
-          .withColumn("part_start", partStart(col("time")))
-          .withColumn("__seq", lit(seq))
-          .withColumn("__del", lit(false))
         // tombstones: labels_str IS the stored canonical serialization,
-        // so series identity derives from it directly, as for inserts;
-        // the parsed labels map is best-effort schema-completeness
-        // (post-merge nobody reads a dropped winner's labels)
-        val tombs = delta.filter(col("op") === 1)
+        // so series identity derives from it directly; the parsed labels
+        // map is best-effort schema-completeness (post-merge nobody reads
+        // a dropped winner's labels)
+        val tombstones = delta.filter(col("op") === 1)
           .select(col("name"),
             when(col("labels_str") === "",
               map().cast("map<string,string>"))
               .otherwise(Labels.parse(col("labels_str"))).as("labels"),
-            col("time"),
-            lit(null).cast("double").as("value"),
-            lit(null).cast("string").as("valueStr"),
-            col("labels_str"),
-            Labels.seriesIdOf(col("name"), col("labels_str")).as("series_id"))
-          .withColumn("part_start", partStart(col("time")))
-          .withColumn("__seq", lit(seq))
-          .withColumn("__del", lit(true))
-        // type-safety gate on INSERTS ONLY (a tombstone's null valueStr
-        // must not read as "numeric sample" for a variant series); the
-        // same single-pass aggregate yields touched partitions + names
-        val (newEnc, touchedIns, insNames, releaseEnc) = enforceSeriesTypes(inserts)
-        try {
-        val tombSummary = tombs
-          .agg(collect_set("part_start"), count(lit(1))).head()
-        val touchedTomb = tombSummary.getSeq[Long](0)
-        val nTombs = tombSummary.getLong(1)
-        val touched = (touchedIns ++ touchedTomb).distinct
-        if (touched.nonEmpty) {
-          inserts.unionByName(tombs)
-            .repartition(col("part_start"),
-              pmod(col("series_id"), lit(config.shardingBuckets.toLong)))
-            .sortWithinPartitions("part_start", "series_id", "time")
-            .write.mode(SaveMode.Append).partitionBy("part_start").parquet(rawPath)
-          // the whole delta becomes reader-visible HERE, atomically
-          // (false = a concurrent writer won the commit race; our files
-          // stay invisible orphans and bookkeeping must not run)
-          if (commitSeq(seq)) {
-            newEnc.foreach(recordSeriesTypes)
-            val liveParts =
-              if (nTombs == 0) touched
-              else merged().filter(col("part_start").isin(touched: _*))
-                .select("part_start").distinct()
-                .collect().map(_.getLong(0)).toSeq
-            (touched.toSet -- liveParts.toSet).foreach(dropRollupPartitionAt)
-            refreshRollup(liveParts)
-            // a delete branch may have killed a name's last rows — the
-            // names dimension rebuilds from the merged view then
-            if (nTombs > 0) refreshNames() else mergeNames(insNames)
-          }
-        }
-        } finally releaseEnc()
+            col("time"), col("labels_str"))
+        land(Some(inserts), Some(tombstones))
       } finally delta.unpersist()
     }
 
@@ -2093,28 +2098,16 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     val rowPredicated = metrics.nonEmpty || filter.nonEmpty
     val metricPred = if (metrics.isEmpty) lit(true) else col("name").isin(metrics: _*)
     val filterPred = if (filter.isEmpty) lit(true) else expr(filter)
-    def dropRollupPartition(start: Long): Unit = {
-      val dirs = rollupPath +: config.preAggregates.map(preAggPath)
-      dirs.foreach { base =>
-        val r = new org.apache.hadoop.fs.Path(base, s"part_start=$start")
-        if (fs.exists(r)) fs.delete(r, true)
-      }
-    }
     // three-valued logic: a row whose labels lack the filtered key makes
     // filterPred NULL, !(… && NULL) is NULL, and filter() would DROP the
     // row — coalesce to false so non-matching rows are kept, not deleted
     val delPred = col("time").between(fromMs, toMs) &&
       coalesce(metricPred, lit(false)) && coalesce(filterPred, lit(false))
-    // ONE seq + ONE commit for the WHOLE predicated MOR delete: a
-    // per-partition commit would expose a torn cross-partition view (day
-    // 10's rows deleted, day 13's still visible) between loop iterations
-    val morSeq = if (config.overrideOld) nextSeq() else 0L
-    var wroteTombstones = false
     // partition drops and non-MOR rewrites physically destroy older file
     // generations — they must raise the time-travel horizon (MOR
     // tombstones don't: every superseded version stays on disk)
     var rewroteHistory = false
-    val emptied = scala.collection.mutable.ListBuffer.empty[Long]
+    val tombstoned = scala.collection.mutable.ListBuffer.empty[Long]
     parts.foreach { case (dir, start) =>
       val end = start + config.partitionIntervalMs - 1
       val fullyCovered = fromMs <= start && end <= toMs && !rowPredicated
@@ -2130,46 +2123,10 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         fs.rename(dir, parked)
         fs.delete(parked, true)
         rewroteHistory = true
-        dropRollupPartition(start) // rollup must not outlive its raw partition
+        dropRollupPartitionAt(start) // rollup must not outlive its raw partition
       } else if (start <= toMs && fromMs <= end) {
-        if (config.overrideOld) {
-          // READER-ATOMIC delete (r7), the MOR path: emit TOMBSTONES for
-          // the live matched rows instead of rewriting the partition — a
-          // tombstone is the newest LWW version of its (series, time)
-          // and the merged read drops it, so the WHOLE delete (across every
-          // touched partition) becomes visible exactly when the shared
-          // seq commits after this loop; no dir swap, no
-          // missing-partition window. Physical space reclaims at the
-          // next compaction, whose MOR read drops tombstones and the
-          // rows they shadow. Generated from the VISIBLE live view only:
-          // uncommitted garbage must not be resurrected as tombstones,
-          // and superseded versions need no tombstone of their own. The
-          // live view is cached: it serves the live count, the matched
-          // count and (through recompute at write time — the cache only
-          // spares the extra jobs) the tombstone rows.
-          val live = merged().filter(col("part_start") === start)
-            .drop("part_start").cache()
-          try {
-            val liveCount = live.count()
-            val tomb = live.filter(delPred)
-              .withColumn("__seq", lit(morSeq))
-              .withColumn("__del", lit(true))
-            val matched = tomb.count()
-            if (matched > 0) {
-              // sorted like every other raw write: (series_id, time) order
-              // per file is the MOR-merge contract (the DSv2 source's
-              // shuffle-free k-way merge relies on it) and buys row-group
-              // stats skipping on series predicates
-              stageIntoDir(tomb.sortWithinPartitions("series_id", "time"),
-                dir, ".del_stage")
-              wroteTombstones = true
-              // an emptied partition's rollup must not outlive its data —
-              // dynamic overwrite can't clear a partition it writes no
-              // rows for
-              if (matched == liveCount) emptied += start
-            }
-          } finally live.unpersist()
-        } else {
+        if (config.overrideOld) tombstoned += start
+        else {
           // non-MOR tables have no version column to tombstone through:
           // physical rewrite + swap. The swap is two metadata-only
           // renames (old dir parked at a dot-name, rewrite renamed in) —
@@ -2177,7 +2134,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           // missing-partition window; delete/retention on non-MOR tables
           // are maintenance operations and documented as such (append
           // and compaction, the steady-state paths, ARE reader-atomic —
-          // and so are MOR deletes, above).
+          // and so are MOR deletes, below).
           // COMMITTED rows only (review-caught): an unfiltered read
           // would resurrect a crashed mutation's orphan rows into the
           // rewritten file — whose mixed seqs vacuum() would then match
@@ -2196,16 +2153,25 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
             s".old_${dir.getName}_${System.nanoTime()}")
           fs.rename(dir, parked)
           if (rows > 0) fs.rename(tmp, dir)
-          else { fs.delete(tmp, true); dropRollupPartition(start) }
+          else { fs.delete(tmp, true); dropRollupPartitionAt(start) }
           fs.delete(parked, true)
           rewroteHistory = true
         }
       }
     }
-    if (wroteTombstones) {
-      commitSeq(morSeq) // the delete becomes reader-visible HERE, in full
-      emptied.foreach(dropRollupPartition)
-    }
+    // READER-ATOMIC delete (r7), the MOR path: TOMBSTONES for the live
+    // matched rows of every overlapping partition instead of a rewrite —
+    // a tombstone is the newest LWW version of its (series, time) and the
+    // merged read drops it, so the WHOLE delete (across every touched
+    // partition) becomes visible at one commit; no dir swap, no
+    // missing-partition window (a per-partition commit would expose a
+    // torn cross-partition view). Physical space reclaims at the next
+    // compaction, whose MOR read drops tombstones and the rows they
+    // shadow. Generated from the VISIBLE merged view only: uncommitted
+    // garbage must not be resurrected as tombstones, and superseded
+    // versions need no tombstone of their own.
+    val landed = tombstoned.nonEmpty && land(None,
+      Some(merged().filter(col("part_start").isin(tombstoned.toSeq: _*) && delPred)))
     // fence AFTER the destructive work, and COMMIT the fence seq: the
     // drop/rewrite changed table state without writing stamped rows, so
     // the post-delete state needs its own snapshot handle — committing
@@ -2218,17 +2184,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       val fence = nextSeq()
       commitSeq(fence, horizonTo = fence)
     }
-    val touched = parts.collect {
-      case (_, start) if start <= toMs && fromMs <= start + config.partitionIntervalMs - 1 => start
-    }
-    // "remaining" must mean surviving DATA partitions — Spark's _SUCCESS
-    // marker alone would otherwise send refreshNames into an empty dir
-    val remaining = fs.exists(base) &&
-      fs.listStatus(base).exists(_.getPath.getName.startsWith("part_start="))
-    if (remaining) {
-      refreshRollup(touched.filter(s => fs.exists(new org.apache.hadoop.fs.Path(base, s"part_start=$s"))))
-      refreshNames()
-    } else {
+    if (!hasPartitions(rawPath)) {
       // everything deleted: drop the derived tables too — INCLUDING the
       // sidecar swap leftovers, or recoverSeriesEnc would resurrect the
       // wiped type pins from a stale .tmp/.old on the next append. The
@@ -2239,6 +2195,14 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         fs.delete(new org.apache.hadoop.fs.Path(p), true))
       config.preAggregates.foreach(s =>
         fs.delete(new org.apache.hadoop.fs.Path(preAggPath(s)), true))
+    } else if (!landed) {
+      // a landed tombstone set already rebuilt its partitions' rollups and
+      // the names (after the drops above, which took their rollup dirs)
+      refreshRollup(parts.collect {
+        case (dir, start) if start <= toMs &&
+          fromMs <= start + config.partitionIntervalMs - 1 && fs.exists(dir) => start
+      })
+      refreshNames()
     }
   }
 }

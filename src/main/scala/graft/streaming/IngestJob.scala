@@ -88,9 +88,9 @@ object IngestJob {
         .drop("__series")
     // incremental merge requires batch ∩ existing-raw = ∅ — guaranteed
     // by the in-watermark dedup, which overrideOld DISABLES; rewrites
-    // must recompute the touched partitions from raw instead
-    if (!b.isEmpty)
-      table.append(b, incrementalRollup = !overrideOld && inWatermarkDeduped,
-        txn = txn)
+    // must recompute the touched partitions from raw instead. An empty
+    // batch commits nothing (append's own summary pass sees it)
+    table.append(b, incrementalRollup = !overrideOld && inWatermarkDeduped,
+      txn = txn)
   }
 }

@@ -1167,6 +1167,119 @@ class TsdbTableSpec extends SparkSuite {
       t.readRaw(Base, Base + 3 * day).count())
   }
 
+  test("every landing path writes one seq per mutation and commits nothing on empty input") {
+    val day = 86400000L
+    val cfg = TsdbConfig(rollupIntervalMs = 3600000L, overrideOld = true)
+    val rows = for {
+      n <- Seq("cpu", "mem"); h <- Seq("a", "b"); d <- 0 until 3; i <- 0 until 4
+    } yield (n, h, Base + d * day + i * 1000L, (d * 10 + i).toDouble)
+    def mk(prefix: String): (String, TsdbTable) = {
+      val dir = s"${Files.createTempDirectory(prefix)}/tbl"
+      (dir, new TsdbTable(spark, dir, cfg))
+    }
+    val (dir, t) = mk("tsdb_land")
+    def commits(): Seq[Long] = t.history().filter(col("kind") === "commit")
+      .select("seq").as[Long].collect().toSeq.sorted
+    // raw file -> the distinct __seq values it holds
+    def files(): Map[String, Seq[Long]] =
+      if (!new java.io.File(s"$dir/raw").exists()) Map.empty
+      else spark.read.schema(TsdbTable.RawFileSchema).parquet(s"$dir/raw")
+        .groupBy(input_file_name().as("f")).agg(collect_set("__seq").as("s"))
+        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    def landsOneSeq(what: String)(mutation: => Unit): Unit = {
+      val (c0, f0) = (commits(), files())
+      mutation
+      val (c1, f1) = (commits(), files())
+      val added = c1.diff(c0)
+      assert(c0.forall(c1.contains) && added.size == 1,
+        s"$what: expected one new commit, got $added")
+      val fresh = f1 -- f0.keySet
+      assert(fresh.nonEmpty && fresh.values.forall(_ == Seq(added.head)),
+        s"$what: every new raw file must hold exactly seq ${added.head}: $fresh")
+    }
+    def landsNothing(what: String)(mutation: => Unit): Unit = {
+      val (c0, f0, s0) = (commits(), files(), t.currentSeq())
+      mutation
+      assert(commits() == c0 && files() == f0 && t.currentSeq() == s0,
+        s"$what: empty input must commit nothing")
+    }
+
+    landsOneSeq("append")(t.append(samples(rows: _*)))
+    landsNothing("empty append")(t.append(samples().limit(0)))
+    landsNothing("empty streaming micro-batch")(
+      graft.streaming.IngestJob.appendBatch(t, samples().limit(0),
+        inWatermarkDeduped = false, txn = Some(("q", 0L))))
+    assert(t.txnVersion("q") < 0L)
+
+    spark.sql(s"CREATE TABLE graft_land USING graft OPTIONS (path '$dir')")
+    try {
+      landsOneSeq("SQL UPDATE")(spark.sql(
+        s"UPDATE graft_land SET value = value + 100 WHERE name = 'cpu' AND time < ${Base + day}"))
+      Seq(("cpu", "a", Base + 2 * day + 1000L, 0.0, "delete"),
+        ("mem", "b", Base + day, 7.0, "update"),
+        ("disk", "c", Base + day + 500L, 4.0, "insert"))
+        .toDF("name", "host", "time", "value", "action")
+        .select(col("name"), map(lit("host"), col("host")).as("labels"),
+          col("time"), col("value"), col("action"))
+        .createOrReplaceTempView("graft_land_src")
+      landsOneSeq("SQL MERGE")(spark.sql(
+        """MERGE INTO graft_land tgt USING graft_land_src src
+          |ON tgt.name = src.name AND tgt.labels_str = concat('host=', src.labels['host'])
+          |   AND tgt.time = src.time
+          |WHEN MATCHED AND src.action = 'delete' THEN DELETE
+          |WHEN MATCHED THEN UPDATE SET value = src.value
+          |WHEN NOT MATCHED THEN INSERT (name, labels, time, value)
+          |  VALUES (src.name, src.labels, src.time, src.value)
+          |""".stripMargin))
+      landsOneSeq("MOR delete")(t.delete(Base, Base + day + 1500L, metrics = Seq("cpu")))
+    } finally spark.sql("DROP TABLE graft_land")
+    // touched rollup partitions and names follow the merged view
+    def rollupOf(x: TsdbTable) = x.readRollup().drop("part_start")
+      .collect().map(_.toString).sorted.toSeq
+    val fresh = mk("tsdb_land_ref")._2
+    fresh.append(t.readRaw(0L, Long.MaxValue).select("name", "labels", "time", "value"))
+    assert(rollupOf(t) == rollupOf(fresh))
+    assert(t.names().collect().map(_.getString(0)).sorted.toSeq == Seq("cpu", "disk", "mem"))
+
+    // the API delete and the equivalent SQL DELETE land the same rows
+    val (apiDir, api) = mk("tsdb_land_api")
+    val (sqlDir, viaSql) = mk("tsdb_land_sql")
+    api.append(samples(rows: _*))
+    viaSql.append(samples(rows: _*))
+    val (apiSince, sqlSince) = (api.currentSeq(), viaSql.currentSeq())
+    api.delete(Base + 1000L, Base + 2 * day + 2000L, metrics = Seq("mem"))
+    spark.sql(s"CREATE TABLE graft_land_del USING graft OPTIONS (path '$sqlDir')")
+    try spark.sql(s"DELETE FROM graft_land_del WHERE name = 'mem' AND " +
+      s"time BETWEEN ${Base + 1000L} AND ${Base + 2 * day + 2000L}")
+    finally spark.sql("DROP TABLE graft_land_del")
+    def view(x: TsdbTable) = x.readRaw(0L, Long.MaxValue)
+      .drop("labels").collect().map(_.toString).sorted.toSeq
+    def changed(x: TsdbTable, since: Long) = x.changes(since)
+      .drop("labels").collect().map(_.toString).sorted.toSeq
+    assert(view(api) == view(viaSql))
+    assert(rollupOf(api) == rollupOf(viaSql))
+    val apiChanges = changed(api, apiSince)
+    assert(apiChanges == changed(viaSql, sqlSince))
+    // delete rows carry the at-since pre-image: every deleted mem sample
+    val deleted = rows.filter { case (n, _, tm, _) =>
+      n == "mem" && tm >= Base + 1000L && tm <= Base + 2 * day + 2000L }
+    val cdc = api.changes(apiSince).select("_change_type", "name", "time", "value")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+    assert(cdc.map(_._1).toSet == Set("delete"))
+    assert(cdc.map { case (_, n, tm, v) => (n, tm, v) }.sorted.toSeq ==
+      deleted.map { case (n, _, tm, v) => (n, tm, v) }.sorted)
+
+    // Spark jobs of a MOR delete touching one and three partitions: the
+    // per-partition tombstone loop this path replaced ran 10 and 22 (two
+    // counts and a staged write per partition, then the rebuilds); one
+    // landing is 8 at any partition count
+    val (_, jobsT) = mk("tsdb_land_jobs")
+    jobsT.append(samples(rows: _*))
+    val onePart = jobsDuring(jobsT.delete(Base, Base + 1500L, metrics = Seq("cpu")))
+    val threeParts = jobsDuring(jobsT.delete(Base, Base + 3 * day, metrics = Seq("mem")))
+    assert(onePart <= 10 && threeParts <= 22, s"MOR delete jobs: $onePart / $threeParts")
+  }
+
   test("label-filtered selects prune through the series registry (r15)") {
     val day = 86400000L
     val t = mkTable()
