@@ -97,7 +97,9 @@ object SparkEntry {
     * `corpus_split_safe` and the curation pipeline can never silently
     * diverge on the dedup parameters — which is also what licenses
     * Bench's "identical plan already timed" headline exclusions.
-    * `nearDupClusters` is eager, so intermediates and the pair cache are
+    * `nearDupClusters` is eager (its union-find labels are a local
+    * checkpoint; a pair graph that fits one adaptive partition is
+    * clustered in two jobs), so intermediates and the pair cache are
     * released before this returns. */
   private def docClusters(docs: DataFrame): DataFrame = {
     val (pairs, release) = Dedup.minHashLshPairsDeferred(docs, "doc_id",
@@ -2195,7 +2197,7 @@ object SparkEntry {
     // every member labeled with its cluster's canonical (min) doc id —
     // the keep/drop decision step of the dedup pipeline. Oracle: recursive
     // transitive closure over the same pair set.
-    // deferred pairs inside docClusters: nearDupClusters' eager edge
+    // deferred pairs inside docClusters: nearDupClusters' eager label
     // checkpoint is the single action that materializes the LSH pipeline —
     // no separate count pass; intermediates and the pairs cache released
     // once it returns

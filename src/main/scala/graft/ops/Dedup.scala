@@ -345,78 +345,146 @@ object Dedup {
   /** Collapse verified near-dup PAIRS into connected components, labeling
     * every member with its component's canonical id (the minimum doc id) —
     * the keep/drop decision step of a dedup pipeline (keep `cluster_id`,
-    * drop the rest). Input: `(id_a, id_b)` pairs; output:
-    * `(doc_id, cluster_id)`, one row per document appearing in a pair.
+    * drop the rest). Input: `(id_a, id_b)` pairs of an integral id type;
+    * output: `(doc_id, cluster_id)` of that type, one row per document
+    * appearing in a pair, ordered by `doc_id`. Eager: the labels are
+    * materialized (local checkpoint) before this returns, so the caller
+    * may release the pair set at once.
     *
-    * Distributed shape: iterated min-label propagation over the pair graph
-    * (which is tiny relative to the corpus — only near-dups appear).
-    * Each round is one hash join + one aggregate shuffling on doc id;
-    * rounds needed = component diameter (near-dup clusters are small and
-    * dense, 2-3 in practice; `maxIters` caps pathological chains and a
-    * convergence check exits early). No driver-side data beyond the
-    * per-round change counter. */
+    * Distributed shape (local contraction, Łącki et al. 2018): the pairs
+    * are rebalanced by `id_a` with no partition count, so adaptive
+    * execution sizes the partitions from the edge bytes, coalescing small
+    * ones and splitting any above the advisory partition size. Under the
+    * default `coalescePartitions.parallelismFirst` the coalescing target
+    * is max(`coalescePartitions.minPartitionSize`, 1 MB by default;
+    * min(advisory size, shuffle bytes / default parallelism)), so a pair
+    * set below about 1 MB of shuffle bytes (tens of thousands of pairs)
+    * lands in ONE partition. Each partition runs a min-id union-find with
+    * path halving over its edges in primitive arrays ([[localComponents]]).
+    * With one partition those roots are final: two Spark jobs (the
+    * shuffle's map stage and the checkpoint), and a one-partition table
+    * whose `orderBy` plans no exchange. With several, a node may hold a
+    * different root in each partition it occurs in; every `(doc_id, root)`
+    * row is an edge of a star around its root, and those stars connect
+    * exactly the original components, so label propagation over them
+    * ([[propagateMinLabels]], `maxIters` bounding its rounds) gives the
+    * final labels.
+    *
+    * Memory: a task holds one adaptive partition's edges and distinct ids
+    * in heap arrays that cannot spill (four longs per edge: its two ends
+    * and their sorted copy, plus the builder's growth slack while
+    * reading; one int per id).
+    * Rebalancing splits a partition above the advisory size (at
+    * map-output boundaries), so that bounds the share of the pair graph
+    * one task holds, not the graph's size. That is why this is not a single-task union-find
+    * (`repartition(1)`), which would be as cheap at small sizes but would
+    * bound the largest pair graph by one task's memory. */
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val (typeA, typeB) = (pairs.schema("id_a").dataType, pairs.schema("id_b").dataType)
+    require(Seq(typeA, typeB).forall(Seq(ByteType, ShortType, IntegerType, LongType).contains),
+      s"nearDupClusters needs integral ids, got ${pairs.schema.simpleString}")
+    val idType = if (typeA == typeB) typeA else LongType
+    val local = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .hint("rebalance", col("id_a"))
+      .mapPartitions(localComponents)(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+      .toDF("doc_id", "cluster_id")
+      .localCheckpoint(true)
+    // coalesce(1) moves no data: it declares the one partition, so the
+    // caller's orderBy sorts in place instead of planning a range exchange
+    val labels =
+      if (local.rdd.getNumPartitions <= 1) local.coalesce(1)
+      else propagateMinLabels(local.toDF("id_a", "id_b"), maxIters)
+    labels.select(col("doc_id").cast(idType), col("cluster_id").cast(idType))
+      .orderBy("doc_id")
+  }
+
+  /** Min-id union-find over one partition's `(a, b)` edges: the distinct
+    * ids sorted into one array, so an id's index orders like the id and
+    * linking the larger root under the smaller keeps every root its
+    * component's minimum. Emits `(id, root)` per distinct id, by id. */
+  private def localComponents(edges: Iterator[org.apache.spark.sql.Row]): Iterator[(Long, Long)] = {
+    val ab = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { r => ab += r.getLong(0); ab += r.getLong(1) }
+    val ends = ab.result()
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (i == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    var e = 0
+    while (e < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Connected components of the `(id_a, id_b)` edges by iterated min-label
+    * propagation with pointer doubling: `(doc_id, cluster_id)` per node,
+    * cluster_id the component's minimum id. Rounds = O(log diameter);
+    * failing to converge within `maxIters` rounds throws. */
+  private def propagateMinLabels(pairs: DataFrame, maxIters: Int): DataFrame = {
     // eager localCheckpoint: each round's plan would otherwise embed the
     // previous round's TWICE (via the neighbor join), doubling the logical
     // plan per iteration — caching alone keeps the data but not the
-    // lineage, and Catalyst planning/explain blows up exponentially
-    // r16 A/B note (measured, rejected): disabling AQE around the loop
-    // (fewer per-iteration stage-jobs, fixed-count shuffles instead) was
-    // flat-to-worse at matched calib — the orchestration latency AQE adds
-    // on these tiny tables is smaller than its small-task coalescing buys.
+    // lineage, and Catalyst planning/explain blows up exponentially.
+    // Measured and rejected: disabling AQE around the loop (fewer
+    // per-round stage jobs, fixed-count shuffles) was flat-to-worse — the
+    // latency AQE adds on these tiny tables is smaller than its
+    // small-task coalescing buys
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
     var labels = edges.groupBy(col("src").as("doc_id"))
       .agg(least(min(col("dst")), first(col("src"))).as("cluster_id"))
       .localCheckpoint(true)
-    // the frame actually holding this round's checkpointed blocks (labels
-    // may be a projection over it — unpersisting the projection is a no-op)
-    var cp = labels
-    try {
-      var iter = 0
-      var changed = 1L
-      while (changed > 0 && iter < maxIters) {
-        val viaNeighbors = edges
-          .join(labels.withColumnRenamed("doc_id", "src"), "src")
-          .groupBy(col("dst").as("doc_id"))
-          .agg(min("cluster_id").as("__nb"))
-        // pointer doubling: also adopt the label OF the current label —
-        // halves the remaining hop distance to the component min each
-        // round, so convergence is O(log diameter), not O(diameter)
-        // (a 1M-long chain converges within the default 20 rounds)
-        val viaLabel = labels.as("l1")
-          .join(labels.as("l2"), col("l1.cluster_id") === col("l2.doc_id"))
-          .select(col("l1.doc_id").as("doc_id"), col("l2.cluster_id").as("__ll"))
-        // keep the previous label in the SAME row; the convergence count
-        // rides on the checkpoint action itself via observe() (r16,
-        // guide §1.2): each round used to pay a SECOND job (filter+count
-        // over the checkpointed result) just for the loop condition —
-        // the observed metric folds it into the materialization pass
-        val obs = new org.apache.spark.sql.Observation()
-        val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
-          .join(viaLabel, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("cluster_id").as("__old"),
-            least(col("cluster_id"),
-              least(coalesce(col("__nb"), col("cluster_id")),
-                coalesce(col("__ll"), col("cluster_id")))).as("cluster_id"))
-          .observe(obs, coalesce(sum(when(col("cluster_id") =!= col("__old"), 1L)
-            .otherwise(0L)), lit(0L)).as("changed"))
-          .localCheckpoint(true)
-        changed = obs.get("changed").asInstanceOf[Long]
-        cp.unpersist()
-        cp = next
-        labels = next.select("doc_id", "cluster_id")
-        iter += 1
-      }
-      // exiting at the cap with changes pending would SILENTLY split a
-      // component into several cluster ids — fail loudly instead
-      if (changed > 0)
-        throw new IllegalStateException(
-          s"nearDupClusters did not converge within $maxIters rounds " +
-            "(component diameter > 2^maxIters is pathological input)")
-      labels.orderBy("doc_id")
-    } finally edges.unpersist()
+    var iter = 0
+    var changed = 1L
+    while (changed > 0 && iter < maxIters) {
+      val viaNeighbors = edges
+        .join(labels.withColumnRenamed("doc_id", "src"), "src")
+        .groupBy(col("dst").as("doc_id"))
+        .agg(min("cluster_id").as("__nb"))
+      // pointer doubling: also adopt the label OF the current label —
+      // halves the remaining hop distance to the component min each
+      // round, so convergence is O(log diameter), not O(diameter)
+      // (a 1M-long chain converges within the default 20 rounds)
+      val viaLabel = labels.as("l1")
+        .join(labels.as("l2"), col("l1.cluster_id") === col("l2.doc_id"))
+        .select(col("l1.doc_id").as("doc_id"), col("l2.cluster_id").as("__ll"))
+      // keep the previous label in the SAME row; the convergence count
+      // rides on the checkpoint action itself via observe(), so the loop
+      // condition costs no job of its own
+      val obs = new org.apache.spark.sql.Observation()
+      val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
+        .join(viaLabel, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("cluster_id").as("__old"),
+          least(col("cluster_id"),
+            least(coalesce(col("__nb"), col("cluster_id")),
+              coalesce(col("__ll"), col("cluster_id")))).as("cluster_id"))
+        .observe(obs, coalesce(sum(when(col("cluster_id") =!= col("__old"), 1L)
+          .otherwise(0L)), lit(0L)).as("changed"))
+        .localCheckpoint(true)
+      changed = obs.get("changed").asInstanceOf[Long]
+      labels = next.select("doc_id", "cluster_id")
+      iter += 1
+    }
+    // exiting at the cap with changes pending would SILENTLY split a
+    // component into several cluster ids — fail loudly instead
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"nearDupClusters did not converge within $maxIters rounds " +
+          "(component diameter > 2^maxIters is pathological input)")
+    labels
   }
 
   /** The end product of the dedup pipeline: the corpus with every

@@ -195,7 +195,7 @@ object Similarity {
     * (default [[nearDupPairsSrp]], the high-threshold LSH scale path;
     * pass `nearDupPairsBlocked(_, _, k)` for moderate thresholds or
     * [[nearDupPairs]] as the exact oracle baseline), transitive closure
-    * via [[Dedup.nearDupClusters]]'s pointer-doubling label propagation,
+    * via [[Dedup.nearDupClusters]] (union-find inside adaptive partitions),
     * then [[Dedup.dropNearDuplicates]]'s broadcast anti-join. Canonical
     * choice is the deterministic min id (the paper keeps the member
     * farthest from its centroid; min-id is reproducible run-over-run and
@@ -207,7 +207,7 @@ object Similarity {
   def semDedupKeep(data: DataFrame, threshold: Double,
                    pairsFn: (DataFrame, Double) => DataFrame = nearDupPairsSrp(_, _)): DataFrame = {
     val pairs = pairsFn(data, threshold)
-    // nearDupClusters is EAGER (iterated local checkpoints), so the
+    // nearDupClusters is EAGER (its labels are a local checkpoint), so the
     // persisted pair handle the LSH paths return (Caching.scoped
     // contract) is fully consumed when it returns — release it here,
     // not at session teardown; the keep-list plan reads only the
@@ -401,27 +401,16 @@ object Similarity {
     // invalidate BEFORE touching centroids: a crash mid-save must leave a
     // missing _meta (→ retrain), never a stale _meta describing new data
     fs.delete(new org.apache.hadoop.fs.Path(path, "_meta"), false)
-    centroids.select(col("c_id"), col("c_vec"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_meta"), true)
-    try out.write(s"version=$version\n".getBytes("UTF-8")) finally out.close()
+    val cents = centroids.select(col("c_id"), col("c_vec"))
+    cents.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
+    writeMeta(fs, path, "_meta", "version" -> version, schemaEntry("centroids", cents))
   }
 
   /** Load a persisted IVF index if present AND built for this `version`;
-    * None (→ caller retrains) otherwise. */
-  def loadIvfIndex(spark: SparkSession, path: String, version: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(path, "_meta")
-    if (!fs.exists(meta)) return None
-    val in = fs.open(meta)
-    val stored =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .collectFirst { case l if l.startsWith("version=") => l.stripPrefix("version=") }
-      finally in.close()
-    if (!stored.contains(version)) None
-    else Some(spark.read.parquet(s"$path/centroids"))
-  }
+    * None (→ caller retrains) otherwise. Reads under the recorded schema
+    * ([[readIndexTable]]). */
+  def loadIvfIndex(spark: SparkSession, path: String, version: String): Option[DataFrame] =
+    loadIndexTable(spark, path, "_meta", version, "centroids")
 
   /** The production index lifecycle in one call: load the on-disk index
     * for `version`, or train ([[kMeansCentroids]]), persist, and return
@@ -433,7 +422,7 @@ object Similarity {
       val cents = kMeansCentroids(data, nCentroids, iters)
       saveIvfIndex(cents, path, version)
       // serve from the persisted copy so every caller reads one plan shape
-      data.sparkSession.read.parquet(s"$path/centroids")
+      loadIvfIndex(data.sparkSession, path, version).get
     }
 
   /** IVF-style approximate top-k: partition the corpus into `nCentroids`
@@ -590,27 +579,26 @@ object Similarity {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), sp.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path, "_codes_meta"), false)
-    codes.select(col("vec_id"), col("cluster"), col("qvec"), col("qnorm"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_codes_meta"), true)
-    try out.write(s"version=$version\n".getBytes("UTF-8")) finally out.close()
+    val out = codes.select(col("vec_id"), col("cluster"), col("qvec"), col("qnorm"))
+    out.write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
+    writeMeta(fs, path, "_codes_meta", "version" -> version, schemaEntry("codes", out))
   }
 
   /** Load persisted IVF-PQ codes if present AND built for this
     * `version`; None (→ caller rebuilds) otherwise. */
   def loadIvfPqCodes(spark: SparkSession, path: String,
-                     version: String): Option[DataFrame] = {
+                     version: String): Option[DataFrame] =
+    loadIndexTable(spark, path, "_codes_meta", version, "codes")
+
+  /** `<path>/<table>` under `metaName`'s recorded schema if that meta is
+    * stamped with `version`; None otherwise. */
+  private def loadIndexTable(spark: SparkSession, path: String, metaName: String,
+                             version: String, table: String): Option[DataFrame] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val meta = new org.apache.hadoop.fs.Path(path, "_codes_meta")
-    if (!fs.exists(meta)) return None
-    val in = fs.open(meta)
-    val stored =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .collectFirst { case l if l.startsWith("version=") => l.stripPrefix("version=") }
-      finally in.close()
-    if (!stored.contains(version)) None
-    else Some(spark.read.parquet(s"$path/codes"))
+    val meta = readMeta(fs, path, metaName)
+    if (!meta.get("version").contains(version)) None
+    else Some(readIndexTable(spark, path, table, meta))
   }
 
   /** Incrementally append a NEW embedding batch to a persisted IVF-PQ
@@ -641,7 +629,9 @@ object Similarity {
         throw new IllegalStateException(
           s"appendPqCodes: no $m at $path ($what missing or torn) — " +
             "build with trainOrLoadPqIndex first")
-    val cents = sp.read.parquet(s"$path/centroids")
+    val metas = Seq("_meta", "_codes_meta", "_pq_meta")
+      .map(m => m -> readMeta(fs, path, m)).toMap
+    val cents = readIndexTable(sp, path, "centroids", metas("_meta"))
     // crash discipline: invalidate EVERY present meta first (a crash
     // mid-append leaves a fully-refused index → rebuild), restamp all
     // with the NEW version last — restamping only _codes_meta would
@@ -651,7 +641,7 @@ object Similarity {
     // centroids — silently wrong ANN results. A co-located true-PQ half
     // (_pq_meta) extends under the same rule, encoded per its own kind
     // stamp (the cross-half desync, review-caught in r8).
-    val pqMeta = readMeta(fs, path, "_pq_meta")
+    val pqMeta = metas("_pq_meta")
     val adcKind: Option[String] =
       if (pqMeta.isEmpty) None else Some(pqMeta.getOrElse("kind", "raw"))
     requireConsistentMetaVersions(fs, path,
@@ -661,15 +651,14 @@ object Similarity {
     buildPqCodes(batch, cents)
       .write.mode(SaveMode.Append).parquet(s"$path/codes")
     adcKind.foreach { kind =>
-      val cbs = sp.read.parquet(s"$path/pq_codebooks")
+      val cbs = readIndexTable(sp, path, "pq_codebooks", pqMeta)
       val enc =
         if (kind == "residual") pqBuildIndexResidual(batch, cents, cbs)
         else pqBuildIndex(batch, cents, cbs)
       enc.write.mode(SaveMode.Append).parquet(s"$path/pq_codes")
     }
-    Seq("_meta", "_codes_meta").foreach(writeMeta(fs, path, _, "version" -> version))
-    adcKind.foreach(kind =>
-      writeMeta(fs, path, "_pq_meta", "version" -> version, "kind" -> kind))
+    Seq("_meta", "_codes_meta").foreach(m => restamp(fs, path, m, metas(m), version))
+    adcKind.foreach(kind => restamp(fs, path, "_pq_meta", pqMeta, version, "kind" -> kind))
   }
 
   /** The full IVF-PQ index lifecycle: centroids via
@@ -684,7 +673,7 @@ object Similarity {
     val codes = loadIvfPqCodes(data.sparkSession, path, version).getOrElse {
       saveIvfPqCodes(buildPqCodes(data, cents), path, version)
       // serve from the persisted copy so every caller reads one plan shape
-      data.sparkSession.read.parquet(s"$path/codes")
+      loadIvfPqCodes(data.sparkSession, path, version).get
     }
     (cents, codes)
   }
@@ -1066,6 +1055,29 @@ object Similarity {
     finally out.close()
   }
 
+  /** Rewrite a meta read before an append under the new `version`,
+    * keeping its other entries (the recorded table schemas). */
+  private def restamp(fs: org.apache.hadoop.fs.FileSystem, path: String, name: String,
+                      prior: Map[String, String], version: String,
+                      entries: (String, String)*): Unit =
+    writeMeta(fs, path, name, (prior ++ (("version" -> version) +: entries)).toSeq: _*)
+
+  /** The meta entry recording `df`'s schema as the schema of index table
+    * `table`, read back by [[readIndexTable]]. */
+  private def schemaEntry(table: String, df: DataFrame): (String, String) =
+    s"schema.$table" -> df.schema.json
+
+  /** An index table `<path>/<table>` under the schema its meta recorded
+    * when it was written: no schema-inference job per open. A meta
+    * written before tables carried that record infers the stored schema
+    * instead. */
+  private def readIndexTable(spark: SparkSession, path: String, table: String,
+                             meta: Map[String, String]): DataFrame =
+    meta.get(s"schema.$table").fold(spark.read)(json => spark.read.schema(
+      org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
+      .parquet(s"$path/$table")
+
   /** Persist a trained true-PQ index half beside the centroid index:
     * `<path>/pq_codebooks` + `<path>/pq_codes` + `_pq_meta`, the
     * [[saveIvfPqCodes]] crash discipline (meta invalidated FIRST,
@@ -1081,15 +1093,16 @@ object Similarity {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), sp.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(path, "_pq_meta"), false)
-    codebooks.select(col("sub"), col("code_id"), col("cw"), col("cw_sq"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/pq_codebooks")
-    codes.select(col("vec_id"), col("cluster"), col("pq_code"), col("pq_norm"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/pq_codes")
+    val cbs = codebooks.select(col("sub"), col("code_id"), col("cw"), col("cw_sq"))
+    cbs.write.mode(SaveMode.Overwrite).parquet(s"$path/pq_codebooks")
+    val out = codes.select(col("vec_id"), col("cluster"), col("pq_code"), col("pq_norm"))
+    out.write.mode(SaveMode.Overwrite).parquet(s"$path/pq_codes")
     // the meta records WHICH encoder produced the codes: appending
     // residually-encoded codes to a raw-codebook base (or vice versa)
     // would serve silently wrong ADC ranks — the encode variant is part
     // of the index identity, not a serving-time choice
-    writeMeta(fs, path, "_pq_meta", "version" -> version, "kind" -> kind)
+    writeMeta(fs, path, "_pq_meta", "version" -> version, "kind" -> kind,
+      schemaEntry("pq_codebooks", cbs), schemaEntry("pq_codes", out))
   }
 
   /** Load a persisted true-PQ half if present AND built for this
@@ -1114,8 +1127,8 @@ object Similarity {
             s"but the caller expects kind=$want — the encode variant is " +
             "part of the index identity; rebuild under a new version")
       }
-      Some((spark.read.parquet(s"$path/pq_codebooks"),
-        spark.read.parquet(s"$path/pq_codes")))
+      Some((readIndexTable(spark, path, "pq_codebooks", meta),
+        readIndexTable(spark, path, "pq_codes", meta)))
     }
   }
 
@@ -1142,7 +1155,9 @@ object Similarity {
             "build with trainOrLoadAdcIndex first")
     // the encode variant comes from the index, never the caller — a
     // mismatched encoder would append silently wrong codes
-    val kind = readMeta(fs, path, "_pq_meta").getOrElse("kind", "raw")
+    val metas = Seq("_meta", "_pq_meta", "_codes_meta")
+      .map(m => m -> readMeta(fs, path, m)).toMap
+    val kind = metas("_pq_meta").getOrElse("kind", "raw")
     // a SHARED index directory may also hold the int8 half
     // (_codes_meta): every present half must extend together under the
     // new version, or a consumer at the stale half's version would
@@ -1152,8 +1167,8 @@ object Similarity {
     val hasInt8 = fs.exists(new org.apache.hadoop.fs.Path(path, "_codes_meta"))
     requireConsistentMetaVersions(fs, path,
       Seq("_meta", "_pq_meta", "_codes_meta"), "appendAdcCodes")
-    val cents = sp.read.parquet(s"$path/centroids")
-    val cbs = sp.read.parquet(s"$path/pq_codebooks")
+    val cents = readIndexTable(sp, path, "centroids", metas("_meta"))
+    val cbs = readIndexTable(sp, path, "pq_codebooks", metas("_pq_meta"))
     (Seq("_pq_meta", "_meta") ++ (if (hasInt8) Seq("_codes_meta") else Nil))
       .foreach(m => fs.delete(new org.apache.hadoop.fs.Path(path, m), false))
     val enc =
@@ -1162,9 +1177,9 @@ object Similarity {
     enc.write.mode(SaveMode.Append).parquet(s"$path/pq_codes")
     if (hasInt8)
       buildPqCodes(batch, cents).write.mode(SaveMode.Append).parquet(s"$path/codes")
-    writeMeta(fs, path, "_meta", "version" -> version)
-    if (hasInt8) writeMeta(fs, path, "_codes_meta", "version" -> version)
-    writeMeta(fs, path, "_pq_meta", "version" -> version, "kind" -> kind)
+    restamp(fs, path, "_meta", metas("_meta"), version)
+    if (hasInt8) restamp(fs, path, "_codes_meta", metas("_codes_meta"), version)
+    restamp(fs, path, "_pq_meta", metas("_pq_meta"), version, "kind" -> kind)
   }
 
   /** The full true-PQ index lifecycle: centroids via
@@ -1201,8 +1216,7 @@ object Similarity {
         saveAdcIndex(cb, pqBuildIndex(data, cents, cb), path, version, kind = kind)
       }
       // serve from the persisted copy so every caller reads one plan shape
-      (data.sparkSession.read.parquet(s"$path/pq_codebooks"),
-        data.sparkSession.read.parquet(s"$path/pq_codes"))
+      loadAdcIndex(data.sparkSession, path, version).get
     }
     (cents, cbs, codes)
   }

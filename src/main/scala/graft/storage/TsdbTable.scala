@@ -2108,6 +2108,9 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     // tombstones don't: every superseded version stays on disk)
     var rewroteHistory = false
     val tombstoned = scala.collection.mutable.ListBuffer.empty[Long]
+    // non-MOR partitions rewritten with surviving rows: their rollup
+    // cells change in place
+    val rewritten = scala.collection.mutable.ListBuffer.empty[Long]
     parts.foreach { case (dir, start) =>
       val end = start + config.partitionIntervalMs - 1
       val fullyCovered = fromMs <= start && end <= toMs && !rowPredicated
@@ -2152,7 +2155,7 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
           val parked = new org.apache.hadoop.fs.Path(dir.getParent,
             s".old_${dir.getName}_${System.nanoTime()}")
           fs.rename(dir, parked)
-          if (rows > 0) fs.rename(tmp, dir)
+          if (rows > 0) { fs.rename(tmp, dir); rewritten += start }
           else { fs.delete(tmp, true); dropRollupPartitionAt(start) }
           fs.delete(parked, true)
           rewroteHistory = true
@@ -2195,13 +2198,11 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         fs.delete(new org.apache.hadoop.fs.Path(p), true))
       config.preAggregates.foreach(s =>
         fs.delete(new org.apache.hadoop.fs.Path(preAggPath(s)), true))
-    } else if (!landed) {
+    } else if (!landed && rewroteHistory) {
       // a landed tombstone set already rebuilt its partitions' rollups and
-      // the names (after the drops above, which took their rollup dirs)
-      refreshRollup(parts.collect {
-        case (dir, start) if start <= toMs &&
-          fromMs <= start + config.partitionIntervalMs - 1 && fs.exists(dir) => start
-      })
+      // the names (after the drops above, which took their rollup dirs);
+      // a MOR delete that matched no row changed nothing to rebuild
+      refreshRollup(rewritten.toSeq)
       refreshNames()
     }
   }

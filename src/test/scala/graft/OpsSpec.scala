@@ -305,16 +305,47 @@ class DedupSpec extends SparkSuite {
     val pairs = Seq((2L, 1L, 0.9), (2L, 3L, 0.9), (10L, 11L, 0.8),
       (20L, 21L, 0.7), (21L, 22L, 0.7), (3L, 4L, 0.6))
       .toDF("id_a", "id_b", "jaccard")
-    val out = Dedup.nearDupClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
     // a long path needs multiple propagation rounds to reach the far end
+    // once it is spread over several partitions
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.nearDupClusters(chain).collect().map(_.getLong(1)).distinct
-    assert(labels.toSeq == Seq(0L))
-    // empty pair set → empty (not a crash)
-    assert(Dedup.nearDupClusters(pairs.filter(col("id_a") < 0)).collect().isEmpty)
+    val longChain = (0L until 250L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    def check(): Unit = {
+      val out = Dedup.nearDupClusters(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+      for (c <- Seq(chain, longChain)) {
+        val got = Dedup.nearDupClusters(c).collect()
+        assert(got.map(_.getLong(0)).toSeq == (0L until got.length.toLong))
+        assert(got.map(_.getLong(1)).distinct.toSeq == Seq(0L))
+      }
+      // empty pair set → empty (not a crash)
+      assert(Dedup.nearDupClusters(pairs.filter(col("id_a") < 0)).collect().isEmpty)
+    }
+    // adaptive execution puts these small pair sets in one partition
+    check()
+    // with coalescing off they keep spark.sql.shuffle.partitions
+    // partitions, so label propagation over the partitions' root stars
+    // runs
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      assert(Dedup.nearDupClusters(longChain).rdd.getNumPartitions > 1)
+      check()
+    }
+    // int ids come back as ints
+    val intOut = Dedup.nearDupClusters(Seq((3, 1), (2, 3)).toDF("id_a", "id_b"))
+    assert(intOut.schema.map(_.dataType.typeName) == Seq("integer", "integer"))
+    assert(intOut.collect().map(r => r.getInt(0) -> r.getInt(1)).toSeq ==
+      Seq(1 -> 1, 2 -> 1, 3 -> 1))
+    // a persisted pair set that fits one partition clusters in two jobs
+    // (the shuffle's map stage and the checkpoint) with a one-partition
+    // result; whole-graph label propagation ran 83 on this chain
+    val cached = longChain.persist()
+    try {
+      cached.count()
+      var clusters: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { clusters = Dedup.nearDupClusters(cached) } <= 2)
+      assert(!clusters.queryExecution.executedPlan.toString.contains("Exchange"))
+    } finally cached.unpersist()
   }
 
   test("semDedupKeep: transitive components collapse to min id; singletons pass") {
@@ -885,6 +916,10 @@ class SimilaritySpec extends SparkSuite {
     val (rc1, _, _) = Similarity.trainOrLoadAdcIndex(e, adcR, "r1",
       nCentroids = 8, iters = 2, m = 8, ksub = 8, pqIters = 2, residual = true)
     Similarity.appendAdcCodes(batch, adcR, "r1+day2")
+    assert(jobsDuring {
+      Similarity.loadIvfIndex(spark, adcR, "r1+day2").get
+      Similarity.loadAdcIndex(spark, adcR, "r1+day2").get
+    } == 0)
     assert(Similarity.loadAdcIndex(spark, adcR, "r1").isEmpty)
     assert(Similarity.loadIvfIndex(spark, adcR, "r1+day2").isDefined)
     val (rcb2, rk2) = Similarity.loadAdcIndex(spark, adcR, "r1+day2").get
@@ -918,6 +953,14 @@ class SimilaritySpec extends SparkSuite {
     Similarity.trainOrLoadAdcIndex(e, both, "b1",
       nCentroids = 8, iters = 2, m = 8, ksub = 8, pqIters = 2)
     Similarity.appendPqCodes(batch, both, "b2")
+    // every index table opens under the schema its meta recorded when it
+    // was written — no schema-inference job — and an append's restamp
+    // keeps that record
+    assert(jobsDuring {
+      Similarity.loadIvfIndex(spark, both, "b2").get
+      Similarity.loadIvfPqCodes(spark, both, "b2").get
+      Similarity.loadAdcIndex(spark, both, "b2").get
+    } == 0)
     // both halves moved to b2 and both include the appended batch
     val k8 = Similarity.loadIvfPqCodes(spark, both, "b2").get
     val (bcb, bk) = Similarity.loadAdcIndex(spark, both, "b2",

@@ -286,7 +286,7 @@ class PropertySpec extends SparkSuite {
   }
 
   test("PROPERTY: nearDupClusters == driver-side union-find on random graphs") {
-    (0 until 6).foreach { i =>
+    def check(): Unit = (0 until 6).foreach { i =>
       val g = for {
         n <- Gen.choose(1, 40)
         edges <- Gen.listOfN(n, for {
@@ -313,6 +313,11 @@ class PropertySpec extends SparkSuite {
         assert(got == model, s"case $i edges=$edges\ngot=$got\nmodel=$model")
       }
     }
+    // as configured, adaptive execution coalesces each graph into one
+    // partition; with coalescing off label propagation joins the
+    // partitions' roots
+    check()
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", "false")(check())
   }
 
   test("PROPERTY: LSH pairs == the self-join + explode-join reference, guard unbound and binding") {

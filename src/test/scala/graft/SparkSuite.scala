@@ -10,6 +10,14 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  /** Runs `body` with the session conf `key` set to `value`, then
+    * restores the previous setting. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Runs `body` and returns the number of Spark jobs it started: jobs
     * submitted by the calling thread, or by threads it spawned (they
     * inherit its local properties). The listener bus is drained before

@@ -1273,11 +1273,29 @@ class TsdbTableSpec extends SparkSuite {
     // per-partition tombstone loop this path replaced ran 10 and 22 (two
     // counts and a staged write per partition, then the rebuilds); one
     // landing is 8 at any partition count
-    val (_, jobsT) = mk("tsdb_land_jobs")
+    val (jobsDir, jobsT) = mk("tsdb_land_jobs")
     jobsT.append(samples(rows: _*))
     val onePart = jobsDuring(jobsT.delete(Base, Base + 1500L, metrics = Seq("cpu")))
     val threeParts = jobsDuring(jobsT.delete(Base, Base + 3 * day, metrics = Seq("mem")))
     assert(onePart <= 10 && threeParts <= 22, s"MOR delete jobs: $onePart / $threeParts")
+
+    // a MOR delete that matches no row commits nothing and rebuilds
+    // nothing: before, it rebuilt every overlapping partition's rollup and
+    // the names dimension anyway (5 jobs over these three partitions)
+    def derivedFiles(): Map[String, Long] = Seq("rollup", "names").flatMap { d =>
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(jobsDir, d)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toList
+      finally walk.close()
+    }.toMap
+    val (history0, derived0) = (jobsT.history().count(), derivedFiles())
+    val noMatch = jobsDuring(jobsT.delete(Base, Base + 3 * day, metrics = Seq("disk")))
+    assert(noMatch <= 1, s"no-match MOR delete jobs: $noMatch")
+    assert(jobsT.history().count() == history0)
+    assert(derived0.nonEmpty && derivedFiles() == derived0,
+      "a no-match MOR delete must leave the rollup and names files untouched")
   }
 
   test("label-filtered selects prune through the series registry (r15)") {
