@@ -83,8 +83,8 @@ object Bench {
     // tsdb_delete/tsdb_cdc_views exclusion rule)
     "tsdb_dsv2_read",
     "tsdb_dsv2_agg",
-    // r14: SUM/AVG pushdown — per-partition partials from a single-
-    // column page walk (no batch pipeline), over the same storedTable
+    // r14: SUM/AVG pushdown — per-partition partials decoded inside
+    // the scan (no row pipeline above it), over the same storedTable
     "tsdb_dsv2_sum",
     // r15: label-predicate scan through the series registry (pruned
     // stripes/row groups + hash-set row test), same storedTable

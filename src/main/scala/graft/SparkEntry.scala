@@ -658,10 +658,10 @@ object SparkEntry {
     }),
 
     // DSv2 SUM/AVG pushdown (r14): sums have no footer form, so the agg
-    // reader PAGE-DECODES just the agg columns and emits per-partition
-    // partials — `GROUP BY part_start` with sum/avg is a single-column
-    // page walk with no batch pipeline and a one-row-per-partition
-    // exchange. avg(time) arrives as Spark's partial SUM+COUNT rewrite;
+    // reader decodes just the agg columns inside the scan and emits
+    // per-partition partials — `GROUP BY part_start` with sum/avg reads
+    // two columns and plans a one-row-per-partition exchange.
+    // avg(time) arrives as Spark's partial SUM+COUNT rewrite;
     // sum(time)/avg(time) are exact integer lanes (hash-exact vs
     // DuckDB), sum(value) rounds to absorb partial-order FP noise.
     "tsdb_dsv2_sum" -> ((s, dir) => {

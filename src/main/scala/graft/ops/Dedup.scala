@@ -431,7 +431,10 @@ object Dedup {
   /** Connected components of the `(id_a, id_b)` edges by iterated min-label
     * propagation with pointer doubling: `(doc_id, cluster_id)` per node,
     * cluster_id the component's minimum id. Rounds = O(log diameter);
-    * failing to converge within `maxIters` rounds throws. */
+    * failing to converge within `maxIters` rounds throws. `pairs` is a
+    * local checkpoint this call owns: like the edge table and every
+    * superseded round, it is released once the checkpoint that replaces
+    * it has materialized, so only the result's checkpoint stays. */
   private def propagateMinLabels(pairs: DataFrame, maxIters: Int): DataFrame = {
     // eager localCheckpoint: each round's plan would otherwise embed the
     // previous round's TWICE (via the neighbor join), doubling the logical
@@ -444,6 +447,7 @@ object Dedup {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
+    releaseCheckpoint(pairs)
     var labels = edges.groupBy(col("src").as("doc_id"))
       .agg(least(min(col("dst")), first(col("src"))).as("cluster_id"))
       .localCheckpoint(true)
@@ -475,17 +479,31 @@ object Dedup {
           .otherwise(0L)), lit(0L)).as("changed"))
         .localCheckpoint(true)
       changed = obs.get("changed").asInstanceOf[Long]
+      releaseCheckpoint(labels)
       labels = next.select("doc_id", "cluster_id")
       iter += 1
     }
+    releaseCheckpoint(edges)
     // exiting at the cap with changes pending would SILENTLY split a
     // component into several cluster ids — fail loudly instead
-    if (changed > 0)
+    if (changed > 0) {
+      releaseCheckpoint(labels)
       throw new IllegalStateException(
         s"nearDupClusters did not converge within $maxIters rounds " +
           "(component diameter > 2^maxIters is pathological input)")
+    }
     labels
   }
+
+  /** Drop the blocks of a local checkpoint. `Dataset.unpersist` does not
+    * reach them: they belong to the RDD under the frame's `LogicalRDD`,
+    * and would otherwise stay in executor storage until driver GC lets
+    * the ContextCleaner drop them. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** The end product of the dedup pipeline: the corpus with every
     * non-canonical near-dup member dropped (each cluster keeps its min-id

@@ -11,15 +11,18 @@ import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-group classification from parquet FOOTER stats — the shared
-  * brain of the aggregate pushdown ([[GraftAggReader]]) and the
-  * columnar reader's visibility fast path ([[GraftColumnarReader]]).
-  * Everything here is conservative: a chunk with missing/untyped stats
-  * classifies as [[SomeRows]] (inconclusive) and the caller falls back
-  * to reading rows — footer stats ACCELERATE, they never decide what
-  * they cannot prove. */
+/** Row-group classification from parquet FOOTER stats, shared by the
+  * columnar reader ([[GraftColumnarReader]]: skip a group, serve it
+  * whole, or test its rows) and the aggregate pushdown
+  * ([[GraftAggReader]]: skip a group, fold it in from stats, or hand it
+  * to the columnar reader). Everything here is conservative: a chunk
+  * with missing/untyped stats classifies as [[SomeRows]] (inconclusive)
+  * and the caller reads the rows — footer stats ACCELERATE, they never
+  * decide what they cannot prove. */
 private[sources] object GraftFooterStats {
   sealed trait Tri
   /** Every row of the group satisfies the condition. */
@@ -90,9 +93,9 @@ private[sources] object GraftFooterStats {
         else SomeRows
     }
     // the two impossible strict bounds first: NOTHING is > MaxValue or
-    // < MinValue — including part_start, whose planning clamp silently
-    // ignores them (boundsFor can't represent lo = MaxValue + 1), so
-    // classifying them AllRows would stats-count the whole table where
+    // < MinValue. Planning already prunes every partition dir for a
+    // part_start bound of this shape; a `time` one reaches the groups,
+    // and classifying it AllRows would stats-count the whole table where
     // the row path correctly returns zero (review-caught r13)
     case GreaterThan(_, v: Long) if v == Long.MaxValue => NoRows
     case LessThan(_, v: Long) if v == Long.MinValue => NoRows
@@ -170,16 +173,18 @@ private[sources] final case class GraftAggSplit(files: Seq[(String, Long)])
   extends org.apache.spark.sql.connector.read.InputPartition
 
 /** Partial-aggregate reader: emits ONE row of partials for its file
-  * bundle — `count(*)`/`count(col)` as longs, `min`/`max` as values —
-  * or, when `groupByPart` (GROUP BY part_start, the one group-by the
-  * storage layout answers for free), one row PER time partition in the
-  * bundle. Spark's rewritten final aggregate merges the partials
-  * (count → SUM, min → MIN, max → MAX), re-grouping when grouped. The
-  * interesting property: a clean row group contributes from FOOTER
-  * STATS alone (no page IO — `count(*)` over a table is a footer
-  * walk), and only groups the stats cannot decide (mixed visibility,
-  * inconclusive filter bounds, missing stats) are decoded, through the
-  * normal scan's own columnar reader and its exact row filter. */
+  * bundle — `count(*)`/`count(col)` as longs, `min`/`max`/`sum` as
+  * values — or, when `groupByPart` (GROUP BY part_start, the one
+  * group-by the storage layout answers for free), one row PER time
+  * partition in the bundle. Spark's rewritten final aggregate merges the
+  * partials (count → SUM, min → MIN, max → MAX, sum → SUM), re-grouping
+  * when grouped. A row group that is all-visible and all-matching
+  * contributes every spec its stats serve with no page IO (`count(*)`
+  * over a table is a footer walk); its other specs decode their columns
+  * through the one page decoder ([[GraftDecode]]). A group the stats
+  * cannot decide reads through the normal scan's own columnar reader,
+  * with its exact visibility and row filter. Every decoded batch goes
+  * through the one fold, [[foldBatch]]. */
 private[sources] final class GraftAggReader(
     conf: Configuration,
     split: GraftAggSplit,
@@ -203,7 +208,6 @@ private[sources] final class GraftAggReader(
   private var row: InternalRow = _
 
   private val needSeq = commits.nonEmpty || asOf.nonEmpty
-  private val prepared = GraftReaders.prepare(pushed)
 
   /** Partial state — one per output row (global: exactly one; grouped:
     * one per part_start, created on first touch so empty partitions
@@ -264,59 +268,67 @@ private[sources] final class GraftAggReader(
     case other => throw new IllegalStateException(s"unsummable value $other")
   }
 
+  /** A spec's contribution from `rows` rows of one partition when it
+    * reads no column: COUNT(*), and every aggregate over the constant
+    * `part_start`. None when the spec needs its column. */
+  private def constSpec(s: GraftAggSpec, rows: Long, partStart: Long): Option[Any] =
+    if (s.op == "count_star") Some(rows)
+    else if (s.col != "part_start") None
+    else s.op match {
+      case "count" => Some(rows)
+      case "sum" => Some(mulLong(partStart, rows))
+      case _ => Some(partStart)
+    }
+
   /** Footer-stats staging for ONE spec over one CLEAN (all-visible,
     * all-filter-matching) group: Some(contribution) when the stats
     * fully serve it — counts as Long, min/max/sum as values (null =
     * contributes nothing) — None when the spec needs the group's
-    * pages/rows. */
+    * pages. */
   private def stageSpec(s: GraftAggSpec, b: BlockMetaData,
-                        partStart: Long): Option[Any] = s.op match {
-    case "count_star" => Some(b.getRowCount)
-    case "count" =>
-      if (s.col == "part_start") Some(b.getRowCount)
-      else GraftFooterStats.chunk(b, s.col) match {
-        case None => Some(0L) // absent = all null
-        case Some(ch) =>
-          val st = ch.getStatistics
-          if (st == null || !st.isNumNullsSet) None
-          else Some(b.getRowCount - st.getNumNulls)
-      }
-    case "min" | "max" =>
-      if (s.col == "part_start") Some(partStart)
-      else GraftFooterStats.chunk(b, s.col) match {
-        case None => Some(null) // absent = all null: contributes nothing
-        case Some(ch) =>
-          val st = ch.getStatistics
-          if (st == null || !st.isNumNullsSet) None
-          else if (st.getNumNulls == ch.getValueCount) Some(null) // all null
-          else if (!st.hasNonNullValue) None
-          else {
-            val v = if (s.op == "min") st.genericGetMin else st.genericGetMax
-            v match {
-              case l: java.lang.Long => Some(l.longValue())
-              case bin: Binary =>
-                // binary min/max may be TRUNCATED by the writer —
-                // only trust a constant chunk, else read the pages
-                if (st.genericGetMin == st.genericGetMax)
-                  Some(UTF8String.fromBytes(bin.getBytes))
-                else None
-              case _ => None
+                        partStart: Long): Option[Any] =
+    constSpec(s, b.getRowCount, partStart).orElse(s.op match {
+      case "count" =>
+        GraftFooterStats.chunk(b, s.col) match {
+          case None => Some(0L) // absent = all null
+          case Some(ch) =>
+            val st = ch.getStatistics
+            if (st == null || !st.isNumNullsSet) None
+            else Some(b.getRowCount - st.getNumNulls)
+        }
+      case "min" | "max" =>
+        GraftFooterStats.chunk(b, s.col) match {
+          case None => Some(null) // absent = all null: contributes nothing
+          case Some(ch) =>
+            val st = ch.getStatistics
+            if (st == null || !st.isNumNullsSet) None
+            else if (st.getNumNulls == ch.getValueCount) Some(null) // all null
+            else if (!st.hasNonNullValue) None
+            else {
+              val v = if (s.op == "min") st.genericGetMin else st.genericGetMax
+              v match {
+                case l: java.lang.Long => Some(l.longValue())
+                case bin: Binary =>
+                  // binary min/max may be TRUNCATED by the writer —
+                  // only trust a constant chunk, else read the pages
+                  if (st.genericGetMin == st.genericGetMax)
+                    Some(UTF8String.fromBytes(bin.getBytes))
+                  else None
+                case _ => None
+              }
             }
-          }
-      }
-    case "sum" =>
-      if (s.col == "part_start")
-        Some(mulLong(partStart, b.getRowCount))
-      else GraftFooterStats.chunk(b, s.col) match {
-        case None => Some(null) // absent = all null: SUM contributes nothing
-        case Some(ch) =>
-          val st = ch.getStatistics
-          if (st != null && st.isNumNullsSet && st.getNumNulls == ch.getValueCount)
-            Some(null) // all-null chunk
-          else None // sums have no footer form — decode the pages
-      }
-    case other => throw new IllegalStateException(s"bad agg op $other")
-  }
+        }
+      case "sum" =>
+        GraftFooterStats.chunk(b, s.col) match {
+          case None => Some(null) // absent = all null: SUM contributes nothing
+          case Some(ch) =>
+            val st = ch.getStatistics
+            if (st != null && st.isNumNullsSet && st.getNumNulls == ch.getValueCount)
+              Some(null) // all-null chunk
+            else None // sums have no footer form — decode the pages
+        }
+      case other => throw new IllegalStateException(s"bad agg op $other")
+    })
 
   private def applyStaged(acc: Acc, i: Int, s: GraftAggSpec, v: Any): Unit =
     s.op match {
@@ -326,244 +338,152 @@ private[sources] final class GraftAggReader(
       case "sum" => mergeSum(acc, i, v)
     }
 
-  private def accumulateRow(get: String => Any, partStart: Long): Unit = {
+  /** The one fold of decoded rows: the specs `fromRows` of a batch whose
+    * columns are `cols` fold into its partition's partials — COUNT(*)
+    * and `part_start` specs from the row count, column specs through one
+    * typed loop over their vector. */
+  private def foldBatch(batch: ColumnarBatch, partStart: Long,
+                        fromRows: Seq[Int], cols: Seq[String]): Unit = {
+    val n = batch.numRows()
     val acc = accFor(partStart)
-    specs.zipWithIndex.foreach { case (s, i) =>
-      s.op match {
-        case "count_star" => acc.counts(i) += 1
-        case "count" =>
-          val v = if (s.col == "part_start") partStart else get(s.col)
-          if (v != null) acc.counts(i) += 1
-        case "min" | "max" =>
-          val v = if (s.col == "part_start") partStart else get(s.col)
-          mergeExt(acc, i, v, isMin = s.op == "min")
-        case "sum" =>
-          val v = if (s.col == "part_start") partStart else get(s.col)
-          mergeSum(acc, i, v)
+    fromRows.foreach { i =>
+      val s = specs(i)
+      constSpec(s, n.toLong, partStart) match {
+        case Some(v) => applyStaged(acc, i, s, v)
+        case None => foldColumn(acc, i, s.op, batch.column(cols.indexOf(s.col)), n)
       }
     }
   }
 
-  /** Columnar accumulate (r14): a clean group whose stats cannot serve
-    * every spec (SUM always; truncated binary extrema; missing null
-    * counts) decodes JUST the needed flat columns through
-    * [[GraftPageCursor]] and folds them straight into the partials —
-    * no ColumnarBatch, no row pipeline. Returns false when a needed
-    * column's shape has no bulk path (the group then falls back to the
-    * columnar reader). */
-  private def tryColumnar(pages: org.apache.parquet.column.page.PageReadStore,
-                          schema: org.apache.parquet.schema.MessageType,
-                          needed: Seq[(GraftAggSpec, Int)],
-                          staged: Array[Option[Any]],
-                          partStart: Long): Boolean = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val cols = needed.map(_._1.col).distinct
-    val descs = schema.getColumns
-    val byCol = cols.map { c =>
-      val d = (0 until descs.size()).map(descs.get)
-        .find(d => d.getPath.length == 1 && d.getPath()(0) == c)
-      c -> d
-    }.toMap
-    if (byCol.exists { case (_, d) =>
-      d.isEmpty || !Seq(INT64, DOUBLE, BINARY).contains(
-        d.get.getPrimitiveType.getPrimitiveTypeName)
-    }) return false
-
-    val acc = accFor(partStart)
-    val cursors = byCol.map { case (c, d) =>
-      c -> (new GraftPageCursor(d.get, pages.getPageReader(d.get)),
-        d.get.getPrimitiveType.getPrimitiveTypeName)
-    }
-    var remaining = pages.getRowCount
-    val batch = 32768
-    // chunk-lifetime buffers, allocated once at the fixed batch size
-    // (review-caught r14: per-iteration allocation churned the exact
-    // hot path this reader exists to speed up); the per-batch loops
-    // below only ever touch the first k entries, so value arrays need
-    // no reset — nulls/strings do (a read leaves null slots untouched)
-    val longBuf = cursors.collect { case (c, (_, INT64)) =>
-      c -> ((new Array[Long](batch), new Array[Boolean](batch)))
-    }
-    val dblBuf = cursors.collect { case (c, (_, DOUBLE)) =>
-      c -> ((new Array[Double](batch), new Array[Boolean](batch)))
-    }
-    val strBuf = cursors.collect { case (c, (_, BINARY)) =>
-      c -> new Array[UTF8String](batch)
-    }
-    while (remaining > 0) {
-      val k = math.min(remaining, batch.toLong).toInt
-      cursors.foreach { case (c, (cur, t)) =>
-        t match {
-          case INT64 =>
-            val (vals, nulls) = longBuf(c)
-            java.util.Arrays.fill(nulls, 0, k, false)
-            cur.readLongs(k, vals, nulls, 0)
-          case DOUBLE =>
-            val (vals, nulls) = dblBuf(c)
-            java.util.Arrays.fill(nulls, 0, k, false)
-            cur.readDoubles(k, vals, nulls, 0)
-          case BINARY =>
-            val vals = strBuf(c)
-            java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], 0, k, null)
-            cur.readStrings(k, vals, 0)
-          case _ => throw new IllegalStateException("unreachable: gated above")
+  /** COUNT, SUM, MIN or MAX of a vector's first `n` rows into `acc(i)`:
+    * long and double lanes sum and compare primitives (doubles in
+    * Spark's ordering, [[cmpDouble]]); string lanes only compare. */
+  private def foldColumn(acc: Acc, i: Int, op: String, v: ColumnVector, n: Int): Unit = {
+    val isMin = op == "min"
+    var j = 0
+    if (op == "count") {
+      var c = 0L
+      while (j < n) { if (!v.isNullAt(j)) c += 1; j += 1 }
+      acc.counts(i) += c
+    } else v.dataType match {
+      case LongType if op == "sum" =>
+        var t = 0L; var any = false
+        while (j < n) { if (!v.isNullAt(j)) { t = addLong(t, v.getLong(j)); any = true }; j += 1 }
+        if (any) mergeSum(acc, i, t)
+      case LongType =>
+        var ext = 0L; var any = false
+        while (j < n) {
+          if (!v.isNullAt(j)) {
+            val x = v.getLong(j)
+            if (!any || (if (isMin) x < ext else x > ext)) { ext = x; any = true }
+          }
+          j += 1
         }
-      }
-      needed.foreach { case (s, i) =>
-        if (longBuf.contains(s.col)) {
-          val (vals, nulls) = longBuf(s.col)
-          s.op match {
-            case "sum" =>
-              var t = 0L; var any = false; var j = 0
-              while (j < k) { if (!nulls(j)) { t = addLong(t, vals(j)); any = true }; j += 1 }
-              if (any) mergeSum(acc, i, t)
-            case "min" | "max" =>
-              val isMin = s.op == "min"
-              var ext = 0L; var any = false; var j = 0
-              while (j < k) {
-                if (!nulls(j) && (!any || (if (isMin) vals(j) < ext else vals(j) > ext))) {
-                  ext = vals(j); any = true
-                }
-                j += 1
-              }
-              if (any) mergeExt(acc, i, ext, isMin)
-            case "count" =>
-              var c = 0L; var j = 0
-              while (j < k) { if (!nulls(j)) c += 1; j += 1 }
-              acc.counts(i) += c
-            case _ => throw new IllegalStateException(s"bad long agg ${s.op}")
+        if (any) mergeExt(acc, i, ext, isMin)
+      case DoubleType if op == "sum" =>
+        var t = 0.0; var any = false
+        while (j < n) { if (!v.isNullAt(j)) { t += v.getDouble(j); any = true }; j += 1 }
+        if (any) mergeSum(acc, i, t)
+      case DoubleType =>
+        var ext = 0.0; var any = false
+        while (j < n) {
+          if (!v.isNullAt(j)) {
+            val x = v.getDouble(j)
+            if (!any || (if (isMin) cmpDouble(x, ext) < 0 else cmpDouble(x, ext) > 0)) {
+              ext = x; any = true
+            }
           }
-        } else if (dblBuf.contains(s.col)) {
-          val (vals, nulls) = dblBuf(s.col)
-          s.op match {
-            case "sum" =>
-              var t = 0.0; var any = false; var j = 0
-              while (j < k) { if (!nulls(j)) { t += vals(j); any = true }; j += 1 }
-              if (any) mergeSum(acc, i, t)
-            case "min" | "max" =>
-              val isMin = s.op == "min"
-              var ext = 0.0; var any = false; var j = 0
-              while (j < k) {
-                if (!nulls(j) && (!any ||
-                    (if (isMin) cmpDouble(vals(j), ext) < 0
-                     else cmpDouble(vals(j), ext) > 0))) {
-                  ext = vals(j); any = true
-                }
-                j += 1
-              }
-              if (any) mergeExt(acc, i, ext, isMin)
-            case "count" =>
-              var c = 0L; var j = 0
-              while (j < k) { if (!nulls(j)) c += 1; j += 1 }
-              acc.counts(i) += c
-            case other => throw new IllegalStateException(s"bad double agg $other")
-          }
-        } else {
-          val vals = strBuf(s.col)
-          s.op match {
-            case "min" | "max" =>
-              val isMin = s.op == "min"
-              var ext: UTF8String = null; var j = 0
-              while (j < k) {
-                val v = vals(j)
-                if (v != null && (ext == null ||
-                    (if (isMin) v.compareTo(ext) < 0 else v.compareTo(ext) > 0)))
-                  ext = v
-                j += 1
-              }
-              if (ext != null) mergeExt(acc, i, ext, isMin)
-            case "count" =>
-              var c = 0L; var j = 0
-              while (j < k) { if (vals(j) != null) c += 1; j += 1 }
-              acc.counts(i) += c
-            case other => throw new IllegalStateException(s"bad string agg $other")
-          }
+          j += 1
         }
-      }
-      remaining -= k
+        if (any) mergeExt(acc, i, ext, isMin)
+      case StringType if op != "sum" =>
+        var ext: UTF8String = null
+        while (j < n) {
+          if (!v.isNullAt(j)) {
+            val x = v.getUTF8String(j)
+            if (ext == null || (if (isMin) x.compareTo(ext) < 0 else x.compareTo(ext) > 0))
+              ext = x
+          }
+          j += 1
+        }
+        if (ext != null) mergeExt(acc, i, ext, isMin)
+      case other => throw new IllegalStateException(s"bad agg $op over $other")
     }
-    // the stats-served specs of this group fold in only after the
-    // decode succeeded (a false return must leave the acc untouched)
-    specs.zipWithIndex.foreach { case (s, i) =>
-      staged(i).foreach(applyStaged(acc, i, s, _))
-    }
-    true
   }
 
+  /** One file: its footer classifies each row group. A clean group
+    * folds in what its stats serve and decodes the rest of its specs on
+    * this file's open reader ([[GraftDecode.Group]], in
+    * [[GraftColumnar.BatchRows]] windows); a group the stats cannot
+    * decide decodes through [[GraftColumnarReader]] over a split covering
+    * exactly such groups (the row-group midpoint rule selects them
+    * alone), with its exact visibility and row filter. */
   private def computeFile(f: String, partStart: Long): Unit = {
+    import GraftFooterStats.{AllRows, NoRows}
     val hPath = new org.apache.hadoop.fs.Path(f)
-    // byte ranges of the groups the stats cannot decide, adjacent
-    // groups merged into one range
-    val fallback = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def fallBack(b: BlockMetaData): Unit = {
+    // byte ranges of the undecided groups, adjacent groups merged into
+    // one range
+    val undecided = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def decodeLater(b: BlockMetaData): Unit = {
       val (start, end) = (b.getStartingPos, b.getStartingPos + b.getCompressedSize)
-      if (fallback.nonEmpty && fallback.last._2 == start)
-        fallback(fallback.length - 1) = (fallback.last._1, end)
-      else fallback += ((start, end))
+      if (undecided.nonEmpty && undecided.last._2 == start)
+        undecided(undecided.length - 1) = (undecided.last._1, end)
+      else undecided += ((start, end))
     }
-    val aggCols = specs.map(_.col).filter(c => c.nonEmpty && c != "part_start").distinct
     val reader = new ParquetFileReader(
       HadoopInputFile.fromPath(hPath, conf),
       HadoopReadOptions.builder(conf, hPath).build())
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
-      // page IO for the columnar-accumulate path covers exactly the agg
-      // columns (stats-served and fallback groups never touch this
-      // reader's pages)
-      GraftDecode.project(reader, schema, aggCols.toSet)
-      val blocks = reader.getRowGroups
-      var bi = 0
-      while (bi < blocks.size()) {
-        val b = blocks.get(bi)
+      val blocks = reader.getRowGroups.asScala.toSeq
+      // per group, the specs its rows serve on this reader (empty: no
+      // page IO here)
+      val here: Seq[Seq[Int]] = blocks.map { b =>
         val vis = GraftFooterStats.seqVisibility(b, commits, asOf, needSeq)
         val filt = pushed.map(GraftFooterStats.classify(_, b))
-          .foldLeft(GraftFooterStats.AllRows: GraftFooterStats.Tri)(
-            GraftFooterStats.and)
-        if (vis == GraftFooterStats.NoRows || filt == GraftFooterStats.NoRows) {
-          reader.skipNextRowGroup()
-        } else if (vis == GraftFooterStats.AllRows &&
-            filt == GraftFooterStats.AllRows) {
-          val staged = specs.map(stageSpec(_, b, partStart)).toArray
-          if (staged.forall(_.isDefined)) {
-            // the whole group folds in from footer stats — zero page IO
-            val acc = accFor(partStart)
-            specs.zipWithIndex.foreach { case (s, i) =>
-              applyStaged(acc, i, s, staged(i).get)
-            }
-            reader.skipNextRowGroup()
-          } else {
-            val needed = specs.zipWithIndex.filter { case (_, i) => staged(i).isEmpty }
-            val pages = reader.readNextRowGroup()
-            if (pages == null || !tryColumnar(pages, schema, needed.toSeq,
-                staged, partStart))
-              fallBack(b)
-          }
+          .foldLeft(AllRows: GraftFooterStats.Tri)(GraftFooterStats.and)
+        if (vis == AllRows && filt == AllRows) {
+          val staged = specs.map(stageSpec(_, b, partStart))
+          val acc = accFor(partStart)
+          specs.indices.foreach(i => staged(i).foreach(applyStaged(acc, i, specs(i), _)))
+          specs.indices.filter(staged(_).isEmpty)
         } else {
-          reader.skipNextRowGroup()
-          fallBack(b)
+          if (vis != NoRows && filt != NoRows) decodeLater(b)
+          Nil
         }
-        bi += 1
+      }
+      if (here.exists(_.nonEmpty)) {
+        GraftDecode.project(reader, schema, here.flatten.map(specs(_).col).toSet)
+        blocks.zip(here).foreach { case (b, fromRows) =>
+          if (fromRows.isEmpty) reader.skipNextRowGroup()
+          else {
+            val cols = columnsOf(fromRows)
+            val group = GraftDecode.openGroup(reader, schema, cols, f)
+            var left = b.getRowCount
+            while (left > 0) {
+              val n = math.min(left, GraftColumnar.BatchRows.toLong).toInt
+              val byName = group.decode(n)
+              foldBatch(new ColumnarBatch(cols.map(byName.get(_).vec).toArray, n),
+                partStart, fromRows, cols)
+              left -= n
+            }
+          }
+        }
       }
     } finally reader.close()
-
-    // the undecided groups decode through the scan's own columnar reader
-    // over a split covering exactly their bytes (the row-group midpoint
-    // rule selects them alone), with its exact visibility and filters;
-    // the surviving rows fold into the partials one by one
-    fallback.foreach { case (start, end) =>
+    undecided.foreach { case (start, end) =>
+      val cols = columnsOf(specs.indices)
       val r = new GraftColumnarReader(conf, GraftFileSplit(f, start, end - start, partStart),
-        aggCols, pushed, commits, asOf)
-      try {
-        while (r.next()) {
-          val batch = r.get()
-          var row = 0
-          val get: String => Any =
-            c => GraftReaders.valueAt(batch.column(aggCols.indexOf(c)), row)
-          while (row < batch.numRows()) { accumulateRow(get, partStart); row += 1 }
-        }
-      } finally r.close()
+        cols, pushed, commits, asOf)
+      try while (r.next()) foldBatch(r.get(), partStart, specs.indices, cols)
+      finally r.close()
     }
   }
+
+  /** The columns the specs `fromRows` read (COUNT(*) and `part_start`
+    * read none). */
+  private def columnsOf(fromRows: Seq[Int]): Seq[String] =
+    fromRows.map(specs(_).col).filter(c => c.nonEmpty && c != "part_start").distinct
 
   override def next(): Boolean = {
     if (out == null) {

@@ -17,8 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The columnar (vectorized) read path — the ONE decoder of the DSv2
   * batch source: every non-MOR byte-range split and every MOR stripe
   * ([[GraftMorColumnarReader]]) reads here, and the aggregate pushdown
-  * decodes its stats-undecided row groups through the same reader.
-  * Columns decode straight into flat value arrays through whole-page
+  * ([[GraftAggReader]]) decodes its stats-undecided row groups through
+  * this reader (its clean groups' unserved columns through the same
+  * [[GraftDecode.Group]]). Page cursors are built only there. Columns
+  * decode straight into flat value arrays through whole-page
   * bulk decode ([[GraftPageCursor]] — dictionary, definition levels and
   * page shapes handled there), wrapped as Spark [[ColumnVector]]s: no
   * per-row object, no boxing, no `InternalRow` until Spark's own

@@ -388,17 +388,18 @@ private[sources] final class GraftScanBuilder(
     pinned.map(_.labelEq).getOrElse(GraftLabels.fromOptions(options))
 
   /** Aggregate pushdown (r13): global COUNT(*) / COUNT(col) / MIN /
-    * MAX collapse to a parquet FOOTER walk — each file contributes one
-    * partial row, row groups the stats fully decide contribute without
-    * page IO, undecidable ones fall back to exact row reads inside the
-    * same reader ([[GraftAggReader]]). Spark re-merges the partials
-    * (count → SUM), so correctness never depends on the stats.
+    * MAX collapse to a parquet FOOTER walk — each file bundle
+    * contributes one partial row, row groups the stats fully decide
+    * contribute without page IO, and the rest decode, exact, through
+    * the scan's own decoder into the same partials
+    * ([[GraftAggReader]]). Spark re-merges the partials (count → SUM),
+    * so correctness never depends on the stats.
     * GROUP BY part_start ALSO pushes — the one grouping the storage
     * layout answers for free (part_start is the split identity, so
     * per-partition partials need no extra IO). SUM (r14) and MIN/MAX
-    * over value/valueStr (r14) push too, served by the columnar-
-    * accumulate page walk — their footer stats are never trusted
-    * (double stats are NaN-hostile, binary stats truncate). Rejected
+    * over value/valueStr (r14) push too, served from decoded pages —
+    * their footer stats are never trusted (double stats are
+    * NaN-hostile, binary stats truncate). Rejected
     * (Spark then aggregates the normal scan): any other group-by,
     * DISTINCT, expression arguments, and MOR tables (counts/extrema
     * are post-merge properties). */
@@ -421,9 +422,9 @@ private[sources] final class GraftScanBuilder(
     if (declared.exists(_.overrideOld) || labelEq.nonEmpty) return false
     // value/valueStr extrema push since r14 — NOT from footer stats
     // (double stats are NaN-hostile and binary stats truncate; the
-    // stats stager refuses both shapes), but through the columnar-
-    // accumulate page walk, which applies Spark's exact double
-    // ordering (NaN greatest, -0.0 == 0.0) per decoded value
+    // stats stager refuses both shapes), but from decoded pages, whose
+    // fold applies Spark's exact double ordering (NaN greatest,
+    // -0.0 == 0.0) per value
     val MinMaxable = Set("name", "labels_str", "time", "series_id", "part_start",
       "value", "valueStr")
     // COUNT(col) needs the column's parquet NULL counts, which exist
@@ -433,10 +434,10 @@ private[sources] final class GraftScanBuilder(
     // Since value/valueStr extrema joined MinMaxable (r14) the two
     // surfaces coincide: every flat column counts and min/maxes.
     val Countable = MinMaxable
-    // SUM (r14) has no footer form, but the agg reader page-decodes the
+    // SUM (r14) has no footer form, but the agg reader decodes the
     // column and emits one partial per split — `SELECT sum(value)`
-    // becomes a single-column page walk with no batch pipeline and no
-    // wide exchange. Spark rewrites a partial AVG to SUM+COUNT itself.
+    // reads one column inside the scan and plans no wide exchange.
+    // Spark rewrites a partial AVG to SUM+COUNT itself.
     // Long sums accumulate with addExact (ANSI: overflow must throw,
     // never wrap silently).
     val Summable = Set("time", "series_id", "part_start", "value")
@@ -868,48 +869,34 @@ private[sources] final class GraftScan(
     (lo, hi)
   }
 
-  /** Exact part_start IN-sets among the pushed conjuncts: a partition
-    * dir survives only if it is in EVERY set (r15 — the day-list scan
-    * shape prunes whole directories, not just row groups). */
-  private def partStartInSets(): Seq[Set[Long]] = {
-    val out = ArrayBuffer.empty[Set[Long]]
-    def walk(f: Filter): Unit = f match {
-      case In("part_start", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Long]) =>
-        out += vs.map(_.asInstanceOf[Long]).toSet
-      case And(l, r) => walk(l); walk(r)
-      case _ => ()
-    }
-    pushed.foreach(walk)
-    out.toSeq
-  }
-
-  /** Partition dirs surviving pruning: explicit `part_start` bounds AND
-    * the production time→partition clamp (`readRawImpl`: partitions with
-    * `part_start` in [floor(timeLo/interval)*interval, timeHi]). */
+  /** Partition dirs surviving pruning: every pushed conjunct through the
+    * one split predicate ([[survives]], which runtime filtering also
+    * uses) AND the production time→partition clamp (`readRawImpl`:
+    * partitions with `part_start` in [floor(timeLo/interval)*interval,
+    * timeHi]). */
   private def prunedPartitions(fs: FileSystem): Seq[(Long, Path)] = {
     val base = new Path(s"$tablePath/raw")
     if (!fs.exists(base)) return Nil
     val (tLo, tHi) = boundsFor("time")
-    val (pLoF, pHiF) = boundsFor("part_start")
     // the time→partition LOWER clamp floors timeLo to a partition
     // boundary — correct only under the table's TRUE interval. Without
     // a `.schema` declaration (legacy table, no append since), flooring
     // with the assumed default could land ABOVE the real partition
     // start and silently prune partitions that hold matching rows
     // (r12 review) — so an undeclared table skips the derived lower
-    // clamp and prunes on explicit `part_start` bounds plus the upper
+    // clamp and prunes on explicit `part_start` conjuncts plus the upper
     // clamp only (`part_start <= timeHi` holds under ANY interval:
     // a partition starting after timeHi cannot contain time <= timeHi).
-    val pLoTime =
+    val lo =
       if (tLo == Long.MinValue || declared.isEmpty) Long.MinValue
       else math.floorDiv(tLo, config.partitionIntervalMs) * config.partitionIntervalMs
-    val lo = math.max(pLoF, pLoTime)
-    val hi = math.min(pHiF, tHi)
-    val inSets = partStartInSets()
+    val inSets = hoistInSets(pushed)
     fs.listStatus(base).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("part_start="))
       .map(p => p.getName.stripPrefix("part_start=").toLong -> p)
-      .filter { case (s, _) => s >= lo && s <= hi && inSets.forall(_.contains(s)) }
+      .filter { case (s, _) =>
+        s >= lo && s <= tHi && pushed.forall(survives(_, s, None, inSets))
+      }
       .sortBy(_._1)
   }
 
@@ -1231,7 +1218,9 @@ private[sources] final class GraftScan(
 
 /** Readers per split: file splits and MOR stripes are served columnar
   * ([[GraftColumnarReader]], [[GraftMorColumnarReader]]); the one row
-  * reader left is the aggregate pushdown's partial row per bundle. */
+  * reader is the aggregate pushdown's partials per bundle
+  * ([[GraftAggReader]]), whose stats-undecided row groups also read
+  * through [[GraftColumnarReader]]. */
 private[sources] final class GraftReaderFactory(
     private[sources] val conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
     requested: Seq[String],
@@ -1387,9 +1376,8 @@ private[sources] object GraftReaders {
     committed && (asOf.isEmpty || l == null || l <= asOf.get)
   }
 
-  /** A decoded vector's cell as the catalyst value [[eval]] and the
-    * aggregate fold compare: boxed long/double/boolean, UTF8String, or
-    * null. */
+  /** A decoded vector's cell as the catalyst value [[eval]] compares:
+    * boxed long/double/boolean, UTF8String, or null. */
   def valueAt(v: org.apache.spark.sql.vectorized.ColumnVector, i: Int): Any =
     if (v.isNullAt(i)) null
     else v.dataType match {

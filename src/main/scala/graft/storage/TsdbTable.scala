@@ -1181,26 +1181,37 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   }
 
   /** Upsert new metric names into the names dim (reference S9, first-write
-    * PutItem — `store.go:189-202`); no-op when nothing is new. */
+    * PutItem — `store.go:189-202`); no-op when nothing is new. The swap
+    * (write `names.tmp` → delete `names/` → rename) is finished here when
+    * a crash interrupted it, the way [[recoverSeriesEnc]] finishes the
+    * sidecar's; a `names/` without `_SUCCESS` (an interrupted in-place
+    * [[refreshNames]] overwrite) is rebuilt from the merged view. Read
+    * as "no names yet", either state would shrink the dimension to this
+    * batch's names. */
   private def mergeNames(batchNames: Set[String]): Unit = {
     import spark.implicits._
-    val fs0 = org.apache.hadoop.fs.FileSystem.get(
+    val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(namesPath), spark.sparkContext.hadoopConfiguration)
+    val dir = new org.apache.hadoop.fs.Path(namesPath)
+    val tmp = new org.apache.hadoop.fs.Path(namesPath + ".tmp")
+    if (!fs.exists(dir)) {
+      // a crash between the delete and the rename: the committed tmp
+      // holds every name — finish the swap forward
+      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) fs.rename(tmp, dir)
+    } else if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+      // the batch is committed, so the merged view already holds its names
+      refreshNames()
+      return
+    } else if (fs.exists(tmp)) fs.delete(tmp, true) // stale: the live dir is authoritative
     val existing: Set[String] =
-      if (!fs0.exists(new org.apache.hadoop.fs.Path(namesPath))) Set.empty
-      // a crashed prior write can leave an unreadable dir — rebuild from
-      // the batch (the overwrite below self-heals it)
-      else try spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath)
+      if (!fs.exists(dir)) Set.empty // a fresh table: no names yet
+      else spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath)
         .collect().map(_.getString(0)).toSet
-      catch { case _: Exception => Set.empty }
     if (!batchNames.subsetOf(existing)) {
       (existing ++ batchNames).toSeq.sorted.toDF("name")
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(namesPath + ".tmp")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(namesPath), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(namesPath), true)
-      fs.rename(new org.apache.hadoop.fs.Path(namesPath + ".tmp"),
-        new org.apache.hadoop.fs.Path(namesPath))
+      fs.delete(dir, true)
+      fs.rename(tmp, dir)
     }
   }
 
@@ -2189,11 +2200,12 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     }
     if (!hasPartitions(rawPath)) {
       // everything deleted: drop the derived tables too — INCLUDING the
-      // sidecar swap leftovers, or recoverSeriesEnc would resurrect the
-      // wiped type pins from a stale .tmp/.old on the next append. The
-      // leftovers go FIRST: a crash mid-wipe then leaves the live dir
-      // (harmless — the wipe re-runs), never a resurrectable orphan .tmp
-      Seq(seriesEncPath + ".tmp", seriesEncPath + ".old",
+      // sidecar and names swap leftovers, or recoverSeriesEnc and
+      // mergeNames would resurrect the wiped type pins and names from a
+      // stale .tmp/.old on the next append. The leftovers go FIRST: a
+      // crash mid-wipe then leaves the live dir (harmless — the wipe
+      // re-runs), never a resurrectable orphan .tmp
+      Seq(seriesEncPath + ".tmp", seriesEncPath + ".old", namesPath + ".tmp",
           rollupPath, namesPath, seriesEncPath).foreach(p =>
         fs.delete(new org.apache.hadoop.fs.Path(p), true))
       config.preAggregates.foreach(s =>

@@ -938,22 +938,34 @@ class GraftSourceSpec extends SparkSuite {
         val f = col("name") === "m1" && col("time") < Base + 8 * Day
         assert(rows(ds.filter(f)) == rows(raw.filter(f)),
           s"[$label] filtered row set diverged")
-        // pushed aggregates across the same page shapes (sum(time) rides
-        // the r14 columnar-accumulate path over every encoding lane)
+        // pushed aggregates across the same page shapes: the decoded
+        // groups fold their long (sum/min/max time), string (name) and
+        // double (value) lanes over every encoding
         def aggs(d: DataFrame) = d.agg(count(lit(1)), count(col("valueStr")),
-          min("time"), max("time"), min("name"), max("name"), sum("time"))
+          min("time"), max("time"), min("name"), max("name"), sum("time"),
+          min("value"), max("value"))
         // the reference folds collected rows: an aggregate over `raw`
         // could push into the reader under test
         def fold(rs: Seq[Row]) = {
           val times = rs.map(_.getAs[Long]("time"))
           val names = rs.map(_.getAs[String]("name"))
+          val values = rs.map(_.getAs[Double]("value"))
           Row(rs.length.toLong, rs.count(r => !r.isNullAt(r.fieldIndex("valueStr"))).toLong,
-            times.min, times.max, names.min, names.max, times.sum)
+            times.min, times.max, names.min, names.max, times.sum,
+            values.reduce(_ min _), values.reduce(_ max _))
+        }
+        // double sums agree within partial-order tolerance (as the r13 fuzz)
+        def sumValue(d: DataFrame, rs: Seq[Row]): Unit = {
+          val got = d.agg(sum("value")).head().getDouble(0)
+          val want = rs.map(_.getAs[Double]("value")).sum
+          assert(math.abs(got - want) <= 1e-9 * math.max(1.0, math.abs(want)),
+            s"[$label] sum(value) diverged: $got vs $want")
         }
         val rawRows = raw.collect().toSeq
         val got = aggs(ds).head()
         val want = fold(rawRows)
         assert(got == want, s"[$label] aggregates diverged: $got vs $want")
+        sumValue(ds, rawRows)
         // the same aggregates under a time cut inside a row group: the
         // stats cannot decide that group, so the aggregate reader folds
         // its rows through this shape's decode lanes
@@ -965,6 +977,7 @@ class GraftSourceSpec extends SparkSuite {
         assert(cutRows.nonEmpty && cutRows.length < rawRows.length)
         val wantCut = fold(cutRows)
         assert(gotCut == wantCut, s"[$label] filtered aggregates diverged: $gotCut vs $wantCut")
+        sumValue(ds.filter(col("time") < cut), cutRows)
         graft.core.Fs.rmTree(new java.io.File(dir))
       }
     } finally {

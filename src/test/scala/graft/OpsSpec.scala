@@ -329,6 +329,12 @@ class DedupSpec extends SparkSuite {
     // runs
     withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
       assert(Dedup.nearDupClusters(longChain).rdd.getNumPartitions > 1)
+      // the superseded checkpoints (per-partition roots, edge table,
+      // every propagation round) are released: a call keeps only its
+      // result's
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      Dedup.nearDupClusters(longChain)
+      assert(spark.sparkContext.getPersistentRDDs.size - persisted <= 1)
       check()
     }
     // int ids come back as ints

@@ -396,6 +396,32 @@ class TsdbTableSpec extends SparkSuite {
     assert(t.readRaw(0, Long.MaxValue / 2).count() == 2)
   }
 
+  test("names dimension survives an interrupted swap or overwrite: the next append keeps every name") {
+    // crash states of the names writes, staged by hand after two appends:
+    // (1) the swap died between deleting names/ and renaming the
+    // committed names.tmp in; (2) an in-place overwrite (refreshNames)
+    // died leaving names/ with only its _temporary dir. Read as "no
+    // names yet", either state shrank the dimension to the next batch
+    val states = Seq[(String, java.io.File => Unit)](
+      "committed tmp, no names/" -> { names =>
+        assert(names.renameTo(new java.io.File(names.getPath + ".tmp")))
+      },
+      "names/ holding only _temporary" -> { names =>
+        graft.core.Fs.rmTree(names)
+        assert(new java.io.File(names, "_temporary/0").mkdirs())
+      })
+    for ((label, crash) <- states) {
+      val t = mkTable()
+      t.append(samples(("cpu", "a", Base + 1, 1.0)))
+      t.append(samples(("mem", "a", Base + 2, 2.0)))
+      crash(new java.io.File(t.path, "names"))
+      t.append(samples(("disk", "a", Base + 3, 3.0)))
+      assert(t.names().collect().map(_.getString(0)).toSeq == Seq("cpu", "disk", "mem"),
+        label)
+      assert(!new java.io.File(t.path, "names.tmp").exists(), label)
+    }
+  }
+
   test("single-writer contract: a held _writer lock rejects mutations; stale leases break (store.go:449-465)") {
     val dir = Files.createTempDirectory("tsdb_lock").toString
     val t = new TsdbTable(spark, dir, TsdbConfig())
