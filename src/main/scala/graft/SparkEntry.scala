@@ -69,12 +69,14 @@ object SparkEntry {
   private def rmTree(f: java.io.File): Unit = graft.core.Fs.rmTree(f)
 
   /** One TsdbTable per (JVM, sfDir) built from the events samples —
-    * exercises the real storage path (append → rollup → planner). */
+    * exercises the real storage path (append → rollup → planner). Its
+    * temp dir is deleted at JVM exit. */
   private val tables = scala.collection.concurrent.TrieMap.empty[String, Tsdb]
   private type Tsdb = graft.storage.TsdbTable
   private def storedTable(s: SparkSession, dir: String): Tsdb =
     tables.getOrElseUpdate(dir, {
       val path = java.nio.file.Files.createTempDirectory("graft_tbl").toString
+      sys.addShutdownHook(rmTree(new java.io.File(path)))
       val cfg = graft.storage.TsdbConfig(rollupIntervalMs = 6 * Hour,
         preAggregates = Seq(Seq("user")))
       // self-describing: the DSv2 batch source (tsdb_dsv2_read) reads

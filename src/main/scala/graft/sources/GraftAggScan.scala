@@ -3,10 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -15,11 +12,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-group classification from parquet FOOTER stats, shared by the
-  * columnar reader ([[GraftColumnarReader]]: skip a group, serve it
-  * whole, or test its rows) and the aggregate pushdown
-  * ([[GraftAggReader]]: skip a group, fold it in from stats, or hand it
-  * to the columnar reader). Everything here is conservative: a chunk
+/** Row-group classification from parquet FOOTER stats, done once per
+  * group by the shared row-group walk ([[GraftRowGroups]]): skip a
+  * group, serve it whole, or test its rows; the aggregate pushdown
+  * ([[GraftAggReader]]) also folds a whole-served group in from its
+  * stats. Everything here is conservative: a chunk
   * with missing/untyped stats classifies as [[SomeRows]] (inconclusive)
   * and the caller reads the rows — footer stats ACCELERATE, they never
   * decide what they cannot prove. */
@@ -178,13 +175,14 @@ private[sources] final case class GraftAggSplit(files: Seq[(String, Long)])
   * group-by the storage layout answers for free), one row PER time
   * partition in the bundle. Spark's rewritten final aggregate merges the
   * partials (count → SUM, min → MIN, max → MAX, sum → SUM), re-grouping
-  * when grouped. A row group that is all-visible and all-matching
-  * contributes every spec its stats serve with no page IO (`count(*)`
-  * over a table is a footer walk); its other specs decode their columns
-  * through the one page decoder ([[GraftDecode]]). A group the stats
-  * cannot decide reads through the normal scan's own columnar reader,
-  * with its exact visibility and row filter. Every decoded batch goes
-  * through the one fold, [[foldBatch]]. */
+  * when grouped. Each file is one pass of the shared row-group walk
+  * ([[GraftRowGroups]]) on one open reader. A row group that is
+  * all-visible and all-matching contributes every spec its stats serve
+  * with no page IO (`count(*)` over a table is a footer walk) and
+  * decodes only the columns of its other specs; a group the stats
+  * cannot decide decodes every spec column, compacted by its exact
+  * visibility and row filter. Every decoded batch goes through the one
+  * fold, [[foldBatch]]. */
 private[sources] final class GraftAggReader(
     conf: Configuration,
     split: GraftAggSplit,
@@ -206,8 +204,6 @@ private[sources] final class GraftAggReader(
 
   private var out: Iterator[InternalRow] = _
   private var row: InternalRow = _
-
-  private val needSeq = commits.nonEmpty || asOf.nonEmpty
 
   /** Partial state — one per output row (global: exactly one; grouped:
     * one per part_start, created on first touch so empty partitions
@@ -411,73 +407,32 @@ private[sources] final class GraftAggReader(
     }
   }
 
-  /** One file: its footer classifies each row group. A clean group
-    * folds in what its stats serve and decodes the rest of its specs on
-    * this file's open reader ([[GraftDecode.Group]], in
-    * [[GraftColumnar.BatchRows]] windows); a group the stats cannot
-    * decide decodes through [[GraftColumnarReader]] over a split covering
-    * exactly such groups (the row-group midpoint rule selects them
-    * alone), with its exact visibility and row filter. */
+  /** One file, one pass through [[GraftRowGroups]]. A clean group
+    * (all-visible, all-matching) folds in every spec its stats serve
+    * with no page IO and decodes only the columns of its other specs; a
+    * group the stats cannot decide decodes every spec column, compacted
+    * by its exact visibility and row filter. */
   private def computeFile(f: String, partStart: Long): Unit = {
-    import GraftFooterStats.{AllRows, NoRows}
-    val hPath = new org.apache.hadoop.fs.Path(f)
-    // byte ranges of the undecided groups, adjacent groups merged into
-    // one range
-    val undecided = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def decodeLater(b: BlockMetaData): Unit = {
-      val (start, end) = (b.getStartingPos, b.getStartingPos + b.getCompressedSize)
-      if (undecided.nonEmpty && undecided.last._2 == start)
-        undecided(undecided.length - 1) = (undecided.last._1, end)
-      else undecided += ((start, end))
-    }
-    val reader = new ParquetFileReader(
-      HadoopInputFile.fromPath(hPath, conf),
-      HadoopReadOptions.builder(conf, hPath).build())
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val blocks = reader.getRowGroups.asScala.toSeq
-      // per group, the specs its rows serve on this reader (empty: no
-      // page IO here)
-      val here: Seq[Seq[Int]] = blocks.map { b =>
-        val vis = GraftFooterStats.seqVisibility(b, commits, asOf, needSeq)
-        val filt = pushed.map(GraftFooterStats.classify(_, b))
-          .foldLeft(AllRows: GraftFooterStats.Tri)(GraftFooterStats.and)
-        if (vis == AllRows && filt == AllRows) {
-          val staged = specs.map(stageSpec(_, b, partStart))
+    val groups = new GraftRowGroups(conf, f, None, pushed, Nil, commits, asOf,
+      new GraftReaders.LabelTest(Nil, None), partStart)
+    // the specs the open group folds from its decoded rows
+    var fromRows: Seq[Int] = Nil
+    try while (groups.nextGroup { (b, clean) =>
+        fromRows = if (!clean) specs.indices else {
           val acc = accFor(partStart)
-          specs.indices.foreach(i => staged(i).foreach(applyStaged(acc, i, specs(i), _)))
-          specs.indices.filter(staged(_).isEmpty)
-        } else {
-          if (vis != NoRows && filt != NoRows) decodeLater(b)
-          Nil
+          specs.indices.filter(i => stageSpec(specs(i), b, partStart) match {
+            case Some(v) => applyStaged(acc, i, specs(i), v); false
+            case None => true
+          })
         }
+        if (fromRows.isEmpty) None else Some(columnsOf(fromRows))
+      }) {
+      val cols = columnsOf(fromRows)
+      while (groups.remaining > 0) {
+        val w = groups.window(Long.MaxValue)
+        if (w.k > 0) foldBatch(w.batch(cols.map(w.vec).toArray), partStart, fromRows, cols)
       }
-      if (here.exists(_.nonEmpty)) {
-        GraftDecode.project(reader, schema, here.flatten.map(specs(_).col).toSet)
-        blocks.zip(here).foreach { case (b, fromRows) =>
-          if (fromRows.isEmpty) reader.skipNextRowGroup()
-          else {
-            val cols = columnsOf(fromRows)
-            val group = GraftDecode.openGroup(reader, schema, cols, f)
-            var left = b.getRowCount
-            while (left > 0) {
-              val n = math.min(left, GraftColumnar.BatchRows.toLong).toInt
-              val byName = group.decode(n)
-              foldBatch(new ColumnarBatch(cols.map(byName.get(_).vec).toArray, n),
-                partStart, fromRows, cols)
-              left -= n
-            }
-          }
-        }
-      }
-    } finally reader.close()
-    undecided.foreach { case (start, end) =>
-      val cols = columnsOf(specs.indices)
-      val r = new GraftColumnarReader(conf, GraftFileSplit(f, start, end - start, partStart),
-        cols, pushed, commits, asOf)
-      try while (r.next()) foldBatch(r.get(), partStart, specs.indices, cols)
-      finally r.close()
-    }
+    } finally groups.close()
   }
 
   /** The columns the specs `fromRows` read (COUNT(*) and `part_start`

@@ -7,6 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.sources.Filter
@@ -14,17 +15,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The columnar (vectorized) read path — the ONE decoder of the DSv2
-  * batch source: every non-MOR byte-range split and every MOR stripe
-  * ([[GraftMorColumnarReader]]) reads here, and the aggregate pushdown
-  * ([[GraftAggReader]]) decodes its stats-undecided row groups through
-  * this reader (its clean groups' unserved columns through the same
-  * [[GraftDecode.Group]]). Page cursors are built only there. Columns
-  * decode straight into flat value arrays through whole-page
-  * bulk decode ([[GraftPageCursor]] — dictionary, definition levels and
-  * page shapes handled there), wrapped as Spark [[ColumnVector]]s: no
-  * per-row object, no boxing, no `InternalRow` until Spark's own
-  * ColumnarToRow (which whole-stage-codegens over the batch).
+/** The columnar (vectorized) read path of the DSv2 batch source. One
+  * row-group walk ([[GraftRowGroups]]) serves every TSDB file reader:
+  * each non-MOR byte-range split ([[GraftColumnarReader]]), each file of
+  * a MOR stripe ([[GraftMorColumnarReader]]) and each file of an
+  * aggregate pushdown ([[GraftAggReader]]). It classifies, projects and
+  * compacts row groups, and decodes them through the one page decoder,
+  * [[GraftDecode]]; page cursors are built only there. Columns decode
+  * straight into flat value arrays through whole-page bulk decode
+  * ([[GraftPageCursor]] — dictionary, definition levels and page shapes
+  * handled there), wrapped as Spark [[ColumnVector]]s: no per-row
+  * object, no boxing, no `InternalRow` until Spark's own ColumnarToRow
+  * (which whole-stage-codegens over the batch).
   *
   * Every RawSchema column vectorizes, including the `labels` MAP: its
   * two leaf cursors reassemble per-row entry runs from
@@ -40,21 +42,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[GraftFooterStats.classify]] — no-match groups skip without IO,
   * all-match groups serve whole), and only the undecidable groups
   * evaluate rows — against the DECODED VECTORS, folded into the same
-  * selection indirection the visibility path uses. "Accepted = fully
-  * consumed" holds exactly. A label filter rides the same pass: its
-  * resolved series set skips row groups by stats and tests rows by hash
-  * lookup; an unresolved one (legacy sidecar, too many matches) decodes
+  * selection the visibility test uses. "Accepted = fully consumed"
+  * holds exactly. A label filter rides the same pass: its resolved
+  * series set skips row groups by stats and tests rows by hash lookup;
+  * an unresolved one (legacy sidecar, too many matches) decodes
   * `labels` and tests each row's map ([[GraftReaders.labelsMatch]]).
   *
-  * Committed-batch visibility stays EXACT: `__seq` is constant per file
-  * (stamped per append batch, RLE'd), so each row group classifies from
-  * its footer stats as all-visible / all-invisible / mixed; mixed groups
-  * (a mid-chunk seq change — never produced by the writer, but the
-  * reader must not trust that) decode `__seq` too and compact through
-  * the selection, never serving an uncommitted row.
-  *
   * A pushed LIMIT counts emitted rows per split: a window whose rows
-  * all pass decodes no more than the rows still owed, and a residue
+  * all pass decodes no more than the rows still owed, and a tested
   * window stops its selection once the limit is met.
   */
 private[sources] object GraftColumnar {
@@ -168,8 +163,8 @@ private[sources] final class GraftMapVec(
       keys, vals, offsets(i), offsets(i + 1) - offsets(i))
 }
 
-/** Selection indirection for mixed-visibility groups: O(1) wrap, no
-  * value copies — row i reads the base vector at sel(i). */
+/** Selection indirection for a compacted window: O(1) wrap, no value
+  * copies — row i reads the base vector at sel(i). */
 private[sources] final class GraftSelVec(base: ColumnVector, sel: Array[Int])
   extends ColumnVector(base.dataType) {
   override def close(): Unit = ()
@@ -204,9 +199,9 @@ private[sources] final class GraftSelVec(base: ColumnVector, sel: Array[Int])
 
 // ------------------------------------------------------------ bulk decode
 
-/** Shared page→vector decode (r15): one definition for the non-MOR
-  * columnar reader and the MOR columnar merge, so the two paths can
-  * never drift on levels/dictionary/page-shape handling. */
+/** Shared page→vector decode (r15): one definition under the one
+  * row-group walk ([[GraftRowGroups]]), so no reader can drift on
+  * levels/dictionary/page-shape handling. */
 private[sources] object GraftDecode {
 
   /** A decoded flat column: the wrapping vector plus raw primitive
@@ -278,38 +273,20 @@ private[sources] object GraftDecode {
       new GraftStringVec(vals.toArray, vals.length), n)
   }
 
-  /** Narrow the reader's page IO to `cols` (the union of everything any
-    * row group of the read can decode): `readNextRowGroup` then reads
-    * chunks of these columns only. Columns the file lacks are ignored. */
+  /** Narrow the reader's page IO to `cols` for its NEXT row group:
+    * `readNextRowGroup` then reads chunks of these columns only. Columns
+    * the file lacks are ignored. */
   def project(reader: ParquetFileReader, fileSchema: MessageType,
-              cols: Set[String]): Unit = {
-    val fields = (0 until fileSchema.getFieldCount)
-      .map(fileSchema.getType).filter(t => cols(t.getName))
-    if (fields.nonEmpty)
-      reader.setRequestedSchema(new MessageType(fileSchema.getName, fields: _*))
-  }
-
-  /** Open the reader's NEXT row group for decoding `cols`. When the file
-    * carries none of them (a count-only read, or a legacy file missing
-    * every requested column) the group is skipped without page IO and
-    * every column reads as NULL. */
-  def openGroup(reader: ParquetFileReader, fileSchema: MessageType,
-                cols: Seq[String], file: String): Group =
-    if (cols.exists(fileSchema.containsField)) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null)
-        throw new IllegalStateException(s"$file: row group vanished mid-read")
-      new Group(fileSchema, pages, cols, file)
-    } else {
-      reader.skipNextRowGroup()
-      new Group(fileSchema, null, cols, file)
-    }
+              cols: Seq[String]): Unit =
+    reader.setRequestedSchema(fileSchema.getColumns.asScala
+      .filter(d => cols.contains(d.getPath()(0))).asJava)
 
   /** The page cursors of one row group for `cols`: flat leaves decode
     * through [[flat]], the labels map through its key/value leaf pair
     * ([[map]]), and a column the file lacks reads as all NULL (legacy
     * files predating `__seq`/`__del`/`valueStr`). Descriptors come from
-    * the FILE schema; `pages` holds the [[project]]ed union. */
+    * the FILE schema; `pages` holds the [[project]]ed columns, or is null
+    * when the file carries none of them. */
   final class Group(fileSchema: MessageType, pages: PageReadStore,
                     cols: Seq[String], file: String) {
     private val descs =
@@ -351,13 +328,172 @@ private[sources] object GraftDecode {
   }
 }
 
+// --------------------------------------------------------- row-group walk
+
+/** The ONE walk over a TSDB file's row groups, under every reader: a
+  * flat split ([[GraftColumnarReader]]), each file of a MOR stripe
+  * ([[GraftMorColumnarReader]]) and each file of an aggregate pushdown
+  * ([[GraftAggReader]]). It owns the file's one [[ParquetFileReader]],
+  * limited to a split's byte `range` when given (the standard parquet
+  * split protocol: the row groups whose midpoint falls in it). Per row
+  * group it
+  *  - classifies once from footer stats: committed-batch visibility
+  *    ([[GraftFooterStats.seqVisibility]]) and every pushed filter, the
+  *    label's `series_id IN` and the caller's `keyFilters`
+  *    ([[GraftFooterStats.classify]]; key filters only skip groups);
+  *  - skips a group no row of which can pass without IO;
+  *  - opens a kept group with exactly the columns it decodes: the
+  *    caller's, `__seq` only when its visibility is mixed, the columns of
+  *    the filters its stats left undecided and the label test's column
+  *    ([[GraftDecode.project]] per group, so `readNextRowGroup` reads
+  *    those chunks only);
+  *  - decodes [[GraftColumnar.BatchRows]] windows and compacts them into
+  *    one selection: the caller's per-row predicate first, then
+  *    visibility (over the decoded `__seq` longs), the label test and the
+  *    undecided filters.
+  *
+  * A group whose stats decide visibility and every pushed filter, with
+  * no label test, is CLEAN: all its rows pass, and its windows carry no
+  * selection unless the caller passes a predicate.
+  *
+  * Committed-batch visibility stays exact: `__seq` is constant per file
+  * (stamped per append batch, RLE'd), so a group classifies all-visible
+  * or all-invisible from its stats; a mixed one (a mid-chunk seq change,
+  * never produced by the writer, but the reader must not trust that)
+  * tests each row, never serving an uncommitted one. */
+private[sources] final class GraftRowGroups(
+    conf: Configuration,
+    file: String,
+    range: Option[(Long, Long)],
+    pushed: Array[Filter],
+    keyFilters: Seq[Filter],
+    commits: Option[(Long, Set[Long])],
+    asOf: Option[Long],
+    label: GraftReaders.LabelTest,
+    partStart: Long) {
+  import GraftFooterStats.{NoRows, SomeRows}
+
+  private val reader: ParquetFileReader = {
+    val hPath = new org.apache.hadoop.fs.Path(file)
+    val b = HadoopReadOptions.builder(conf, hPath).useColumnIndexFilter(false)
+    range.foreach { case (start, end) => b.withRange(start, end) }
+    new ParquetFileReader(HadoopInputFile.fromPath(hPath, conf), b.build())
+  }
+  private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
+  private val needSeq = commits.nonEmpty || asOf.nonEmpty
+  private val prepared = GraftReaders.prepare(pushed)
+  // pushed filters FIRST: the residue takes the first `pushed.length` verdicts
+  private val classified = pushed ++ label.seriesIn ++ keyFilters
+  private val blocks = reader.getRowGroups.iterator()
+
+  // ---- the open group --------------------------------------------------
+  private var group: GraftDecode.Group = _
+  private var left = 0L
+  private var mixed = false
+  /** prepared filters the group's stats could NOT decide: the only ones
+    * rows evaluate (an AllRows filter holds for every row of the group) */
+  private var residue: Array[Filter] = Array.empty
+  private var tested = false
+
+  /** Rows of the open group not yet decoded. */
+  def remaining: Long = left
+
+  /** Move to the next row group that may hold rows and open it for the
+    * columns `cols(block, clean)` names; `None` skips the group. False
+    * at the end of the file or range. */
+  def nextGroup(cols: (BlockMetaData, Boolean) => Option[Seq[String]]): Boolean = {
+    while (blocks.hasNext) {
+      val block = blocks.next()
+      val vis = GraftFooterStats.seqVisibility(block, commits, asOf, needSeq)
+      val tris = classified.map(GraftFooterStats.classify(_, block))
+      val open =
+        if (block.getRowCount == 0 || vis == NoRows || tris.contains(NoRows)) None
+        else {
+          mixed = vis == SomeRows
+          residue = prepared.zip(tris).collect { case (f, SomeRows) => f }
+          tested = mixed || residue.nonEmpty || label.active
+          cols(block, !tested).map(c => (c ++ (if (mixed) Seq("__seq") else Nil) ++
+            residue.flatMap(_.references).filterNot(_ == "part_start") ++
+            label.cols).distinct)
+        }
+      // a group that needs no column the file carries (a count-only read,
+      // or a legacy file missing every requested column) reads no pages,
+      // and every column reads as NULL
+      if (open.exists(_.exists(fileSchema.containsField))) {
+        GraftDecode.project(reader, fileSchema, open.get)
+        val pages = reader.readNextRowGroup()
+        if (pages == null)
+          throw new IllegalStateException(s"$file: row group vanished mid-read")
+        group = new GraftDecode.Group(fileSchema, pages, open.get, file)
+      } else {
+        reader.skipNextRowGroup()
+        group = open.map(new GraftDecode.Group(fileSchema, null, _, file)).orNull
+      }
+      if (group != null) { left = block.getRowCount; return true }
+    }
+    false
+  }
+
+  /** Decode the open group's next window and compact it. At most `cap`
+    * rows are kept (a pushed LIMIT): a window none of whose rows is
+    * tested decodes no more than that, a tested one decodes a full
+    * window and stops its selection there. `rowOk` is the caller's
+    * per-row predicate over the window's columns, tested first on every
+    * row. */
+  def window(cap: Long,
+             rowOk: java.util.HashMap[String, GraftDecode.Flat] => Int => Boolean = null)
+      : GraftRowGroups.Window = {
+    val compact = tested || rowOk != null
+    val n = math.min(left,
+      math.min(GraftColumnar.BatchRows.toLong, if (compact) Long.MaxValue else cap)).toInt
+    left -= n
+    val byName = group.decode(n)
+    if (!compact) return new GraftRowGroups.Window(byName, null, n)
+    val pred = if (rowOk == null) null else rowOk(byName)
+    val seq = byName.get("__seq")
+    val rowLabel = label.forBatch(byName)
+    var curRow = 0
+    val getter: String => Any = c => GraftReaders.valueAt(byName.get(c).vec, curRow)
+    val sel = new Array[Int](n)
+    var k = 0
+    var i = 0
+    while (i < n && k < cap) {
+      curRow = i
+      // legacy NULL `__seq` rows predate every seq: always visible
+      if ((pred == null || pred(i)) &&
+          (!mixed || seq.nulls(i) || GraftReaders.visible(seq.longs(i), commits, asOf)) &&
+          rowLabel(i) && residue.forall(GraftReaders.eval(_, getter, partStart))) {
+        sel(k) = i
+        k += 1
+      }
+      i += 1
+    }
+    new GraftRowGroups.Window(byName, java.util.Arrays.copyOf(sel, k), k)
+  }
+
+  def close(): Unit = reader.close()
+}
+
+private[sources] object GraftRowGroups {
+  /** One decoded window: its columns and the `k` rows that pass, at
+    * `sel`'s offsets, or every row (`sel == null`). */
+  final class Window(val cols: java.util.HashMap[String, GraftDecode.Flat],
+                     val sel: Array[Int], val k: Int) {
+    def vec(c: String): ColumnVector = cols.get(c).vec
+
+    /** `vecs` (this window's columns, or constants) as a batch of the
+      * passing rows: a selection wraps each vector, no value copies. */
+    def batch(vecs: Array[ColumnVector]): ColumnarBatch = new ColumnarBatch(
+      if (sel == null) vecs else vecs.map(v => new GraftSelVec(v, sel): ColumnVector), k)
+  }
+}
+
 // ----------------------------------------------------------------- reader
 
 /** One byte-range split of one non-MOR file, emitted as
-  * [[ColumnarBatch]]es: the row groups whose midpoint falls in the range
-  * (the standard parquet split protocol), committed rows only, pushed
-  * and label filters exact, at most `limit` rows. See [[GraftColumnar]]
-  * for the shape. */
+  * [[ColumnarBatch]]es: the split's row groups through [[GraftRowGroups]]
+  * (committed rows only, pushed and label filters exact), at most
+  * `limit` rows. */
 private[sources] final class GraftColumnarReader(
     conf: Configuration,
     split: GraftFileSplit,
@@ -365,146 +501,40 @@ private[sources] final class GraftColumnarReader(
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],
     asOf: Option[Long],
-    labelEq: Seq[(String, String)] = Nil,
-    labelSeries: Option[java.util.HashSet[Long]] = None,
-    limit: Option[Int] = None)
+    labelEq: Seq[(String, String)],
+    labelSeries: Option[java.util.HashSet[Long]],
+    limit: Option[Int])
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
-  private val hPath = new org.apache.hadoop.fs.Path(split.file)
-  private val reader: ParquetFileReader = {
-    val b = HadoopReadOptions.builder(conf, hPath)
-      .useColumnIndexFilter(false)
-      .withRange(split.start, split.start + split.length)
-    new ParquetFileReader(HadoopInputFile.fromPath(hPath, conf), b.build())
-  }
-  private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-  private val needSeq = commits.nonEmpty || asOf.nonEmpty
-  private val filterCols: Seq[String] =
-    pushed.flatMap(_.references).distinct.filterNot(_ == "part_start").toSeq
-  private val prepared = GraftReaders.prepare(pushed)
-  private val label = new GraftReaders.LabelTest(labelEq, labelSeries)
-
   /** decode set = requested physical columns (metadata aliases share
-    * their column); `__seq` and the filter columns join per-group only
-    * when that group needs row-level evaluation (mixed visibility /
-    * inconclusive filter stats). */
+    * their column) */
   private val phys = requested.map(GraftMeta.physical)
-  private val physCols: Seq[String] = phys.filterNot(_ == "part_start").distinct
-
-  // ONE requested-schema projection for the whole split — the UNION of
-  // everything any group can need: readNextRowGroup then does chunk IO
-  // for these columns ONLY
-  GraftDecode.project(reader, fileSchema,
-    (physCols ++ (if (needSeq) Seq("__seq") else Nil) ++ filterCols ++ label.cols).toSet)
-
-  // ---- per-group state ---------------------------------------------------
-  private val blocks = reader.getRowGroups
-  private var blockIdx = 0
-  private var groupRemaining = 0L
-  private var group: GraftDecode.Group = _
-  private var groupMixed = false
-  private var groupFiltered = false
-  /** prepared filters the group's stats could NOT decide — the only
-    * ones the residue loop must evaluate (AllRows-classified filters
-    * hold for every row of the group by construction). */
-  private var groupResidue: Array[Filter] = Array.empty
+  private val cols: Option[Seq[String]] = Some(phys.filterNot(_ == "part_start").distinct)
+  private val groups = new GraftRowGroups(conf, split.file,
+    Some((split.start, split.start + split.length)), pushed, Nil, commits, asOf,
+    new GraftReaders.LabelTest(labelEq, labelSeries), split.partStart)
   /** rows this split may still emit (the pushed limit's counter) */
   private var left: Long = limit.fold(Long.MaxValue)(_.toLong)
-
   private var current: ColumnarBatch = _
-
-  /** Advance to the next row group that contributes rows and open its
-    * page cursors. False when the split is exhausted. */
-  private def advanceGroup(): Boolean = {
-    while (blockIdx < blocks.size()) {
-      val block = blocks.get(blockIdx)
-      blockIdx += 1
-      val vis = GraftFooterStats.seqVisibility(block, commits, asOf, needSeq)
-      val tris = (pushed ++ label.seriesIn).map(GraftFooterStats.classify(_, block))
-      if (vis == GraftFooterStats.NoRows ||
-          tris.contains(GraftFooterStats.NoRows)) {
-        reader.skipNextRowGroup()
-      } else {
-        groupMixed = vis == GraftFooterStats.SomeRows
-        // only the filters the stats could not prove for the WHOLE
-        // group need row evaluation (review-caught r13: re-evaluating
-        // AllRows filters burned a redundant compare per row each)
-        groupResidue = prepared.zip(tris).collect {
-          case (f, GraftFooterStats.SomeRows) => f
-        }
-        groupFiltered = groupResidue.nonEmpty || label.active
-        val residueCols = groupResidue.flatMap(_.references).distinct
-          .filterNot(_ == "part_start").toSeq
-        group = GraftDecode.openGroup(reader, fileSchema,
-          (physCols ++ (if (groupMixed) Seq("__seq") else Nil) ++
-            residueCols ++ label.cols).distinct, split.file)
-        groupRemaining = block.getRowCount
-        if (groupRemaining > 0) return true
-      }
-    }
-    false
-  }
-
-  private def decodeBatch(): ColumnarBatch = {
-    val residue = groupMixed || groupFiltered
-    // a window whose rows all pass decodes no more than the limit still
-    // owes; a residue window may keep few of its rows, so it decodes a
-    // full window and its selection stops at the limit instead
-    val n = math.min(groupRemaining,
-      if (residue) GraftColumnar.BatchRows.toLong
-      else math.min(GraftColumnar.BatchRows.toLong, left)).toInt
-    groupRemaining -= n
-    val byName = group.decode(n)
-    val base: Array[ColumnVector] = phys.map {
-      case "part_start" => new GraftConstLongVec(split.partStart)
-      case c => byName.get(c).vec
-    }.toArray
-    if (!residue) {
-      val b = new ColumnarBatch(base)
-      b.setNumRows(n)
-      b
-    } else {
-      // row-level residue: visibility (mixed __seq — legacy NULL rows
-      // always pass), the label test and filters the group's stats
-      // couldn't decide, evaluated against the decoded vectors and
-      // folded into ONE selection indirection
-      var curRow = 0
-      val getter: String => Any = c => GraftReaders.valueAt(byName.get(c).vec, curRow)
-      val seq = byName.get("__seq")
-      val rowLabel = label.forBatch(byName)
-      val sel = new Array[Int](n)
-      var k = 0
-      var i = 0
-      while (i < n && k < left) {
-        curRow = i
-        val visOk = !groupMixed ||
-          GraftReaders.visible(GraftReaders.valueAt(seq.vec, i), commits, asOf)
-        val keep = visOk && rowLabel(i) &&
-          groupResidue.forall(GraftReaders.eval(_, getter, split.partStart))
-        if (keep) { sel(k) = i; k += 1 }
-        i += 1
-      }
-      val trimmed = java.util.Arrays.copyOf(sel, k)
-      val wrapped: Array[ColumnVector] =
-        base.map(v => new GraftSelVec(v, trimmed): ColumnVector)
-      val b = new ColumnarBatch(wrapped)
-      b.setNumRows(k)
-      b
-    }
-  }
 
   override def next(): Boolean = {
     while (left > 0) {
-      if (groupRemaining > 0) {
-        current = decodeBatch()
-        // a fully-compacted mixed batch (0 survivors) is legal but
-        // pointless — loop on to the next chunk/group
-        if (current.numRows() > 0) { left -= current.numRows(); return true }
-      } else if (!advanceGroup()) return false
+      if (groups.remaining > 0) {
+        val w = groups.window(left)
+        // a fully-compacted window (0 survivors) is legal but pointless
+        if (w.k > 0) {
+          current = w.batch(phys.map {
+            case "part_start" => new GraftConstLongVec(split.partStart)
+            case c => w.vec(c)
+          }.toArray)
+          left -= w.k
+          return true
+        }
+      } else if (!groups.nextGroup((_, _) => cols)) return false
     }
     false
   }
 
   override def get(): ColumnarBatch = current
-  override def close(): Unit = reader.close()
+  override def close(): Unit = groups.close()
 }

@@ -3,10 +3,6 @@ package graft.sources
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -18,11 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`TsdbTable.append` sortWithinPartitions), compaction and tombstone
   * deletes alike. Memory is O(files × window); no shuffle.
   *
-  * Shape: each file decodes WHOLE PAGES into flat vectors
-  * ([[GraftPageCursor]] + [[GraftDecode]] — the same bulk decode the
-  * non-MOR columnar path uses), visibility / pushed-filter / series-
-  * range / label residues compact each decoded window into a selection
-  * array, and the merge then runs over PRIMITIVE key arrays
+  * Shape: each file walks its row groups through [[GraftRowGroups]]
+  * (the same classify → project → compact loop the non-MOR columnar
+  * path uses): visibility, pushed filters, the label test and this
+  * reader's own per-row predicate (the sort contract and the stripe's
+  * series range) compact each decoded window into a selection array,
+  * and the merge then runs over PRIMITIVE key arrays
   * (series_id, time, __seq as raw longs — no boxing, no virtual calls),
   * emitting per-row (window, ordinal) references. The output batch
   * GATHERS winners through [[GraftGatherVec]] — zero value copies; a
@@ -53,58 +50,45 @@ private[sources] final class GraftMorColumnarReader(
     pushed: Array[Filter],
     commits: Option[(Long, Set[Long])],
     asOf: Option[Long],
-    labelEq: Seq[(String, String)] = Nil,
-    labelSeries: Option[java.util.HashSet[Long]] = None,
-    limit: Option[Int] = None)
+    labelEq: Seq[(String, String)],
+    labelSeries: Option[java.util.HashSet[Long]],
+    limit: Option[Int])
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
-  private val needSeq = commits.nonEmpty || asOf.nonEmpty
-  private val prepared = GraftReaders.prepare(pushed)
   private val label = new GraftReaders.LabelTest(labelEq, labelSeries)
   private val phys = requested.map(GraftMeta.physical)
-  private val physCols: Seq[String] = phys.filterNot(_ == "part_start").distinct
   // the merge itself always needs the LWW key + version + tombstone
-  private val decodeAlways = Seq("series_id", "time", "__seq", "__del") ++ label.cols
-  private val filterCols: Seq[String] =
-    pushed.flatMap(_.references).distinct.filterNot(_ == "part_start").toSeq
-  private val unionCols: Set[String] = (physCols ++ decodeAlways ++ filterCols).toSet
+  private val cols: Option[Seq[String]] = Some(
+    (phys.filterNot(_ == "part_start") ++ Seq("series_id", "time", "__seq", "__del")).distinct)
 
-  /** Stripe series bounds and the label filter's resolved series set as
-    * classifiable filters — footer stats skip row groups entirely
-    * outside the stripe or holding no member of the set (files are
-    * sorted by series_id, so most groups are). Placed AFTER the pushed
-    * filters: the residue takes the first `pushed.length` verdicts. */
-  private val keyFilters: Array[Filter] = {
-    val b = ArrayBuffer.empty[Filter]
-    if (stripe.seriesLo != Long.MinValue)
-      b += GreaterThanOrEqual("series_id", stripe.seriesLo)
-    if (stripe.seriesHi != Long.MaxValue)
-      b += LessThanOrEqual("series_id", stripe.seriesHi)
-    b ++= label.seriesIn
-    b.toArray
+  /** Stripe series bounds as classifiable filters: footer stats skip row
+    * groups entirely outside the stripe (files are sorted by series_id,
+    * so most groups are). */
+  private val keyFilters: Seq[Filter] =
+    (if (stripe.seriesLo != Long.MinValue) Seq(GreaterThanOrEqual("series_id", stripe.seriesLo))
+     else Nil) ++
+    (if (stripe.seriesHi != Long.MaxValue) Seq(LessThanOrEqual("series_id", stripe.seriesHi))
+     else Nil)
+
+  /** One decoded, compacted window of one file, with its merge keys as
+    * primitive arrays. */
+  private final class Window(w: GraftRowGroups.Window) {
+    val vecs: java.util.HashMap[String, GraftDecode.Flat] = w.cols
+    val sel: Array[Int] = w.sel
+    val selLen: Int = w.k
+    val sids: Array[Long] = vecs.get("series_id").longs
+    val times: Array[Long] = vecs.get("time").longs
+    private val seq = vecs.get("__seq")
+    private val del = vecs.get("__del")
+    val seqs: Array[Long] = seq.longs
+    val seqNulls: Array[Boolean] = seq.nulls
+    val dels: Array[Boolean] = del.bools
+    val delNulls: Array[Boolean] = del.nulls
   }
 
-  /** One decoded, residue-compacted slab of one file. */
-  private final class Window(
-      val vecs: java.util.HashMap[String, GraftDecode.Flat],
-      val sids: Array[Long], val times: Array[Long],
-      val seqs: Array[Long], val seqNulls: Array[Boolean],
-      val dels: Array[Boolean], val delNulls: Array[Boolean],
-      val sel: Array[Int], val selLen: Int)
-
   private final class FileCursor(val file: String) {
-    private val hPath = new org.apache.hadoop.fs.Path(file)
-    private val reader = new ParquetFileReader(
-      HadoopInputFile.fromPath(hPath, conf),
-      HadoopReadOptions.builder(conf, hPath).useColumnIndexFilter(false).build())
-    private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
-    GraftDecode.project(reader, fileSchema, unionCols)
-    private val blocks = reader.getRowGroups
-    private var blockIdx = 0
-    private var groupRemaining = 0L
-    private var group: GraftDecode.Group = _
-    private var groupMixed = false
-    private var groupResidue: Array[Filter] = Array.empty
+    private val groups = new GraftRowGroups(conf, file, None, pushed, keyFilters,
+      commits, asOf, label, stripe.partStart)
     // sort contract spans windows AND row groups
     private var lastS = Long.MinValue
     private var lastT = Long.MinValue
@@ -135,36 +119,22 @@ private[sources] final class GraftMorColumnarReader(
       if (pos >= win.selLen) refill()
     }
 
-    private def advanceGroup(): Boolean = {
-      while (blockIdx < blocks.size()) {
-        val block = blocks.get(blockIdx)
-        blockIdx += 1
-        val vis = GraftFooterStats.seqVisibility(block, commits, asOf, needSeq)
-        val tris = (pushed ++ keyFilters).map(GraftFooterStats.classify(_, block))
-        if (vis == GraftFooterStats.NoRows ||
-            tris.contains(GraftFooterStats.NoRows)) {
-          reader.skipNextRowGroup()
-        } else {
-          groupMixed = vis == GraftFooterStats.SomeRows
-          // only stats-undecided pushed filters need row evaluation;
-          // the stripe range and label residues fold into the same pass
-          // (evaluated on the decoded sids / labels, not via eval())
-          groupResidue = prepared.zip(
-            tris.take(pushed.length)).collect {
-            case (f, GraftFooterStats.SomeRows) => f
-          }
-          val residueCols = groupResidue.flatMap(_.references).distinct
-            .filterNot(_ == "part_start").toSeq
-          group = GraftDecode.openGroup(reader, fileSchema,
-            (physCols ++ decodeAlways ++ residueCols).distinct, file)
-          if (!group.has("series_id") || !group.has("time"))
-            throw new IllegalStateException(
-              s"$file lacks series_id/time — not a graft raw file")
-          groupRemaining = block.getRowCount
-          if (groupRemaining > 0) return true
-        }
+    /** The per-row predicate of the walk: the sort contract on every
+      * decoded row, then the stripe's series range. */
+    private def rowOk(byName: java.util.HashMap[String, GraftDecode.Flat]): Int => Boolean = {
+      val sids = byName.get("series_id").longs
+      val times = byName.get("time").longs
+      if (sids == null || times == null)
+        throw new IllegalStateException(s"$file lacks series_id/time — not a graft raw file")
+      i => {
+        val s = sids(i)
+        val t = times(i)
+        if (s < lastS || (s == lastS && t < lastT))
+          throw new IllegalStateException(
+            s"$file is not sorted by (series_id, time) — MOR merge would be wrong")
+        lastS = s; lastT = t
+        s >= stripe.seriesLo && s <= stripe.seriesHi
       }
-      false
     }
 
     /** Decode + compact the next window with at least one surviving
@@ -173,49 +143,14 @@ private[sources] final class GraftMorColumnarReader(
       win = null
       pos = 0
       while (win == null) {
-        if (groupRemaining <= 0 && !advanceGroup()) { close(); return }
-        val n = math.min(groupRemaining, GraftColumnar.BatchRows.toLong).toInt
-        groupRemaining -= n
-        val byName = group.decode(n)
-        val sids = byName.get("series_id").longs
-        val times = byName.get("time").longs
-        val seq = byName.get("__seq")
-        val del = byName.get("__del")
-        // residue compaction below the merge: stripe range, visibility,
-        // stats-undecided pushed filters, label test — all key-stable,
-        // so superseded versions and tombstones classify exactly like
-        // the winners they shadow
-        var curRow = 0
-        val getter: String => Any = c => GraftReaders.valueAt(byName.get(c).vec, curRow)
-        val rowLabel = label.forBatch(byName)
-        val sel = new Array[Int](n)
-        var k = 0
-        var i = 0
-        while (i < n) {
-          val s = sids(i)
-          val t = times(i)
-          if (s < lastS || (s == lastS && t < lastT))
-            throw new IllegalStateException(
-              s"$file is not sorted by (series_id, time) — MOR merge would be wrong")
-          lastS = s; lastT = t
-          val seqAny: Any =
-            if (seq.longs == null || seq.nulls(i)) null else seq.longs(i)
-          curRow = i
-          val keep = s >= stripe.seriesLo && s <= stripe.seriesHi &&
-            (!groupMixed || GraftReaders.visible(seqAny, commits, asOf)) &&
-            rowLabel(i) &&
-            groupResidue.forall(GraftReaders.eval(_, getter, stripe.partStart))
-          if (keep) { sel(k) = i; k += 1 }
-          i += 1
-        }
-        if (k > 0)
-          win = new Window(byName, sids, times, seq.longs, seq.nulls,
-            del.bools, del.nulls, sel, k)
+        if (groups.remaining <= 0 && !groups.nextGroup((_, _) => cols)) { close(); return }
+        val w = groups.window(Long.MaxValue, rowOk)
+        if (w.k > 0) win = new Window(w)
       }
     }
 
     private var closed = false
-    def close(): Unit = if (!closed) { closed = true; reader.close() }
+    def close(): Unit = if (!closed) { closed = true; groups.close() }
   }
 
   private val cursors: Array[FileCursor] = stripe.files.map(new FileCursor(_)).toArray

@@ -1219,8 +1219,8 @@ private[sources] final class GraftScan(
 /** Readers per split: file splits and MOR stripes are served columnar
   * ([[GraftColumnarReader]], [[GraftMorColumnarReader]]); the one row
   * reader is the aggregate pushdown's partials per bundle
-  * ([[GraftAggReader]]), whose stats-undecided row groups also read
-  * through [[GraftColumnarReader]]. */
+  * ([[GraftAggReader]]). All three walk their files' row groups through
+  * [[GraftRowGroups]]. */
 private[sources] final class GraftReaderFactory(
     private[sources] val conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf],
     requested: Seq[String],
@@ -1358,23 +1358,14 @@ private[sources] object GraftReaders {
     case _ => false
   }
 
-  /** visibility: NULL `__seq` (legacy rows) and committed seqs pass —
-    * `TsdbTable.visibleSeqCond` exactly; under a snapshot handle, also
-    * `seq <= asOf` (legacy NULL rows predate every seq and stay in —
-    * `readRawAsOf` semantics). */
-  def visible(seq: Any, commits: Option[(Long, Set[Long])],
-              asOf: Option[Long]): Boolean = {
-    val l: java.lang.Long = seq match {
-      case null => null
-      case s: Long => s
-      case s => s.asInstanceOf[Number].longValue()
-    }
-    val committed = commits match {
-      case None => true
-      case Some((floor, seqs)) => l == null || l <= floor || seqs(l)
-    }
-    committed && (asOf.isEmpty || l == null || l <= asOf.get)
-  }
+  /** visibility of a stamped row: a committed seq passes —
+    * `TsdbTable.visibleSeqCond` exactly; under a snapshot handle it must
+    * also be `<= asOf` (`readRawAsOf` semantics). A NULL `__seq` (legacy
+    * rows, older than every seq) always passes; callers test it first. */
+  def visible(seq: Long, commits: Option[(Long, Set[Long])],
+              asOf: Option[Long]): Boolean =
+    commits.forall { case (floor, seqs) => seq <= floor || seqs(seq) } &&
+      asOf.forall(seq <= _)
 
   /** A decoded vector's cell as the catalyst value [[eval]] compares:
     * boxed long/double/boolean, UTF8String, or null. */

@@ -796,7 +796,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     *  - post-commit, on concurrent threads: series types, rollup, names.
     *    With tombstones, touched partitions left without live rows drop
     *    their rollup dirs, the rest rebuild from the merged view, and the
-    *    names dimension rebuilds too.
+    *    batch's names are probed in the merged view: a name with no live
+    *    row left drops from the names dimension.
     * Returns whether this call committed. */
   private def land(inserts: Option[DataFrame], tombstones: Option[DataFrame],
                    incrementalRollup: Boolean = false,
@@ -836,8 +837,12 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
         else enforceSeriesTypes(
           if (tombstones.isDefined) rows.filter(!col("__del")) else rows)
       try {
-        val touchedDel =
-          if (tombstones.isEmpty) Nil else partStartsOf(rows.filter(col("__del")))
+        import spark.implicits._
+        // the tombstones' (part_start, name) pairs
+        val deleted =
+          if (tombstones.isEmpty) Nil
+          else distinctRows[(Long, String)](rows.filter(col("__del")).select("part_start", "name"))
+        val touchedDel = deleted.map(_._1).distinct
         val touched = (touchedIns ++ touchedDel).distinct
         if (touched.isEmpty) return false
         // batch sequence for last-write-wins merge-on-read (config.overrideOld)
@@ -899,7 +904,8 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
               // an emptied partition's rollup must not outlive its data —
               // dynamic overwrite can't clear a partition it writes no
               // rows for
-              val live = partStartsOf(merged().filter(col("part_start").isin(touched: _*))).toSet
+              val live = distinctRows[Long](
+                merged().filter(col("part_start").isin(touched: _*)).select("part_start")).toSet
               touched.filterNot(live).foreach(dropRollupPartitionAt)
               refreshRollup(touched.filter(live))
             }
@@ -909,10 +915,11 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
             else if (incrementalRollup && !config.overrideOld) mergeRollup(rows, touched)
             else refreshRollup(touched)),
           // names is a tiny dimension: merge the batch's names driver-side
-          // instead of rescanning raw — unless a tombstone may have killed
-          // a name's last rows, which only the merged view can tell
-          "names" -> (() =>
-            if (touchedDel.nonEmpty) refreshNames() else mergeNames(batchNames)))
+          // instead of rescanning raw. A tombstone may have killed a name's
+          // last rows, which only the merged view can tell: such a batch
+          // probes its own names there
+          "names" -> (() => mergeNames(batchNames,
+            probe = if (deleted.isEmpty) Set.empty else deleted.map(_._2).toSet ++ batchNames)))
         val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
         val threads = tasks.map { case (n, f) =>
           val t = new Thread(() =>
@@ -927,14 +934,11 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
     } finally rows.unpersist()
   }
 
-  /** The distinct `part_start` values of `df`, in one job with no
-    * shuffle: each task dedups its own rows and the driver merges the
-    * (partition-count-sized) sets. */
-  private def partStartsOf(df: DataFrame): Seq[Long] = {
-    import spark.implicits._
-    df.select(col("part_start")).as[Long]
-      .mapPartitions(_.toSet.iterator).collect().toSeq.distinct
-  }
+  /** The distinct rows of a narrow `df`, in one job with no shuffle:
+    * each task dedups its own rows and the driver merges the (small)
+    * sets. */
+  private def distinctRows[T: org.apache.spark.sql.Encoder](df: DataFrame): Seq[T] =
+    df.as[T].mapPartitions(_.toSet.iterator).collect().toSeq.distinct
 
   /** Series type-safety rule (reference `appender.go:244-254`): a series is
     * either numeric or variant ("string") — never both. The reference keeps
@@ -1181,14 +1185,16 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
   }
 
   /** Upsert new metric names into the names dim (reference S9, first-write
-    * PutItem — `store.go:189-202`); no-op when nothing is new. The swap
+    * PutItem — `store.go:189-202`); no-op when nothing changes. The
+    * names in `probe` (a tombstone batch's) take their presence from the
+    * merged view, so a name whose last live row went drops out. The swap
     * (write `names.tmp` → delete `names/` → rename) is finished here when
     * a crash interrupted it, the way [[recoverSeriesEnc]] finishes the
     * sidecar's; a `names/` without `_SUCCESS` (an interrupted in-place
     * [[refreshNames]] overwrite) is rebuilt from the merged view. Read
     * as "no names yet", either state would shrink the dimension to this
     * batch's names. */
-  private def mergeNames(batchNames: Set[String]): Unit = {
+  private def mergeNames(batchNames: Set[String], probe: Set[String]): Unit = {
     import spark.implicits._
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(namesPath), spark.sparkContext.hadoopConfiguration)
@@ -1207,8 +1213,12 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
       if (!fs.exists(dir)) Set.empty // a fresh table: no names yet
       else spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath)
         .collect().map(_.getString(0)).toSet
-    if (!batchNames.subsetOf(existing)) {
-      (existing ++ batchNames).toSeq.sorted.toDF("name")
+    val next =
+      if (probe.isEmpty) existing ++ batchNames
+      else existing -- probe ++ distinctRows[String](
+        merged().filter(col("name").isin(probe.toSeq: _*)).select("name"))
+    if (next != existing) {
+      next.toSeq.sorted.toDF("name")
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(namesPath + ".tmp")
       fs.delete(dir, true)
       fs.rename(tmp, dir)
@@ -1455,12 +1465,24 @@ class TsdbTable(spark: SparkSession, val path: String, val config: TsdbConfig = 
 
   def readRollup(): DataFrame = rollupFrame(rollupPath, Nil)
 
-  def names(): DataFrame =
-    if (!hasPartitions(rawPath) && !new java.io.File(new java.net.URI(s"file:$namesPath").getPath).exists())
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        TsdbTable.NamesSchema)
-    else QueryEngine.ordered(spark.read.schema(TsdbTable.NamesSchema).parquet(namesPath),
-      col("name"))
+  /** The names dimension as last committed: `names/` when its write
+    * finished, else the committed `names.tmp` of an interrupted swap,
+    * else (an interrupted in-place overwrite, or no dimension written
+    * yet) the merged view's distinct names. Writes nothing: the next
+    * landing repairs the dimension ([[mergeNames]]). */
+  def names(): DataFrame = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(namesPath), spark.sparkContext.hadoopConfiguration)
+    def committed(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
+    val stored = Seq(namesPath, namesPath + ".tmp").find(committed)
+      .filter(p => p == namesPath || !fs.exists(new org.apache.hadoop.fs.Path(namesPath)))
+    QueryEngine.ordered(stored match {
+      case Some(p) => spark.read.schema(TsdbTable.NamesSchema).parquet(p)
+      case None if hasPartitions(rawPath) => merged().select("name").distinct()
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TsdbTable.NamesSchema)
+    }, col("name"))
+  }
 
   def countMetrics(): Long = merged().count()
 

@@ -756,8 +756,12 @@ class GraftSourceSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_dsv2_fuzz").toString
     val t = new TsdbTable(spark, s"$dir/tbl")
     import spark.implicits._
+    def frame(rows: Seq[(String, String, Long, Double, Option[String])]): DataFrame =
+      rows.toDF("name", "host", "time", "value", "valueStr")
+        .select(col("name"), map(lit("host"), col("host")).as("labels"),
+          col("time"), col("value"), col("valueStr"))
     def batch(n: Int): DataFrame =
-      (0 until n).map { _ =>
+      frame((0 until n).map { _ =>
         val name = s"m${rnd.nextInt(4)}"
         val host = s"h${rnd.nextInt(3)}"
         val time = Base + rnd.nextInt(20) * (Day / 2)
@@ -767,10 +771,42 @@ class GraftSourceSpec extends SparkSuite {
           if (name == "m3") (Double.NaN, Some(s"s${rnd.nextInt(9)}"))
           else (rnd.nextDouble() * 100 - 50, None)
         (name, host, time, v, vs)
-      }.toDF("name", "host", "time", "value", "valueStr")
-        .select(col("name"), map(lit("host"), col("host")).as("labels"),
-          col("time"), col("value"), col("valueStr"))
+      })
     (1 to 3).foreach(_ => t.append(batch(150)))
+    // one more input in small row groups: a file holding groups of one
+    // metric's series (clean under the `name === "m1"` filter below) next
+    // to groups that span two metrics (undecided), so the pushed
+    // aggregate folds stats, clean and compacted groups of one open file
+    val hc = spark.sparkContext.hadoopConfiguration
+    val groupKeys = Seq("parquet.block.size", "parquet.page.row.count.limit")
+    val savedGroupConf = groupKeys.map(k => k -> Option(hc.get(k)))
+    try {
+      hc.set("parquet.block.size", "4096")
+      hc.set("parquet.page.row.count.limit", "64")
+      t.append(frame(for (m <- 0 until 3; h <- 0 until 3; i <- 0 until 300)
+        yield (s"m$m", s"h$h", Base + 30 * Day + i * 1000L, rnd.nextDouble() * 100, None)))
+    } finally savedGroupConf.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+    locally {
+      import scala.jdk.CollectionConverters._
+      import org.apache.parquet.io.api.Binary
+      val files = new java.io.File(s"$dir/tbl/raw").listFiles()
+        .filter(_.getName.startsWith("part_start=")).flatMap(_.listFiles())
+        .filter(_.getName.endsWith(".parquet"))
+      // per file, each row group's (min, max) name
+      val nameRanges = files.toSeq.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), hc))
+        try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+          val st = b.getColumns.asScala.find(_.getPath.toDotString == "name").get.getStatistics
+          (st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+            st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8)
+        } finally r.close()
+      }
+      assert(nameRanges.exists(gs => gs.contains(("m1", "m1")) &&
+        gs.exists { case (lo, hi) => lo != hi && lo <= "m1" && "m1" <= hi }),
+        s"no file holds a clean and an undecided group for name = m1: $nameRanges")
+    }
     // an uncommitted orphan: stats-level visibility must hold under fuzz
     val partDir = new java.io.File(s"$dir/tbl/raw").listFiles()
       .filter(_.getName.startsWith("part_start=")).head
@@ -984,6 +1020,50 @@ class GraftSourceSpec extends SparkSuite {
       keys.foreach(hc.unset)
       saved.foreach { case (k, vo) => vo.foreach(hc.set(k, _)) }
     }
+  }
+
+  test("per-group page IO: a row group whose stats decide visibility and every filter reads only the selected columns") {
+    // an uncompressed, dictionary-free `name` chunk of ~4 MB: the `name`
+    // filter is decided by the group's constant-chunk stats, so the scan
+    // needs only the small `time` and `value` chunks. A split-wide
+    // projection also read every filter column's and `__seq`'s chunk
+    val hc = spark.sparkContext.hadoopConfiguration
+    val codecKey = "spark.sql.parquet.compression.codec"
+    val (savedDict, savedCodec) = (Option(hc.get("parquet.enable.dictionary")),
+      spark.conf.getOption(codecKey))
+    val dir = Files.createTempDirectory("graft_group_io").toString
+    val name = "cpu_" + "x" * 1000
+    try {
+      hc.set("parquet.enable.dictionary", "false")
+      spark.conf.set(codecKey, "uncompressed")
+      new TsdbTable(spark, s"$dir/tbl")
+        .append(samples((0 until 4000).map(i => (name, "a", Base + i, i.toDouble)): _*))
+    } finally {
+      savedDict.fold(hc.unset("parquet.enable.dictionary"))(hc.set("parquet.enable.dictionary", _))
+      savedCodec.fold(spark.conf.unset(codecKey))(spark.conf.set(codecKey, _))
+    }
+    val rawBytes = new java.io.File(s"$dir/tbl/raw").listFiles()
+      .filter(_.getName.startsWith("part_start=")).flatMap(_.listFiles())
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(rawBytes > 4000L * 1000, s"the name chunk is not large: $rawBytes bytes")
+    def localBytesRead(): Long = {
+      import scala.jdk.CollectionConverters._
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    }
+    val q = spark.read.format("graft").load(s"$dir/tbl")
+      .filter(col("name") === name).select("time", "value")
+    // vectored reads bypass the local file system's byte counters
+    hc.set("parquet.hadoop.vectored.io.enabled", "false")
+    val (rows, read) =
+      try {
+        val before = localBytesRead()
+        val rows = q.collect()
+        (rows, localBytesRead() - before)
+      } finally hc.unset("parquet.hadoop.vectored.io.enabled")
+    assert(rows.length == 4000 && rows.map(_.getDouble(1)).sum == (0 until 4000).sum.toDouble)
+    assert(read < rawBytes / 4, s"the scan read $read of the raw files' $rawBytes bytes")
+    graft.core.Fs.rmTree(new java.io.File(dir))
   }
 
   test("sink identity (r13): missing txnAppId/checkpointLocation fails at creation, never a shared counter") {

@@ -401,7 +401,8 @@ class TsdbTableSpec extends SparkSuite {
     // (1) the swap died between deleting names/ and renaming the
     // committed names.tmp in; (2) an in-place overwrite (refreshNames)
     // died leaving names/ with only its _temporary dir. Read as "no
-    // names yet", either state shrank the dimension to the next batch
+    // names yet", either state shrank the dimension to the next batch;
+    // `names()` reads the committed state and repairs nothing
     val states = Seq[(String, java.io.File => Unit)](
       "committed tmp, no names/" -> { names =>
         assert(names.renameTo(new java.io.File(names.getPath + ".tmp")))
@@ -415,6 +416,11 @@ class TsdbTableSpec extends SparkSuite {
       t.append(samples(("cpu", "a", Base + 1, 1.0)))
       t.append(samples(("mem", "a", Base + 2, 2.0)))
       crash(new java.io.File(t.path, "names"))
+      def listing() = Seq("names", "names.tmp").map(d =>
+        Option(new java.io.File(t.path, d).list()).map(_.toSeq.sorted))
+      val staged = listing()
+      assert(t.names().collect().map(_.getString(0)).toSeq == Seq("cpu", "mem"), label)
+      assert(listing() == staged, s"$label: names() must write nothing")
       t.append(samples(("disk", "a", Base + 3, 3.0)))
       assert(t.names().collect().map(_.getString(0)).toSeq == Seq("cpu", "disk", "mem"),
         label)
@@ -541,6 +547,8 @@ class TsdbTableSpec extends SparkSuite {
       ("cpu", Base + 4000) -> 4.0, ("tmp", Base + 5000) -> 5.0))
     // rollup rebuilt from the merged view — the deleted row is gone there too
     assert(t.readRollup().agg(sum("__p_sum")).collect().head.getDouble(0) == 14.0)
+    // a partial delete keeps the name: cpu still has live rows
+    assert(t.names().collect().map(_.getString(0)).toSeq == Seq("cpu", "mem", "tmp"))
     // a metric deleted IN FULL leaves the names list even though its
     // tombstoned rows still exist physically until compaction
     t.delete(Base, Base + 10000, metrics = Seq("tmp"))
